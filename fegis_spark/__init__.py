@@ -18,7 +18,7 @@ Layout:
   functions/textfns.py  content_preview / extract_summary / relative_time ...
   functions/vector.py   cosine/dot/norm as native higher-order functions
   functions/views.py    compact/summary/graph/full projections
-  operators/lineage.py  argmax, sequence numbering, lineage self-join
+  operators/lineage.py  argmax, lineage self-join
   operators/dedup.py    exact / minhash-LSH / simhash / ngram-jaccard / cosine
                         + min-label and large-star/small-star components
   operators/knn.py      KNN join, brute-force + LSH/IVF scale paths

@@ -4,21 +4,15 @@ Cosine/dot/norm compile to Catalyst expressions (zip_with + aggregate
 = a sequential fold, deterministic order, no Python). All math in
 float64: embeddings are stored float32 but both engines upcast before
 folding, which keeps Spark and the DuckDB oracle bit-compatible.
-
-The pandas_udf variant (cosine_batch) is the Arrow-vectorized fast
-path for wide fan-out (KNN join) — numpy matmul per batch.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def as_double(vec: Column) -> Column:
@@ -182,28 +176,3 @@ def cosine_lit_sql(v: str, q: Sequence[float]) -> str:
         f" ELSE {d} / ({na} * {nq!r}D) END"
     )
 
-
-def cosine_to_query_udf(q: Sequence[float]):
-    """Arrow-batched cosine against a fixed query vector.
-
-    Iterator-form pandas_udf: the query vector and its norm are hoisted
-    once per executor/batch-stream, then each Arrow batch is one numpy
-    matmul — the 10-100x-over-row-UDF path for when the fold expression
-    is the bottleneck. Returns a callable usable as a Column fn.
-    """
-    qv = np.asarray(q, dtype=np.float64)
-    qn = float(np.linalg.norm(qv))
-
-    @F.pandas_udf(T.DoubleType())
-    def _cos(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            m = np.stack(s.to_numpy())  # (n, dim) float32 -> float64
-            m = m.astype(np.float64, copy=False)
-            dots = m @ qv
-            norms = np.linalg.norm(m, axis=1)
-            denom = norms * qn
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out = np.where(denom == 0, 0.0, dots / denom)
-            yield pd.Series(out)
-
-    return _cos

@@ -137,16 +137,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql paths."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 #: Size gate for explicit broadcast-join hints, in SOURCE PARQUET bytes.
 #: Rationale (SCALE.md "Broadcast discipline"): an explicit
 #: ``F.broadcast()`` hint takes precedence over AQE's size logic — Spark

@@ -107,15 +107,125 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def band_bucket_stats(banded: DataFrame, doc: str = "doc") -> DataFrame:
-    """Membership stats per LSH band bucket: (band, bh) → bucket_size
-    and the min-id representative. This is the audit surface for the
-    max_bucket_size cap (the no-silent-caps rule): run it with the same
-    banding to list exactly which buckets were routed through the
-    representative path (`bucket_size > cap`) and how many members each
-    dropped from pairwise candidacy."""
-    return banded.groupBy("band", "bh").agg(
-        F.count("*").alias("bucket_size"), F.min(doc).alias("rep")
+def _not_null(cols) -> str:
+    return " AND ".join(f"`{c}` IS NOT NULL" for c in cols)
+
+
+def band_bucket_stats(
+    banded: DataFrame, keys: tuple[str, ...] = ("band", "bh"), doc: str = "doc"
+) -> DataFrame:
+    """Membership stats per bucket (the rows agreeing on all `keys`):
+    bucket_size and the min-id representative. This is the audit
+    surface for bucket_pairs' max_bucket_size cap (the no-silent-caps
+    rule): run it on the emitter's input with the same keys to list
+    exactly which buckets were star-routed (`bucket_size > cap`) and
+    how many members each dropped from pairwise candidacy. Rows with a
+    NULL key or doc are dropped, as in the emitter: they pair with
+    nothing."""
+    return (
+        banded.filter(_not_null([doc, *keys]))
+        .groupBy(*keys)
+        .agg(F.count("*").alias("bucket_size"), F.min(doc).alias("rep"))
+    )
+
+
+def bucket_pairs(
+    frame: DataFrame,
+    keys: tuple[str, ...],
+    payload: tuple[str, ...] = (),
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """THE bucket-pair emitter: every pair of docs in `frame` (column
+    `doc`) that agree on all `keys`, as (a, b, <c>_a, <c>_b per payload
+    column c) with a < b, keeping multiplicity: one row per bucket the
+    pair shares (and per repeated row of a doc). Callers that want
+    candidates apply distinct; counting callers like
+    winnow_match_pairs need the rows. Every LSH band, fingerprint and
+    shingle self-join in the library goes through here.
+
+    max_bucket_size=None is the plain equi-self-join: a bucket with m
+    members emits m(m-1)/2 pairs. That is the one quadratic OUTPUT in
+    the LSH family — on a boilerplate-heavy 100 TB corpus a single
+    templated page class can put 1e5+ docs into one bucket, i.e. 5e9
+    pairs out of one join key; AQE skew-split redistributes the
+    partition but cannot shrink the output. With a cap:
+
+    * buckets with <= cap members emit all their pairs, exactly as the
+      join would;
+    * over-cap buckets emit STAR pairs to their min-doc representative
+      (<c>_a carries the representative's payload) — m-1 candidates
+      instead of m(m-1)/2.
+
+    The capped route is ONE groupBy(keys) exchange: each bucket folds
+    to sort_array(collect_list(struct(doc, *payload))) and its pairs
+    come from one projection, map-side after the shuffle. Keep it one
+    consumer of `frame`: a window + self-join + star-union shape runs
+    the upstream sketch once per consumer (AQE gets no ReusedExchange
+    for it). Per-bucket state is bounded: the all-pairs array fires
+    only at m <= cap. The HOF projection is interpreted, but runs once
+    per bucket over candidate-bounded output.
+
+    Both routes agree on degenerate input by construction: rows with a
+    NULL key or NULL doc pair with nothing, and a < b is the join
+    condition on one route and a filter on every emitted row on the
+    other (the star lambda also keeps only x.doc > ds[0].doc), so no
+    self-pair leaves the emitter even when a doc id repeats in a
+    bucket.
+
+    Every candidate still flows through the caller's exact
+    verification, so a cap leaves precision unchanged. Its recall loss
+    is confined to over-cap buckets: a member pair that is near-dup
+    while NEITHER member matches the representative is missed in THAT
+    bucket (other bands can still recover it; over-cap buckets are
+    overwhelmingly exact-template clusters where every member matches
+    the rep). Capped buckets are observable — not silent — via
+    band_bucket_stats(frame, keys).filter(bucket_size > cap).
+    """
+    live = frame.filter(_not_null(["doc", *keys]))
+    if max_bucket_size is None:
+        # band-ok: uncapped only when the caller declares its keyspace
+        # bound at the call site (broadcast_audit PAIR_GENERATORS rule)
+        l, r = live.alias("l"), live.alias("r")
+        cond = F.col("l.doc") < F.col("r.doc")
+        for k in keys:
+            cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
+        return l.join(r, cond).select(
+            F.col("l.doc").alias("a"),
+            F.col("r.doc").alias("b"),
+            *[F.col(f"l.{c}").alias(f"{c}_a") for c in payload],
+            *[F.col(f"r.{c}").alias(f"{c}_b") for c in payload],
+        )
+
+    def fields(x: str, y: str) -> str:
+        return (
+            f"'a', {x}.doc, 'b', {y}.doc"
+            + "".join(f", '{c}_a', {x}.{c}" for c in payload)
+            + "".join(f", '{c}_b', {y}.{c}" for c in payload)
+        )
+
+    struct_fields = "'doc', doc" + "".join(f", '{c}', {c}" for c in payload)
+    g = live.groupBy(*keys).agg(
+        F.expr(
+            f"sort_array(collect_list(named_struct({struct_fields})))"
+        ).alias("ds"),
+        F.count("*").alias("m"),
+    )
+    pairs_expr = (
+        f"CASE WHEN m <= {max_bucket_size} THEN "
+        "flatten(transform(ds, (x, i) -> "
+        f"transform(slice(ds, i + 2, m), y -> named_struct({fields('x', 'y')})))) "
+        "ELSE transform(filter(ds, x -> x.doc > ds[0].doc), "
+        f"x -> named_struct({fields('ds[0]', 'x')})) "
+        "END AS ps"
+    )
+    # the a < b guard on emitted rows is a codegen'd Filter: as a filter
+    # lambda inside the all-pairs transform it cost an interpreted call
+    # per bucket member (+4-8% on the emission stage, 4 cores)
+    return (
+        g.selectExpr(pairs_expr)
+        .selectExpr("explode(ps) AS p")
+        .filter("p.a < p.b")
+        .selectExpr("p.*")
     )
 
 
@@ -126,121 +236,11 @@ def banded_candidate_pairs(
 ) -> DataFrame:
     """LSH banding (doc, band, bh[, *payload]) → distinct ordered
     candidate pairs (a, b) with a < b, carrying `payload` columns as
-    `<col>_a` / `<col>_b`.
-
-    max_bucket_size=None is the plain bucket self-join: a bucket with m
-    members emits m(m-1)/2 pairs. That is the one quadratic OUTPUT in
-    the LSH family — on a boilerplate-heavy 100 TB corpus a single
-    templated page class can put 1e5+ docs into one (band, bh) bucket,
-    i.e. 5e9 pairs out of one join key; AQE skew-split redistributes the
-    partition but cannot shrink the output. With a cap:
-
-    * buckets with <= cap members self-join exactly as before;
-    * over-cap buckets emit STAR pairs to their min-doc representative
-      — m-1 candidates instead of m(m-1)/2.
-
-    Every candidate still flows through the caller's exact verification
-    (Jaccard / hamming), so precision is unchanged. The recall loss is
-    confined to over-cap buckets: a member pair that is near-dup while
-    NEITHER member matches the representative is missed in THAT bucket
-    (other bands can still recover it, and over-cap buckets are
-    overwhelmingly exact-template clusters where every member matches
-    the rep; downstream connected-components re-merges everything that
-    verifies against it). Capped buckets are observable — not silent —
-    via band_bucket_stats(banded).filter(bucket_size > cap); surfaces
-    that report dedup results at scale should report that count.
-    """
-    pay = list(payload)
-
-    def _self_join(frame: DataFrame) -> DataFrame:
-        # band-ok: cap-routed — callers either pass max_bucket_size
-        # (buckets here are <= cap by construction) or declare their
-        # keyspace bound at the call site (broadcast_audit band rule)
-        l, r = frame.alias("l"), frame.alias("r")
-        return l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        ).select(
-            F.col("l.doc").alias("a"),
-            F.col("r.doc").alias("b"),
-            *[F.col(f"l.{c}").alias(f"{c}_a") for c in pay],
-            *[F.col(f"r.{c}").alias(f"{c}_b") for c in pay],
-        )
-
-    if max_bucket_size is None:
-        return _self_join(banded).distinct()
-
-    # r15 opt (VERDICT r14 #5, guide §2.4): capped candidate generation
-    # in ONE (band, bh) exchange, map-side after the shuffle. The r12
-    # window formulation (bucket_size/rep via Window over the exchange,
-    # filter small/big, self-join the small side, union the star side)
-    # relied on ReusedExchange to compute the upstream sketch pipeline
-    # once — but the executed plan shows ZERO ReusedExchange: AQE plans
-    # the self-join's build side as its own BroadcastExchange and the
-    # consumers' differing projections over the window break canonical
-    # equality, so the WHOLE sketch (shingle explode -> seed hashes ->
-    # signature agg -> band explode) executed once per consumer (3x;
-    # plans/r15/dedup_minhash_lsh_before.txt). This form folds each
-    # bucket with collect_list and emits its pairs from ONE projection:
-    #   m <= cap: all m(m-1)/2 ordered pairs (sort_array gives a total
-    #             order; doc is unique within a bucket, so x before y
-    #             in the sorted array == x.doc < y.doc — identical to
-    #             the self-join's l.doc < r.doc);
-    #   m >  cap: star pairs to ds[0], the min-struct representative —
-    #             exactly the window form's min(struct(doc, *pay)).
-    # One shuffle, one sketch execution, no persist barrier. Per-bucket
-    # memory is bounded: the pair array is <= cap(cap-1)/2 structs
-    # (all-pairs fires only at m <= cap) and the bucket array itself is
-    # m structs — the same per-bucket state the window sort held. The
-    # HOF projection is interpreted (r9 caveat) but runs once per
-    # BUCKET over candidate-bounded output — measured 1.25x faster than
-    # the window+self-join form at sf0.1 and value-identical at caps
-    # 2/10/512 with and without payload. NULL (band, bh) keys are
-    # filtered up front: the previous small-path equi-join dropped
-    # them while the star path kept them — degenerate and unspecified;
-    # upstream generators never emit NULL keys, and the filter gives
-    # both routes one defined semantics (matching the uncapped join).
-    struct_fields = "'doc', doc" + "".join(f", '{c}', {c}" for c in pay)
-    pair_fields = (
-        "'a', x.doc, 'b', y.doc"
-        + "".join(f", '{c}_a', x.{c}" for c in pay)
-        + "".join(f", '{c}_b', y.{c}" for c in pay)
-    )
-    star_fields = (
-        "'a', ds[0].doc, 'b', x.doc"
-        + "".join(f", '{c}_a', ds[0].{c}" for c in pay)
-        + "".join(f", '{c}_b', x.{c}" for c in pay)
-    )
-    g = banded.filter(
-        F.col("band").isNotNull() & F.col("bh").isNotNull()
-    ).groupBy("band", "bh").agg(
-        F.expr(
-            f"sort_array(collect_list(named_struct({struct_fields})))"
-        ).alias("ds"),
-        F.count("*").alias("m"),
-    )
-    pairs_expr = (
-        f"CASE WHEN m <= {max_bucket_size} THEN "
-        "flatten(transform(ds, (x, i) -> "
-        f"transform(slice(ds, i + 2, m), y -> named_struct({pair_fields})))) "
-        "ELSE "
-        "transform(filter(ds, x -> x.doc != ds[0].doc), x -> "
-        f"named_struct({star_fields})) "
-        "END AS ps"
-    )
-    out_cols = (
-        ["p.a AS a", "p.b AS b"]
-        + [f"p.{c}_a AS {c}_a" for c in pay]
-        + [f"p.{c}_b AS {c}_b" for c in pay]
-    )
-    return (
-        g.selectExpr(pairs_expr)
-        .selectExpr("explode(ps) AS p")
-        .selectExpr(*out_cols)
-        .distinct()
-    )
+    `<col>_a` / `<col>_b`: bucket_pairs on (band, bh), deduplicated
+    across bands. See bucket_pairs for the max_bucket_size semantics."""
+    # band-ok: cap-routed — callers either pass max_bucket_size or
+    # declare their keyspace bound at the call site (broadcast_audit)
+    return bucket_pairs(banded, ("band", "bh"), payload, max_bucket_size).distinct()
 
 
 def keep_best_dedup(
@@ -271,22 +271,6 @@ def keep_best_dedup(
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """k seeded xxhash64 minima over the shingle set → array<long>.
-
-    Same hash family as minhash_lsh_pairs: one string hash per
-    shingle, then fixed-width (long, seed) re-hashes per family
-    member. Column form for composability; the data path uses the
-    explode/agg form (codegen'd, this HOF form is interpreted)."""
-    hashed = F.transform(shingles, lambda s: F.xxhash64(s))
-    return F.array(
-        *[
-            F.array_min(F.transform(hashed, lambda h, i=i: F.xxhash64(h, F.lit(i))))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -303,15 +287,16 @@ def minhash_lsh_pairs(
 
     Plan: shingle → signature → explode into `bands` band-hashes →
     self-join on (band, band_hash) → distinct candidate pairs → exact
-    Jaccard on the candidates only. Every join is an equi-join; the
-    band explode multiplies rows by `bands`, not by |corpus|.
+    Jaccard on the candidates only (minhash_verify_pairs, shared with
+    the portable twin; sh_bcast_bound is its broadcast gate). Every
+    join is an equi-join; the band explode multiplies rows by `bands`,
+    not by |corpus|.
 
     max_bucket_size caps the per-bucket candidate output (hot template
     buckets would otherwise emit m²/2 pairs): over-cap buckets route
-    through their min-doc representative — see banded_candidate_pairs
-    for the exact semantics and band_bucket_stats for the audit
-    surface. None disables the cap (the oracle-checked portable twin's
-    default).
+    through their min-doc representative — see bucket_pairs for the
+    exact semantics and band_bucket_stats for the audit surface. None
+    disables the cap (the oracle-checked portable twin's default).
 
     cache_intermediate persists the shingle table, which the plan uses
     three times (signature + both sides of candidate verification) —
@@ -360,28 +345,10 @@ def minhash_lsh_pairs(
         "doc", f"explode(array({band_structs})) AS b"
     ).selectExpr("doc", "b.band AS band", "b.bh AS bh")
     cand = banded_candidate_pairs(banded, max_bucket_size=max_bucket_size)
-    sh = base.select(F.col("doc"), F.col("sh"))
-    # r15 opt (guide §3.1/§2.4): size-gated broadcast of the persisted
-    # shingle cache into the verify attach joins — under the gate the
-    # candidate table stops being shuffled once per attach key; over
-    # it (corpus-proportional) AQE decides. Same convention and bound
-    # as minhash_verify_pairs.
-    if sh_bcast_bound is not None:
-        from fegis_spark.model import maybe_broadcast
-
-        sh = maybe_broadcast(sh, sh_bcast_bound)
-    verified = (
-        cand.join(sh.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("doc").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
+    return minhash_verify_pairs(
+        cand, base.select("doc", "sh"), jaccard_threshold,
+        sh_bcast_bound=sh_bcast_bound,
     )
-    return verified
 
 
 def simhash64(tok: Column) -> Column:
@@ -427,7 +394,7 @@ def simhash_pairs(
     pair within hamming<=3 of 64 bits shares >=1 exact band by
     pigeonhole; wider distances trade recall), verify hamming via
     bit_count(xor). max_bucket_size routes hot band buckets through a
-    min-doc representative (see banded_candidate_pairs); None disables."""
+    min-doc representative (see bucket_pairs); None disables."""
     # explode + 64 codegen'd bit-counter aggregates (the HOF fold form
     # simhash64() is kept for expression composability but is
     # interpreted — this form stays in whole-stage codegen)
@@ -533,27 +500,18 @@ def ngram_jaccard_pairs(
     # saturate); hot-gram skew is AQE skew-split territory
     # (evidence/skew_smj_r7.json) and distinct-gram collapse bounds
     # the boilerplate long tail upstream
-    l, r = ex.alias("l"), ex.alias("r")
-    join_cond = (F.col("l.g") == F.col("r.g")) & (F.col("l.doc") < F.col("r.doc"))
-    for c in block_cols:
-        join_cond = join_cond & (F.col(f"l.{c}") == F.col(f"r.{c}"))
-    pay = []
-    for c in payload_cols:
-        pay += [
-            F.col(f"l.{c}").alias(f"a_{c}"),
-            F.col(f"r.{c}").alias(f"b_{c}"),
-        ]
-    inter = (
-        l.join(r, join_cond)
-        .groupBy(
-            F.col("l.doc").alias("a"),
-            F.col("r.doc").alias("b"),
-            F.col("l.n_sh").alias("na"),
-            F.col("r.n_sh").alias("nb"),
-            *pay,
-        )
-        .agg(F.count("*").alias("inter"))
-    )
+    pairs = bucket_pairs(ex, ("g", *block_cols), ("n_sh", *payload_cols))
+    inter = pairs.groupBy(
+        "a",
+        "b",
+        F.col("n_sh_a").alias("na"),
+        F.col("n_sh_b").alias("nb"),
+        *[
+            F.col(f"{c}_{side}").alias(f"{side}_{c}")
+            for c in payload_cols
+            for side in ("a", "b")
+        ],
+    ).agg(F.count("*").alias("inter"))
     return (
         inter.withColumn(
             "jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
@@ -693,7 +651,7 @@ def embedding_neardup_pairs_lsh(
         model.transform(feat)
         .select("id", F.posexplode("hashes").alias("t", "__hv"))
         .select(
-            "id",
+            F.col("id").alias("doc"),
             "t",
             vector_to_array("__hv").getItem(0).cast("bigint").alias("bkt"),
         )
@@ -703,17 +661,7 @@ def embedding_neardup_pairs_lsh(
     # recall-conservative MLlib BRP bucket join this re-expresses
     # (~brute force via the giant bucket, evidence/brp_occupancy_r11);
     # scale paths are IVF / capped SRP (docstring above)
-    cand = (
-        hashed.alias("l")  # band-ok: correctness-tier, ~brute force (above)
-        .join(
-            hashed.alias("r"),
-            (F.col("l.t") == F.col("r.t"))
-            & (F.col("l.bkt") == F.col("r.bkt"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        .distinct()
-    )
+    cand = bucket_pairs(hashed, ("t", "bkt")).distinct()
     # norms once per vector (value identical to folding them per pair;
     # HOF fold spelling — the unrolled form measured 2x the CPU, r14)
     sides = base.select(
@@ -788,7 +736,7 @@ def semantic_dedup(
     grows with the corpus (clusters stay ~constant-sized), and the
     paper runs 50k clusters over LAION-440M. Skewed clusters are an
     AQE skew-join shape; for adversarial skew route over-cap clusters
-    through the same representative trick as banded_candidate_pairs.
+    through the representative star of bucket_pairs' max_bucket_size.
     """
     from pyspark import StorageLevel
 
@@ -850,7 +798,7 @@ def _semdedup_verdicts(base: DataFrame, tau: float) -> DataFrame:
     verify = (
         F.expr(
             cosine_from_parts_sql(
-                dot_sql("l.__v", "r.__v"), "l.__nrm", "r.__nrm"
+                dot_sql("__v_a", "__v_b"), "__nrm_a", "__nrm_b"
             )
         )
         >= tau
@@ -858,12 +806,15 @@ def _semdedup_verdicts(base: DataFrame, tau: float) -> DataFrame:
     # band-ok: list_id equi-join, cluster size ~ n/n_lists — the
     # SemDeDup contract scales n_lists with the corpus (k ~ sqrt(n))
     # so per-cluster pair output stays bounded
-    l, r = base.alias("l"), base.alias("r")
-    lc, rc = F.col("l.__csim"), F.col("r.__csim")
-    li, ri = F.col("l.vec_id"), F.col("r.vec_id")
+    pairs = bucket_pairs(
+        base.select(F.col("vec_id").alias("doc"), "list_id", "__v", "__nrm", "__csim"),
+        ("list_id",),
+        ("__v", "__nrm", "__csim"),
+    )
+    lc, rc = F.col("__csim_a"), F.col("__csim_b")
+    li, ri = F.col("a"), F.col("b")
     dropped = (
-        l.join(r, (F.col("l.list_id") == F.col("r.list_id")) & (li < ri))
-        .filter(verify)
+        pairs.filter(verify)
         .select(
             F.when((lc > rc) | ((lc == rc) & (li > ri)), li)
             .otherwise(ri)
@@ -1290,10 +1241,13 @@ def minhash_verify_pairs(
     sh_bcast_bound: int | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs (a, b) against a
-    shingle table (doc, sh) — the tail of minhash_lsh_pairs_portable,
-    factored out (r13) so callers holding PRECOMPUTED bands/shingles
-    (the streaming near-dup body) generate within-set pairs without
-    recomputing signatures. Output: (a, b, jaccard) at >= threshold.
+    shingle table (doc, sh) — the tail of minhash_lsh_pairs and
+    minhash_lsh_pairs_portable, factored out (r13) so callers holding
+    PRECOMPUTED bands/shingles (the streaming near-dup body) generate
+    within-set pairs without recomputing signatures. Output: (a, b,
+    jaccard) at >= threshold. Shingle arrays must hold distinct values
+    (with_shingles applies array_distinct): |a∪b| is computed as
+    |a| + |b| − |a∩b|.
 
     sh_bcast_bound (r15 opt, guide §3.1/§2.4): byte bound for a
     size-gated broadcast of the shingle table into the two attach
@@ -1539,7 +1493,7 @@ def minhash_incremental_pairs_precomputed(
     instead of growing with state occupancy. Batch docs landing in a
     hot bucket still exact-verify against the representative (the
     member every template-cluster doc matches); same recall contract
-    as banded_candidate_pairs' star routing. Self-pairs
+    as bucket_pairs' star routing. Self-pairs
     (corpus_doc == batch_doc — possible when a crash-replayed batch
     probes state containing its own rows, or a doc id is re-sent) are
     excluded: "duplicate of itself" is never a meaningful verdict.

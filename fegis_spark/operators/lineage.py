@@ -2,19 +2,17 @@
 
 The reference maintains a per-session singly-linked provenance chain:
 ``preceding_memory_id`` + monotone ``sequence_order`` (written at
-reference fegis/storage.py:96-143). Three derived computations:
+reference fegis/storage.py:96-143). Two derived computations here
+(sequence numbering is streaming/sessionize.assign_sequence_stream):
 
 * A1 argmax  — latest memory per session (reference runs this Qdrant
   ordered-scroll on EVERY ingest, fegis/storage.py:113-143).
-* A2 numbering — assign ``sequence_order`` = arrival rank in session
-  (fegis/storage.py:132-139).
-* W2/J1 lineage — reconstruct/resolve ``preceding_memory_id`` via
-  lag-window (cheap path) or self equi-join (general path,
-  fegis/search/formatters.py:44-58 ``graph`` view).
+* J1 lineage — resolve ``preceding_memory_id`` via a self equi-join
+  (fegis/search/formatters.py:44-58 ``graph`` view).
 
-Scale notes: all three are single-shuffle on the session key. The
-window forms do a hash-shuffle on ``partitionBy`` key then sort within
-partitions — no global sort. ``max_by`` aggregates partial (map-side
+Scale notes: both are single-shuffle on the key. The window form
+(latest_per_key_window) hash-shuffles on the ``partitionBy`` key,
+then sorts within partitions — no global sort. ``max_by`` aggregates partial (map-side
 combine) before the shuffle, so the argmax is the cheapest form at
 100 TB: shuffle volume = one row per (partition, session).
 """
@@ -62,24 +60,6 @@ def latest_per_key_window(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def assign_sequence(df: DataFrame, key: str, order: str, out: str = "sequence_order") -> DataFrame:
-    """A2: contiguous 1-based arrival rank per session.
-
-    The reference does a read-modify-write round trip per invocation
-    (fegis/storage.py:132-139); batch form is one window pass.
-    """
-    # grpwin-ok: caller key (user/session id) — cardinality scales with input
-    w = Window.partitionBy(key).orderBy(order)
-    return df.withColumn(out, F.row_number().over(w))
-
-
-def with_preceding(df: DataFrame, key: str, order: str, id_col: str, out: str = "preceding_id") -> DataFrame:
-    """W2: reproduce the reference's ``preceding_memory_id`` via lag."""
-    # grpwin-ok: caller key (user/session id) — cardinality scales with input
-    w = Window.partitionBy(key).orderBy(order)
-    return df.withColumn(out, F.lag(id_col).over(w))
 
 
 def resolve_predecessors(

@@ -248,31 +248,35 @@ def winnow_match_pairs(
     IS in this output (no MinHash-style false negatives for local
     matches).
 
-    Plan: fingerprint sets → explode to (doc, h), then pairs.
-    Uncapped: sets persisted MEMORY_AND_DISK (both sides of the
-    self-join read it), equi-join on the hash with doc_l < doc_r.
+    Plan: fingerprint sets → explode to (doc, h) → bucket_pairs on
+    the hash (operators/dedup), keeping multiplicity: n_shared counts
+    one emitted row per shared fingerprint, so NO distinct.
 
-    max_bucket_size is the same hot-bucket cap as
-    banded_candidate_pairs (band = the fingerprint hash itself): a
-    boilerplate fingerprint shared by m docs would emit m(m-1)/2 pairs
-    out of ONE join key — the quadratic output no partitioning trick
-    can shrink. Under the cap, hashes with <= cap members pair exactly
-    as before; over-cap hashes emit STAR rows to their min-doc
-    representative (m-1 instead of m²/2), so per-pair n_shared counts
-    only the fingerprints that actually generated the candidate.
-    r15: the capped branch folds pair generation into ONE groupBy(h)
-    (sort_array(collect_list) + per-bucket CASE emitting all-pairs or
-    star structs, multiplicity preserved — NO distinct, n_shared needs
-    one row per shared h), the same rewrite as banded_candidate_pairs:
-    the r12 window+self-join+union shape re-executed the
-    explode/exchange/sort/window once per consumer (zero ReusedExchange
-    in the executed plan). With the join gone the fingerprint subtree
-    has ONE consumer, so the capped branch drops the persist too.
-    Capped hashes are observable via winnow_bucket_stats (the
-    no-silent-caps rule). None = exact (the oracle-checked default)."""
+    max_bucket_size is bucket_pairs' hot-bucket cap (bucket = the
+    fingerprint hash): a boilerplate fingerprint shared by m docs would
+    emit m(m-1)/2 pairs out of ONE join key — the quadratic output no
+    partitioning trick can shrink. Under the cap, hashes with <= cap
+    members pair exactly as before; over-cap hashes emit STAR rows to
+    their min-doc representative (m-1 instead of m²/2), so per-pair
+    n_shared counts only the fingerprints that actually generated the
+    candidate. Capped hashes are observable via band_bucket_stats on
+    the exploded (doc, h) rows with keys=("h",) (the no-silent-caps
+    rule). None = exact (the oracle-checked default).
+
+    The fingerprint sets are persisted on BOTH routes: the winnowing
+    projection must materialize once (comment below), not only feed
+    the uncapped join's two sides.
+
+    A doc id that repeats in the input never pairs with itself
+    (bucket_pairs' a < b guard). Its copies each count toward
+    n_shared; where that drives the union size n_l + n_r − n_shared to
+    0, fp_jaccard is NULL instead of a divide-by-zero (nullif, the
+    ANSI-divide rule)."""
     from pyspark import StorageLevel
 
-    # persisted in BOTH branches: beyond the uncapped join's two
+    from fegis_spark.operators.dedup import bucket_pairs
+
+    # persisted on BOTH emitter routes: beyond the uncapped join's two
     # consumers, the winnowing projection itself (interpreted HOF +
     # regexp chain) must materialize exactly once — without the cache
     # the collapsed plan re-evaluates the fps expression per reference
@@ -283,41 +287,17 @@ def winnow_match_pairs(
         .select("doc_id", F.size("fps").alias("n_fp"), "fps")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    ex = sets.select("doc_id", "n_fp", F.explode("fps").alias("h"))
-    if max_bucket_size is None:
-        l = ex.select(
-            F.col("doc_id").alias("doc_l"), F.col("n_fp").alias("n_l"), "h"
-        )
-        r = ex.select(
-            F.col("doc_id").alias("doc_r"), F.col("n_fp").alias("n_r"), "h"
-        )
-        cand = l.join(r, "h").filter(F.col("doc_l") < F.col("doc_r"))
-    else:
-        g = ex.filter(F.col("h").isNotNull()).groupBy("h").agg(
-            F.expr(
-                "sort_array(collect_list(named_struct('doc', doc_id, 'n', n_fp)))"
-            ).alias("ds"),
-            F.count("*").alias("m"),
-        )
-        pairs_expr = (
-            f"CASE WHEN m <= {max_bucket_size} THEN "
-            "flatten(transform(ds, (x, i) -> transform(slice(ds, i + 2, m), "
-            "y -> named_struct('doc_l', x.doc, 'n_l', x.n, "
-            "'doc_r', y.doc, 'n_r', y.n)))) "
-            "ELSE transform(filter(ds, x -> x.doc != ds[0].doc), x -> "
-            "named_struct('doc_l', ds[0].doc, 'n_l', ds[0].n, "
-            "'doc_r', x.doc, 'n_r', x.n)) END AS ps"
-        )
-        cand = (
-            g.selectExpr(pairs_expr)
-            .selectExpr("explode(ps) AS p")
-            .selectExpr(
-                "p.doc_l AS doc_l", "p.n_l AS n_l",
-                "p.doc_r AS doc_r", "p.n_r AS n_r",
-            )
-        )
+    ex = sets.select(F.col("doc_id").alias("doc"), "n_fp", F.explode("fps").alias("h"))
+    # band-ok: fingerprint hashes are 60-bit md5 prefixes; hot shared
+    # boilerplate is what the caller's max_bucket_size routes
+    cand = bucket_pairs(ex, ("h",), ("n_fp",), max_bucket_size)
     return (
-        cand.groupBy("doc_l", "doc_r", "n_l", "n_r")
+        cand.groupBy(
+            F.col("a").alias("doc_l"),
+            F.col("b").alias("doc_r"),
+            F.col("n_fp_a").alias("n_l"),
+            F.col("n_fp_b").alias("n_r"),
+        )
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
         .select(
@@ -326,25 +306,10 @@ def winnow_match_pairs(
             "n_shared",
             F.round(
                 F.col("n_shared")
-                / (F.col("n_l") + F.col("n_r") - F.col("n_shared")),
+                / F.expr("nullif(n_l + n_r - n_shared, 0)"),
                 6,
             ).alias("fp_jaccard"),
         )
-    )
-
-
-def winnow_bucket_stats(docs, text_col: str = "text", id_col: str = "doc_id"):
-    """Audit surface for winnow_match_pairs' hot-fingerprint cap
-    (no-silent-caps rule): per fingerprint hash, how many documents
-    share it and the min-doc representative over-cap members were
-    routed to. Filter bucket_size > cap to list exactly which
-    fingerprints were star-routed and how many pairwise candidacies
-    each dropped."""
-    ex = winnow_fp_sets(docs, text_col, id_col).select(
-        "doc_id", F.explode("fps").alias("h")
-    )
-    return ex.groupBy("h").agg(
-        F.count("*").alias("bucket_size"), F.min("doc_id").alias("rep")
     )
 
 

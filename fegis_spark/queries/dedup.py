@@ -147,7 +147,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands), exact-Jaccard verification of candidates only. Hot band
     buckets (>512 members, the operator default) route through a
     min-doc representative so candidate output stays linear per bucket
-    — see banded_candidate_pairs/band_bucket_stats."""
+    — see operators/dedup.bucket_pairs and band_bucket_stats."""
     # band-ok: operator default cap 512 + 2^64 xxhash band keyspace
     return minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"),

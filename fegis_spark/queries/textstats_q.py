@@ -230,7 +230,8 @@ def winnow_match_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep-size, small self-join UNION star rows) value-for-value —
     per-pair n_shared counts exactly the fingerprints that generated
     each candidate on both engines. Audit surface:
-    operators/text_analysis.winnow_bucket_stats."""
+    operators/dedup.band_bucket_stats over the exploded (doc, h) rows
+    with keys=("h",)."""
     from fegis_spark.operators.text_analysis import winnow_match_pairs as wmp
 
     return wmp(

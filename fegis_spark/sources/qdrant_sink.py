@@ -304,30 +304,3 @@ def index_to_qdrant(
     )
     return int(math.fsum(counts.collect()) if counts is not None else 0)
 
-
-def stream_index_to_qdrant(
-    stream_df: DataFrame,
-    collection: str,
-    url: str,
-    dim: int,
-    checkpoint_dir: str,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-):
-    """Incremental indexing (the reference's per-call upsert,
-    storage.py:194-199, as a stream): foreachBatch bulk-upserts each
-    micro-batch with the same partition-parallel path as the batch job.
-    Exactly-once to the extent Qdrant upserts are idempotent on point
-    id (they are — ids here are content-deterministic, ingest.py).
-
-    Returns the started StreamingQuery.
-    """
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        index_to_qdrant(batch_df, collection, url, dim, batch_size)
-
-    return (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )

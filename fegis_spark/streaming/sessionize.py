@@ -9,8 +9,6 @@ behaviors are per-session sequence assignment and lineage chaining
   session_window for complete data.
 * streaming sessionization — session_window + watermark (late data).
 * streaming tumbling/sliding aggregates over events.
-* streaming ingest — readStream → ingest transforms → foreachBatch
-  (the incremental Qdrant upsert path, reference storage.py:194-199).
 
 Both sessionization forms shuffle once on the session key; the
 streaming form additionally keeps per-key state bounded by the
@@ -21,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter
 
 
 def sessionize_batch(
@@ -117,11 +114,6 @@ def tumbling_counts_stream(
             "total_value",
         )
     )
-
-
-def stream_to_memory_sink(df: DataFrame, name: str) -> DataStreamWriter:
-    """Test harness sink: in-memory table, complete/append per query."""
-    return df.writeStream.format("memory").queryName(name).outputMode("append")
 
 
 def assign_sequence_stream(

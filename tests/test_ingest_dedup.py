@@ -389,6 +389,27 @@ def test_banded_candidate_cap_boundary_is_inclusive(spark):
     assert got == {(0, b) for b in range(1, 11)}  # star to the min doc
 
 
+def test_bucket_pairs_routes_agree_on_duplicate_ids_and_null_keys(spark):
+    """Both emitter routes build the same pairs from a bucket where a
+    doc id repeats — multiplicity kept, never a self-pair — and a row
+    with a NULL key (or NULL doc) pairs with nothing, even when it
+    shares that NULL with another row."""
+    from fegis_spark.operators.dedup import banded_candidate_pairs, bucket_pairs
+
+    rows = [(1, 0, 7), (1, 0, 7), (2, 0, 7), (3, 0, 7), (None, 0, 7)]
+    rows += [(4, None, 7), (5, 0, None), (6, None, None), (7, None, None)]
+    banded = spark.createDataFrame(rows, "doc long, band int, bh long")
+
+    def emitted(cap):
+        return sorted(map(tuple, bucket_pairs(banded, ("band", "bh"), (), cap).collect()))
+
+    assert emitted(None) == emitted(10) == [(1, 2), (1, 2), (1, 3), (1, 3), (2, 3)]
+    assert emitted(3) == [(1, 2), (1, 3)]  # over cap: star to the min doc
+    for cap in (None, 10):
+        got = {tuple(r) for r in banded_candidate_pairs(banded, max_bucket_size=cap).collect()}
+        assert got == {(1, 2), (1, 3), (2, 3)}, cap
+
+
 def test_banded_candidate_cap_carries_payload(spark):
     from fegis_spark.operators.dedup import banded_candidate_pairs
 

@@ -132,6 +132,18 @@ def test_minhash_verify_bcast_gate_values_identical(spark):
     assert "BroadcastHashJoin" in gated._jdf.queryExecution().executedPlan().toString()
 
 
+def _exchanges(spark, df) -> int:
+    """Exchange operator nodes (shuffles, not broadcasts) in the
+    formatted pre-AQE plan; call it before the frame executes, since
+    an executed AdaptiveSparkPlan lists its initial and final plans."""
+    import re
+
+    p = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    return len(re.findall(r"\bExchange \(\d+\)", p))
+
+
 def test_banded_candidate_pairs_capped_agg_form(spark):
     """The capped path generates candidates map-side after ONE
     (band, bh) groupBy (r15 opt): sort_array(collect_list) per bucket,
@@ -139,42 +151,39 @@ def test_banded_candidate_pairs_capped_agg_form(spark):
     the r12 window + self-join + union form executed the upstream
     sketch pipeline once per consumer (3x; zero ReusedExchange in the
     executed plan). Pins value-identity against a hand-built reference
-    on small/at-cap/over-cap buckets and the one-exchange plan shape."""
+    on small/at-cap/over-cap buckets — including a repeated doc id and
+    rows with a NULL key, which pair with nothing — and the exchange
+    count of both routes."""
+    from collections import defaultdict
+
     from fegis_spark.operators.dedup import banded_candidate_pairs
 
-    # doc//3 buckets of size 3 (over cap 2) plus one pair bucket
+    # doc//3 buckets of size 3 (over cap 2) plus one pair bucket; doc
+    # 100 repeats in an over-cap bucket and doc 300 in an at-cap one,
+    # and NULL keys sit in otherwise-live buckets and in all-NULL ones
     rows = [(d, b, d // 3) for d in range(12) for b in range(2)]
-    rows += [(100, 0, 50), (101, 0, 50)]
+    rows += [(100, 0, 50), (101, 0, 50), (100, 0, 50)]
+    rows += [(300, 0, 70), (300, 0, 70)]
+    rows += [(200, None, 50), (201, 0, None), (202, None, 60), (203, None, 60)]
     banded = spark.createDataFrame(rows, "doc long, band int, bh long")
-    got = {
-        tuple(r)
-        for r in banded_candidate_pairs(banded, max_bucket_size=2).collect()
-    }
-    want = set()
-    from collections import defaultdict
     buckets = defaultdict(list)
     for d, b, h in rows:
-        buckets[(b, h)].append(d)
-    for mem in buckets.values():
-        mem = sorted(mem)
+        if b is not None and h is not None:
+            buckets[(b, h)].append(d)
+    want = set()
+    for mem in map(sorted, buckets.values()):
         if len(mem) <= 2:
-            for i in range(len(mem)):
-                for j in range(i + 1, len(mem)):
-                    want.add((mem[i], mem[j]))
+            want.update((x, y) for x in mem for y in mem if x < y)
         else:
-            want.update((mem[0], x) for x in mem[1:])
-    assert got == want
-    p = (
-        banded_candidate_pairs(banded, max_bucket_size=2)
-        ._jdf.queryExecution()
-        .explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    )
+            want.update((mem[0], x) for x in mem[1:] if x > mem[0])
+    capped = banded_candidate_pairs(banded, max_bucket_size=2)
     # one bucket exchange + the distinct exchange; no window, no join
-    assert p.count("(") > 0 and "Window" not in p and "Join" not in p
+    assert _exchanges(spark, capped) == 2
+    p = capped._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in p and "Join" not in p
+    assert {tuple(r) for r in capped.collect()} == want
+    # the join route: both self-join sides + the distinct
+    assert _exchanges(spark, banded_candidate_pairs(banded)) == 3
 
 
 def test_banded_candidate_pairs_payload_agg_form(spark):

@@ -137,8 +137,9 @@ def test_match_pairs_cap_bounds_hot_fingerprint(spark):
     candidates under the cap (anchored at the min doc), not 780
     pairwise ones; small buckets keep exact counts and jaccard; the
     audit surface lists exactly the over-cap hashes."""
+    from fegis_spark.operators.dedup import band_bucket_stats
     from fegis_spark.operators.text_analysis import (
-        winnow_bucket_stats,
+        winnow_fp_sets,
         winnow_match_pairs,
     )
 
@@ -167,6 +168,30 @@ def test_match_pairs_cap_bounds_hot_fingerprint(spark):
     # the small bucket's pair is untouched: same counts as uncapped
     assert capped[(100, 101)] == uncapped[(100, 101)]
     # audit: the over-cap hashes are exactly the boilerplate's fps
-    hot = winnow_bucket_stats(df).filter(F.col("bucket_size") > 10).collect()
+    fp_rows = winnow_fp_sets(df).select(
+        F.col("doc_id").alias("doc"), F.explode("fps").alias("h")
+    )
+    hot = band_bucket_stats(fp_rows, keys=("h",)).filter(F.col("bucket_size") > 10).collect()
     assert {r.h for r in hot} == set(ref_fps(boiler))
     assert all(r.bucket_size == 40 and r.rep == 0 for r in hot)
+
+
+def test_match_pairs_duplicate_ids_agree_across_routes(spark):
+    """A doc id that appears twice (same text) must not crash either
+    route with a divide-by-zero, must never pair with itself, and both
+    routes return the same rows."""
+    from fegis_spark.operators.text_analysis import winnow_match_pairs
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    df = spark.createDataFrame(
+        [(1, text), (1, text), (2, text), (3, "unrelated words that share no runs at all")],
+        "doc_id long, text string",
+    )
+    uncapped = sorted(map(tuple, winnow_match_pairs(df).collect()))
+    capped = sorted(map(tuple, winnow_match_pairs(df, max_bucket_size=10).collect()))
+    assert uncapped == capped
+    assert [r[:2] for r in uncapped] == [(1, 2)]
+    # both copies of doc 1 count every shared fp: n_shared = n_l + n_r,
+    # so the union size is 0 and fp_jaccard is NULL, not an error
+    n = len(ref_fps(text))
+    assert uncapped == [(1, 2, 2 * n, None)]

@@ -33,8 +33,8 @@ r11 additions (r10 verdict #1/#3, mechanized):
     call's argument span) — a crossJoin is a cartesian product; its
     non-corpus side must be a 1-row agg or a structurally bounded
     panel, and the site must say which;
-  * every candidate-pair GENERATOR call (``banded_candidate_pairs`` and
-    the named near-dup wrappers) must either pass an explicit non-None
+  * every candidate-pair GENERATOR call (the ``bucket_pairs`` emitter,
+    ``banded_candidate_pairs`` and the named near-dup wrappers) must either pass an explicit non-None
     ``max_bucket_size=`` cap or carry a ``# band-ok: <keyspace bound>``
     marker. This closes the class the r10 64x probe caught: a
     fixed-width band family (SRP: 4x2^8 buckets, SimHash: 4x2^15)
@@ -73,6 +73,7 @@ from __future__ import annotations
 
 import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -90,7 +91,7 @@ BAND_MARKER = re.compile(r"#\s*band-ok:\s*\S")
 #: candidate-pair generators: a call must cap (non-None
 #: max_bucket_size=) or carry a # band-ok: <keyspace bound> marker
 PAIR_GENERATORS = re.compile(
-    r"\b(banded_candidate_pairs|minhash_lsh_pairs|simhash_pairs"
+    r"\b(bucket_pairs|banded_candidate_pairs|minhash_lsh_pairs|simhash_pairs"
     r"|minhash_lsh_pairs_portable|simhash_pairs_portable"
     r"|ngram_jaccard_pairs|embedding_neardup_pairs"
     r"|embedding_neardup_pairs_lsh"
@@ -143,103 +144,113 @@ def call_span(lines: list[str], i: int, start_col: int) -> str:
     return "\n".join(out)
 
 
+def audit_lines(name: str, lines: list[str]) -> tuple[list[str], Counter]:
+    """Findings and site counts for one source file's lines; ``name``
+    labels the findings."""
+    findings: list[str] = []
+    n: Counter = Counter()
+    in_doc = False
+    for i, line in enumerate(lines):
+        # crude docstring tracker: prose mentions of patterns
+        # (module docs describing the rules) are not call sites.
+        # Only triple-double-quote blocks are tracked; a line that
+        # opens and closes one stays "code".
+        tq = line.count('"""')
+        if in_doc:
+            if tq % 2 == 1:
+                in_doc = False
+            continue
+        if tq % 2 == 1:
+            in_doc = True
+        if line.lstrip().startswith("#"):
+            continue
+        n["gated"] += line.count("maybe_broadcast(")
+        for m in CROSSJOIN.finditer(line):
+            n["cross"] += 1
+            span = call_span(lines, i, m.start())
+            if not (site_is_marked(lines, i) or MARKER.search(span)):
+                findings.append(
+                    f"{name}:{i + 1}: crossJoin without "
+                    f"a '# bcast-ok: <bound>' marker — name the bounded "
+                    f"side (1-row agg, k-row panel, ...)\n    {line.strip()}"
+                )
+        for m in PAIR_GENERATORS.finditer(line):
+            # skip the definitions themselves — the rule binds call
+            # sites, where the cap decision is made
+            if line.lstrip().startswith("def ") or "import" in line.split("(")[0]:
+                continue
+            n["band"] += 1
+            span = call_span(lines, i, m.end() - 1)
+            if not (
+                CAP_ARG.search(span)
+                or site_is_marked(lines, i, BAND_MARKER)
+                or BAND_MARKER.search(span)
+            ):
+                findings.append(
+                    f"{name}:{i + 1}: candidate-pair "
+                    f"generator without an explicit max_bucket_size cap or "
+                    f"a '# band-ok: <keyspace bound>' marker — fixed-width "
+                    f"band families saturate and go quadratic (r10 64x "
+                    f"probe)\n    {line.strip()}"
+                )
+        for _ in MANUAL_SELF_JOIN.finditer(line):
+            n["band"] += 1
+            if not site_is_marked(lines, i, BAND_MARKER):
+                findings.append(
+                    f"{name}:{i + 1}: manual bucket "
+                    f"self-join (alias(\"l\") pattern) without a "
+                    f"'# band-ok: <keyspace bound>' marker\n    {line.strip()}"
+                )
+        for _ in CALL.finditer(line):
+            n["raw"] += 1
+            if not site_is_marked(lines, i):
+                findings.append(
+                    f"{name}:{i + 1}: raw F.broadcast "
+                    f"without a '# bcast-ok: <bound>' marker — name the "
+                    f"structural bound, or use model.maybe_broadcast for "
+                    f"a corpus-proportional side\n    {line.strip()}"
+                )
+        for _ in PART_WINDOW.finditer(line):
+            n["pwindows"] += 1
+            if not site_is_marked(lines, i, PART_WINDOW_MARKER):
+                findings.append(
+                    f"{name}:{i + 1}: partitioned "
+                    f"window without a '# grpwin-ok: <scaling arg>' or "
+                    f"'# panel-ok: <mechanism/bound>' marker — say whether "
+                    f"the partition count scales with the input, or why a "
+                    f"bounded panel over this input is not a funnel "
+                    f"(WindowGroupLimit(Partial) / bounded input)\n"
+                    f"    {line.strip()}"
+                )
+        for _ in GLOBAL_WINDOW.finditer(line):
+            n["windows"] += 1
+            if not site_is_marked(lines, i, WINDOW_MARKER):
+                findings.append(
+                    f"{name}:{i + 1}: global window "
+                    f"(Window.orderBy with no partitionBy) without a "
+                    f"'# window-ok: <bound>' marker — the windowed input "
+                    f"must be a bounded derived table, and the site must "
+                    f"name the bound\n    {line.strip()}"
+                )
+    return findings, n
+
+
 def audit() -> int:
     findings: list[str] = []
-    n_raw = n_gated = n_windows = n_cross = n_band = n_pwindows = 0
+    n: Counter = Counter()
     for path in sorted(PKG.rglob("*.py")):
-        lines = path.read_text().splitlines()
-        in_doc = False
-        for i, line in enumerate(lines):
-            # crude docstring tracker: prose mentions of patterns
-            # (module docs describing the rules) are not call sites.
-            # Only triple-double-quote blocks are tracked; a line that
-            # opens and closes one stays "code".
-            tq = line.count('"""')
-            if in_doc:
-                if tq % 2 == 1:
-                    in_doc = False
-                continue
-            if tq % 2 == 1:
-                in_doc = True
-            if line.lstrip().startswith("#"):
-                continue
-            n_gated += line.count("maybe_broadcast(")
-            for m in CROSSJOIN.finditer(line):
-                n_cross += 1
-                span = call_span(lines, i, m.start())
-                if not (site_is_marked(lines, i) or MARKER.search(span)):
-                    findings.append(
-                        f"{path.relative_to(ROOT)}:{i + 1}: crossJoin without "
-                        f"a '# bcast-ok: <bound>' marker — name the bounded "
-                        f"side (1-row agg, k-row panel, ...)\n    {line.strip()}"
-                    )
-            for m in PAIR_GENERATORS.finditer(line):
-                # skip the definitions themselves — the rule binds call
-                # sites, where the cap decision is made
-                if line.lstrip().startswith("def ") or "import" in line.split("(")[0]:
-                    continue
-                n_band += 1
-                span = call_span(lines, i, m.end() - 1)
-                if not (
-                    CAP_ARG.search(span)
-                    or site_is_marked(lines, i, BAND_MARKER)
-                    or BAND_MARKER.search(span)
-                ):
-                    findings.append(
-                        f"{path.relative_to(ROOT)}:{i + 1}: candidate-pair "
-                        f"generator without an explicit max_bucket_size cap or "
-                        f"a '# band-ok: <keyspace bound>' marker — fixed-width "
-                        f"band families saturate and go quadratic (r10 64x "
-                        f"probe)\n    {line.strip()}"
-                    )
-            for _ in MANUAL_SELF_JOIN.finditer(line):
-                n_band += 1
-                if not site_is_marked(lines, i, BAND_MARKER):
-                    findings.append(
-                        f"{path.relative_to(ROOT)}:{i + 1}: manual bucket "
-                        f"self-join (alias(\"l\") pattern) without a "
-                        f"'# band-ok: <keyspace bound>' marker\n    {line.strip()}"
-                    )
-            for _ in CALL.finditer(line):
-                n_raw += 1
-                if not site_is_marked(lines, i):
-                    findings.append(
-                        f"{path.relative_to(ROOT)}:{i + 1}: raw F.broadcast "
-                        f"without a '# bcast-ok: <bound>' marker — name the "
-                        f"structural bound, or use model.maybe_broadcast for "
-                        f"a corpus-proportional side\n    {line.strip()}"
-                    )
-            for _ in PART_WINDOW.finditer(line):
-                n_pwindows += 1
-                if not site_is_marked(lines, i, PART_WINDOW_MARKER):
-                    findings.append(
-                        f"{path.relative_to(ROOT)}:{i + 1}: partitioned "
-                        f"window without a '# grpwin-ok: <scaling arg>' or "
-                        f"'# panel-ok: <mechanism/bound>' marker — say whether "
-                        f"the partition count scales with the input, or why a "
-                        f"bounded panel over this input is not a funnel "
-                        f"(WindowGroupLimit(Partial) / bounded input)\n"
-                        f"    {line.strip()}"
-                    )
-            for _ in GLOBAL_WINDOW.finditer(line):
-                n_windows += 1
-                if not site_is_marked(lines, i, WINDOW_MARKER):
-                    findings.append(
-                        f"{path.relative_to(ROOT)}:{i + 1}: global window "
-                        f"(Window.orderBy with no partitionBy) without a "
-                        f"'# window-ok: <bound>' marker — the windowed input "
-                        f"must be a bounded derived table, and the site must "
-                        f"name the bound\n    {line.strip()}"
-                    )
+        f, c = audit_lines(str(path.relative_to(ROOT)), path.read_text().splitlines())
+        findings += f
+        n.update(c)
     # docstring/comment mentions of F.broadcast( inside strings are rare
     # and harmless; the scan is per-line source text like oracle_lint.
     for f in findings:
         print(f)
     print(
-        f"broadcast_audit: {n_raw} raw hint sites, {n_gated} size-gated "
-        f"maybe_broadcast sites, {n_windows} global-window sites, "
-        f"{n_pwindows} partitioned-window sites, "
-        f"{n_cross} crossJoin sites, {n_band} band-generator sites, "
+        f"broadcast_audit: {n['raw']} raw hint sites, {n['gated']} size-gated "
+        f"maybe_broadcast sites, {n['windows']} global-window sites, "
+        f"{n['pwindows']} partitioned-window sites, "
+        f"{n['cross']} crossJoin sites, {n['band']} band-generator sites, "
         f"{len(findings)} findings"
     )
     return 1 if findings else 0

@@ -45,7 +45,7 @@ LIBRARY_ONLY = {
     "[EXT]-export": ("sharded parquet/jsonl corpus export", "sources/export.py (tests/test_pipeline.py)"),
     "§2.10-dedup": ("streaming exact dedup (watermark-bounded state)", "streaming/dedup.py (tests/test_streaming.py)"),
     "[EXT]-packing-sharded": ("hierarchical parallel packing (skew fix)", "operators/scale.py:pack_greedy_sharded (tests/test_scale.py)"),
-    "[EXT]-lsh-bucket-cap": ("hot-bucket candidate cap: over-cap LSH buckets route via min-doc representative", "operators/dedup.banded_candidate_pairs + band_bucket_stats (tests/test_ingest_dedup.py, scale_probe lsh_hot_bucket_capped)"),
+    "[EXT]-lsh-bucket-cap": ("hot-bucket candidate cap: over-cap LSH buckets route via min-doc representative", "operators/dedup.bucket_pairs (via banded_candidate_pairs) + band_bucket_stats (tests/test_ingest_dedup.py, scale_probe lsh_hot_bucket_capped)"),
     "[EXT]-c4-lines": ("C4-style line cleaning + Gopher line-shape rules (single-line corpus → library)", "operators/text_analysis.c4_clean_lines + line_shape_metrics (tests/test_gopher.py)"),
     "[EXT]-webdataset": ("WebDataset tar shard export (byte-deterministic, manifest-returning)", "sources/export.write_webdataset_shards (tests/test_webdataset.py)"),
     "§2.10-cdc": ("streaming CDC merge into pointer-committed parquet snapshots (idempotent epoch replay)", "streaming/cdc.py (tests/test_cdc_stream.py)"),
