@@ -67,6 +67,8 @@ def prime_page_cache(sf_dir: str) -> int:
     Returns bytes primed."""
     total = 0
     for p in glob.glob(os.path.join(sf_dir, "**", "*.parquet"), recursive=True):
+        if not os.path.isfile(p):  # a multi-file table is a *.parquet dir
+            continue
         with open(p, "rb") as f:
             while chunk := f.read(1 << 22):
                 total += len(chunk)

@@ -1,9 +1,18 @@
-"""Scalar text/time functions (SURVEY.md §2.8, T1-T10) as native Column
-expressions — JVM-side, whole-stage-codegen'd; no Python UDFs.
+"""Scalar text/time functions (SURVEY.md §2.8, T1-T10) as native Spark
+expressions — JVM-side, no Python UDFs.
 
 Faithful ports of reference fegis/search/formatters.py:141-218 with one
 deliberate change: ``relative_time`` takes an explicit reference
 timestamp instead of wall-clock now() (SURVEY.md §7.4 determinism).
+
+``extract_summary``, ``content_preview`` and ``relative_time`` take
+column-expression strings and build ONE parsed Spark-SQL expression
+each, linear in its definition. Intermediates shared under a HOF or in
+a conditional branch (cleaned text, sentence array, summary), where
+common-subexpression elimination cannot merge them, are bound once per
+row with ``transform(array(v), _x -> …)[0]``; lambda variables start
+with ``_`` so they cannot shadow a caller's column. ``relative_time``'s
+intermediates are cheap arithmetic, so it stays HOF-free.
 """
 
 from __future__ import annotations
@@ -15,62 +24,57 @@ from pyspark.sql import functions as F
 CONTENT_PREVIEW_LENGTH = 150
 
 
-def clean_whitespace(col: Column) -> Column:
-    """Python ``" ".join(s.split())``: collapse whitespace runs, trim."""
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
+def _summary_sql(c: str, max_sentences: int) -> str:
+    """Spark SQL for the first-N-sentence summary of expression `c`.
 
-
-def _sentences(col: Column) -> Column:
-    """Split on [.!?]+ runs, trim pieces, drop empties
-    (reference extract_summary, formatters.py:177-179)."""
-    return F.filter(
-        F.transform(F.split(col, r"[.!?]+"), lambda s: F.trim(s)),
-        lambda s: s != F.lit(""),
-    )
-
-
-def extract_summary(col: Column, max_sentences: int = 1) -> Column:
-    """T2: first-N-sentence summary (reference formatters.py:172-195).
-
-    Join with ". ", re-append terminal "."; when no sentences survive
-    the split, fall back to the raw content (<=100 chars) or a
-    97-char+"..." truncation.
-    """
-    sents = _sentences(col)
-    joined = F.array_join(F.slice(sents, 1, max_sentences), ". ")
-    # components contain no terminal punctuation (they were delimiters),
-    # but keep the reference's conditional shape for fidelity
-    summary = F.when(
-        F.substring(joined, -1, 1).isin(".", "!", "?"), joined
-    ).otherwise(F.concat(joined, F.lit(".")))
-    fallback = F.when(F.length(col) <= 100, col).otherwise(
-        F.concat(F.substring(col, 1, 97), F.lit("..."))
-    )
+    Sentences split on [.!?]+ runs, trimmed, empties dropped (reference
+    formatters.py:177-179). The reference re-appends "." only when the
+    joined text does not already end in [.!?]; a piece of that split
+    never contains one and is non-empty after the filter, so the joined
+    text never does and the "." is always appended."""
+    sents = f"filter(transform(split({c}, '[.!?]+'), _w -> trim(_w)), _w -> _w <> '')"
     return (
-        F.when(col.isNull() | (col == ""), F.lit(""))
-        .when(F.size(sents) == 0, fallback)
-        .otherwise(summary)
+        f"transform(array({sents}), _sents -> CASE"
+        f" WHEN {c} IS NULL OR {c} = '' THEN ''"
+        f" WHEN size(_sents) = 0 THEN CASE WHEN length({c}) <= 100 THEN {c}"
+        f" ELSE concat(substring({c}, 1, 97), '...') END"
+        f" ELSE concat(array_join(slice(_sents, 1, {max_sentences}), '. '), '.')"
+        f" END)[0]"
     )
 
 
-def content_preview(col: Column, max_length: int = CONTENT_PREVIEW_LENGTH) -> Column:
+def extract_summary(c: str, max_sentences: int = 1) -> Column:
+    """T2: first-N-sentence summary (reference formatters.py:172-195)
+    of column expression `c`.
+
+    Join with ". ", append terminal "."; when no sentences survive the
+    split, fall back to the raw content (<=100 chars) or a
+    97-char+"..." truncation."""
+    return F.expr(_summary_sql(c, max_sentences))
+
+
+def content_preview(c: str, max_length: int = CONTENT_PREVIEW_LENGTH) -> Column:
     """T1: display preview (reference format_content_preview,
-    formatters.py:198-218): collapse whitespace → short content passes
-    through → else 2-sentence summary → else truncate to max-3 + "..."."""
-    cleaned = clean_whitespace(col)
-    summary = extract_summary(cleaned, max_sentences=2)
-    return (
-        F.when(col.isNull() | (col == ""), F.lit(""))
-        .when(F.length(cleaned) <= max_length, cleaned)
-        .when(F.length(summary) <= max_length, summary)
-        .otherwise(F.concat(F.substring(summary, 1, max_length - 3), F.lit("...")))
+    formatters.py:198-218) of column expression `c`: collapse
+    whitespace → short content passes through → else 2-sentence
+    summary → else truncate to max-3 + "..."."""
+    # whitespace collapse = Python " ".join(s.split())
+    return F.expr(
+        rf"transform(array(trim(regexp_replace({c}, '\\s+', ' '))), _clean -> CASE"
+        f" WHEN {c} IS NULL OR {c} = '' THEN ''"
+        f" WHEN length(_clean) <= {max_length} THEN _clean"
+        f" ELSE transform(array({_summary_sql('_clean', 2)}), _summ -> CASE"
+        f" WHEN length(_summ) <= {max_length} THEN _summ"
+        f" ELSE concat(substring(_summ, 1, {max_length - 3}), '...') END)[0]"
+        f" END)[0]"
     )
 
 
-def relative_time(ts: Column, ref: Column) -> Column:
+def relative_time(ts: str, ref: str) -> Column:
     """T3: human-readable relative time (reference format_relative_time,
-    formatters.py:141-169), parameterized on an explicit reference
-    instant so results are deterministic/testable.
+    formatters.py:141-169) of timestamp expression `ts`, parameterized
+    on an explicit reference-instant expression `ref` so results are
+    deterministic/testable.
 
     Mirrors Python timedelta semantics: days = floor(diff/86400),
     remaining seconds decompose into hours/minutes.
@@ -78,38 +82,34 @@ def relative_time(ts: Column, ref: Column) -> Column:
     # cast(timestamp as long) floors to epoch seconds; the DuckDB mirror
     # is CAST(floor(epoch(ts)) AS BIGINT). TIMESTAMP_NTZ has no direct
     # long cast — hop through TIMESTAMP (identity under the UTC session).
-    def _secs(c: Column) -> Column:
-        return c.cast("timestamp").cast("long")
-
-    secs = _secs(ref) - _secs(ts)
-    days = F.floor(secs / 86400)
+    secs = (
+        f"(CAST(CAST({ref} AS TIMESTAMP) AS BIGINT)"
+        f" - CAST(CAST({ts} AS TIMESTAMP) AS BIGINT))"
+    )
+    days = f"floor({secs} / 86400)"
     # pmod, not %: Spark % keeps the dividend sign, so a future ts
     # (secs < 0) would yield a negative remainder and fall through to
     # "just now" — Python timedelta normalizes to days=-1, rem>=0
     # (e.g. ts 10s in the future => "23 hours ago"), and the reference
     # inherits that
-    rem = F.pmod(secs, F.lit(86400))
-    hours = F.floor(rem / 3600)
-    minutes = F.floor(F.pmod(rem, F.lit(3600)) / 60)
-    weeks = F.floor(days / 7)
-    months = F.floor(days / 30)
+    rem = f"pmod({secs}, 86400)"
+    hours = f"floor({rem} / 3600)"
+    minutes = f"floor(pmod({rem}, 3600) / 60)"
 
-    def plural(n: Column, unit: str) -> Column:
-        return F.concat(
-            n.cast("string"),
-            F.lit(f" {unit}"),
-            F.when(n > 1, F.lit("s")).otherwise(F.lit("")),
-            F.lit(" ago"),
+    def plural(n: str, unit: str) -> str:
+        return (
+            f"concat(CAST({n} AS STRING), ' {unit}',"
+            f" CASE WHEN {n} > 1 THEN 's' ELSE '' END, ' ago')"
         )
 
-    return (
-        F.when(days == 1, F.lit("1 day ago"))
-        .when((days > 1) & (days < 7), plural(days, "day"))
-        .when((days >= 7) & (days < 30), plural(weeks, "week"))
-        .when(days >= 30, plural(months, "month"))
-        .when(hours > 0, plural(hours, "hour"))
-        .when(minutes > 0, plural(minutes, "minute"))
-        .otherwise(F.lit("just now"))
+    return F.expr(
+        f"CASE WHEN {days} = 1 THEN '1 day ago'"
+        f" WHEN {days} > 1 AND {days} < 7 THEN {plural(days, 'day')}"
+        f" WHEN {days} >= 7 AND {days} < 30 THEN {plural(f'floor({days} / 7)', 'week')}"
+        f" WHEN {days} >= 30 THEN {plural(f'floor({days} / 30)', 'month')}"
+        f" WHEN {hours} > 0 THEN {plural(hours, 'hour')}"
+        f" WHEN {minutes} > 0 THEN {plural(minutes, 'minute')}"
+        f" ELSE 'just now' END"
     )
 
 

@@ -58,13 +58,16 @@ RESULT_VIEWS: dict[str, list[str]] = {
 }
 
 
-def _field_expr(df: DataFrame, field: str, ref_ts: Column | None) -> Column:
+#: column that carries a caller-supplied ``ref_ts`` Column into the
+#: view's SQL-string ``relative_time``; dropped by the view projection
+_REF_TS_COL = "__view_ref_ts"
+
+
+def _field_expr(field: str, ref: str) -> Column:
     if field == "content_preview":
-        return content_preview(F.col("content")).alias("content_preview")
+        return content_preview("content").alias("content_preview")
     if field == "relative_time":
-        if ref_ts is None:
-            ref_ts = F.current_timestamp()
-        return relative_time(F.col("timestamp"), ref_ts).alias("relative_time")
+        return relative_time("`timestamp`", ref).alias("relative_time")
     if "." in field:
         # nested dot-path access, aliased to the dotted name (P6);
         # Column refs are null-safe on missing struct values
@@ -78,8 +81,14 @@ def apply_view(df: DataFrame, view: str, ref_ts: Column | None = None) -> DataFr
     `ref_ts`: explicit reference instant for relative_time (pass
     F.lit(datetime(...)) for deterministic output; defaults to
     current_timestamp() which matches the reference's now()-based
-    behavior but is non-reproducible)."""
+    behavior but is non-reproducible). A Column ``ref_ts`` rides in as
+    one extra column that the view projection drops; the default path
+    builds the computed fields from SQL strings alone."""
     fields = RESULT_VIEWS.get(view)
     if fields is None:
         raise ValueError(f"Unknown view: {view}. Available: {list(RESULT_VIEWS)}")
-    return df.select(*[_field_expr(df, f, ref_ts) for f in fields])
+    ref = "current_timestamp()"
+    if ref_ts is not None and "relative_time" in fields:
+        df = df.withColumn(_REF_TS_COL, ref_ts)
+        ref = f"`{_REF_TS_COL}`"
+    return df.select(*[_field_expr(f, ref) for f in fields])

@@ -56,28 +56,6 @@ def padded(col: Column) -> Column:
 PADDED_SQL = "' ' || lower(trim(regexp_replace({c}, '\\s+', ' ', 'g'))) || ' '"
 
 
-def lang_scores(col: Column) -> dict[str, Column]:
-    p = padded(col)
-    return {
-        lang: sum(
-            [occurrences(p, m) for m in markers], F.lit(0).cast("double")
-        ).alias(f"score_{lang}")
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
-def lang_id(col: Column) -> Column:
-    """Predicted language = argmax marker-occurrence score; ties and
-    all-zero fall back to first language in alphabetical order whose
-    score equals the max ('de' before 'en' ...)."""
-    scores = lang_scores(col)
-    mx = F.greatest(*scores.values())
-    out: Column = F.lit(LANG_ORDER[-1])
-    for lang in reversed(LANG_ORDER[:-1]):
-        out = F.when(scores[lang] == mx, F.lit(lang)).otherwise(out)
-    return out
-
-
 def lang_id_sql(c: str) -> str:
     """The exact same argmax restated for DuckDB (generated from the
     same marker table — cannot drift)."""
@@ -112,28 +90,6 @@ def token_count_bpe_ish(col: Column) -> Column:
 
 
 TOKEN_COUNT_BPE_SQL = "len(regexp_extract_all({c}, '\\w+|[^\\w\\s]'))"
-
-
-def quality_score(col: Column) -> Column:
-    """Composite quality heuristic in [0,1]:
-    0.4·length_ok + 0.3·(1-punct_ratio·5 clamped) + 0.3·stopword presence.
-    Deterministic double arithmetic, mirrored in SQL by quality_score_sql."""
-    n_chars = F.length(col)
-    n_tok = token_count_ws(col).cast("double")
-    punct = (
-        F.length(col) - F.length(F.regexp_replace(col, r"[.,!?;:]", ""))
-    ).cast("double")
-    p = padded(col)
-    stop_hits = sum(
-        [occurrences(p, f" {s} ") for s in STOPWORDS], F.lit(0).cast("double")
-    )
-    length_ok = F.when((n_chars >= 100) & (n_chars <= 10000), 1.0).otherwise(0.0)
-    punct_ratio = F.when(n_chars > 0, punct / n_chars).otherwise(F.lit(0.0))
-    punct_term = F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio * 5)
-    stop_term = F.when(n_tok > 0, F.least(F.lit(1.0), stop_hits / n_tok * 4)).otherwise(
-        F.lit(0.0)
-    )
-    return F.round(0.4 * length_ok + 0.3 * punct_term + 0.3 * stop_term, 6)
 
 
 def quality_score_sql(c: str) -> str:
@@ -489,12 +445,17 @@ def bigram_logprob(
 
 
 # ---------------------------------------------------------------------------
-# F.expr fast paths: the Column builders above cross py4j once per
-# operator (~150 calls, ~170 ms of driver time per lang_id plan); these
-# generate the identical arithmetic as ONE Spark-SQL string from the
-# same marker/stopword tables, so construction is a single call.
-# Equivalence with the Column forms is pinned in tests; the DuckDB
-# oracles are generated from the same tables and cannot drift.
+# Spark forms of the scorers: each is ONE generated Spark-SQL string
+# (one py4j call), from the same marker/stopword tables as the DuckDB
+# oracles above, so the two cannot drift. Codegen's common-subexpression
+# elimination only merges copies in always-evaluated positions: the
+# HOF-free lang_id_expr spells each of its five scores once and lets
+# CSE merge the padded-text copies; where the shared part sits under a
+# HOF (lang_margin_expr's
+# array_sort) or in a conditional branch (quality_score_expr's stop-hit
+# sum) the padded text is bound once per row with
+# transform(array(v), _x -> ...)[0]. Lambda variables carry a leading
+# underscore so they cannot shadow a caller's column.
 
 PADDED_SPARK = r"' ' || lower(trim(regexp_replace({c}, '\\s+', ' '))) || ' '"
 _TOKEN_WS_SPARK = (
@@ -503,26 +464,44 @@ _TOKEN_WS_SPARK = (
 )
 
 
+def _lang_scores_sql(p: str) -> list[str]:
+    """Marker-occurrence score per language over padded text `p`, in
+    LANG_ORDER."""
+    return [
+        "(" + " + ".join(occurrences_sql(p, m) for m in LANG_MARKERS[lang]) + ")"
+        for lang in LANG_ORDER
+    ]
+
+
 def lang_id_expr(c: str) -> Column:
-    """lang_id() as one generated Spark-SQL expression over column
-    expression string `c` — same argmax, same tie order."""
-    p = PADDED_SPARK.format(c=c)
-    score = {
-        lang: "(" + " + ".join(occurrences_sql(p, m) for m in markers) + ")"
-        for lang, markers in LANG_MARKERS.items()
-    }
-    mx = "greatest(" + ", ".join(score[lang] for lang in LANG_ORDER) + ")"
-    expr = f"'{LANG_ORDER[-1]}'"
-    for lang in reversed(LANG_ORDER[:-1]):
-        expr = f"CASE WHEN {score[lang]} = {mx} THEN '{lang}' ELSE {expr} END"
-    return F.expr(expr)
+    """Predicted language of column expression `c` = argmax marker-
+    occurrence score; ties and all-zero fall back to the first language
+    in alphabetical order whose score equals the max ('de' before 'en'
+    ...). Each score is spelled once, in a (score, rank, lang) struct:
+    greatest() takes the highest score, then the highest rank, which
+    is the earliest language. NULL text has all-NULL scores, so the
+    rank alone decides and the last language ranks first, as in
+    lang_id_sql's CASE-ELSE fallthrough. That guard sits in the rank
+    because a CASE around greatest() would be a branch, where CSE
+    cannot merge the padded-text copies."""
+    n = len(LANG_ORDER)
+    ranks = [str(n - i) for i in range(n - 1)] + [f"IF({c} IS NULL, {n + 1}, 1)"]
+    cands = ", ".join(
+        f"named_struct('s', {score}, 'r', {rank}, 'l', '{lang}')"
+        for lang, score, rank in zip(
+            LANG_ORDER, _lang_scores_sql(PADDED_SPARK.format(c=c)), ranks
+        )
+    )
+    return F.expr(f"greatest({cands}).l")
 
 
 def quality_score_expr(c: str) -> Column:
-    """quality_score() as one generated Spark-SQL expression — same
-    IEEE-double arithmetic, term for term."""
+    """Composite quality heuristic in [0,1] of column expression `c`:
+    0.4·length_ok + 0.3·(1-punct_ratio·5 clamped) + 0.3·stopword presence.
+    Deterministic double arithmetic, term for term as quality_score_sql;
+    the stop-hit sum (in a CASE branch) binds the padded text once."""
     p = PADDED_SPARK.format(c=c)
-    stop_hits = " + ".join(occurrences_sql(p, f" {s} ") for s in STOPWORDS)
+    stop_hits = " + ".join(occurrences_sql("_qp", f" {s} ") for s in STOPWORDS)
     n_tok = f"CAST(({_TOKEN_WS_SPARK.format(c=c)}) AS DOUBLE)"
     punct_ratio = (
         f"CASE WHEN length({c}) > 0 "
@@ -533,7 +512,7 @@ def quality_score_expr(c: str) -> Column:
         f"round(0.4 * (CASE WHEN length({c}) BETWEEN 100 AND 10000 THEN 1.0 ELSE 0.0 END)"
         f" + 0.3 * greatest(0.0, 1.0 - ({punct_ratio}) * 5)"
         f" + 0.3 * (CASE WHEN ({n_tok}) > 0"
-        f" THEN least(1.0, ({stop_hits}) / ({n_tok}) * 4)"
+        f" THEN least(1.0, transform(array({p}), _qp -> {stop_hits})[0] / ({n_tok}) * 4)"
         f" ELSE 0.0 END), 6)"
     )
 
@@ -589,16 +568,16 @@ def lang_margin_expr(c: str) -> Column:
     """Language-ID confidence: top score minus runner-up score (the
     argmax margin). Ambiguous documents (margin ~ 0) are the ones a
     confidence-gated pipeline drops or routes to a real model. Same
-    generated score fragments as lang_id_expr — one Spark-SQL string.
+    generated score fragments as lang_id_expr — one Spark-SQL string,
+    the padded text and the sorted scores each bound once per row.
     """
-    p = PADDED_SPARK.format(c=c)
-    scores = [
-        "(" + " + ".join(occurrences_sql(p, m) for m in LANG_MARKERS[lang]) + ")"
-        for lang in LANG_ORDER
-    ]
-    arr = f"array_sort(array({', '.join(scores)}))"
-    n = len(scores)
-    return F.expr(f"element_at({arr}, {n}) - element_at({arr}, {n - 1})")
+    scores = ", ".join(_lang_scores_sql("_mp"))
+    n = len(LANG_ORDER)
+    return F.expr(
+        f"transform(array({PADDED_SPARK.format(c=c)}), _mp ->"
+        f" transform(array(array_sort(array({scores}))), _ms ->"
+        f" element_at(_ms, {n}) - element_at(_ms, {n - 1}))[0])[0]"
+    )
 
 
 def lang_margin_sql(c: str) -> str:

@@ -65,9 +65,9 @@ _PREVIEW_CTE = r"""
 )
 def content_preview_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1: the summary view's content_preview over every document —
-    pure whole-stage-codegen string expressions, no UDF."""
+    one Spark-SQL expression, no UDF."""
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", content_preview(F.col("text")).alias("content_preview"))
+    return docs.select("doc_id", content_preview("text").alias("content_preview"))
 
 
 @register(
@@ -91,7 +91,7 @@ def extract_summary_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2: 1-sentence extract_summary on the raw (un-collapsed) text,
     as the reference calls it standalone (formatters.py:172)."""
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", extract_summary(F.col("text"), 1).alias("summary"))
+    return docs.select("doc_id", extract_summary("text", 1).alias("summary"))
 
 
 @register(
@@ -127,8 +127,8 @@ def relative_time_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2024-02-15, after the events range) — deterministic, oracle-checkable;
     the reference's now()-based form is this with ref=current_timestamp."""
     ev = load_table(spark, sf_dir, "events")
-    ref = F.lit("2024-02-15 00:00:00").cast("timestamp_ntz")
-    return ev.select("event_id", relative_time(F.col("ts"), ref).alias("relative_time"))
+    ref = "CAST('2024-02-15 00:00:00' AS TIMESTAMP_NTZ)"
+    return ev.select("event_id", relative_time("ts", ref).alias("relative_time"))
 
 
 @register(

@@ -339,13 +339,14 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The scored projection (~64 bytes/row, ~1% of corpus width) is
     persisted MEMORY_AND_DISK as a deliberate pushdown barrier: without
-    it Catalyst pushes the quality/lang gates below the projection,
-    which (a) evaluates both megaexpressions twice per surviving row
-    and (b) makes the combined filter+project stage blow janino's 64KB
-    method limit, disabling whole-stage codegen for the hottest stage.
-    Split this way each stage codegens and the expressions run once —
-    measured 1.6× faster at sf0.1 (3.0s → 1.9s). At warehouse scale
-    you would materialize to a scratch table instead. The returned plan
+    it Catalyst pushes the quality/lang gates below the projection, so
+    the plan spells both scorers twice (filter and project) and
+    evaluates them twice per surviving row. The scorers are linear-size
+    and quality_score_expr's transform bind keeps that filter+project
+    out of whole-stage codegen, so it no longer overflows janino's 64KB
+    method limit, and the barrier now saves little: 0.88-0.91 s with it
+    vs 0.90-1.13 s without at sf0.1 on 4 cores. At warehouse scale you
+    would materialize to a scratch table instead. The returned plan
     still references the cache, so the operator cannot unpersist it; it
     stays until LRU eviction or spark.catalog.clearCache() (the
     repo-wide cache-ownership policy)."""

@@ -485,3 +485,27 @@ def test_grouped_ntile_lead_no_full_group_corpus_window(spark, cat):
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in final, final
+
+
+def test_text_exprs_spell_shared_intermediates_once(spark, cat):
+    """The generated text scorers stay linear in their definition: the
+    whitespace-collapse regexp_replace appears once in the optimized
+    plan of content_preview_docs and text_quality_score (bound once per
+    row, not re-spelled per use), and text_lang_id spells each of its
+    five language scores once (the re-spelled argmax CASE chain printed
+    20 514 chars)."""
+    import os
+    import re
+
+    sf001 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+
+    def optimized(name: str) -> str:
+        df = cat[name].builder(spark, sf001)
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    collapse = re.compile(r"regexp_replace\([^,]+, \\s\+, ")
+    for name in ("content_preview_docs", "text_quality_score"):
+        p = optimized(name)
+        assert len(collapse.findall(p)) == 1, (name, p)
+    lang = optimized("text_lang_id")
+    assert len(lang) <= 20_514 // 3, len(lang)
