@@ -1,19 +1,31 @@
 """Deduplication operators for training-data pipelines ([EXT], K9).
 
-Five tiers, all expressed as declarative plans (no Python in the hot
-path; every hash is JVM-side xxhash64/md5):
+Every tier is a declarative plan (no Python in the hot path; every
+hash is JVM-side xxhash64/md5):
 
 * exact        — md5 over normalized text; one shuffle on the hash.
-* minhash_lsh  — shingle → k minhashes → b bands; candidate pairs come
-  from band-bucket equi-joins (never a cross product), then exact
-  shingle-Jaccard verification on candidates only. The standard
-  near-dup layout at 100 TB: shuffle volume = |bands| rows/doc.
-* simhash      — 64-bit sign-aggregated token-hash fingerprint;
-  near-dups = equal 16-bit band + hamming<=threshold on candidates.
+* minhash_lsh  — shingle → MINHASH_HASHES minhashes → MINHASH_BANDS
+  bands; candidate pairs come from band buckets (bucket_pairs, never a
+  cross product), then exact shingle-Jaccard verification on
+  candidates only. The standard near-dup layout at 100 TB: shuffle
+  volume = |bands| rows/doc.
+* simhash      — sign-aggregated token-hash fingerprint; near-dups =
+  equal band + hamming<=threshold on candidates.
 * ngram_jaccard — exact pairwise Jaccard inside small blocks
   (lang, source) — the brute-force verifier, oracle-checkable.
 * embedding near-dup — cosine >= threshold pairs; brute force within
-  blocks here, LSH (operators/knn.py) at scale.
+  blocks here, LSH (operators/knn.py) or SRP codes at scale; SemDeDup
+  clusters first.
+* incremental  — new batch × indexed corpus only (bloom prefilter for
+  exact hashes, corpus-band × batch-band join for MinHash).
+
+Hash families: MinHash and SimHash each have ONE implementation, and
+their ``portable`` argument only picks how the hashes are spelled.
+xxhash64 (portable=False) is the fast family, but only Spark computes
+it, so its catalog queries are rows-only at the oracle gate. md5-60
+(portable=True: the first 15 md5 hex chars as a bigint) is one DuckDB
+replays value for value, so those catalog queries are oracle-checked
+end to end.
 
 Determinism: all hashes are seeded constants; candidate pairs are
 ordered (a < b).
@@ -60,32 +72,52 @@ def tokens_sql(col: str) -> str:
     return f"filter(split({spaced}, '[^\\\\p{{L}}\\\\p{{N}}]+'), t -> t != '')"
 
 
-def token_ngrams(tok: Column, n: int = 3) -> Column:
-    """Distinct token n-grams (shingles) as strings. Empty when the
-    document has fewer than n tokens (guarded: Spark's sequence()
-    DESCENDS when start > stop, which would fabricate bogus grams)."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(tok) - n),
-        lambda i: F.concat_ws(" ", F.slice(tok, i + 1, n)),
-    )
-    return F.when(F.size(tok) < n, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(grams)
-    )
+#: MinHash geometry, decided here only: MINHASH_HASHES per-seed
+#: minhashes over distinct token SHINGLE_N-gram shingles, cut into
+#: MINHASH_BANDS bands of MINHASH_HASHES // MINHASH_BANDS rows. The
+#: DuckDB oracle CTE (queries/dedup._mh_pipeline_cte) is generated from
+#: these, so both engines build the same sketch.
+MINHASH_HASHES = 16
+MINHASH_BANDS = 4
+SHINGLE_N = 3
+
+#: SimHash geometry: SIMHASH_BANDS equal bands over a sketch as wide as
+#: the token hash — SIMHASH_BITS for xxhash64 (16-bit bands),
+#: SIMHASH_BITS_PORTABLE for md5-60 (15-bit bands). Either way a pair
+#: within hamming 3 shares a band (pigeonhole).
+SIMHASH_BANDS = 4
+SIMHASH_BITS = 64
+SIMHASH_BITS_PORTABLE = 60
+
+
+def _h60(c: str) -> str:
+    """The md5-60 hash of SQL expression `c` in Spark SQL: the first 15
+    md5 hex chars as a bigint. One parsed string rather than a py4j
+    Column chain, which costs a round-trip per node at plan build."""
+    return f"CAST(conv(substring(md5({c}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def _shingle_tokens(text_col: str) -> Column:
+    """NGram input column `tok`: the tokens of `text_col`, empty (not
+    NULL) for NULL text. NGram throws on a NULL array, and a null
+    filter in front of it is no guard: codegen CSE may run the NGram
+    call before the filter's null check."""
+    return tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("tok")
 
 
 def with_shingles(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3, out: str = "sh"
+    df: DataFrame, text_col: str, id_col: str, n: int = SHINGLE_N, out: str = "sh"
 ) -> DataFrame:
     """(id, distinct token n-grams) via pyspark.ml.feature.NGram.
 
     NGram is Scala-implemented and ~15x faster than the equivalent
     higher-order transform/slice/concat expression chain (HOFs are
     interpreted per element, not codegen'd — measured 5.7s vs 0.36s on
-    5k docs). Use this on every data path; token_ngrams (Column form)
-    stays for composability in small expressions."""
+    5k docs), so every data path shingles through here. Documents with
+    fewer than n tokens or NULL text have no shingles and are dropped."""
     from pyspark.ml.feature import NGram
 
-    base = df.select(F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("tok"))
+    base = df.select(F.col(id_col).alias("doc"), _shingle_tokens(text_col))
     ng = NGram(n=n, inputCol="tok", outputCol="__sh")
     return (
         ng.transform(base)
@@ -271,79 +303,141 @@ def keep_best_dedup(
     )
 
 
+def minhash_sig_bands(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    portable: bool,
+    seed_bcast_bound: int | None = None,
+):
+    """THE MinHash sketch builder (geometry: MINHASH_* / SHINGLE_N).
+    Returns three tables:
+
+    * ``base`` (doc, sh): distinct shingles, persisted MEMORY_AND_DISK —
+      it feeds the signature build AND the verify joins. The entry
+      outlives the call (the returned plans reference it) until LRU
+      eviction or spark.catalog.clearCache(), the repo-wide
+      cache-ownership policy; at warehouse scale you would materialize
+      signatures to a table instead;
+    * ``sig`` (doc, mh0..mh{k-1}): the per-seed min signature (the
+      estimator-audit query consumes it as an array);
+    * ``banded`` (doc, band, bh): one band hash per band.
+
+    ``portable`` only picks how three hashes are spelled — the gram
+    hash, the per-seed hash and the band hash: xxhash64 (the gram
+    string hashed once, the k seeds re-hash that 8-byte base; measured
+    ~1.4x over per-seed string hashes at sf0.1) or md5-60 (_h60; seeds
+    hash "gh-i", bands are md5 hex strings), the family DuckDB replays.
+    Either family is a pure function of the text, so sketches computed
+    in separate calls (corpus and batch sides of the incremental form,
+    streaming state) are mutually consistent. The signature is explode
+    + codegen'd hashes + min-agg (the HOF transform/array_min form is
+    interpreted and ~10x slower), spelled as single parsed strings (the
+    Column-chain form of the seed aggregates and band structs cost
+    ~0.3-0.5 s of py4j round-trips per plan build).
+
+    seed_bcast_bound: the per-seed hashes are pure functions of gh,
+    and the gram stream repeats each distinct gram ~10x at sf0.1 (260k
+    instances / 27k distinct; duplicate-heavy corpora are the whole
+    point of this operator). With a bound, the seeds are hashed once
+    per DISTINCT gh and attached by an equi-join instead of per gram
+    INSTANCE (md5-60: profiled 12 us/row, ~3.2 s of the 4.6 s sf0.1
+    wall; values bit-identical by construction). Under the bound the
+    seeds table broadcasts (ex stays doc-local, so the doc partial-agg
+    still collapses map-side); over it the hint is withheld and AQE
+    picks from real sizes — the SMJ fallback trades one narrow gh
+    exchange of the gram stream for 15/16 of the seed-hash CPU.
+    Callers with an sf_dir pass ``32 * table_bytes(sf_dir,
+    "documents")``: the seeds projection is ~136 B per DISTINCT gram vs
+    >= ~5 compressed source bytes per gram INSTANCE, so 32x source
+    bytes upper-bounds it even at dedup ratio 1. None (tiny-side
+    callers: streaming batch probes; dedup_minhash_lsh) keeps the
+    inline per-instance form — on a few-doc batch the extra
+    distinct+join stages cost more latency than the hashes they save.
+    """
+    from pyspark import StorageLevel
+
+    if portable:
+        gram_h, band_h = _h60("g"), "md5"
+
+        def seed_h(i: int) -> str:
+            return _h60(f"concat(CAST(gh AS STRING), '-{i}')")
+    else:
+        gram_h, band_h = "xxhash64(g)", "xxhash64"
+
+        def seed_h(i: int) -> str:
+            return f"xxhash64(gh, {i})"
+
+    base = with_shingles(df, text_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
+    ex = base.select("doc", F.explode("sh").alias("g")).selectExpr(
+        "doc", f"{gram_h} AS gh"
+    )
+    if seed_bcast_bound is not None:
+        from fegis_spark.model import maybe_broadcast
+
+        seeds = ex.select("gh").distinct().selectExpr(
+            "gh", *[f"{seed_h(i)} AS __s{i}" for i in range(MINHASH_HASHES)]
+        )
+        sig = (
+            ex.join(maybe_broadcast(seeds, seed_bcast_bound), "gh")
+            .groupBy("doc")
+            .agg(*[F.min(f"__s{i}").alias(f"mh{i}") for i in range(MINHASH_HASHES)])
+        )
+    else:
+        sig = ex.groupBy("doc").agg(
+            *[
+                F.expr(f"min({seed_h(i)})").alias(f"mh{i}")
+                for i in range(MINHASH_HASHES)
+            ]
+        )
+    rows = MINHASH_HASHES // MINHASH_BANDS
+    band_structs = ", ".join(
+        "named_struct('band', {b}, 'bh', {h}(concat_ws(',', {cols})))".format(
+            b=b,
+            h=band_h,
+            cols=", ".join(f"CAST(mh{b * rows + r} AS STRING)" for r in range(rows)),
+        )
+        for b in range(MINHASH_BANDS)
+    )
+    banded = sig.selectExpr(
+        "doc", f"explode(array({band_structs})) AS b"
+    ).selectExpr("doc", "b.band AS band", "b.bh AS bh")
+    return base, sig, banded
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
     jaccard_threshold: float = 0.5,
-    cache_intermediate: bool = True,
     max_bucket_size: int | None = 512,
+    portable: bool = False,
+    seed_bcast_bound: int | None = None,
     sh_bcast_bound: int | None = None,
 ) -> DataFrame:
-    """K9 MinHash+LSH near-dup pairs.
+    """K9 MinHash+LSH near-dup pairs (a, b, jaccard >= threshold).
 
-    Plan: shingle → signature → explode into `bands` band-hashes →
-    self-join on (band, band_hash) → distinct candidate pairs → exact
-    Jaccard on the candidates only (minhash_verify_pairs, shared with
-    the portable twin; sh_bcast_bound is its broadcast gate). Every
-    join is an equi-join; the band explode multiplies rows by `bands`,
-    not by |corpus|.
+    Plan: minhash_sig_bands (shingle → signature → one hash per band)
+    → banded_candidate_pairs (band buckets, distinct across bands) →
+    minhash_verify_pairs (exact Jaccard on the candidates only; its
+    sh_bcast_bound is the broadcast gate of the two attach joins).
+    Every join is an equi-join; the band explode multiplies rows by
+    the band count, not by |corpus|.
+
+    portable picks the hash family (module doc): keep xxhash64 on the
+    100 TB data path and md5-60 as the cross-engine verification
+    surface; seed_bcast_bound is minhash_sig_bands'.
 
     max_bucket_size caps the per-bucket candidate output (hot template
     buckets would otherwise emit m²/2 pairs): over-cap buckets route
     through their min-doc representative — see bucket_pairs for the
     exact semantics and band_bucket_stats for the audit surface. None
-    disables the cap (the oracle-checked portable twin's default).
-
-    cache_intermediate persists the shingle table, which the plan uses
-    three times (signature + both sides of candidate verification) —
-    at warehouse scale you would materialize signatures to a table
-    instead; MEMORY_AND_DISK is the single-job analog, and the entry
-    outlives the call (the returned plan references it) until LRU
-    eviction or spark.catalog.clearCache() — the repo-wide
-    cache-ownership policy.
+    disables the cap; the oracle-checked uncapped queries pass it so
+    DuckDB replays the candidate set exactly.
     """
-    rows_per_band = num_hashes // bands
-    base = with_shingles(df, text_col, id_col, ngram)
-    if cache_intermediate:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    # signature via explode + codegen'd hashes + min-agg: the gram
-    # string is hashed ONCE (xxhash64 over ~20 variable bytes), then
-    # the k family members re-hash that 8-byte base with the seed
-    # column — k string concats + k string hashes per gram replaced by
-    # 1 string hash + k fixed-width hashes (measured ~1.4x on the
-    # whole pipeline at sf0.1; the HOF transform/array_min form is
-    # interpreted and ~10x slower than either)
-    # single-string spellings (r14 opt): the Column-chain form of the
-    # 16 seed aggregates + 4 band structs costs ~0.3-0.4 s of py4j
-    # round-trips per plan build (CLAUDE.md driver-side plan-cost rule)
-    ex = base.select("doc", F.explode("sh").alias("g")).selectExpr(
-        "doc", "xxhash64(g) AS gh"
+    base, _sig, banded = minhash_sig_bands(
+        df, text_col, id_col, portable, seed_bcast_bound
     )
-    sig = ex.groupBy("doc").agg(
-        *[
-            F.expr(f"min(xxhash64(gh, {i}))").alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    band_structs = ", ".join(
-        "named_struct('band', {b}, 'bh', xxhash64(concat_ws(',', {cols})))".format(
-            b=b,
-            cols=", ".join(
-                f"CAST(mh{b * rows_per_band + r} AS STRING)"
-                for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    banded = sig.selectExpr(
-        "doc", f"explode(array({band_structs})) AS b"
-    ).selectExpr("doc", "b.band AS band", "b.bh AS bh")
     cand = banded_candidate_pairs(banded, max_bucket_size=max_bucket_size)
     return minhash_verify_pairs(
         cand, base.select("doc", "sh"), jaccard_threshold,
@@ -351,35 +445,49 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash64(tok: Column) -> Column:
-    """64-bit SimHash: per-bit sign of summed token-hash bits.
+def minhash_verify_pairs(
+    cand: DataFrame,
+    sh: DataFrame,
+    jaccard_threshold: float = 0.5,
+    sh_bcast_bound: int | None = None,
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs (a, b) against a
+    shingle table (doc, sh) — the tail of minhash_lsh_pairs, factored
+    out (r13) so callers holding PRECOMPUTED bands/shingles (the
+    streaming near-dup body) generate within-set pairs without
+    recomputing signatures. Output: (a, b, jaccard) at >= threshold. Shingle arrays must hold distinct values
+    (with_shingles applies array_distinct): |a∪b| is computed as
+    |a| + |b| − |a∩b|.
 
-    aggregate(tokens) builds 64 counters via zip_with (+1/-1 per bit of
-    xxhash64(token)), then folds the sign vector into one long. Pure
-    Column expressions — whole-stage codegen, no UDF."""
-    counters = F.aggregate(
-        tok,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (F.shiftright(F.xxhash64(t), b).bitwiseAND(1) * 2 - 1).cast("long")
-                    for b in range(64)
-                ]
+    sh_bcast_bound (r15 opt, guide §3.1/§2.4): byte bound for a
+    size-gated broadcast of the shingle table into the two attach
+    joins — under the gate the candidate-pair table stops being
+    shuffled twice (once per attach key) and both joins become
+    broadcast hash joins over the persisted shingle cache; over the
+    gate (corpus-proportional at real scale) the hint is withheld and
+    AQE decides. Callers with an sf_dir pass
+    ``32 * table_bytes(sf_dir, "documents")`` — the distinct-shingle
+    arrays are ~20 B per gram INSTANCE upper bound vs >= ~5 compressed
+    source bytes per instance, so 32x source parquet bytes bounds the
+    exploded array representation honestly. None keeps the plain
+    shuffle joins."""
+    if sh_bcast_bound is not None:
+        from fegis_spark.model import maybe_broadcast
+
+        sh = maybe_broadcast(sh, sh_bcast_bound)
+    return (
+        cand.join(sh.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a")), "a")
+        .join(sh.select(F.col("doc").alias("b"), F.col("sh").alias("sh_b")), "b")
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("sh_a", "sh_b"))
+            / (
+                F.size("sh_a") + F.size("sh_b")
+                - F.size(F.array_intersect("sh_a", "sh_b"))
             ),
-            lambda a, x: a + x,
-        ),
-    )
-    # disjoint bit contributions — sum == OR
-    return sum(
-        [
-            F.when(counters[b] > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-            for b in range(64)
-        ],
-        F.lit(0).cast("long"),
+        )
+        .filter(F.col("jaccard") >= jaccard_threshold)
+        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
@@ -387,25 +495,32 @@ def simhash_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    max_hamming: int = 8,
+    max_hamming: int = 3,
     max_bucket_size: int | None = 512,
+    portable: bool = False,
 ) -> DataFrame:
-    """K9 SimHash near-dup: block on equal 16-bit band (4 bands — any
-    pair within hamming<=3 of 64 bits shares >=1 exact band by
-    pigeonhole; wider distances trade recall), verify hamming via
-    bit_count(xor). max_bucket_size routes hot band buckets through a
-    min-doc representative (see bucket_pairs); None disables."""
-    # explode + 64 codegen'd bit-counter aggregates (the HOF fold form
-    # simhash64() is kept for expression composability but is
-    # interpreted — this form stays in whole-stage codegen)
+    """K9 SimHash near-dup pairs (a, b, hamming <= max_hamming): a
+    sign-aggregated token-hash sketch, blocked on SIMHASH_BANDS equal
+    bands (any pair within hamming 3 shares >= 1 exact band by
+    pigeonhole; wider distances trade recall), verified with
+    bit_count(xor). portable picks the token hash and with it the
+    sketch width: 64-bit xxhash64 or 60-bit md5-60 (module doc).
+    max_bucket_size routes hot band buckets through a min-doc
+    representative (see bucket_pairs); None disables.
+
+    Plan: explode tokens + one codegen'd bit-counter aggregate per
+    sketch bit (one shuffle on doc), band equi-join, candidate-only
+    verify."""
+    bits = SIMHASH_BITS_PORTABLE if portable else SIMHASH_BITS
+    width = bits // SIMHASH_BANDS
     ex = df.select(
         F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("t")
     )
-    h = F.xxhash64("t")
+    h = F.expr(_h60("t")) if portable else F.xxhash64("t")
     counters = ex.groupBy("doc").agg(
         *[
             F.sum((F.shiftright(h, b).bitwiseAND(1) * 2 - 1).cast("long")).alias(f"c{b}")
-            for b in range(64)
+            for b in range(bits)
         ]
     )
     sim = sum(
@@ -413,7 +528,7 @@ def simhash_pairs(
             F.when(F.col(f"c{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
                 F.lit(0).cast("long")
             )
-            for b in range(64)
+            for b in range(bits)
         ],
         F.lit(0).cast("long"),
     )
@@ -426,11 +541,11 @@ def simhash_pairs(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        F.shiftright(F.col("sim"), 16 * b)
-                        .bitwiseAND(0xFFFF)
+                        F.shiftright(F.col("sim"), width * b)
+                        .bitwiseAND((1 << width) - 1)
                         .alias("bh"),
                     )
-                    for b in range(4)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("b"),
@@ -450,7 +565,7 @@ def ngram_jaccard_pairs(
     text_col: str,
     id_col: str,
     block_cols: list[str],
-    ngram: int = 3,
+    ngram: int = SHINGLE_N,
     threshold: float = 0.2,
     payload_cols: tuple[str, ...] = (),
     shingle_base: DataFrame | None = None,
@@ -466,7 +581,7 @@ def ngram_jaccard_pairs(
     ``shingle_base`` (r15 opt, guide §1.2 "don't compute twice"):
     callers that already hold the (doc, sh) distinct-shingle table for
     the SAME (df, text_col, id_col, ngram) — e.g. dedup_minhash_eval,
-    whose prediction side persists it via _portable_sig_bands — pass
+    whose prediction side persists it via minhash_sig_bands — pass
     it here so the tokenize+NGram corpus pass is not rebuilt for the
     truth side. Only valid with empty block_cols/payload_cols (the
     precomputed table carries no extra columns); the shingle family
@@ -486,7 +601,7 @@ def ngram_jaccard_pairs(
             F.col(id_col).alias("doc"),
             *[F.col(c) for c in block_cols],
             *[F.col(c) for c in extra],
-            tokens(F.col(text_col)).alias("tok"),
+            _shingle_tokens(text_col),
         )
         base = (
             NGram(n=ngram, inputCol="tok", outputCol="__sh")
@@ -1081,269 +1196,6 @@ def connected_components_star(
     return members.union(roots)
 
 
-def _portable_sig_bands(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    ngram: int,
-    cache_intermediate: bool,
-    seed_bcast_bound: int | None = None,
-):
-    """Shared md5-60bit MinHash pipeline: shingle table (`base`: doc,
-    sh — persisted when cache_intermediate, it feeds the signature
-    build AND the verify joins), the wide signature table (`sig`: doc,
-    mh0..mh{k-1} — the estimator-audit query consumes it as an array)
-    and the banded signature table (`banded`: doc, band, bh). The hash
-    family is a pure function of the text, so signatures computed in
-    separate calls (e.g. corpus and batch sides of the incremental
-    form) are mutually consistent. Returns (base, sig, banded).
-
-    seed_bcast_bound: byte bound for the distinct-gram seed-hash
-    table's size-gated broadcast (see the inline comment at the seeds
-    join). Callers with an sf_dir pass
-    ``32 * table_bytes(sf_dir, "documents")`` — the honest expansion
-    bound: the seeds projection is ~136 B per DISTINCT gram (gh + 16
-    bigint seeds) vs >= ~5 compressed source bytes per gram INSTANCE,
-    so 32x source bytes upper-bounds it even at dedup ratio 1.
-    None -> no hint; AQE picks the strategy from runtime sizes.
-    """
-    rows_per_band = num_hashes // bands
-    base = with_shingles(df, text_col, id_col, ngram)
-    if cache_intermediate:
-        from pyspark import StorageLevel
-
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # Spark-SQL string spelling of the portable 60-bit hash (first 15
-    # md5 hex chars → bigint) — single parsed expressions instead of a
-    # py4j Column chain per seed (CLAUDE.md driver-side plan-cost rule;
-    # the Column-form build alone profiled ~0.5 s of py4j round-trips).
-    def h60s(c: str) -> str:
-        return f"CAST(conv(substring(md5({c}), 1, 15), 16, 10) AS BIGINT)"
-
-    ex = base.select("doc", F.explode("sh").alias("g")).selectExpr(
-        "doc", h60s("g") + " AS gh"
-    )
-    # r14 opt (guide §1.2 "don't compute things twice" / §2.3): the
-    # num_hashes per-seed re-hashes are pure functions of gh, and the
-    # gram stream repeats each distinct gram ~10x at sf0.1 (260k
-    # instances / 27k distinct; duplicate-heavy corpora are the whole
-    # point of this operator) — so when the caller supplies a
-    # seed_bcast_bound, evaluate the seed hashes once per DISTINCT gh
-    # and attach them by a size-gated equi-join instead of paying
-    # 16 md5+conv per gram INSTANCE (profiled 12 us/row, ~3.2 s of the
-    # 4.6 s sf0.1 wall; values are bit-identical by construction).
-    # Under the gate the seeds table broadcasts (local plans keep
-    # their broadcast-only shape, ex stays doc-local so the doc
-    # partial-agg still collapses map-side); over it the hint is
-    # withheld and AQE picks from real sizes — the SMJ fallback trades
-    # one narrow gh exchange of the gram stream for 15/16 of the
-    # seed-hash CPU (~12 us vs ~0.1 us/row). seed_bcast_bound=None
-    # (tiny-side callers: streaming batch probes) keeps the inline
-    # per-instance form — on a few-doc batch the extra distinct+join
-    # stages would cost more latency than the md5s they save.
-    if seed_bcast_bound is not None:
-        from fegis_spark.model import maybe_broadcast
-
-        seeds = ex.select("gh").distinct().selectExpr(
-            "gh",
-            *[
-                h60s(f"concat(CAST(gh AS STRING), '-{i}')") + f" AS __s{i}"
-                for i in range(num_hashes)
-            ],
-        )
-        sig = (
-            ex.join(maybe_broadcast(seeds, seed_bcast_bound), "gh")
-            .groupBy("doc")
-            .agg(*[F.min(f"__s{i}").alias(f"mh{i}") for i in range(num_hashes)])
-        )
-    else:
-        sig = ex.groupBy("doc").agg(
-            *[
-                F.min(
-                    F.expr(h60s(f"concat(CAST(gh AS STRING), '-{i}')"))
-                ).alias(f"mh{i}")
-                for i in range(num_hashes)
-            ]
-        )
-    band_structs = ", ".join(
-        "named_struct('band', {b}, 'bh', md5(concat_ws(',', {cols})))".format(
-            b=b,
-            cols=", ".join(
-                f"CAST(mh{b * rows_per_band + r} AS STRING)"
-                for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    banded = sig.selectExpr(
-        "doc", f"explode(array({band_structs})) AS b"
-    ).selectExpr("doc", "b.band AS band", "b.bh AS bh")
-    return base, sig, banded
-
-
-def minhash_lsh_pairs_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
-    jaccard_threshold: float = 0.5,
-    cache_intermediate: bool = True,
-    max_bucket_size: int | None = None,
-    seed_bcast_bound: int | None = None,
-    sh_bcast_bound: int | None = None,
-):
-    """K9 MinHash+LSH with ENGINE-PORTABLE hashes: every hash is a
-    60-bit integer from the first 15 hex chars of md5, so DuckDB can
-    replay the entire pipeline value-for-value — this is the
-    oracle-checked twin of minhash_lsh_pairs (whose xxhash64 family is
-    Spark-only and therefore rows-only at the gate). Same plan shape:
-    shingle → per-seed min-agg signature → banded equi-join →
-    candidate-only exact-Jaccard verify. The 16 per-seed md5s are
-    evaluated once per DISTINCT gram hash and attached by a size-gated
-    join (r14 opt; see _portable_sig_bands and seed_bcast_bound there)
-    — keep the xxhash64 form on the 100 TB data path and this one as
-    the cross-engine verification surface.
-
-    cache_intermediate persists the shingle table (used by the
-    signature build and both verify sides); the returned plan
-    references the cache, so it stays until LRU eviction or
-    spark.catalog.clearCache() (the repo-wide cache-ownership policy).
-
-    max_bucket_size defaults to None (uncapped) so the DuckDB oracle
-    replays the candidate set exactly; pass a cap to get the same
-    hot-bucket representative routing as the fast path (the oracle
-    would then need the mirrored star logic).
-
-    sh_bcast_bound: size-gated broadcast of the shingle table into the
-    verify joins (see minhash_verify_pairs) — callers with an sf_dir
-    pass the same 32x documents bound as seed_bcast_bound.
-    """
-    base, _sig, banded = _portable_sig_bands(
-        df, text_col, id_col, num_hashes, bands, ngram, cache_intermediate,
-        seed_bcast_bound=seed_bcast_bound,
-    )
-    cand = banded_candidate_pairs(banded, max_bucket_size=max_bucket_size)
-    return minhash_verify_pairs(
-        cand, base.select("doc", "sh"), jaccard_threshold,
-        sh_bcast_bound=sh_bcast_bound,
-    )
-
-
-def minhash_verify_pairs(
-    cand: DataFrame,
-    sh: DataFrame,
-    jaccard_threshold: float = 0.5,
-    sh_bcast_bound: int | None = None,
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs (a, b) against a
-    shingle table (doc, sh) — the tail of minhash_lsh_pairs and
-    minhash_lsh_pairs_portable, factored out (r13) so callers holding
-    PRECOMPUTED bands/shingles (the streaming near-dup body) generate
-    within-set pairs without recomputing signatures. Output: (a, b,
-    jaccard) at >= threshold. Shingle arrays must hold distinct values
-    (with_shingles applies array_distinct): |a∪b| is computed as
-    |a| + |b| − |a∩b|.
-
-    sh_bcast_bound (r15 opt, guide §3.1/§2.4): byte bound for a
-    size-gated broadcast of the shingle table into the two attach
-    joins — under the gate the candidate-pair table stops being
-    shuffled twice (once per attach key) and both joins become
-    broadcast hash joins over the persisted shingle cache; over the
-    gate (corpus-proportional at real scale) the hint is withheld and
-    AQE decides. Callers with an sf_dir pass
-    ``32 * table_bytes(sf_dir, "documents")`` — the distinct-shingle
-    arrays are ~20 B per gram INSTANCE upper bound vs >= ~5 compressed
-    source bytes per instance, so 32x source parquet bytes bounds the
-    exploded array representation honestly. None keeps the plain
-    shuffle joins."""
-    if sh_bcast_bound is not None:
-        from fegis_spark.model import maybe_broadcast
-
-        sh = maybe_broadcast(sh, sh_bcast_bound)
-    return (
-        cand.join(sh.select(F.col("doc").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("doc").alias("b"), F.col("sh").alias("sh_b")), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / (
-                F.size("sh_a") + F.size("sh_b")
-                - F.size(F.array_intersect("sh_a", "sh_b"))
-            ),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-def simhash_pairs_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """K9 SimHash with ENGINE-PORTABLE hashes: 60-bit sketch from
-    md5-derived token hashes (first 15 hex chars → bigint), blocked on
-    4×15-bit bands — pigeonhole-exact for hamming <= 3 — and verified
-    with bit_count(xor). DuckDB replays every step value-for-value, so
-    this is the oracle-checked twin certifying the (xxhash64, 64-bit,
-    rows-only) simhash_pairs algebra. Same plan: one 60-counter agg
-    shuffle on doc, band equi-join, candidate-only verify."""
-    ex = df.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("t")
-    )
-    th = F.conv(F.substring(F.md5(F.col("t")), 1, 15), 16, 10).cast("bigint")
-    counters = ex.groupBy("doc").agg(
-        *[
-            F.sum((F.shiftright(th, b).bitwiseAND(1) * 2 - 1).cast("long")).alias(f"c{b}")
-            for b in range(60)
-        ]
-    )
-    sim = sum(
-        [
-            F.when(F.col(f"c{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-            for b in range(60)
-        ],
-        F.lit(0).cast("long"),
-    )
-    sh = counters.select("doc", sim.alias("sim"))
-    bands = sh.select(
-        "doc",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sim"), 15 * b)
-                        .bitwiseAND(0x7FFF)
-                        .alias("bh"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc", "sim", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    cand = banded_candidate_pairs(
-        bands, payload=("sim",), max_bucket_size=max_bucket_size
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Bloom prefilter for incremental dedup (the 100 TB anti-join shape)
 
@@ -1426,23 +1278,19 @@ def minhash_incremental_pairs_portable(
     batch: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
     jaccard_threshold: float = 0.5,
-    cache_intermediate: bool = True,
     max_bucket_size: int | None = None,
     seed_bcast_bound: int | None = None,
 ) -> DataFrame:
     """K9 incremental NEAR-dup: which new-batch documents are near-
     duplicates of the indexed corpus — the daily-ingest analog of
     `dedup_incremental`, one rung up from exact hashing. Both sides run
-    the shared md5-60bit MinHash pipeline (_portable_sig_bands — a pure
-    function of text, so separately-computed signatures are mutually
-    consistent), then candidates come ONLY from the corpus-band ×
-    batch-band equi-join: within-corpus and within-batch pairs are
-    never generated, which is what makes the daily cost proportional
-    to the batch, not the corpus. Exact Jaccard verifies candidates.
+    the md5-60 MinHash sketch (minhash_sig_bands — a pure function of
+    text, so separately-computed signatures are mutually consistent),
+    then candidates come ONLY from the corpus-band × batch-band
+    equi-join: within-corpus and within-batch pairs are never
+    generated, which is what makes the daily cost proportional to the
+    batch, not the corpus. Exact Jaccard verifies candidates.
 
     Output: (corpus_doc, batch_doc, jaccard >= threshold). At 100 TB
     the corpus banded table is the precomputed index: store it
@@ -1450,14 +1298,11 @@ def minhash_incremental_pairs_portable(
     computed per run (same pre-bucketing note as dedup_incremental).
     """
     # seed-dedup only on the corpus side (scale-proportional grams);
-    # the batch side keeps the inline form — see _portable_sig_bands
-    base_c, _sig_c, banded_c = _portable_sig_bands(
-        corpus, text_col, id_col, num_hashes, bands, ngram, cache_intermediate,
-        seed_bcast_bound=seed_bcast_bound,
+    # the batch side keeps the inline form — see minhash_sig_bands
+    base_c, _sig_c, banded_c = minhash_sig_bands(
+        corpus, text_col, id_col, True, seed_bcast_bound
     )
-    base_b, _sig_b, banded_b = _portable_sig_bands(
-        batch, text_col, id_col, num_hashes, bands, ngram, cache_intermediate
-    )
+    base_b, _sig_b, banded_b = minhash_sig_bands(batch, text_col, id_col, True)
     return minhash_incremental_pairs_precomputed(
         banded_c.select("doc", "band", "bh"),
         base_c.select("doc", "sh"),
@@ -1481,7 +1326,7 @@ def minhash_incremental_pairs_precomputed(
     bh) / (doc, sh) tables — the streaming state form (r12): the
     corpus side is the persisted index, only the batch side is
     computed per micro-batch. Signatures/shingles are pure functions
-    of text (_portable_sig_bands), so separately-computed sides are
+    of text (minhash_sig_bands), so separately-computed sides are
     mutually consistent.
 
     ``max_bucket_size`` caps the CORPUS-side bucket fan-out (r13, the

@@ -10,10 +10,13 @@ from pyspark.sql import functions as F
 from fegis_spark.catalog import register
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes
 from fegis_spark.operators.dedup import (
+    MINHASH_BANDS,
+    MINHASH_HASHES,
+    SHINGLE_N,
+    SIMHASH_BANDS,
+    SIMHASH_BITS_PORTABLE,
     exact_dedup,
     minhash_lsh_pairs,
-    minhash_lsh_pairs_portable,
-    simhash_pairs_portable,
     ngram_jaccard_pairs,
     simhash_pairs,
 )
@@ -30,33 +33,36 @@ _TOKS = duck_tokens("text")
 
 
 def _mh_pipeline_cte(src: str, base_mat: str = "") -> str:
-    """Shared DuckDB CTE chain of the portable MinHash pipeline
-    (shingles → 60-bit md5 gram hashes → 16-seed min signature → 4
-    band hashes) over `src`. The portable, capped and eval oracles all
-    interpolate THIS one string (same anti-drift move as
-    _simhash_portable_oracle): a recipe change lands in every oracle
-    at once instead of needing hand-mirroring across SQL blocks."""
+    """Shared DuckDB CTE chain of the md5-60 MinHash pipeline
+    (shingles → 60-bit md5 gram hashes → per-seed min signature → band
+    hashes) over `src`, generated from the operator's geometry
+    constants (operators/dedup MINHASH_* / SHINGLE_N). Every
+    portable-minhash oracle interpolates THIS one string (same
+    anti-drift move as _simhash_portable_oracle): a recipe change lands
+    in every oracle at once instead of needing hand-mirroring across
+    SQL blocks."""
+    n, k, r = SHINGLE_N, MINHASH_HASHES, MINHASH_HASHES // MINHASH_BANDS
     return rf"""base AS {base_mat}(
       SELECT doc_id AS doc,
-             list_distinct(list_transform(range(0, len(tok)-2),
-                           i -> array_to_string(list_slice(tok, i+1, i+3), ' '))) AS sh
+             list_distinct(list_transform(range(0, len(tok)-{n - 1}),
+                           i -> array_to_string(list_slice(tok, i+1, i+{n}), ' '))) AS sh
       FROM (SELECT *, {_TOKS} AS tok FROM {src})
-      WHERE len(tok) >= 3
+      WHERE len(tok) >= {n}
     ), ex AS (
       SELECT doc, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) AS gh
       FROM (SELECT doc, unnest(sh) AS g FROM base)
     ), mh AS (
       SELECT doc, i,
              MIN(CAST(('0x' || substr(md5(CAST(gh AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 15)) AS BIGINT)) AS m
-      FROM ex, (SELECT unnest(range(16)) AS i)
+      FROM ex, (SELECT unnest(range({k})) AS i)
       GROUP BY doc, i
     ), sig AS (
       SELECT doc, list(m ORDER BY i) AS s FROM mh GROUP BY doc
     ), banded AS (
       SELECT doc, b,
-             md5(array_to_string(list_transform(list_slice(s, b*4+1, b*4+4),
+             md5(array_to_string(list_transform(list_slice(s, b*{r}+1, b*{r}+{r}),
                                                 x -> CAST(x AS VARCHAR)), ',')) AS bh
-      FROM sig, (SELECT unnest(range(4)) AS b)
+      FROM sig, (SELECT unnest(range({MINHASH_BANDS})) AS b)
     )"""
 
 
@@ -153,8 +159,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents"),
         "text",
         "doc_id",
-        num_hashes=16,
-        bands=4,
         jaccard_threshold=0.5,
         # shingle side of the verify joins: same 32x-documents bound
         # convention as seed_bcast_bound (operator docstrings)
@@ -529,19 +533,19 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K9 MinHash+LSH, oracle-checked end-to-end: md5-derived 60-bit
     hash family both engines can compute, so banding, candidate
-    generation, AND verification are value-checked cross-engine — the
-    exact twin that certifies the (faster, xxhash64, rows-only)
-    dedup_minhash_lsh pipeline's algebra."""
+    generation, AND verification are value-checked cross-engine. It
+    certifies the algebra of the (faster, xxhash64, rows-only)
+    dedup_minhash_lsh, which runs the same minhash_lsh_pairs with the
+    other hash family."""
     # band-ok: 2^60 md5 band keyspace — no band-space saturation;
     # template hot buckets are the capped twin's contract
-    return minhash_lsh_pairs_portable(
+    return minhash_lsh_pairs(
         load_table(spark, sf_dir, "documents"),
         "text",
         "doc_id",
-        num_hashes=16,
-        bands=4,
-        ngram=3,
         jaccard_threshold=0.5,
+        max_bucket_size=None,
+        portable=True,
         seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),
         sh_bcast_bound=32 * table_bytes(sf_dir, "documents"),
     )
@@ -584,15 +588,13 @@ def dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine: m-1 star candidates instead of m(m-1)/2, verification
     unchanged."""
     # band-ok: certifies HOT_CAP routing itself (max_bucket_size below)
-    return minhash_lsh_pairs_portable(
+    return minhash_lsh_pairs(
         spark_hot_docs(load_table(spark, sf_dir, "documents")),
         "text",
         "doc_id",
-        num_hashes=16,
-        bands=4,
-        ngram=3,
         jaccard_threshold=0.5,
         max_bucket_size=HOT_CAP,
+        portable=True,
         # hot-docs corpus = documents + a bounded constructed cluster;
         # 32x covers the seeds projection expansion (operator docstring)
         seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),
@@ -601,18 +603,22 @@ def dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_portable_oracle() -> str:
-    """Generate the DuckDB twin of simhash_pairs_portable from the same
-    bit loop, so the two engines cannot drift. Since r11 it replays the
-    HOT_CAP min-doc representative routing too: simhash's 4x15-bit band
-    space is fixed (131072 buckets), so like SRP it saturates at scale
-    and the catalog query passes max_bucket_size=HOT_CAP."""
+    """Generate the DuckDB twin of the md5-60 simhash_pairs path from
+    the same bit loop and the operator's SimHash geometry
+    (SIMHASH_BANDS bands over the SIMHASH_BITS_PORTABLE-bit sketch), so
+    the two engines cannot drift. Since r11 it replays the HOT_CAP min-doc
+    representative routing too: simhash's 4x15-bit band space is fixed
+    (131072 buckets), so like SRP it saturates at scale and the catalog
+    query passes max_bucket_size=HOT_CAP."""
     hot_cap = HOT_CAP
+    bits = SIMHASH_BITS_PORTABLE
+    width = bits // SIMHASH_BANDS
     counters = ",\n             ".join(
-        f"SUM(((th >> {b}) & 1) * 2 - 1) AS c{b}" for b in range(60)
+        f"SUM(((th >> {b}) & 1) * 2 - 1) AS c{b}" for b in range(bits)
     )
     sim = " + ".join(
         f"(CASE WHEN c{b} > 0 THEN (1::BIGINT << {b}) ELSE 0::BIGINT END)"
-        for b in range(60)
+        for b in range(bits)
     )
     return rf"""
     WITH ex AS (
@@ -626,8 +632,8 @@ def _simhash_portable_oracle() -> str:
     ), sh AS (
       SELECT doc, {sim} AS sim FROM counters
     ), banded AS (
-      SELECT doc, sim, b, (sim >> (15 * b)) & 32767 AS bh
-      FROM sh, (SELECT unnest(range(4)) AS b)
+      SELECT doc, sim, b, (sim >> ({width} * b)) & {(1 << width) - 1} AS bh
+      FROM sh, (SELECT unnest(range({SIMHASH_BANDS})) AS b)
     ), sized AS MATERIALIZED (
       SELECT doc, sim, b, bh,
              COUNT(*) OVER (PARTITION BY b, bh) AS bs,
@@ -658,22 +664,23 @@ def _simhash_portable_oracle() -> str:
 def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K9 SimHash, oracle-checked end-to-end: 60-bit md5-derived
     sketch, 4×15-bit band blocking (pigeonhole-exact for hamming<=3),
-    bit_count(xor) verify — the cross-engine twin certifying the
-    xxhash64 simhash_pairs algebra. r11: the band space is fixed-width
-    (4×2^15 buckets — saturates linearly with corpus size, the same
-    failure mode the r10 64x probe measured on SRP), so candidates
-    route through the HOT_CAP representative star and the oracle
-    replays the routing. Recall note: the pigeonhole guarantee is
+    bit_count(xor) verify — certifies the algebra dedup_simhash runs
+    through the same simhash_pairs with xxhash64. r11: the band space
+    is fixed-width (4×2^15 buckets — saturates linearly with corpus
+    size, the same failure mode the r10 64x probe measured on SRP), so
+    candidates route through the HOT_CAP representative star and the
+    oracle replays the routing. Recall note: the pigeonhole guarantee is
     intact in buckets <= HOT_CAP; over-cap buckets degrade to rep-star
     pairs — observable via band_bucket_stats, and those buckets are
     near-identical template clusters where every member matches the
     rep."""
-    return simhash_pairs_portable(
+    return simhash_pairs(
         load_table(spark, sf_dir, "documents"),
         "text",
         "doc_id",
         max_hamming=3,
         max_bucket_size=HOT_CAP,
+        portable=True,
     )
 
 
@@ -800,30 +807,12 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_incremental_near",
     oracle=rf"""
-    WITH base AS (
+    WITH {_mh_pipeline_cte('documents')}, bk AS (
       SELECT doc_id AS doc,
              CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100
-               AS bucket,
-             list_distinct(list_transform(range(0, len(tok)-2),
-                           i -> array_to_string(list_slice(tok, i+1, i+3), ' '))) AS sh
-      FROM (SELECT *, {_TOKS} AS tok FROM documents)
-      WHERE len(tok) >= 3
-    ), ex AS (
-      SELECT doc, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) AS gh
-      FROM (SELECT doc, unnest(sh) AS g FROM base)
-    ), mh AS (
-      SELECT doc, i,
-             MIN(CAST(('0x' || substr(md5(CAST(gh AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 15)) AS BIGINT)) AS m
-      FROM ex, (SELECT unnest(range(16)) AS i)
-      GROUP BY doc, i
-    ), sig AS (
-      SELECT doc, list(m ORDER BY i) AS s FROM mh GROUP BY doc
-    ), banded AS (
-      SELECT doc, b,
-             md5(array_to_string(list_transform(list_slice(s, b*4+1, b*4+4),
-                                                x -> CAST(x AS VARCHAR)), ',')) AS bh
-      FROM sig, (SELECT unnest(range(4)) AS b)
-    ), bk AS (SELECT doc, bucket FROM base),
+               AS bucket
+      FROM documents
+    ),
     cand AS (
       SELECT DISTINCT l.doc AS corpus_doc, r.doc AS batch_doc
       FROM banded l
@@ -963,13 +952,7 @@ def dedup_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_eval",
     oracle=rf"""
-    WITH base AS MATERIALIZED (
-      SELECT doc_id AS doc,
-             list_distinct(list_transform(range(0, len(tok)-2),
-                           i -> array_to_string(list_slice(tok, i+1, i+3), ' '))) AS sh
-      FROM (SELECT *, {_TOKS} AS tok FROM documents)
-      WHERE len(tok) >= 3
-    ), exg AS (
+    WITH {_mh_pipeline_cte('documents', 'MATERIALIZED ')}, exg AS (
       SELECT doc, len(sh) AS n_sh, unnest(sh) AS g FROM base
     ), truth AS MATERIALIZED (
       SELECT a, b FROM (
@@ -978,21 +961,6 @@ def dedup_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM exg l JOIN exg r ON l.g = r.g AND l.doc < r.doc
         GROUP BY l.doc, r.doc, l.n_sh, r.n_sh
       ) WHERE jaccard >= 0.5
-    ), exh AS (
-      SELECT doc, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) AS gh
-      FROM (SELECT doc, unnest(sh) AS g FROM base)
-    ), mh AS (
-      SELECT doc, i,
-             MIN(CAST(('0x' || substr(md5(CAST(gh AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 15)) AS BIGINT)) AS m
-      FROM exh, (SELECT unnest(range(16)) AS i)
-      GROUP BY doc, i
-    ), sig AS (
-      SELECT doc, list(m ORDER BY i) AS s FROM mh GROUP BY doc
-    ), banded AS (
-      SELECT doc, b,
-             md5(array_to_string(list_transform(list_slice(s, b*4+1, b*4+4),
-                                                x -> CAST(x AS VARCHAR)), ',')) AS bh
-      FROM sig, (SELECT unnest(range(4)) AS b)
     ), cand AS (
       SELECT DISTINCT l.doc AS a, r.doc AS b
       FROM banded l JOIN banded r ON l.b = r.b AND l.bh = r.bh AND l.doc < r.doc
@@ -1037,29 +1005,27 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     each rebuilt the tokenize+NGram shingle pass over the corpus
     (pred persisted its copy; truth recomputed its own, twice-planned
     but once-executed via ReusedExchange). Now ONE persisted shingle
-    base from _portable_sig_bands feeds the signature build, the
+    base from minhash_sig_bands feeds the signature build, the
     candidate verify joins AND the truth-side gram equi-join
     (ngram_jaccard_pairs shingle_base param) — the corpus is
     tokenized/shingled exactly once per run. Shingle family identical
     (with_shingles, same ngram), so values are unchanged."""
     from fegis_spark.operators.dedup import (
-        _portable_sig_bands,
         banded_candidate_pairs,
+        minhash_sig_bands,
         minhash_verify_pairs,
         ngram_jaccard_pairs,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base, _sig, banded = _portable_sig_bands(
-        docs, "text", "doc_id", num_hashes=16, bands=4, ngram=3,
-        cache_intermediate=True,
+    base, _sig, banded = minhash_sig_bands(
+        docs, "text", "doc_id", True,
         seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),
     )
     # band-ok: eval harness over the sf corpus — unbounded gram keyspace
     # (truth) and 2^60 md5 bands (pred), both declared above
     truth = ngram_jaccard_pairs(
-        docs, "text", "doc_id", [], ngram=3, threshold=0.5,
-        shingle_base=base,
+        docs, "text", "doc_id", [], threshold=0.5, shingle_base=base
     )
     # band-ok: 2^60 md5 band keyspace (see dedup_minhash_portable)
     cand = banded_candidate_pairs(banded, max_bucket_size=None)
@@ -1185,9 +1151,9 @@ def dedup_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # band-ok: 2^60 md5 band keyspace — no band-space saturation;
     # template hot buckets are the capped twin's contract
-    pairs = minhash_lsh_pairs_portable(
+    pairs = minhash_lsh_pairs(
         docs, "text", "doc_id",
-        num_hashes=16, bands=4, ngram=3, jaccard_threshold=0.5,
+        jaccard_threshold=0.5, max_bucket_size=None, portable=True,
         seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),
         sh_bcast_bound=32 * table_bytes(sf_dir, "documents"),
     )
@@ -1305,7 +1271,7 @@ def _mh_estimate_oracle() -> str:
       )
     ), scored AS (
       SELECT
-        CAST(len(list_filter(range(1, 17), i -> sa.s[i] = sb.s[i])) AS INTEGER)
+        CAST(len(list_filter(range(1, {MINHASH_HASHES + 1}), i -> sa.s[i] = sb.s[i])) AS INTEGER)
           AS matches,
         round(len(list_intersect(ba.sh, bb.sh))::DOUBLE
               / (len(ba.sh) + len(bb.sh) - len(list_intersect(ba.sh, bb.sh))),
@@ -1342,12 +1308,11 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean rule). Scale: the pair table is band-bounded (cap routing),
     signature joins are k-wide projections; the HOF match count runs
     on the bounded pair table, never per corpus row."""
-    from fegis_spark.operators.dedup import _portable_sig_bands, banded_candidate_pairs
+    from fegis_spark.operators.dedup import banded_candidate_pairs, minhash_sig_bands
 
     docs = load_table(spark, sf_dir, "documents")
-    base, sig, banded = _portable_sig_bands(
-        docs, "text", "doc_id", num_hashes=16, bands=4, ngram=3,
-        cache_intermediate=True,
+    base, sig, banded = minhash_sig_bands(
+        docs, "text", "doc_id", True,
         seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),
     )
     # band-ok: 2^60 md5 band keyspace + HOT_CAP routing below
@@ -1360,7 +1325,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc-keyed payload build whose sig side is already partitioned
     # by doc from its groupBy).
     payload = sig.select(
-        "doc", F.array(*[F.col(f"mh{i}") for i in range(16)]).alias("s")
+        "doc", F.array(*[F.col(f"mh{i}") for i in range(MINHASH_HASHES)]).alias("s")
     ).join(base.select("doc", "sh"), "doc")
     scored = (
         pairs.join(

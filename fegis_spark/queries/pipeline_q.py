@@ -1413,7 +1413,7 @@ def curation_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     Wall-time + plan facts: evidence/flagship_sf0.1_r7.json."""
     from pyspark import StorageLevel
 
-    from fegis_spark.operators.dedup import minhash_lsh_pairs_portable
+    from fegis_spark.operators.dedup import minhash_lsh_pairs
     from fegis_spark.operators.scale import pack_greedy_sharded
     from fegis_spark.operators.text_analysis import quality_score_expr
 
@@ -1430,15 +1430,13 @@ def curation_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("gk")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    pairs = minhash_lsh_pairs_portable(
+    pairs = minhash_lsh_pairs(
         kept,
         "text",
         "doc_id",
-        num_hashes=16,
-        bands=4,
-        ngram=3,
         jaccard_threshold=0.5,
         max_bucket_size=HOT_CAP,
+        portable=True,
         # kept docs subset documents; 32x covers the seeds projection
         # expansion (operator docstring)
         seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),

@@ -15,6 +15,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """Driver heap when SPARK_DRIVER_MEM is unset: half of physical
+    memory in whole GiB, at least 1g and at most 24g. A fixed 24g let
+    the JVM's lazily grown heap outgrow a 16 GB host (a full
+    correctness run was OOM-killed by the kernel)."""
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(24, phys_gib // 2))}g"
+
+
 def get_spark(app_name: str = "fegis_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -32,7 +41,10 @@ def get_spark(app_name: str = "fegis_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", default_driver_mem()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -18,8 +18,9 @@ CDC sink and the IVF index append):
   is the epoch commit log (fegis_spark/commitlog.py: write-new-marker /
   read-max — no rename, safe on S3-class object stores).
 * per batch: compute the batch's bands/shingles ONCE
-  (_portable_sig_bands — a pure function of text, so state written by
-  earlier batches is mutually consistent), then probe in two pruned
+  (minhash_sig_bands, md5-60 family — a pure function of text, so
+  state written by earlier batches is mutually consistent), then
+  probe in two pruned
   phases: (1) band candidates from the corpus-band x batch-band
   equi-join over ONLY the batch's bhp partitions (hot state buckets
   routed through their min-id representative — per-batch cost tracks
@@ -68,11 +69,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fegis_spark.operators.dedup import (
-    _portable_sig_bands,
     banded_candidate_pairs,
     incremental_band_candidates,
     incremental_verify_candidates,
     minhash_incremental_pairs_precomputed,
+    minhash_sig_bands,
     minhash_verify_pairs,
 )
 from fegis_spark.commitlog import (
@@ -99,9 +100,9 @@ NEARDUP_STATE_PREFIXES = 64
 
 def _bhp(col):
     """Band-hash partition prefix. ``bh`` is an md5 HEX STRING
-    (_portable_sig_bands), so take two hex chars (uniform over 256)
-    mod the prefix count — pure function of the band key, identical
-    at write and probe time."""
+    (minhash_sig_bands, portable=True), so take two hex chars (uniform
+    over 256) mod the prefix count — pure function of the band key,
+    identical at write and probe time."""
     return F.pmod(
         F.conv(F.substring(col, 1, 2), 16, 10).cast("int"),
         F.lit(NEARDUP_STATE_PREFIXES),
@@ -281,9 +282,6 @@ def neardup_sink(
     out_dir: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
     jaccard_threshold: float = 0.5,
     prune: bool = True,
     compact_every: int | None = 16,
@@ -313,9 +311,7 @@ def neardup_sink(
             # marker write is the commit point: verdicts + state for
             # this epoch are already fully written — replay is a no-op
             return
-        base_b, _sig, banded_b = _portable_sig_bands(
-            batch_df, text_col, id_col, num_hashes, bands, ngram, True
-        )
+        base_b, _sig, banded_b = minhash_sig_bands(batch_df, text_col, id_col, True)
         # the batch bands table has 4+ consumers (prefix collect,
         # candidate join, within-batch pairs, state write) — persist
         # the micro-batch-sized frame, release in finally
@@ -516,9 +512,6 @@ def neardup_replay_chunks(
     id_col: str,
     chunk_col: str,
     n_chunks: int,
-    num_hashes: int = 16,
-    bands: int = 4,
-    ngram: int = 3,
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """Pure batch replay of the streaming verdict algebra (no files, no
@@ -544,9 +537,7 @@ def neardup_replay_chunks(
     outs: list[DataFrame] = []
     for t in range(n_chunks):
         chunk = docs.filter(F.col(chunk_col) == t)
-        base_b, _sig, banded_b = _portable_sig_bands(
-            chunk, text_col, id_col, num_hashes, bands, ngram, True
-        )
+        base_b, _sig, banded_b = minhash_sig_bands(chunk, text_col, id_col, True)
         persisted.append(base_b)
         bands_b = banded_b.select("doc", "band", "bh")
         sh_b = base_b.select("doc", "sh")

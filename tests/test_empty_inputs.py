@@ -18,18 +18,28 @@ def empty_edges(spark):
     return spark.createDataFrame([], "a long, b long")
 
 
-def test_dedup_family_empty(spark, empty_docs, empty_edges):
+@pytest.mark.parametrize("portable", [False, True], ids=["xxhash64", "md5_60"])
+def test_dedup_family_empty(spark, empty_docs, empty_edges, portable):
     from fegis_spark.operators.dedup import (
         connected_components,
         connected_components_star,
         exact_dedup,
         minhash_lsh_pairs,
+        minhash_sig_bands,
+        simhash_pairs,
         with_shingles,
     )
 
     assert exact_dedup(empty_docs, "text", "doc_id").count() == 0
     assert with_shingles(empty_docs, "text", "doc_id").count() == 0
-    assert minhash_lsh_pairs(empty_docs, "text", "doc_id").count() == 0
+    assert all(
+        t.count() == 0
+        for t in minhash_sig_bands(empty_docs, "text", "doc_id", portable)
+    )
+    assert minhash_lsh_pairs(
+        empty_docs, "text", "doc_id", portable=portable
+    ).count() == 0
+    assert simhash_pairs(empty_docs, "text", "doc_id", portable=portable).count() == 0
     assert connected_components(empty_edges).count() == 0
     assert connected_components_star(empty_edges).count() == 0
 
@@ -61,18 +71,19 @@ def test_match_text_empty(spark, empty_docs):
 
 
 def test_portable_twins_and_media_empty(spark, empty_docs):
-    from fegis_spark.operators.dedup import (
-        minhash_lsh_pairs_portable,
-        simhash_pairs_portable,
-    )
+    from fegis_spark.operators.dedup import minhash_lsh_pairs, simhash_pairs
     from fegis_spark.operators.multimodal import (
         audio_stats,
         media_features,
         resize_images,
     )
 
-    assert minhash_lsh_pairs_portable(empty_docs, "text", "doc_id").count() == 0
-    assert simhash_pairs_portable(empty_docs, "text", "doc_id").count() == 0
+    assert minhash_lsh_pairs(
+        empty_docs, "text", "doc_id", max_bucket_size=None, portable=True
+    ).count() == 0
+    assert simhash_pairs(
+        empty_docs, "text", "doc_id", max_bucket_size=None, portable=True
+    ).count() == 0
     empty_media = spark.createDataFrame([], "media_id long, payload binary")
     assert media_features(empty_media).count() == 0
     assert audio_stats(empty_media).count() == 0

@@ -15,7 +15,6 @@ from fegis_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
-    token_ngrams,
     tokens,
 )
 
@@ -80,7 +79,17 @@ DOCS = [
     (3, "the quick brown fox jumps over the lazy dog near the river delta"),  # near dup
     (4, "completely different text about spark query engines and columnar formats"),
     (5, "ab"),  # sub-3-token doc
+    (6, None),  # NULL text
+    (7, "two words"),  # 2 tokens: one short of a shingle
 ]
+
+#: rows with no 3-gram shingle: they must pair with nothing
+DEGENERATE = {5, 6, 7}
+
+#: both hash families of the MinHash and SimHash operators
+FAMILIES = pytest.mark.parametrize(
+    "portable", [False, True], ids=["xxhash64", "md5_60"]
+)
 
 
 def _docs(spark):
@@ -91,20 +100,27 @@ def test_exact_dedup(spark):
     out = exact_dedup(_docs(spark), "text", "doc_id").collect()
     counts = {r.keeper_id: r.n_copies for r in out}
     assert counts[1] == 2  # docs 1+2 collapse
-    assert len(out) == 4
+    assert counts[6] == 1  # the NULL text is its own group
+    assert len(out) == 6
 
 
-def test_minhash_finds_planted_pair(spark):
+@FAMILIES
+def test_minhash_finds_planted_pair(spark, portable):
     pairs = {(r.a, r.b) for r in minhash_lsh_pairs(
-        _docs(spark), "text", "doc_id", jaccard_threshold=0.5
+        _docs(spark), "text", "doc_id", jaccard_threshold=0.5, portable=portable
     ).collect()}
     assert (1, 2) in pairs and (1, 3) in pairs
     assert not any(4 in p for p in pairs)
+    assert not any(set(p) & DEGENERATE for p in pairs)
 
 
-def test_simhash_finds_planted_pair(spark):
-    pairs = {(r.a, r.b) for r in simhash_pairs(_docs(spark), "text", "doc_id", 8).collect()}
+@FAMILIES
+def test_simhash_finds_planted_pair(spark, portable):
+    pairs = {(r.a, r.b) for r in simhash_pairs(
+        _docs(spark), "text", "doc_id", 8, portable=portable
+    ).collect()}
     assert (1, 2) in pairs
+    assert not any(set(p) & DEGENERATE for p in pairs)
 
 
 def test_ngram_jaccard_blocked(spark):
@@ -113,12 +129,6 @@ def test_ngram_jaccard_blocked(spark):
     got = {(r.a, r.b): r.jaccard for r in out.collect()}
     assert got[(1, 2)] == 1.0
     assert 0.5 <= got[(1, 3)] < 1.0
-
-
-def test_token_ngrams_short_doc(spark):
-    df = spark.createDataFrame([("one two",)], "text string")
-    row = df.select(token_ngrams(tokens(F.col("text")), 3).alias("g")).first()
-    assert row.g == []
 
 
 def _chain_edges(spark, n):
@@ -322,16 +332,14 @@ def test_minhash_hash_families_agree_on_verified_pairs(spark):
     are identical (deterministic: fixed data, fixed hashes). Divergence
     here means a banding bug in one family, not corpus noise."""
     from fegis_spark.model import load_table
-    from fegis_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_portable,
-    )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     fast = {(r.a, r.b) for r in minhash_lsh_pairs(docs, "text", "doc_id").collect()}
     portable = {
         (r.a, r.b)
-        for r in minhash_lsh_pairs_portable(docs, "text", "doc_id").collect()
+        for r in minhash_lsh_pairs(
+            docs, "text", "doc_id", max_bucket_size=None, portable=True
+        ).collect()
     }
     assert fast and fast == portable
 

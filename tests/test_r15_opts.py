@@ -106,7 +106,7 @@ def test_ngram_jaccard_shingle_base_rejects_blocks(spark):
 def test_minhash_verify_bcast_gate_values_identical(spark):
     from fegis_spark.operators.dedup import (
         banded_candidate_pairs,
-        _portable_sig_bands,
+        minhash_sig_bands,
     )
     from fegis_spark.operators.dedup import minhash_verify_pairs
 
@@ -118,9 +118,7 @@ def test_minhash_verify_bcast_gate_values_identical(spark):
         ],
         "doc_id long, text string",
     )
-    base, _sig, banded = _portable_sig_bands(
-        docs, "text", "doc_id", 16, 4, 3, cache_intermediate=False
-    )
+    base, _sig, banded = minhash_sig_bands(docs, "text", "doc_id", True)
     cand = banded_candidate_pairs(banded, max_bucket_size=None)
     sh = base.select("doc", "sh")
     plain = minhash_verify_pairs(cand, sh, 0.2)

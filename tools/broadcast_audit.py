@@ -92,7 +92,6 @@ BAND_MARKER = re.compile(r"#\s*band-ok:\s*\S")
 #: max_bucket_size=) or carry a # band-ok: <keyspace bound> marker
 PAIR_GENERATORS = re.compile(
     r"\b(bucket_pairs|banded_candidate_pairs|minhash_lsh_pairs|simhash_pairs"
-    r"|minhash_lsh_pairs_portable|simhash_pairs_portable"
     r"|ngram_jaccard_pairs|embedding_neardup_pairs"
     r"|embedding_neardup_pairs_lsh"
     r"|minhash_incremental_pairs_portable"

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from bench import force, prime_page_cache  # noqa: E402
 from fegis_spark.catalog import catalog  # noqa: E402
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes  # noqa: E402
-from fegis_spark.operators.dedup import minhash_lsh_pairs_portable  # noqa: E402
+from fegis_spark.operators.dedup import minhash_lsh_pairs  # noqa: E402
 from fegis_spark.operators.scale import pack_greedy_sharded  # noqa: E402
 from fegis_spark.operators.text_analysis import quality_score_expr  # noqa: E402
 from fegis_spark.queries.pipeline_q import (  # noqa: E402
@@ -80,9 +80,9 @@ def main() -> None:
         return kept
 
     def pairs_df(kept):
-        return minhash_lsh_pairs_portable(
-            kept, "text", "doc_id", num_hashes=16, bands=4, ngram=3,
-            jaccard_threshold=0.5, max_bucket_size=HOT_CAP,
+        return minhash_lsh_pairs(
+            kept, "text", "doc_id", jaccard_threshold=0.5,
+            max_bucket_size=HOT_CAP, portable=True,
             seed_bcast_bound=32 * table_bytes(sf_dir, "documents"),
         )
 

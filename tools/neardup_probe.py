@@ -59,9 +59,9 @@ def _mk_batch(spark, docs, lo, n, dup_of=None):
 
 def _probe_once(spark, state_dir, batch_df, prune):
     from fegis_spark.operators.dedup import (
-        _portable_sig_bands,
         incremental_band_candidates,
         incremental_verify_candidates,
+        minhash_sig_bands,
     )
     from fegis_spark.streaming.neardup import (
         NEARDUP_CAP,
@@ -72,9 +72,7 @@ def _probe_once(spark, state_dir, batch_df, prune):
     from fegis_spark.commitlog import committed_epoch
 
     committed = committed_epoch(state_dir)
-    base_b, _sig, banded_b = _portable_sig_bands(
-        batch_df, "text", "doc_id", 16, 4, 3, True
-    )
+    base_b, _sig, banded_b = minhash_sig_bands(batch_df, "text", "doc_id", True)
     bands_b = banded_b.select("doc", "band", "bh").persist()
     bands_b.count()  # materialize the batch signature OUTSIDE the timing
     sh_b = base_b.select("doc", "sh")

@@ -22,7 +22,9 @@ echo "== 3/7 bench smoke (sf0.001) =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python bench.py 2>/dev/null | tail -1
 
 echo "== 4/7 pytest =="
-python -m pytest tests/ -q 2>/dev/null | tail -1
+# tier-1 flags: a module that fails to collect (tests/test_schema.py
+# needs the reference checkout) must not stop the other tests
+python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider 2>/dev/null | tail -1
 
 echo "== 5/7 oracle lint + typed-schema parity =="
 python tools/oracle_lint.py 2>/dev/null
