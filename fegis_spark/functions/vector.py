@@ -86,57 +86,6 @@ def cosine_sql(a: str, b: str) -> str:
     )
 
 
-def dot_unrolled_sql(a: str, b: str, dim: int) -> str:
-    """UNROLLED spelling of dot() for KNOWN-dim vectors: the identical
-    left fold ((((0.0 + x0) + x1) + x2) ...) over literal indices.
-    Bit-identical to the zip_with/aggregate fold by construction —
-    same 0.0 seed, same left-association, same per-element
-    float→double widening.
-
-    NOT a fast path (r14, measured): at dim 64 the per-element
-    try_element_at accesses cost ~2x the JVM CPU of Spark 4.1's HOF
-    fold evaluation (evidence/cosine_codegen_ab_r14.json — the r9
-    "HOFs break codegen" heuristic does NOT make the unrolled form
-    cheaper here). Retained for the bitwise-equivalence pins and as
-    the probe baseline; production paths use dot_sql/cosine_sql/
-    cosine_lit_sql/cosine_from_parts_sql.
-
-    A row shorter than dim yields NULL terms and a NULL fold, which
-    filters the same way the zip_with NULL pad does; try_element_at
-    keeps ANSI mode from throwing on a short row."""
-
-    def term(i: int) -> str:
-        return (
-            f"(CAST(try_element_at({a}, {i + 1}) AS DOUBLE)"
-            f" * CAST(try_element_at({b}, {i + 1}) AS DOUBLE))"
-        )
-
-    acc = "0.0D"
-    for i in range(dim):
-        acc = f"({acc} + {term(i)})"
-    return acc
-
-
-def cosine_unrolled_sql(a: str, b: str, dim: int) -> str:
-    """Unrolled spelling of cosine() for known-dim vectors — the same
-    zero-norm guard and d/(na*nb) shape as cosine()/cosine_sql, with
-    every fold unrolled via dot_unrolled_sql. Bit-identical to
-    cosine(); pinned in tests/test_search.py. NOT a fast path (see
-    dot_unrolled_sql) — retained for the equivalence pins/probes."""
-    d = dot_unrolled_sql(a, b, dim)
-    na = f"sqrt({dot_unrolled_sql(a, a, dim)})"
-    nb = f"sqrt({dot_unrolled_sql(b, b, dim)})"
-    return (
-        f"CASE WHEN {na} = 0.0D OR {nb} = 0.0D THEN 0.0D"
-        f" ELSE {d} / ({na} * {nb}) END"
-    )
-
-
-def norm_unrolled_sql(a: str, dim: int) -> str:
-    """sqrt of the unrolled self-dot — the codegen norm() twin."""
-    return f"sqrt({dot_unrolled_sql(a, a, dim)})"
-
-
 def cosine_from_parts_sql(dot: str, na: str, nb: str) -> str:
     """cosine() recombined from a per-pair dot and PRE-COMPUTED
     per-side norms (same expressions evaluated once per vector

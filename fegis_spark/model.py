@@ -90,6 +90,40 @@ def _table_stamp(path: str) -> tuple:
     return (st.st_mtime_ns, st.st_size)
 
 
+def table_memo(spark: SparkSession, sf_dir: str, name: str, key, compute):
+    """Session memo for values that are a pure function of one table.
+
+    The one driver-side cache: entries live ON the session object (and
+    die with it) under ``(abspath, file stamp, key)``. The first lookup
+    that sees a new stamp for a path evicts every entry of the old
+    stamp, so a rewritten table drops its loaded frame and every value
+    derived from it together. ``key=None`` is the loaded frame itself
+    (load_table); any other hashable key names a derived value, such
+    as a query vector or trained PQ books.
+    """
+    path = table_path(sf_dir, name)
+    abspath = os.path.abspath(path)
+    stamp = _table_stamp(path)
+    memo = spark.__dict__.setdefault("_fegis_table_memo", {})
+    full = (abspath, stamp, key)
+    if full in memo:
+        return memo[full]
+    for k in [k for k in memo if k[0] == abspath and k[1] != stamp]:
+        del memo[k]
+    value = memo[full] = compute()
+    return value
+
+
+def clear_memos() -> None:
+    """Drop every derived value from the active session's table memo;
+    the loaded frames stay. For callers that time a builder's cold path
+    (perfbench, the tools/ probes)."""
+    spark = SparkSession.getActiveSession()
+    memo = spark.__dict__.get("_fegis_table_memo", {}) if spark else {}
+    for k in [k for k in memo if k[2] is not None]:
+        del memo[k]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan; Catalyst handles pushdown + pruning.
 
@@ -100,41 +134,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TIMESTAMP_NS → TIMESTAMP); MICROS already arrives as a timestamp and
     passes through. The conversion is gated on the read dtype, so both
     encodings yield the same TIMESTAMP_NTZ column.
+
+    The frame is memoized by table_memo — a plan-object cache, NOT a
+    data cache: executing the memoized frame re-reads the parquet like
+    a fresh ``spark.read.parquet``. ``spark.read.parquet`` costs ~50-100
+    ms of driver work per call (py4j + JVM file listing + footer schema
+    inference), and multi-table queries pay it up to 5x per plan build.
     """
-    # Memo of LOADED (analyzed, lazy) table DataFrames — a plan-object
-    # cache, NOT a data cache: nothing is materialized; executing the
-    # memoized frame re-reads the parquet from disk exactly like a
-    # fresh ``spark.read.parquet``. Rationale (r14 opt):
-    # ``spark.read.parquet`` costs ~50-100 ms of driver-side work
-    # (py4j + JVM file listing + footer schema inference) PER CALL,
-    # and multi-table queries pay it up to 5x per plan build.
-    # Staleness contract mirrors bm25._STATS_MEMO: the memo dict lives
-    # ON the session object (dies with it) and keys include the file's
-    # (mtime_ns, size), so a rewritten testdata file misses.
+    return table_memo(
+        spark, sf_dir, name, None, lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = table_path(sf_dir, name)
-    memo = spark.__dict__.setdefault("_fegis_load_memo", {})
-    abspath = os.path.abspath(path)
-    key = (abspath, _table_stamp(path))
-    hit = memo.get(key)
-    if hit is not None:
-        return hit
-    # evict superseded stamps for the same path so rewritten tables
-    # don't leak stale DataFrame entries for the session lifetime
-    # (ADVICE r14)
-    for k in [k for k in memo if k[0] == abspath]:
-        del memo[k]
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
         if dict(df.dtypes).get("ts") in ("bigint", "long"):
-            df = df.withColumn(
+            return df.withColumn(
                 "ts",
                 F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
             )
-    else:
-        df = spark.read.parquet(path)
-    memo[key] = df
-    return df
+        return df
+    return spark.read.parquet(path)
 
 
 #: Size gate for explicit broadcast-join hints, in SOURCE PARQUET bytes.

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fegis_spark.catalog import register
-from fegis_spark.model import load_table
+from fegis_spark.model import load_table, table_memo
 from fegis_spark.operators.knn import ann_ivf, knn_join
 from fegis_spark.plans.search import basic_search, by_id_search, filtered_search
 
@@ -30,23 +30,17 @@ _COS = """
 """
 
 
-#: session-lifetime memo of driver-side query vectors: the lookup is a
-#: pure function of (sf_dir, vec_id) and every search-family builder
-#: pays a ~0.2 s head() job for it otherwise. Same staleness contract
-#: as Spark's own file-listing/table caches (a path's data is assumed
-#: stable within a session).
-_QUERY_VEC_MEMO: dict[tuple[str, int], list[float]] = {}
-
-
 def _query_vec(spark, sf_dir, vec_id: int = 0):
-    key = (sf_dir, vec_id)
-    v = _QUERY_VEC_MEMO.get(key)
-    if v is None:
+    """Driver-side query vector, memoized on the embeddings table's
+    stamp (model.table_memo): every search-family builder would
+    otherwise pay a ~0.2 s head() job for it."""
+
+    def lookup():
         emb = load_table(spark, sf_dir, "embeddings")
         row = emb.filter(F.col("vec_id") == vec_id).select("embedding").head()
-        v = [float(x) for x in row.embedding]
-        _QUERY_VEC_MEMO[key] = v
-    return v
+        return [float(x) for x in row.embedding]
+
+    return table_memo(spark, sf_dir, "embeddings", ("query_vec", vec_id), lookup)
 
 
 @register(
@@ -1670,7 +1664,7 @@ def ann_pq_adc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded panel), scoring is a pure projection, and the only
     shuffle is the per-query top-k window over candidates. Trained
     codebooks slot into the same expressions as literals (the
-    memoized driver round-trip pattern, bm25._STATS_MEMO)."""
+    driver round-trip pattern of _pqt_books)."""
     from fegis_spark.operators.knn import PQ_ADC_EXPR, pq_codes_expr, pq_luts_expr
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2073,21 +2067,22 @@ def ann_pq_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the oracle RETRAINS them from the same table, closing the r11
 # verdict #3 gap (trained PQ lived only in the library tier).
 
-#: per-sf memo for the driver-side book training round-trip — the gate
-#: builds each query several times (plan pins, row compare); same
-#: staleness contract as bm25._STATS_MEMO (sf_dir fully determines the
-#: sample and the trainer is deterministic)
-_PQT_MEMO: dict[str, list] = {}
-
 
 def _pqt_books(spark: SparkSession, sf_dir: str) -> list:
-    if sf_dir not in _PQT_MEMO:
-        from fegis_spark.operators.knn import train_pq_books_portable
+    """Trained books, memoized on the embeddings table's stamp
+    (model.table_memo): the gate builds each query several times (plan
+    pins, row compare) and the trainer is deterministic."""
+    from fegis_spark.operators.knn import train_pq_books_portable
 
-        _PQT_MEMO[sf_dir] = train_pq_books_portable(
+    return table_memo(
+        spark,
+        sf_dir,
+        "embeddings",
+        "pq_books",
+        lambda: train_pq_books_portable(
             load_table(spark, sf_dir, "embeddings"), "vec_id"
-        )
-    return _PQT_MEMO[sf_dir]
+        ),
+    )
 
 
 def _pqt_rerank_oracle() -> str:

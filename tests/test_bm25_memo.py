@@ -1,72 +1,111 @@
-"""r9 memo mechanics: the hoisted BM25 stats memo (keyed on the
-analyzed tfs plan's semanticHash + analyzer terms) and the query-vec
-memo must (a) hit on identical corpus+terms, (b) miss on different
-terms or different data, (c) never change values vs a cold build."""
+"""Driver-memo staleness pins. The one driver-side cache is the
+session's table memo (model.table_memo): a value derived from a table
+is keyed on the table's file stamp, so rewriting the table between two
+builds in one session must give fresh results, while a same-stamp
+second call is a hit that runs no job. BM25 corpus stats are not
+memoized at all: every build recomputes them."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import math
 
-import fegis_spark.operators.bm25 as bm25mod
-from fegis_spark.operators.bm25 import bm25_scores
+import pytest
 
-
-def _corpus(spark, path, rows):
-    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
-        "overwrite"
-    ).parquet(path)
-    return spark.read.parquet(path)
+from fegis_spark.model import load_table, table_path
+from fegis_spark.operators.bm25 import bm25_scores, clear_memos
 
 
-def test_stats_memo_hit_miss_and_value_stability(spark, tmp_path):
-    df = _corpus(
-        spark,
-        str(tmp_path / "c1"),
-        [(1, "data systems store data"), (2, "model data"), (3, "no match here")],
+def _write(spark, sf_dir, name, rows, schema):
+    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
+        table_path(str(sf_dir), name)
     )
-    bm25mod._STATS_MEMO.clear()
-    cold = {r.id: r.score for r in bm25_scores(df, "text", "doc_id", ["data"]).collect()}
-    assert len(bm25mod._STATS_MEMO) == 1
-
-    # identical corpus plan + terms -> memo HIT (no new entry), values identical
-    warm = {r.id: r.score for r in bm25_scores(df, "text", "doc_id", ["data"]).collect()}
-    assert len(bm25mod._STATS_MEMO) == 1
-    assert warm == cold
-
-    # different terms -> new key
-    bm25_scores(df, "text", "doc_id", ["model"]).collect()
-    assert len(bm25mod._STATS_MEMO) == 2
-
-    # different DATA (different path) -> new key even with same terms
-    df2 = _corpus(
-        spark, str(tmp_path / "c2"), [(1, "data"), (2, "data data")]
-    )
-    bm25_scores(df2, "text", "doc_id", ["data"]).collect()
-    assert len(bm25mod._STATS_MEMO) == 3
-
-    # memo values == a cold rebuild (clearing the memo must not change scores)
-    bm25mod._STATS_MEMO.clear()
-    recold = {r.id: r.score for r in bm25_scores(df, "text", "doc_id", ["data"]).collect()}
-    assert recold == cold
 
 
-def test_stats_memo_is_bounded():
-    bm25mod._STATS_MEMO.clear()
-    for i in range(bm25mod._STATS_MEMO_MAX + 10):
-        if len(bm25mod._STATS_MEMO) >= bm25mod._STATS_MEMO_MAX:
-            bm25mod._STATS_MEMO.pop(next(iter(bm25mod._STATS_MEMO)))
-        bm25mod._STATS_MEMO[(i, ("t",))] = (1.0, (0.0,))
-    assert len(bm25mod._STATS_MEMO) <= bm25mod._STATS_MEMO_MAX
-    bm25mod._STATS_MEMO.clear()
+def _emb_rows(f, n=40, dim=64):
+    return [(i, [float(f(i * dim + d)) for d in range(dim)]) for i in range(n)]
 
 
-def test_query_vec_memo(spark):
-    from fegis_spark.queries import vector_q
+_EMB = "vec_id long, embedding array<float>"
+_DOCS = "doc_id long, text string"
 
-    vector_q._QUERY_VEC_MEMO.clear()
-    v1 = vector_q._query_vec(spark, "/root/testdata/sf0.001")
-    assert len(vector_q._QUERY_VEC_MEMO) == 1
-    v2 = vector_q._query_vec(spark, "/root/testdata/sf0.001")
-    assert v2 is v1  # memo hit, no second lookup job
-    vector_q._query_vec(spark, "/root/testdata/sf0.001", vec_id=1)
-    assert len(vector_q._QUERY_VEC_MEMO) == 2
+
+def test_query_vec_memo(spark, tmp_path):
+    from fegis_spark.queries.vector_q import _query_vec
+
+    sf = str(tmp_path)
+    _write(spark, sf, "embeddings", [(0, [1.0, 0.0]), (1, [0.5, 0.5])], _EMB)
+    v1 = _query_vec(spark, sf)
+    assert v1 == [1.0, 0.0]
+    # same stamp -> memo hit: the very same list, no second lookup job
+    assert _query_vec(spark, sf) is v1
+    assert _query_vec(spark, sf, vec_id=1) == [0.5, 0.5]
+
+    # rewrite the table in the same session -> the stale vector is gone
+    _write(spark, sf, "embeddings", [(0, [0.0, 1.0]), (1, [0.5, 0.5])], _EMB)
+    assert _query_vec(spark, sf) == [0.0, 1.0]
+
+
+def test_clear_memos_drops_derived_values_keeps_frames(spark, tmp_path):
+    from fegis_spark.queries.vector_q import _query_vec
+
+    sf = str(tmp_path)
+    _write(spark, sf, "embeddings", [(0, [1.0, 0.0])], _EMB)
+    frame = load_table(spark, sf, "embeddings")
+    v1 = _query_vec(spark, sf)
+    clear_memos()
+    assert load_table(spark, sf, "embeddings") is frame
+    v2 = _query_vec(spark, sf)
+    assert v2 == v1 and v2 is not v1
+
+
+def test_pq_books_retrained_after_rewrite(spark, tmp_path, monkeypatch):
+    import fegis_spark.operators.knn as knn
+    from fegis_spark.queries.vector_q import _pqt_books
+
+    trained = []
+    real = knn.train_pq_books_portable
+
+    def counting(*a, **kw):
+        trained.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(knn, "train_pq_books_portable", counting)
+    sf = str(tmp_path)
+    _write(spark, sf, "embeddings", _emb_rows(math.sin), _EMB)
+    b1 = _pqt_books(spark, sf)
+    assert _pqt_books(spark, sf) is b1  # same stamp: no retraining
+    assert len(trained) == 1
+
+    _write(spark, sf, "embeddings", _emb_rows(math.cos), _EMB)
+    b2 = _pqt_books(spark, sf)
+    assert len(trained) == 2
+    fresh = real(spark.read.parquet(table_path(sf, "embeddings")), "vec_id")
+    assert b2 == fresh
+    assert b2 != b1
+
+
+def _scores(spark, sf):
+    df = load_table(spark, sf, "documents")
+    return {r.id: r.score for r in bm25_scores(df, "text", "doc_id", ["data"]).collect()}
+
+
+def test_bm25_rebuild_after_rewrite_matches_cold_build(spark, tmp_path):
+    old = [(1, "data systems store data"), (2, "model data"), (3, "no match here")]
+    new = [
+        (1, "data systems store data"),
+        (2, "model"),
+        (3, "data lakes"),
+        (4, "more words here"),
+    ]
+    sf = tmp_path / "sf"
+    _write(spark, sf, "documents", old, _DOCS)
+    first = _scores(spark, str(sf))
+    assert _scores(spark, str(sf)) == first  # repeat build: identical values
+
+    _write(spark, sf, "documents", new, _DOCS)
+    rebuilt = _scores(spark, str(sf))
+    cold_sf = tmp_path / "cold"
+    _write(spark, cold_sf, "documents", new, _DOCS)
+    cold = _scores(spark, str(cold_sf))
+    assert rebuilt == cold
+    assert rebuilt[1] != pytest.approx(first[1])

@@ -326,12 +326,11 @@ def test_lexical_score_sql_bitwise_matches_column_form(spark):
     assert a[1].s == 2.0
 
 
-def test_cosine_unrolled_sql_bitwise_matches_fold(spark):
-    """r14 codegen fast path: the unrolled known-dim cosine (and the
-    precomputed-norm recombination) must be bit-identical to the
-    zip_with/aggregate fold — same 0.0 seed, same left association,
-    same zero-norm guard — including negative zeros, denormals and a
-    zero-norm row."""
+def test_cosine_from_parts_sql_bitwise_matches_fold(spark):
+    """The pair-join spelling (per-side norm_sql precomputed once,
+    recombined with one dot_sql per pair by cosine_from_parts_sql) must
+    be bit-identical to the cosine() fold — same zero-norm guard —
+    including negative zeros, denormals and a zero-norm row."""
     import math
 
     from pyspark.sql import functions as F
@@ -339,9 +338,8 @@ def test_cosine_unrolled_sql_bitwise_matches_fold(spark):
     from fegis_spark.functions.vector import (
         cosine,
         cosine_from_parts_sql,
-        cosine_unrolled_sql,
-        dot_unrolled_sql,
-        norm_unrolled_sql,
+        dot_sql,
+        norm_sql,
     )
 
     vecs = [
@@ -360,22 +358,10 @@ def test_cosine_unrolled_sql_bitwise_matches_fold(spark):
     fold = df.select(
         "i", "j", cosine(F.col("va"), F.col("vb")).alias("c")
     ).collect()
-    unrolled = df.selectExpr(
-        "i", "j", f"{cosine_unrolled_sql('va', 'vb', 4)} AS c"
-    ).collect()
-    assert [r.c for r in fold] == [r.c for r in unrolled]
-    # precomputed-norm recombination path (the pair-join spelling)
     parts = df.selectExpr(
-        "i",
-        "j",
-        f"{norm_unrolled_sql('va', 4)} AS na",
-        f"{norm_unrolled_sql('vb', 4)} AS nb",
-        "va",
-        "vb",
+        "i", "j", f"{norm_sql('va')} AS na", f"{norm_sql('vb')} AS nb", "va", "vb"
     ).selectExpr(
-        "i",
-        "j",
-        f"{cosine_from_parts_sql(dot_unrolled_sql('va', 'vb', 4), 'na', 'nb')} AS c",
+        "i", "j", f"{cosine_from_parts_sql(dot_sql('va', 'vb'), 'na', 'nb')} AS c"
     ).collect()
     assert [r.c for r in fold] == [r.c for r in parts]
 

@@ -14,6 +14,10 @@ Two probes, each writing an evidence file:
       2.85x x8->x16 ratio needs a clean read before being treated as
       superlinear).
 
+The r9 BM25 idf-hoist A/B (in-plan stats vs driver literals) is
+recorded in evidence/bm25_ab_r9.json; bm25_scores has only the
+hoisted form now, so there is nothing left to A/B.
+
 Timing convention: per CLAUDE.md, a single timing can read 5-10x high
 on ~1 query per run (GC pause / shuffle hiccup), so every number here
 is min/median over repeated fresh-plan builds, and clearCache +
@@ -63,49 +67,6 @@ def probe_knn(runs: int = 7) -> dict:
     }
 
 
-def probe_bm25(runs: int = 5) -> dict:
-    """r8 verdict item 1: rrf_hybrid_bm25 regressed 0.91s -> 1.58s on
-    EVERY run; suspect = interpreted portable_ln idf projection feeding
-    a BroadcastNestedLoopJoin (HOF disables codegen for the scoring
-    stage). A/B: legacy in-plan stats (hoist_stats=False, the r8 plan)
-    vs driver-literal hoist (r9 default). Median of fresh-plan runs,
-    clearCache + rebuild between runs, solo."""
-    import fegis_spark.operators.bm25 as bm25mod
-    from fegis_spark.catalog import catalog
-
-    spark = configure_for_oracle(get_spark("ab_probe"))
-    out: dict = {
-        "probe": "bm25 idf-hoist A/B (r8 verdict #1)",
-        "sf": 0.1,
-        "r7_bench_rrf_hybrid_bm25": 0.91,
-        "r8_bench_rrf_hybrid_bm25": 1.58,
-        "variants": {},
-    }
-    orig = bm25mod.bm25_scores
-
-    def legacy(df, text_col, id_col, terms, k1=bm25mod.K1, b=bm25mod.B, hoist_stats=True):
-        return orig(df, text_col, id_col, terms, k1=k1, b=b, hoist_stats=False)
-
-    for variant, fn in (("legacy_inplan", legacy), ("hoisted_literals", orig)):
-        bm25mod.bm25_scores = fn
-        try:
-            for q in ("rrf_hybrid_bm25", "bm25_topk"):
-                e = catalog()[q]
-                spark.catalog.clearCache(); clear_memos()
-                e.builder(spark, SF_DIR).collect()  # warm
-                times = []
-                for _ in range(runs):
-                    spark.catalog.clearCache(); clear_memos()
-                    times.append(_timed(e.builder(spark, SF_DIR)))
-                out["variants"].setdefault(variant, {})[q] = {
-                    "runs": times,
-                    "median": round(statistics.median(times), 4),
-                }
-        finally:
-            bm25mod.bm25_scores = orig
-    return out
-
-
 def probe_cdc(factors=(8, 16)) -> dict:
     from tools.skew_probe import cdc_frame
 
@@ -129,8 +90,6 @@ def main() -> None:
         res, path = probe_knn(), "evidence/knn_top100_ab_r8.json"
     elif which == "cdc":
         res, path = probe_cdc(), "evidence/cdc_merge_hot_r8.json"
-    elif which == "bm25":
-        res, path = probe_bm25(), "evidence/bm25_ab_r9.json"
     else:
         raise SystemExit(f"unknown probe {which}")
     print(json.dumps(res, indent=1))
