@@ -4,6 +4,8 @@ Cosine/dot/norm compile to Catalyst expressions (zip_with + aggregate
 = a sequential fold, deterministic order, no Python). All math in
 float64: embeddings are stored float32 but both engines upcast before
 folding, which keeps Spark and the DuckDB oracle bit-compatible.
+The exact-integer projection kernel at the end of the module
+(md5_signs, int_quant_sql, int_dot_sql) serves every integer path.
 """
 
 from __future__ import annotations
@@ -125,3 +127,63 @@ def cosine_lit_sql(v: str, q: Sequence[float]) -> str:
         f" ELSE {d} / ({na} * {nq!r}D) END"
     )
 
+
+# ---------------------------------------------------------------------------
+# The exact-integer projection kernel shared by every oracle-checkable
+# vector path (SRP codes, portable-IVF routing, PQ encode/ADC, SemDeDup
+# centroid similarity): md5-parity ±1 literal matrices, micro-unit
+# BIGINT quantization, and an integer dot, each spelled once per
+# engine. Both engines round doubles half-away-from-zero, and with
+# |x| <= ~1 per entry a 64-dim dot against ±1 (or trained micro-unit)
+# literals stays far inside 2^53 — so every comparison built on these
+# is an exact-integer compare on Spark and DuckDB alike.
+
+#: micro-unit quantization scale of int_quant_sql
+INT_SCALE = 1_000_000
+
+
+def md5_signs(ns: str, rows: int, dim: int) -> list[list[int]]:
+    """Deterministic ±1 matrix: entry (r, d) is +1 iff the first hex
+    digit of md5(f"{ns}{r}:{d}") is even. ``ns`` namespaces the draws
+    so SRP hyperplanes (""), IVF routing centroids ("ivfp:") and PQ
+    codebooks ("pq:{m}:") are independent; the same literals embed in
+    both engines, so there is no RNG to disagree about."""
+    import hashlib
+
+    return [
+        [
+            1
+            if int(hashlib.md5(f"{ns}{r}:{d}".encode()).hexdigest()[0], 16) % 2 == 0
+            else -1
+            for d in range(dim)
+        ]
+        for r in range(rows)
+    ]
+
+
+def array_sql(items: str, spark: bool) -> str:
+    """Array constructor around comma-joined SQL ``items``."""
+    return f"array({items})" if spark else f"[{items}]"
+
+
+def int_quant_sql(vec: str, spark: bool) -> str:
+    """Array of round(x * INT_SCALE) BIGINTs of an array<float> SQL
+    expression, in Spark (``spark``) or DuckDB spelling."""
+    fn = "transform" if spark else "list_transform"
+    return (
+        f"{fn}({vec}, x -> "
+        f"CAST(round(CAST(x AS DOUBLE) * {INT_SCALE}.0) AS BIGINT))"
+    )
+
+
+def int_dot_sql(a: str, b: str | Sequence[int], spark: bool) -> str:
+    """Exact BIGINT dot of two integer arrays; ``b`` is a SQL
+    expression or a row of ints embedded as an array literal."""
+    if not isinstance(b, str):
+        b = array_sql(",".join(map(str, b)), spark)
+    if spark:
+        return (
+            f"aggregate(zip_with({a}, {b}, (a, b) -> a * b), "
+            f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+        )
+    return f"list_dot_product({a}, {b})"

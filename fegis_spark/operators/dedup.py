@@ -36,7 +36,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from fegis_spark.functions.vector import cosine
+from fegis_spark.functions.vector import (
+    cosine,
+    int_dot_sql,
+    int_quant_sql,
+    md5_signs,
+)
 
 
 def normalize_text(col: Column) -> Column:
@@ -830,9 +835,9 @@ def semantic_dedup(
     is a first-class [EXT] training-data-pipeline operator.
 
     Clustering reuses the portable-IVF routing machinery
-    (operators/knn.ivfp_*): md5-derived literal ±1 centroids and
-    exact-integer quantized dot products, so assignment is an
-    exact-integer argmax on any engine and the whole decision
+    (operators/knn.ivfp_dots / first_arg_sql): md5-derived literal ±1
+    centroids and exact-integer quantized dot products, so assignment
+    is an exact-integer argmax on any engine and the whole decision
     procedure — clusters, pair candidacy, and keep/drop choice — is
     value-checkable against a DuckDB oracle. centroid_sim is the
     cosine to the assigned centroid scaled by the constant sqrt(dim)
@@ -855,26 +860,21 @@ def semantic_dedup(
     """
     from pyspark import StorageLevel
 
-    from fegis_spark.operators.knn import ivfp_dots_expr, ivfp_quant_expr
+    from fegis_spark.operators.knn import first_arg_sql, ivfp_dots
 
-    q = ivfp_quant_expr(vec_col)
-    qnorm = (
-        f"sqrt(CAST(aggregate(zip_with({q}, {q}, (a, b) -> a * b), "
-        f"CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE))"
-    )
+    q = int_quant_sql(vec_col, True)
+    qnorm = f"sqrt(CAST({int_dot_sql(q, q, True)} AS DOUBLE))"
     base = (
         df.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("__v"),
-            F.expr(ivfp_dots_expr(vec_col, dim, n_lists)).alias("__dots"),
+            F.expr(ivfp_dots(vec_col, dim, n_lists)).alias("__dots"),
             F.expr(qnorm).alias("__qn"),
         )
         .select(
             "vec_id",
             "__v",
-            F.expr(
-                "CAST(array_position(__dots, array_max(__dots)) - 1 AS INT)"
-            ).alias("list_id"),
+            F.expr(first_arg_sql("__dots", True)).alias("list_id"),
             (
                 F.expr("CAST(array_max(__dots) AS DOUBLE)")
                 / F.expr("nullif(__qn, 0.0)")
@@ -963,9 +963,10 @@ def semantic_dedup_trained(
     operators/knn._train_centroids (seeded spherical k-means on a
     bounded sample below 64 lists, seeded MLlib k-means|| over the full
     corpus above — nothing corpus-sized ever reaches the driver);
-    assignment is ONE broadcast join + per-row top-1 (the ann_ivf
-    shape); the keep-the-outlier verdict algebra is _semdedup_verdicts,
-    shared verbatim with the oracle-checked twin. Deterministic given
+    assignment is knn._nearest_lists (the one IVF assigner: ONE
+    broadcast join + per-row top-1); the keep-the-outlier verdict
+    algebra is _semdedup_verdicts, shared verbatim with the
+    oracle-checked twin. Deterministic given
     the seed, but float k-means is not SQL-replayable, so the
     correctness tier is the shared-verdict library tests + the
     dedup_semantic oracle on the routing twin; scaling evidence:
@@ -973,43 +974,20 @@ def semantic_dedup_trained(
     ~quadratically under replication, scaled n_lists tracks the
     corpus)."""
     from pyspark import StorageLevel
-    from pyspark.sql import Window
 
-    from fegis_spark.functions.vector import (
-        cosine_from_parts_sql,
-        dot_sql,
-        norm_sql,
-    )
-    from fegis_spark.operators.knn import _train_centroids
+    from fegis_spark.operators.knn import _centroid_frame, _nearest_lists
 
-    spark = df.sparkSession
-    cent_rows = _train_centroids(
+    cent_df = _centroid_frame(
         df, id_col, vec_col, n_lists, kmeans_iters, distributed
     )
-    # centroid norms once per centroid, row norms once per row — the
-    # n_lists-way assignment recombines per pair (bit-identical to
-    # cosine(); 1.8x less CPU, evidence/cosine_codegen_ab_r14.json)
-    cent_df = spark.createDataFrame(
-        cent_rows, "list_id int, centroid array<double>"
-    ).withColumn("__cn", F.expr(norm_sql("centroid")))
-    scored = df.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__v"),
-        F.expr(norm_sql(vec_col)).alias("__vn"),
-    ).crossJoin(F.broadcast(cent_df))  # bcast-ok: n_lists centroid rows
-    # grpwin-ok: per-row vec_id partition key — count scales with input
-    w = Window.partitionBy("vec_id").orderBy(F.desc("__sim"), F.col("list_id"))
     base = (
-        scored.withColumn(
-            "__sim",
-            F.expr(
-                cosine_from_parts_sql(
-                    dot_sql("__v", "centroid"), "__vn", "__cn"
-                )
-            ),
+        _nearest_lists(
+            df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")),
+            cent_df,
+            "__v",
+            "vec_id",
+            1,
         )
-        .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
         .select("vec_id", "__v", "list_id", F.col("__sim").alias("__csim"))
         # three consumers (both pair-join sides + the verdict join)
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1413,68 +1391,28 @@ def incremental_verify_candidates(
 # ---------------------------------------------------------------------------
 
 #: SRP geometry: 32 hyperplanes -> 32-bit codes, 4 bands of 8 bits for
-#: blocking. Quantization scale makes every dot product an exact
-#: integer (|q| <= ~1e6, 64 dims -> |dot| <= ~1e8, far inside 2^53),
-#: so the sign — and therefore the code — is bit-identical on any
-#: engine: this is the fully oracle-checkable twin of the MLlib
+#: blocking. The hyperplanes are md5_signs("", SRP_BITS, dim) and the
+#: dots run on the exact-integer kernel (functions/vector.py), so the
+#: sign — and therefore the code — is bit-identical on any engine:
+#: this is the fully oracle-checkable twin of the MLlib
 #: BucketedRandomProjectionLSH path (which is rows-only by contract).
 SRP_BITS = 32
 SRP_BANDS = 4
-SRP_SCALE = 1_000_000
 
 
-def srp_signs(nbits: int, dim: int) -> list[list[int]]:
-    """Deterministic ±1 hyperplane matrix from md5 parity — the same
-    literal matrix is embedded in the Spark expression and the DuckDB
-    oracle, so there is no RNG to disagree about."""
-    import hashlib
-
-    return [
-        [
-            1
-            if int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[0], 16) % 2 == 0
-            else -1
-            for d in range(dim)
-        ]
-        for p in range(nbits)
-    ]
-
-
-def srp_code_expr(vec_col: str, dim: int, nbits: int = SRP_BITS) -> str:
-    """Spark-SQL expression computing the SRP code of an array<float>
+def srp_code(vec_col: str, dim: int, spark: bool = True) -> str:
+    """Engine expression computing the SRP code of an array<float>
     column: quantize to integers, take the sign of each hyperplane dot
     product, pack the bits. One SQL string (driver-side plan-cost fast
     path); the quantized array is a shared subtree across planes."""
-    signs = srp_signs(nbits, dim)
-    q = (
-        f"transform({vec_col}, x -> "
-        f"CAST(round(CAST(x AS DOUBLE) * {SRP_SCALE}.0) AS BIGINT))"
-    )
+    q = int_quant_sql(vec_col, spark)
     terms = []
-    for p, row in enumerate(signs):
-        lit = "array(" + ",".join(str(r) for r in row) + ")"
-        dot = (
-            f"aggregate(zip_with({q}, {lit}, (a, b) -> a * b), "
-            f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
-        terms.append(f"IF({dot} >= 0, {1 << p}L, 0L)")
-    return "(" + " + ".join(terms) + ")"
-
-
-def srp_code_sql(vec_col: str, dim: int, nbits: int = SRP_BITS) -> str:
-    """DuckDB twin of srp_code_expr — identical arithmetic: integer
-    quantization, exact double dot products (integer-valued, < 2^53),
-    same literal hyperplanes."""
-    signs = srp_signs(nbits, dim)
-    q = (
-        f"list_transform({vec_col}, x -> "
-        f"CAST(round(CAST(x AS DOUBLE) * {SRP_SCALE}.0) AS BIGINT))"
-    )
-    terms = []
-    for p, row in enumerate(signs):
-        lit = "[" + ",".join(str(r) for r in row) + "]"
-        terms.append(
-            f"CASE WHEN list_dot_product({q}, {lit}) >= 0 "
-            f"THEN CAST({1 << p} AS BIGINT) ELSE 0 END"
-        )
+    for p, row in enumerate(md5_signs("", SRP_BITS, dim)):
+        dot = int_dot_sql(q, row, spark)
+        if spark:
+            terms.append(f"IF({dot} >= 0, {1 << p}L, 0L)")
+        else:
+            terms.append(
+                f"CASE WHEN {dot} >= 0 THEN CAST({1 << p} AS BIGINT) ELSE 0 END"
+            )
     return "(" + " + ".join(terms) + ")"

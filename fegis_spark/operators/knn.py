@@ -15,6 +15,15 @@ Three tiers, by corpus x query scale:
    queries probe nprobe nearest lists — the classic IVF-Flat layout
    expressed relationally (centroid assignment = broadcast join +
    argmin; probe = semi-join on centroid id).
+
+Every trained-centroid assignment (ann_ivf, the stored index, its
+streaming append, operators/dedup.semantic_dedup_trained) goes through
+the one assigner ``_nearest_lists``. The oracle-checkable twins
+(portable IVF, PQ-ADC, trained PQ, and SRP codes in operators/dedup)
+build on the exact-integer projection kernel in functions/vector.py
+(md5_signs, int_quant_sql, int_dot_sql); their list routing is
+spelled once per engine here (ivfp_dots, first_arg_sql,
+ivfp_probe_ranks / ivfp_probe_rank_sql).
 """
 
 from __future__ import annotations
@@ -25,8 +34,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from fegis_spark.functions.vector import (
+    INT_SCALE,
+    array_sql,
     cosine_from_parts_sql,
     dot_sql,
+    int_dot_sql,
+    int_quant_sql,
+    md5_signs,
     norm_sql,
 )
 
@@ -84,6 +98,42 @@ def knn_join(
     )
 
 
+#: BRP-LSH geometry (knn_join_lsh, lsh_bucket_stats): hash tables per
+#: model and the approxSimilarityJoin Euclidean distance cap
+LSH_TABLES = 3
+LSH_MAX_DISTANCE = 10.0
+
+
+def _features(vec_col: str) -> Column:
+    from pyspark.ml.functions import array_to_vector
+
+    return array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+
+
+def _brp_model(corpus_df: DataFrame, vec_col: str, feats: DataFrame):
+    """The one seeded BRP-LSH fit (seed 42, LSH_TABLES tables) over
+    ``feats``' "features" column. The bucket length is sigma/2 =
+    0.5/sqrt(dim), dim read from corpus_df's first row (1-row bounded
+    driver round-trip): a unit vector projects onto a random unit
+    hyperplane with std 1/sqrt(dim), so any fixed bucket length >>
+    sigma puts every row in the one or two buckets around zero and the
+    per-table equi-join degenerates to ~n^2/2 brute force (the r11
+    occupancy find — 51% single-bucket at the old fixed 2.0-4.0
+    lengths; sigma/2 measures max occupancy ~0.2,
+    evidence/brp_occupancy_r12.json)."""
+    from pyspark.ml.feature import BucketedRandomProjectionLSH
+
+    first = corpus_df.select(vec_col).head()
+    dim = len(first[0]) if first is not None else 64
+    return BucketedRandomProjectionLSH(
+        inputCol="features",
+        outputCol="hashes",
+        bucketLength=0.5 / dim ** 0.5,
+        numHashTables=LSH_TABLES,
+        seed=42,
+    ).fit(feats)
+
+
 def knn_join_lsh(
     queries_df: DataFrame,
     corpus_df: DataFrame,
@@ -91,49 +141,15 @@ def knn_join_lsh(
     corpus_id: str,
     vec_col: str = "embedding",
     k: int = 3,
-    bucket_length: float | None = None,
-    num_hash_tables: int = 3,
-    max_distance: float = 10.0,
 ) -> DataFrame:
     """Approximate KNN via random-projection LSH (Euclidean proxy for
-    cosine on normalized vectors). Candidate generation is a bucket
-    equi-join — no cross product. Rows-only correctness (approximate
-    by construction).
-
-    bucket_length=None (default, r12) derives sigma/2 = 0.5/sqrt(dim)
-    from the first row's dimensionality (1-row bounded driver
-    round-trip): a unit vector projects onto a random unit hyperplane
-    with std 1/sqrt(dim), so any fixed bucket length >> sigma puts
-    every row in the one or two buckets around zero and the per-table
-    equi-join degenerates to ~n^2/2 brute force (the r11 occupancy
-    find — 51% single-bucket at the old fixed 2.0-4.0 defaults;
-    sigma/2 measures max occupancy ~0.2, evidence/
-    brp_occupancy_r12.json). Pass an explicit value to override."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    if bucket_length is None:
-        first = corpus_df.select(vec_col).head()
-        dim = len(first[0]) if first is not None else 64
-        bucket_length = 0.5 / dim ** 0.5
-
-    q = queries_df.select(
-        F.col(query_id).alias("query_id"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    c = corpus_df.select(
-        F.col(corpus_id).alias("corpus_id"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=42,
-    )
-    model = lsh.fit(c)
-    pairs = model.approxSimilarityJoin(c, q, max_distance, distCol="dist")
+    cosine on normalized vectors; model and bucket length from
+    _brp_model). Candidate generation is a bucket equi-join — no cross
+    product. Rows-only correctness (approximate by construction)."""
+    q = queries_df.select(F.col(query_id).alias("query_id"), _features(vec_col))
+    c = corpus_df.select(F.col(corpus_id).alias("corpus_id"), _features(vec_col))
+    model = _brp_model(corpus_df, vec_col, c)
+    pairs = model.approxSimilarityJoin(c, q, LSH_MAX_DISTANCE, distCol="dist")
     flat = pairs.select(
         F.col("datasetB.query_id").alias("query_id"),
         F.col("datasetA.corpus_id").alias("corpus_id"),
@@ -148,39 +164,19 @@ def knn_join_lsh(
     )
 
 
-def lsh_bucket_stats(
-    corpus_df: DataFrame,
-    vec_col: str = "embedding",
-    bucket_length: float | None = None,
-    num_hash_tables: int = 3,
-) -> DataFrame:
+def lsh_bucket_stats(corpus_df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """1-row occupancy audit of the BRP-LSH bucket layout (hash table
-    0, the same fitted model knn_join_lsh uses: bucketLength derived
-    sigma/2 unless overridden, seed 42): (n_rows, n_buckets,
-    max_bucket). The observable behind the r11/r12 degeneracy finds —
-    a fixed bucket_length >> sigma collapses the table to ~2 buckets
-    and the bucket equi-join to ~n^2/2 brute force; the derived
-    sigma/2 default measures 12-14 buckets / <=0.21 max share at every
-    sf (evidence/brp_occupancy_r12.json, ann_lsh_recall_audit)."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    0 of the same _brp_model fit knn_join_lsh uses): (n_rows,
+    n_buckets, max_bucket). The observable behind the r11/r12
+    degeneracy finds — a fixed bucket length >> sigma collapses the
+    table to ~2 buckets and the bucket equi-join to ~n^2/2 brute
+    force; the derived sigma/2 length measures 12-14 buckets / <=0.21
+    max share at every sf (evidence/brp_occupancy_r12.json,
+    ann_lsh_recall_audit)."""
+    from pyspark.ml.functions import vector_to_array
 
-    if bucket_length is None:
-        first = corpus_df.select(vec_col).head()
-        dim = len(first[0]) if first is not None else 64
-        bucket_length = 0.5 / dim ** 0.5
-    c = corpus_df.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=42,
-    )
-    model = lsh.fit(c)
-    t = model.transform(c).select(
+    c = corpus_df.select(_features(vec_col))
+    t = _brp_model(corpus_df, vec_col, c).transform(c).select(
         vector_to_array(F.col("hashes")[0])[0].cast("bigint").alias("b0")
     )
     return (
@@ -204,6 +200,9 @@ def ivf_training_sample(
     scan + filter — no Sort/TakeOrdered over the corpus (pinned in
     tests/test_plans.py); the caller trims to exactly `target` rows
     driver-side by (hash, id), which is total-ordered and bounded.
+    NULL vectors are dropped after the cutoff, while ``n`` stays the
+    full row count — a table without NULLs samples the same rows
+    either way (pq_trained_books_sql mirrors both choices).
     """
     n = corpus_df.select(corpus_id).count()
     frac = min(1.0, (1.2 * target) / max(n, 1))
@@ -216,11 +215,15 @@ def ivf_training_sample(
         16,
         10,
     ).cast("long")
-    return corpus_df.select(
-        F.col(corpus_id).cast("string").alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        h.alias("__h"),
-    ).filter(F.col("__h") <= int(frac * 0xFFFFFFFF))
+    return (
+        corpus_df.select(
+            F.col(corpus_id).cast("string").alias("__id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+            h.alias("__h"),
+        )
+        .filter(F.col("__h") <= int(frac * 0xFFFFFFFF))
+        .filter(F.col("v").isNotNull())
+    )
 
 
 def ann_ivf(
@@ -242,34 +245,14 @@ def ann_ivf(
     time — at scale this is the partition/bucket layout written once),
     then each query scans only its n_probe nearest lists. Recall < 1
     by design → rows-only correctness tier."""
-    cent_rows = _train_centroids(
+    cent_df = _centroid_frame(
         corpus_df, corpus_id, vec_col, n_lists, kmeans_iters, distributed
     )
-    spark = corpus_df.sparkSession
-    cent_df = spark.createDataFrame(
-        cent_rows, "list_id int, centroid array<double>"
-    ).withColumn("__ctn", F.expr(norm_sql("centroid")))
-
-    def nearest_lists(df: DataFrame, id_alias: str, n_keep: int) -> DataFrame:
-        # row norm once, reused for every centroid AND the probe scan
-        scored = (
-            df.withColumn("__rn", F.expr(norm_sql(vec_col)))
-            .crossJoin(F.broadcast(cent_df))  # bcast-ok: n_lists centroids
-            .withColumn("__sim", _parts(vec_col, "centroid", "__rn", "__ctn"))
-        )
-        # grpwin-ok: per-row id partition key — count scales with input
-        w = Window.partitionBy(id_alias).orderBy(F.desc("__sim"), F.col("list_id"))
-        return (
-            scored.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") <= n_keep)
-            .drop("centroid", "__ctn", "__sim", "__r")
-        )
-
-    corpus_assigned = nearest_lists(
-        corpus_df.select(corpus_id, vec_col), corpus_id, 1
+    corpus_assigned = _nearest_lists(
+        corpus_df.select(corpus_id, vec_col), cent_df, vec_col, corpus_id, 1
     )
-    query_probes = nearest_lists(
-        queries_df.select(query_id, vec_col), query_id, n_probe
+    query_probes = _nearest_lists(
+        queries_df.select(query_id, vec_col), cent_df, vec_col, query_id, n_probe
     ).select(
         F.col(query_id).alias("query_id"),
         F.col(vec_col).alias("__qv"),
@@ -298,8 +281,9 @@ def _train_centroids(
     kmeans_iters: int,
     distributed: bool | None = None,
 ):
-    """Deterministic centroid training (shared by ann_ivf and
-    build_ivf_index). Two routes behind one signature:
+    """Deterministic centroid training (shared by ann_ivf,
+    build_ivf_index and semantic_dedup_trained via _centroid_frame).
+    Two routes behind one signature:
 
     * small n_lists (<= 64, the local default): bounded md5-bucket
       sample (<= max(32·n_lists, 512) rows) + seeded SPHERICAL
@@ -345,6 +329,8 @@ def _train_centroids(
 
     target = max(n_lists * 32, 512)
     sample = ivf_training_sample(corpus_df, corpus_id, vec_col, target).collect()
+    if not sample:
+        return []  # empty corpus: no lists, so every assignment is empty
     sample.sort(key=lambda r: (r["__h"], r["__id"]))
     X = np.array([r["v"] for r in sample[:target]], dtype=np.float64)
     norms = np.linalg.norm(X, axis=1, keepdims=True)
@@ -382,21 +368,34 @@ def _train_centroids(
     return [(int(i), [float(x) for x in c]) for i, c in enumerate(cent)]
 
 
-def _nearest_lists(
-    df: DataFrame,
-    cent_df: DataFrame,
+def _centroid_frame(
+    corpus_df: DataFrame,
+    corpus_id: str,
     vec_col: str,
-    id_alias: str,
-    n_keep: int,
-    keep_norm: bool = False,
+    n_lists: int,
+    kmeans_iters: int,
+    distributed: bool | None,
 ) -> DataFrame:
-    """Nearest-centroid assignment with per-side precomputed norms
-    (row norm once per row, centroid norms once on the panel —
-    bit-identical to the cosine() fold, 1.8x less CPU per pair;
-    evidence/cosine_codegen_ab_r14.json). ``keep_norm`` retains the
-    row norm as ``__rn`` so a downstream probe scan can reuse it;
-    default False keeps output schemas (incl. the STORED index
-    corpus) unchanged."""
+    """_train_centroids as a (list_id, centroid) frame."""
+    return corpus_df.sparkSession.createDataFrame(
+        _train_centroids(
+            corpus_df, corpus_id, vec_col, n_lists, kmeans_iters, distributed
+        ),
+        "list_id int, centroid array<double>",
+    )
+
+
+def _nearest_lists(
+    df: DataFrame, cent_df: DataFrame, vec_col: str, id_alias: str, n_keep: int
+) -> DataFrame:
+    """The one nearest-centroid assigner: each row of ``df`` keeps its
+    ``n_keep`` most cosine-similar lists of ``cent_df`` (list_id,
+    centroid), ties to the lower list_id. Adds list_id, the row norm
+    ``__rn`` (reused by probe scans) and the centroid cosine
+    ``__sim``. Norms are precomputed per side (row norm once per row,
+    centroid norms once on the panel — bit-identical to the cosine()
+    fold, 1.8x less CPU per pair; evidence/cosine_codegen_ab_r14.json).
+    """
     cents = cent_df.withColumn("__ctn", F.expr(norm_sql("centroid")))
     scored = (
         df.withColumn("__rn", F.expr(norm_sql(vec_col)))
@@ -405,12 +404,11 @@ def _nearest_lists(
     )
     # grpwin-ok: per-row id partition key — count scales with input
     w = Window.partitionBy(id_alias).orderBy(F.desc("__sim"), F.col("list_id"))
-    out = (
+    return (
         scored.withColumn("__r", F.row_number().over(w))
         .filter(F.col("__r") <= n_keep)
-        .drop("centroid", "__ctn", "__sim", "__r")
+        .drop("centroid", "__ctn", "__r")
     )
-    return out if keep_norm else out.drop("__rn")
 
 
 def ivf_corpus_dir(path: str) -> str:
@@ -453,16 +451,12 @@ def build_ivf_index(
     k-means|| (no driver-side sample), else the numpy sample path —
     see _train_centroids.
     """
-    spark = corpus_df.sparkSession
-    cent_df = spark.createDataFrame(
-        _train_centroids(
-            corpus_df, corpus_id, vec_col, n_lists, kmeans_iters, distributed
-        ),
-        "list_id int, centroid array<double>",
+    cent_df = _centroid_frame(
+        corpus_df, corpus_id, vec_col, n_lists, kmeans_iters, distributed
     )
     assigned = _nearest_lists(
         corpus_df.select(corpus_id, vec_col), cent_df, vec_col, corpus_id, 1
-    )
+    ).drop("__rn", "__sim")
     from fegis_spark.commitlog import commit_epoch
 
     assigned.write.mode("overwrite").partitionBy("list_id").parquet(
@@ -492,8 +486,7 @@ def ann_ivf_indexed(
     cent_df = spark.read.parquet(f"{path}/centroids")
     corpus = spark.read.parquet(ivf_corpus_dir(path))
     probes = _nearest_lists(
-        queries_df.select(query_id, vec_col), cent_df, vec_col, query_id,
-        n_probe, keep_norm=True,
+        queries_df.select(query_id, vec_col), cent_df, vec_col, query_id, n_probe
     ).select(
         F.col(query_id).alias("query_id"),
         F.col(vec_col).alias("__qv"),
@@ -536,13 +529,17 @@ def append_to_ivf_index(
     id_col = [c for c in new_vectors.columns if c != vec_col][0]
     assigned = _nearest_lists(
         new_vectors.select(id_col, vec_col), cent_df, vec_col, id_col, 1
-    )
+    ).drop("__rn", "__sim")
     assigned.write.mode("append").partitionBy("list_id").parquet(
         ivf_corpus_dir(path)
     )
 
 
-def compact_ivf_index(spark, path: str, target_files_per_list: int = 1) -> None:
+#: data files per inverted list after compact_ivf_index
+IVF_FILES_PER_LIST = 1
+
+
+def compact_ivf_index(spark, path: str) -> None:
     """Compact the small files streaming appends accumulate (one file
     per micro-batch per list): rewrite the corpus partitioned by list,
     then swap directories. Run on the same schedule as statistics
@@ -551,9 +548,9 @@ def compact_ivf_index(spark, path: str, target_files_per_list: int = 1) -> None:
     primitives.
 
     Parallelism: rows are hash-distributed over
-    ``n_lists * target_files_per_list`` shuffle partitions on
+    ``n_lists * IVF_FILES_PER_LIST`` shuffle partitions on
     (list_id, salt) — every list compacts in parallel across the
-    cluster and lands in at most ``target_files_per_list`` files
+    cluster and lands in at most ``IVF_FILES_PER_LIST`` files
     (hashing by list_id alone into ``target`` partitions would funnel
     the whole corpus through target tasks, and could never yield more
     than one file per list).
@@ -580,10 +577,10 @@ def compact_ivf_index(spark, path: str, target_files_per_list: int = 1) -> None:
     n_lists = spark.read.parquet(f"{path}/centroids").count()
     staged = f"{path}/corpus_v{cur + 1}"
     id_col = next(c for c in corpus.columns if c != "list_id")
-    salt = (F.abs(F.hash(F.col(id_col))) % target_files_per_list).alias("__salt")
+    salt = (F.abs(F.hash(F.col(id_col))) % IVF_FILES_PER_LIST).alias("__salt")
     (
         corpus.withColumn("__salt", salt)
-        .repartition(max(1, n_lists * target_files_per_list), "list_id", "__salt")
+        .repartition(max(1, n_lists * IVF_FILES_PER_LIST), "list_id", "__salt")
         .drop("__salt")
         .sortWithinPartitions("list_id")
         .write.mode("overwrite")
@@ -604,86 +601,71 @@ def compact_ivf_index(spark, path: str, target_files_per_list: int = 1) -> None:
 # ---------------------------------------------------------------------------
 # Portable IVF twin — md5-derived literal centroids, fully oracle-checkable.
 
-#: Quantization scale for the portable IVF routing dot products. Same
-#: rationale as SRP_SCALE (operators/dedup.py): |q| <= ~1e6 per entry,
-#: 64 dims -> |dot| <= ~6.4e7 against ±1 centroids, far inside 2^53,
-#: so every list-assignment comparison is an exact-integer compare on
-#: any engine.
-IVFP_SCALE = 1_000_000
+#: Routing geometry of the portable IVF twin. Its centroids are the
+#: ±1 literals md5_signs("ivfp:", IVFP_LISTS, dim) against quantized
+#: vectors, so every list-assignment comparison is an exact-integer
+#: compare on any engine (bound: functions/vector.py kernel notes).
 IVFP_LISTS = 16
 IVFP_PROBE = 4
 
 
-def ivfp_centroids(n_lists: int, dim: int) -> list[list[int]]:
-    """Deterministic ±1 centroid matrix from md5 parity (namespaced
-    'ivfp' so it is independent of the SRP hyperplanes). These are not
-    trained centroids — they are literal routing directions embedded
-    identically in the Spark expression and the DuckDB oracle, which
-    is exactly what makes the IVF *machinery* (assign → probe →
-    partition-restricted candidate join → top-k) value-checkable
-    cross-engine. The trained path (ann_ivf / build_ivf_index) keeps
-    the recall story; this twin certifies the routing semantics the
-    same way dedup_minhash_portable certifies the xxhash LSH path."""
-    import hashlib
-
-    return [
-        [
-            1
-            if int(hashlib.md5(f"ivfp:{j}:{d}".encode()).hexdigest()[0], 16) % 2 == 0
-            else -1
-            for d in range(dim)
-        ]
-        for j in range(n_lists)
-    ]
+def ivfp_dots(
+    vec_col: str, dim: int, n_lists: int = IVFP_LISTS, spark: bool = True
+) -> str:
+    """Engine expression: array of the n_lists exact-integer routing
+    dot products of an array<float> column against the md5-derived
+    ±1 centroids (namespaced 'ivfp:' so they are independent of the
+    SRP hyperplanes). These are not trained centroids — they are
+    literal routing directions embedded identically in the Spark
+    expression and the DuckDB oracle, which is exactly what makes the
+    IVF *machinery* (assign → probe → partition-restricted candidate
+    join → top-k) value-checkable cross-engine. The trained path
+    (ann_ivf / build_ivf_index) keeps the recall story; this twin
+    certifies the routing semantics. One generated SQL string
+    (driver-side plan-cost fast path, CLAUDE.md); the quantized array
+    is a shared subtree."""
+    q = int_quant_sql(vec_col, spark)
+    cents = md5_signs("ivfp:", n_lists, dim)
+    dots = ",".join(int_dot_sql(q, row, spark) for row in cents)
+    return array_sql(dots, spark)
 
 
-def ivfp_quant_expr(vec_col: str) -> str:
-    """Spark-SQL expression: exact-integer quantization of an
-    array<float> column (the shared subtree of every portable-IVF
-    routing expression; see IVFP_SCALE for the no-overflow bound)."""
-    return (
-        f"transform({vec_col}, x -> "
-        f"CAST(round(CAST(x AS DOUBLE) * {IVFP_SCALE}.0) AS BIGINT))"
+def first_arg_sql(arr: str, spark: bool, extreme: str = "max") -> str:
+    """0-based position of the first max (or min) of an array
+    expression: the ivfp list assignment and every PQ encode.
+    array_position and list_position both return the first
+    occurrence, so ties break to the lowest index on both engines."""
+    pos = "array_position" if spark else "list_position"
+    agg = ("array_" if spark else "list_") + extreme
+    return f"CAST({pos}({arr}, {agg}({arr})) - 1 AS INT)"
+
+
+def ivfp_probe_ranks(df: DataFrame, *keep: str) -> DataFrame:
+    """Spark probe-rank step of the portable IVF: every list of each
+    query's ``__dots`` routing array, ranked per query_id by (dot
+    DESC, list_id) → (query_id, *keep, list_id, __dot, probe_rank).
+    DuckDB twin: ivfp_probe_rank_sql."""
+    pr = df.select(
+        "query_id", *keep, F.posexplode("__dots").alias("list_id", "__dot")
     )
+    # panel-ok: input is |query panel| x n_lists posexploded rows — bounded
+    w = Window.partitionBy("query_id").orderBy(F.desc("__dot"), F.col("list_id"))
+    return pr.withColumn("probe_rank", F.row_number().over(w))
 
 
-def ivfp_quant_sql(vec_col: str) -> str:
-    """DuckDB twin of ivfp_quant_expr — identical arithmetic (both
-    engines round doubles half-away-from-zero; CLAUDE.md recipe)."""
+def ivfp_probe_rank_sql(part: str, indent: int) -> str:
+    """DuckDB twin of ivfp_probe_ranks: the probe rank of list
+    ``r.range`` (a CROSS JOIN range(0, IVFP_LISTS) r beside the row's
+    ``dots``) per ``part``, by (dot DESC, list_id). ``indent`` is the
+    column the expression starts at, so its continuation lines line
+    up in the caller's CTE."""
+    pad = " " * indent
     return (
-        f"list_transform({vec_col}, x -> "
-        f"CAST(round(CAST(x AS DOUBLE) * {IVFP_SCALE}.0) AS BIGINT))"
+        f"row_number() OVER (\n"
+        f"{pad}  PARTITION BY {part}\n"
+        f"{pad}  ORDER BY dots[CAST(r.range AS INT) + 1] DESC,\n"
+        f"{pad}           CAST(r.range AS INT))"
     )
-
-
-def ivfp_dots_expr(vec_col: str, dim: int, n_lists: int = IVFP_LISTS) -> str:
-    """Spark-SQL expression: array of the n_lists exact-integer routing
-    dot products of an array<float> column against the literal
-    centroids. One generated SQL string (driver-side plan-cost fast
-    path, CLAUDE.md); the quantized array is a shared subtree."""
-    cents = ivfp_centroids(n_lists, dim)
-    q = ivfp_quant_expr(vec_col)
-    dots = []
-    for row in cents:
-        lit = "array(" + ",".join(str(r) for r in row) + ")"
-        dots.append(
-            f"aggregate(zip_with({q}, {lit}, (a, b) -> a * b), "
-            f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
-    return "array(" + ",".join(dots) + ")"
-
-
-def ivfp_dots_sql(vec_col: str, dim: int, n_lists: int = IVFP_LISTS) -> str:
-    """DuckDB twin of ivfp_dots_expr — identical arithmetic: integer
-    quantization, exact integer-valued dot products, same literal
-    centroid matrix."""
-    cents = ivfp_centroids(n_lists, dim)
-    q = ivfp_quant_sql(vec_col)
-    dots = [
-        f"list_dot_product({q}, [" + ",".join(str(r) for r in row) + "])"
-        for row in cents
-    ]
-    return "[" + ",".join(dots) + "]"
 
 
 def ann_ivf_portable(
@@ -694,7 +676,6 @@ def ann_ivf_portable(
     vec_col: str = "embedding",
     dim: int = 64,
     k: int = 3,
-    n_lists: int = IVFP_LISTS,
     n_probe: int = IVFP_PROBE,
 ) -> DataFrame:
     """IVF-Flat with md5-derived literal routing centroids — the fully
@@ -707,36 +688,27 @@ def ann_ivf_portable(
     layout, see build_ivf_index), exact cosine re-ranks. Every routing
     comparison is an exact-integer compare, so candidate sets — not
     just top-k survivors — are bit-identical cross-engine."""
-    dots = ivfp_dots_expr(vec_col, dim, n_lists)
+    dots = ivfp_dots(vec_col, dim)
     c = corpus_df.select(
         F.col(corpus_id).alias("corpus_id"),
         F.col(vec_col).alias("__cv"),
         F.expr(dots).alias("__dots"),
     ).select(
-        "corpus_id",
-        "__cv",
-        F.expr(
-            "CAST(array_position(__dots, array_max(__dots)) - 1 AS INT)"
-        ).alias("list_id"),
+        "corpus_id", "__cv", F.expr(first_arg_sql("__dots", True)).alias("list_id")
     )
     qd = queries_df.select(
         F.col(query_id).alias("query_id"),
         F.col(vec_col).alias("__qv"),
         F.expr(dots).alias("__dots"),
     )
-    pr = qd.select(
-        "query_id", "__qv", F.posexplode("__dots").alias("list_id", "__dot")
-    )
-    # panel-ok: input is |query panel| x n_lists posexploded rows — bounded
-    w = Window.partitionBy("query_id").orderBy(F.desc("__dot"), F.col("list_id"))
     probes = (
-        pr.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= n_probe)
+        ivfp_probe_ranks(qd, "__qv")
+        .filter(F.col("probe_rank") <= n_probe)
         .select(
             "query_id",
             "__qv",
             F.expr(norm_sql("__qv")).alias("__qn"),
-            F.col("list_id").cast("int").alias("list_id"),
+            "list_id",
         )
     )
     cand = (
@@ -760,89 +732,52 @@ def ann_ivf_portable(
 # exact-integer encode + asymmetric-distance scoring, fully
 # oracle-checkable (the same certification pattern ivfp gives IVF).
 
-#: dim 64 split into PQ_M subspaces of PQ_DSUB dims, PQ_K codewords
-#: each (3-bit codes — demonstration scale; production PQ uses K=256).
+#: The one PQ geometry — literal books, trained books and _pq_sub's
+#: slicing all use it: dim 64 split into PQ_M subspaces of PQ_DSUB
+#: dims, PQ_K codewords each (3-bit codes — demonstration scale;
+#: production PQ uses K=256).
 PQ_M = 8
 PQ_DSUB = 8
 PQ_K = 8
 
-
-def pq_codebooks(m: int = PQ_M, k: int = PQ_K, dsub: int = PQ_DSUB):
-    """Deterministic ±1 codeword matrix per subspace from md5 parity
-    (namespaced 'pq', independent of the SRP/ivfp draws). Because
-    every codeword has the SAME norm (all entries ±1), nearest-
-    codeword assignment under L2 reduces EXACTLY to argmax dot
-    product, and the ADC distance ranking reduces to ranking by the
-    summed query·codeword dots — so the whole encode/score path runs
-    on exact integers (quantized vectors at IVFP_SCALE against ±1
-    literals: |dot| <= 8e6 per subspace, 6.4e7 summed, far inside
-    2^53) and DuckDB replays it value-for-value. These are not
-    trained codebooks — this twin certifies the PQ *machinery*
-    (subspace encode → code array → LUT join → ADC top-k); trained
-    codebooks would slot into the same expressions as literals."""
-    import hashlib
-
-    return [
-        [
-            [
-                1
-                if int(hashlib.md5(f"pq:{mm}:{j}:{d}".encode()).hexdigest()[0], 16)
-                % 2 == 0
-                else -1
-                for d in range(dsub)
-            ]
-            for j in range(k)
-        ]
-        for mm in range(m)
-    ]
+#: Deterministic ±1 codeword matrix per subspace (md5_signs namespace
+#: 'pq:{m}:', independent of the SRP/ivfp draws). Because every
+#: codeword has the SAME norm (all entries ±1), nearest-codeword
+#: assignment under L2 reduces EXACTLY to argmax dot product, and the
+#: ADC distance ranking reduces to ranking by the summed
+#: query·codeword dots — so the whole encode/score path runs on exact
+#: integers (|dot| <= 8e6 per subspace, 6.4e7 summed, far inside
+#: 2^53) and DuckDB replays it value-for-value. These are not trained
+#: codebooks — this twin certifies the PQ *machinery* (subspace encode
+#: → code array → LUT join → ADC top-k); trained codebooks slot into
+#: the same machinery (pq_trained_codes_expr).
+PQ_BOOKS = [md5_signs(f"pq:{mm}:", PQ_K, PQ_DSUB) for mm in range(PQ_M)]
 
 
 def _pq_sub(vec_col: str, mm: int, spark: bool) -> str:
-    """Quantized subvector mm (exact-integer, shared recipe with
-    ivfp_quant_expr) in the target engine's spelling."""
+    """Quantized subvector mm in the target engine's spelling."""
     a = mm * PQ_DSUB + 1
     if spark:
-        return (
-            f"transform(slice({vec_col}, {a}, {PQ_DSUB}), "
-            f"x -> CAST(round(CAST(x AS DOUBLE) * {IVFP_SCALE}.0) AS BIGINT))"
-        )
-    return (
-        f"list_transform(list_slice({vec_col}, {a}, {a + PQ_DSUB - 1}), "
-        f"x -> CAST(round(CAST(x AS DOUBLE) * {IVFP_SCALE}.0) AS BIGINT))"
-    )
+        return int_quant_sql(f"slice({vec_col}, {a}, {PQ_DSUB})", spark)
+    return int_quant_sql(f"list_slice({vec_col}, {a}, {a + PQ_DSUB - 1})", spark)
 
 
 def _pq_dots(vec_col: str, mm: int, spark: bool) -> str:
     """Array of the PQ_K exact-integer codeword dots for subspace mm."""
-    books = pq_codebooks()
     sub = _pq_sub(vec_col, mm, spark)
-    if spark:
-        dots = [
-            f"aggregate(zip_with({sub}, array({','.join(map(str, row))}), "
-            f"(a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            for row in books[mm]
-        ]
-        return "array(" + ",".join(dots) + ")"
-    dots = [
-        f"list_dot_product({sub}, [{','.join(map(str, row))}])"
-        for row in books[mm]
-    ]
-    return "[" + ",".join(dots) + "]"
+    dots = ",".join(int_dot_sql(sub, row, spark) for row in PQ_BOOKS[mm])
+    return array_sql(dots, spark)
 
 
 def pq_codes_expr(vec_col: str, spark: bool = True) -> str:
     """Engine expression: array of PQ_M code indices (0-based), one
     per subspace — argmax codeword dot with first-max tiebreak
-    (array_position / list_position semantics agree). ONE generated
-    string (driver-side plan-cost fast path, CLAUDE.md)."""
-    pos, mx = ("array_position", "array_max") if spark else (
-        "list_position", "list_max")
-    codes = []
-    for mm in range(PQ_M):
-        d = _pq_dots(vec_col, mm, spark)
-        codes.append(f"CAST({pos}({d}, {mx}({d})) - 1 AS INT)")
-    body = ",".join(codes)
-    return f"array({body})" if spark else f"[{body}]"
+    (first_arg_sql). ONE generated string (driver-side plan-cost fast
+    path, CLAUDE.md)."""
+    codes = ",".join(
+        first_arg_sql(_pq_dots(vec_col, mm, spark), spark) for mm in range(PQ_M)
+    )
+    return array_sql(codes, spark)
 
 
 def pq_luts_expr(vec_col: str, spark: bool = True) -> str:
@@ -850,12 +785,12 @@ def pq_luts_expr(vec_col: str, spark: bool = True) -> str:
     codeword-dot LUTs for a QUERY vector — ADC scores a corpus code
     array by summing luts[m][code[m]]."""
     luts = ",".join(_pq_dots(vec_col, mm, spark) for mm in range(PQ_M))
-    return f"array({luts})" if spark else f"[{luts}]"
+    return array_sql(luts, spark)
 
 
 #: Spark ADC score over a (codes, luts) pair — exact-integer sum of
 #: the coded LUT entries (rank-equivalent to the L2 ADC distance for
-#: constant-norm codebooks; see pq_codebooks).
+#: constant-norm codebooks; see PQ_BOOKS).
 PQ_ADC_EXPR = (
     "aggregate(zip_with(codes, luts, (c, l) -> element_at(l, c + 1)), "
     "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
@@ -869,149 +804,6 @@ def pq_adc_sql(codes_qual: str, luts_qual: str) -> str:
         f"{luts_qual}[{mm + 1}][{codes_qual}[{mm + 1}] + 1]"
         for mm in range(PQ_M)
     )
-
-
-def build_ivfpq_index(
-    corpus_df: DataFrame,
-    path: str,
-    corpus_id: str,
-    vec_col: str = "embedding",
-) -> None:
-    """Index-once half of the production IVF-PQ flow (r11): assign
-    every corpus vector to its ivfp routing list AND encode it to PQ
-    codes, then write ``{path}/corpus_v0`` (committed via the marker
-    log, see ivf_corpus_dir) as a parquet of
-    (corpus_id, codes) PARTITIONED BY list_id. The stored rows carry
-    the 8-int codes INSTEAD of the float vector — the two scale
-    levers composed at rest: probing prunes to n_probe/n_lists of the
-    DIRECTORIES, and what those directories hold is ~32x smaller than
-    float embeddings (measured: evidence/pq_adc_ab_r11.json).
-    Routing centroids and codebooks are the md5-derived portable
-    literals; a trained deployment swaps them into the same
-    expressions (the literal-hoist pattern of bm25_scores)."""
-    dots = ivfp_dots_expr(vec_col, 64)
-    assigned = corpus_df.select(
-        F.col(corpus_id).alias("corpus_id"),
-        F.expr(dots).alias("__dots"),
-        F.expr(pq_codes_expr(vec_col)).alias("codes"),
-    ).select(
-        "corpus_id", "codes",
-        F.expr(
-            "CAST(array_position(__dots, array_max(__dots)) - 1 AS INT)"
-        ).alias("list_id"),
-    )
-    from fegis_spark.commitlog import commit_epoch
-
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/corpus_v0"
-    )
-    commit_epoch(path, 0)
-
-
-def ann_ivfpq_indexed(
-    spark,
-    path: str,
-    queries_df: DataFrame,
-    query_id: str,
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_probe: int = IVFP_PROBE,
-) -> DataFrame:
-    """Query-many half (r11): probe the stored IVF-PQ index. The
-    probe set joins the codes table on its PARTITION column, so
-    dynamic partition pruning restricts the scan to n_probe
-    directories per query batch, and scoring is the exact-integer ADC
-    LUT sum over the stored codes — no float vectors are read at all.
-    Identical candidate sets and ranking to ann_ivfpq_portable with
-    equal parameters (same literal centroids/codebooks)."""
-    corpus = spark.read.parquet(ivf_corpus_dir(path))
-    dots = ivfp_dots_expr(vec_col, 64)
-    qd = queries_df.select(
-        F.col(query_id).alias("query_id"),
-        F.expr(pq_luts_expr(vec_col)).alias("luts"),
-        F.expr(dots).alias("__dots"),
-    )
-    pr = qd.select(
-        "query_id", "luts", F.posexplode("__dots").alias("list_id", "__dot")
-    )
-    # panel-ok: input is |query panel| x n_lists posexploded rows — bounded
-    w = Window.partitionBy("query_id").orderBy(F.desc("__dot"), F.col("list_id"))
-    probes = (
-        pr.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= n_probe)
-        .select("query_id", "luts", F.col("list_id").cast("int").alias("list_id"))
-    )
-    cand = corpus.join(F.broadcast(probes), "list_id")  # bcast-ok: n_probe probe rows per query
-    scored = cand.withColumn("adc", F.expr(PQ_ADC_EXPR))
-    # panel-ok: WindowGroupLimit(Partial) below the exchange bounds the
-    # shuffled probed codes to k per (query, map partition)
-    wk = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.col("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "corpus_id", "adc",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
-
-
-def train_pq_codebooks(
-    corpus_df: DataFrame,
-    corpus_id: str,
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    k: int = PQ_K,
-    dsub: int = PQ_DSUB,
-    iters: int = 10,
-):
-    """Deterministic per-subspace Euclidean k-means for PQ (r11):
-    the same bounded md5-bucket sample _train_centroids uses
-    (≤ 512 rows collected), k-means++ init + Lloyd steps per
-    subspace, seed 42, dead clusters reseeded to the worst-served
-    point. Returns INT-QUANTIZED codebooks (entries round(c·1e6)) so
-    the trained expressions run on exact integers like the portable
-    twin — same sample, same seed ⇒ same codebooks run-over-run.
-    Sample-based by design: PQ codebooks are k·m tiny centroids; at
-    100 TB you still train them on a bounded sample (FAISS does the
-    same), so there is no distributed-training route to miss."""
-    import numpy as np
-
-    target = max(k * 32, 512)
-    sample = ivf_training_sample(corpus_df, corpus_id, vec_col, target).collect()
-    sample.sort(key=lambda r: (r["__h"], r["__id"]))
-    X = np.array([r["v"] for r in sample[:target]], dtype=np.float64)
-    rng = np.random.default_rng(42)
-    books = []
-    for mm in range(m):
-        S = X[:, mm * dsub : (mm + 1) * dsub]
-        kk = min(k, len(S))
-        cent = np.empty((kk, dsub), dtype=np.float64)
-        cent[0] = S[int(rng.integers(len(S)))]
-        d2 = ((S - cent[0]) ** 2).sum(1)
-        for j in range(1, kk):
-            tot = d2.sum()
-            idx = (
-                int(rng.choice(len(S), p=d2 / tot))
-                if tot > 0
-                else int(rng.integers(len(S)))
-            )
-            cent[j] = S[idx]
-            d2 = np.minimum(d2, ((S - cent[j]) ** 2).sum(1))
-        for _ in range(iters):
-            dists = ((S[:, None, :] - cent[None, :, :]) ** 2).sum(2)
-            assign = dists.argmin(1)
-            worst = dists.min(1)
-            for j in range(kk):
-                pts = S[assign == j]
-                if len(pts):
-                    cent[j] = pts.mean(0)
-                else:
-                    cent[j] = S[int(worst.argmax())]
-        books.append(
-            [[int(round(c * IVFP_SCALE)) for c in row] for row in cent]
-        )
-    return books
 
 
 # ---------------------------------------------------------------------------
@@ -1044,49 +836,46 @@ def _rha(x: float) -> int:
 
 
 def train_pq_books_portable(
-    corpus_df: DataFrame,
-    corpus_id: str,
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    k: int = PQ_K,
-    dsub: int = PQ_DSUB,
-    iters: int = PQT_ITERS,
+    corpus_df: DataFrame, corpus_id: str, vec_col: str = "embedding"
 ):
     """Deterministic, rng-free, INTEGER-EXACT per-subspace Lloyd
-    trainer (r11 verdict #3): unlike train_pq_codebooks (numpy floats,
-    rng seeds — library tier), every step here is integer arithmetic
-    replayable in SQL, which is what lets ann_pq_rerank_trained's
-    oracle RETRAIN the books and certify the trained path end-to-end:
+    trainer (r11 verdict #3) over the PQ_M x PQ_K x PQ_DSUB geometry:
+    every step is integer arithmetic replayable in SQL, which is what
+    lets ann_pq_rerank_trained's oracle RETRAIN the books and certify
+    the trained path end-to-end:
 
-    * sample: ivf_training_sample's md5-bucket recipe, sorted by
-      (hash, id), first PQT_TARGET rows;
-    * quantize: round(x * 1e6) as int64 (the SRP recipe — both
-      engines round doubles half-away-from-zero);
-    * init: k evenly-spaced rows in hash order (rank 1 + j*step,
-      step = floor(n/k), j < k) — deterministic spread, no rng;
-    * Lloyd x iters: assign by argmin of the L2 form
+    * sample: ivf_training_sample's md5-bucket recipe (NULL vectors
+      dropped), sorted by (hash, id), first PQT_TARGET rows;
+    * quantize: round(x * INT_SCALE) as int64 (the int_quant_sql
+      recipe — both engines round doubles half-away-from-zero);
+    * init: PQ_K evenly-spaced rows in hash order (rank 1 + j*step,
+      step = floor(n/PQ_K), j < PQ_K) — deterministic spread, no rng;
+    * Lloyd x PQT_ITERS: assign by argmin of the L2 form
       sum_d(c^2 - 2*q*c) (X.X constant per row — same argmin), ties
       to the lowest codeword index; update = per-dim
       round-half-away(sum/count) via the pure-integer formula
       (2s + n) // (2n); empty clusters keep their codeword.
 
-    Returns int codebooks shaped like train_pq_codebooks's output —
-    they slot straight into pq_trained_codes_expr/pq_trained_luts_expr.
+    Returns int codebooks [m][j][d] — they slot straight into
+    pq_trained_codes_expr/pq_trained_luts_expr.
     """
     rows = ivf_training_sample(corpus_df, corpus_id, vec_col, PQT_TARGET).collect()
     rows.sort(key=lambda r: (r["__h"], r["__id"]))
     rows = rows[:PQT_TARGET]
     ns = len(rows)
-    step = max(ns // k, 1)
-    sel = list(range(0, ns, step))[:k]
+    step = max(ns // PQ_K, 1)
+    sel = list(range(0, ns, step))[:PQ_K]
     books = []
-    for mm in range(m):
+    for mm in range(PQ_M):
         S = [
-            [_rha(float(v) * 1000000.0) for v in r["v"][mm * dsub : (mm + 1) * dsub]]
+            [
+                _rha(float(v) * INT_SCALE)
+                for v in r["v"][mm * PQ_DSUB : (mm + 1) * PQ_DSUB]
+            ]
             for r in rows
         ]
         cent = [list(S[i]) for i in sel if i < ns]
-        for _ in range(iters):
+        for _ in range(PQT_ITERS):
             assign = []
             for qv in S:
                 best_j, best_lv = 0, None
@@ -1101,7 +890,7 @@ def train_pq_books_portable(
                 if pts:
                     cnt = len(pts)
                     entry = []
-                    for d in range(dsub):
+                    for d in range(PQ_DSUB):
                         s = sum(p[d] for p in pts)
                         entry.append(
                             (2 * s + cnt) // (2 * cnt)
@@ -1117,25 +906,19 @@ def train_pq_books_portable(
 
 
 def pq_trained_books_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    k: int = PQ_K,
-    dsub: int = PQ_DSUB,
-    iters: int = PQT_ITERS,
+    table: str = "embeddings", id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> str:
     """DuckDB CTE chain that RETRAINS train_pq_books_portable's
     codebooks from the live table — ends with ``pqt_books(m, j, d, c)``.
     Every arithmetic step mirrors the Python trainer exactly: the md5
-    cutoff (double multiply + floor == int()), the (hash, id) sort and
+    cutoff (double multiply + floor == int()) over the full row count,
+    NULL vectors dropped after the cutoff, the (hash, id) sort and
     LIMIT, round(x*1e6) quantization, evenly-spaced seed ranks, the
     L2-form argmin with (lv, j) tie order, and the centroid update
     floor((2s+n)/(2n)) — exact because the quotient's rational grid
     (spacing 1/(2n), n <= 512) is ~1e7 x wider than a double ulp at
     the codeword magnitude, so the correctly-rounded double quotient
     never crosses an integer boundary."""
-    dim = m * dsub
     parts = [f"""
     pqt_n AS (SELECT COUNT(*) AS n FROM {table}),
     pqt_cut AS (
@@ -1149,10 +932,10 @@ def pq_trained_books_sql(
                CAST({vec_col} AS DOUBLE[]) AS v,
                CAST(('0x' || substr(md5('ivf-sample:' || CAST({id_col} AS VARCHAR)), 1, 8)) AS BIGINT) AS h
         FROM {table}
-      ), pqt_cut WHERE h <= cut ORDER BY h, id LIMIT {PQT_TARGET}
+      ), pqt_cut WHERE h <= cut AND v IS NOT NULL ORDER BY h, id LIMIT {PQT_TARGET}
     ),
     pqt_ns AS (SELECT COUNT(*) AS ns FROM pqt_samp),
-    pqt_step AS (SELECT GREATEST(ns // {k}, 1) AS st FROM pqt_ns),
+    pqt_step AS (SELECT GREATEST(ns // {PQ_K}, 1) AS st FROM pqt_ns),
     pqt_rn AS MATERIALIZED (
       SELECT id, v, row_number() OVER (ORDER BY h2, id) AS rn FROM (
         SELECT id, v,
@@ -1162,16 +945,16 @@ def pq_trained_books_sql(
     ),
     pqt_q AS MATERIALIZED (
       SELECT rn, CAST(g1.range AS INT) AS m, CAST(g2.range AS INT) AS d,
-             CAST(round(v[CAST(g1.range AS INT) * {dsub} + CAST(g2.range AS INT) + 1] * 1000000.0) AS BIGINT) AS q
-      FROM pqt_rn CROSS JOIN range(0, {m}) g1 CROSS JOIN range(0, {dsub}) g2
+             CAST(round(v[CAST(g1.range AS INT) * {PQ_DSUB} + CAST(g2.range AS INT) + 1] * 1000000.0) AS BIGINT) AS q
+      FROM pqt_rn CROSS JOIN range(0, {PQ_M}) g1 CROSS JOIN range(0, {PQ_DSUB}) g2
     ),
     pqt_b0 AS MATERIALIZED (
       SELECT s.m, CAST((s.rn - 1) // t.st AS INT) AS j, s.d, s.q AS c
       FROM pqt_q s, pqt_step t
-      WHERE (s.rn - 1) % t.st = 0 AND (s.rn - 1) // t.st < {k}
+      WHERE (s.rn - 1) % t.st = 0 AND (s.rn - 1) // t.st < {PQ_K}
     )"""]
     prev = "pqt_b0"
-    for it in range(1, iters + 1):
+    for it in range(1, PQT_ITERS + 1):
         parts.append(f""",
     pqt_d{it} AS MATERIALIZED (
       SELECT s.rn, s.m, b.j, SUM(b.c * b.c - 2 * s.q * b.c) AS lv
@@ -1218,30 +1001,19 @@ def _pq_trained_dists(books, vec_col: str, mm: int, spark: bool) -> str:
     terms = []
     for row in books[mm]:
         cc = sum(c * c for c in row)
-        lit = ",".join(map(str, row))
-        if spark:
-            dot = (
-                f"aggregate(zip_with({sub}, array({lit}), "
-                f"(a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-            )
-        else:
-            dot = f"list_dot_product({sub}, [{lit}])"
-        terms.append(f"(CAST({cc} AS BIGINT) - 2 * ({dot}))")
-    return ("array(" if spark else "[") + ",".join(terms) + (")" if spark else "]")
+        terms.append(f"(CAST({cc} AS BIGINT) - 2 * ({int_dot_sql(sub, row, spark)}))")
+    return array_sql(",".join(terms), spark)
 
 
 def pq_trained_codes_expr(books, vec_col: str, spark: bool = True) -> str:
     """Trained-PQ encode: per-subspace argmin L2-form distance
     (first-min tiebreak). Exact integers throughout — trained
     codebooks slot into the same certified machinery as literals."""
-    pos, mn = ("array_position", "array_min") if spark else (
-        "list_position", "list_min")
-    codes = []
-    for mm in range(len(books)):
-        d = _pq_trained_dists(books, vec_col, mm, spark)
-        codes.append(f"CAST({pos}({d}, {mn}({d})) - 1 AS INT)")
-    body = ",".join(codes)
-    return f"array({body})" if spark else f"[{body}]"
+    codes = ",".join(
+        first_arg_sql(_pq_trained_dists(books, vec_col, mm, spark), spark, "min")
+        for mm in range(len(books))
+    )
+    return array_sql(codes, spark)
 
 
 def pq_trained_luts_expr(books, vec_col: str, spark: bool = True) -> str:
@@ -1250,4 +1022,4 @@ def pq_trained_luts_expr(books, vec_col: str, spark: bool = True) -> str:
     luts = ",".join(
         _pq_trained_dists(books, vec_col, mm, spark) for mm in range(len(books))
     )
-    return f"array({luts})" if spark else f"[{luts}]"
+    return array_sql(luts, spark)

@@ -217,23 +217,25 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semdedup_oracle() -> str:
     """DuckDB restatement of operators/dedup.semantic_dedup: SAME
     md5-derived ±1 centroids and exact-integer routing dots as the
-    portable-IVF fragments (operators/knn.ivfp_*), first-max list
-    assignment, qdot/|q| centroid similarity (exact integers under the
-    sqrt → IEEE-identical), sequential-fold pair cosine, and the
-    SemDeDup keep-the-outlier rule as a CASE over (csim, vec_id)."""
-    from fegis_spark.operators.knn import ivfp_dots_sql, ivfp_quant_sql
+    portable-IVF fragments (operators/knn.ivfp_dots), first-max list
+    assignment (first_arg_sql), qdot/|q| centroid similarity (exact
+    integers under the sqrt → IEEE-identical), sequential-fold pair
+    cosine, and the SemDeDup keep-the-outlier rule as a CASE over
+    (csim, vec_id)."""
+    from fegis_spark.functions.vector import int_dot_sql, int_quant_sql
+    from fegis_spark.operators.knn import first_arg_sql, ivfp_dots
     from fegis_spark.queries.vector_q import _cos_pair
 
-    q = ivfp_quant_sql("embedding")
+    q = int_quant_sql("embedding", False)
     cos = _cos_pair("l.v", "r.v")
     return f"""
     WITH cq AS MATERIALIZED (
-      SELECT vec_id, embedding, {ivfp_dots_sql("embedding", 64)} AS dots,
-             sqrt(CAST(list_dot_product({q}, {q}) AS DOUBLE)) AS qn
+      SELECT vec_id, embedding, {ivfp_dots("embedding", 64, spark=False)} AS dots,
+             sqrt(CAST({int_dot_sql(q, q, False)} AS DOUBLE)) AS qn
       FROM embeddings
     ), base AS (
       SELECT vec_id, embedding AS v,
-             CAST(list_position(dots, list_max(dots)) - 1 AS INT) AS list_id,
+             {first_arg_sql("dots", False)} AS list_id,
              CAST(list_max(dots) AS DOUBLE) / nullif(qn, 0.0) AS csim
       FROM cq
     ), dropped AS (

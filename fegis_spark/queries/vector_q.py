@@ -11,10 +11,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fegis_spark.catalog import register
+from fegis_spark.functions.vector import int_quant_sql
 from fegis_spark.model import load_table, table_memo
 from fegis_spark.operators.knn import ann_ivf, knn_join
 from fegis_spark.plans.search import basic_search, by_id_search, filtered_search
@@ -685,15 +686,15 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: embeddings are 64-dim (TESTDATA.md); the SRP literal matrices are
-#: generated once at import from md5 parity (operators/dedup.srp_signs).
+#: generated once at import from md5 parity (functions/vector.md5_signs).
 EMB_DIM = 64
 
 
 def _srp_oracle() -> str:
-    from fegis_spark.operators.dedup import srp_code_sql
+    from fegis_spark.operators.dedup import srp_code
 
     return f"""
-    SELECT vec_id, {srp_code_sql('embedding', EMB_DIM)} AS srp_code
+    SELECT vec_id, {srp_code('embedding', EMB_DIM, spark=False)} AS srp_code
     FROM embeddings
     """
 
@@ -714,22 +715,22 @@ def embedding_srp_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     can never flip on summation order. Zero shuffle — a pure
     projection; at 100 TB codes are the 4-byte standins you store
     alongside vectors to prefilter ANN candidates."""
-    from fegis_spark.operators.dedup import srp_code_expr
+    from fegis_spark.operators.dedup import srp_code
 
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(
-        "vec_id", F.expr(srp_code_expr("embedding", EMB_DIM)).alias("srp_code")
+        "vec_id", F.expr(srp_code("embedding", EMB_DIM)).alias("srp_code")
     )
 
 
 def _srp_hamming_oracle() -> str:
-    from fegis_spark.operators.dedup import SRP_BANDS, srp_code_sql
+    from fegis_spark.operators.dedup import SRP_BANDS, srp_code
     from fegis_spark.queries.sqlfrag import HOT_CAP
 
     hot_cap = HOT_CAP
     return f"""
     WITH codes AS MATERIALIZED (
-      SELECT vec_id, {srp_code_sql('embedding', EMB_DIM)} AS code
+      SELECT vec_id, {srp_code('embedding', EMB_DIM, spark=False)} AS code
       FROM embeddings
     ), ex AS (
       SELECT vec_id, p, (code >> (8 * p)) & 255 AS bk
@@ -793,13 +794,13 @@ def embedding_srp_blocked_hamming(spark: SparkSession, sf_dir: str) -> DataFrame
     from fegis_spark.operators.dedup import (
         SRP_BANDS,
         banded_candidate_pairs,
-        srp_code_expr,
+        srp_code,
     )
     from fegis_spark.queries.sqlfrag import HOT_CAP
 
     emb = load_table(spark, sf_dir, "embeddings")
     codes = emb.select(
-        "vec_id", F.expr(srp_code_expr("embedding", EMB_DIM)).alias("code")
+        "vec_id", F.expr(srp_code("embedding", EMB_DIM)).alias("code")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     banded = codes.select(
         F.col("vec_id").alias("doc"),
@@ -822,13 +823,13 @@ def _srp_capped_oracle() -> str:
     """DuckDB twin of embedding_srp_capped: same constructed hot
     vectors, same window bucket-size + min-id representative routing as
     the dedup_minhash_capped oracle, then the exact hamming histogram."""
-    from fegis_spark.operators.dedup import SRP_BANDS, srp_code_sql
+    from fegis_spark.operators.dedup import SRP_BANDS, srp_code
     from fegis_spark.queries.sqlfrag import HOT_CAP, duck_hot_embeddings
 
     return f"""
     WITH emb2 AS MATERIALIZED ({duck_hot_embeddings()}),
     codes AS MATERIALIZED (
-      SELECT vec_id, {srp_code_sql('embedding', EMB_DIM)} AS code
+      SELECT vec_id, {srp_code('embedding', EMB_DIM, spark=False)} AS code
       FROM emb2
     ), ex AS (
       SELECT vec_id, p, (code >> (8 * p)) & 255 AS bk
@@ -884,13 +885,13 @@ def embedding_srp_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fegis_spark.operators.dedup import (
         SRP_BANDS,
         banded_candidate_pairs,
-        srp_code_expr,
+        srp_code,
     )
     from fegis_spark.queries.sqlfrag import HOT_CAP, spark_hot_embeddings
 
     emb = spark_hot_embeddings(load_table(spark, sf_dir, "embeddings"))
     codes = emb.select(
-        "vec_id", F.expr(srp_code_expr("embedding", EMB_DIM)).alias("code")
+        "vec_id", F.expr(srp_code("embedding", EMB_DIM)).alias("code")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     banded = codes.select(
         F.col("vec_id").alias("doc"),
@@ -946,7 +947,7 @@ def _srp_ndcg_oracle() -> str:
     metric arithmetic — every float op is a product/quotient/ordered
     sum of identical operands, so dcg/idcg/ndcg/mrr are bit-identical
     with NO rounding at the output."""
-    from fegis_spark.operators.dedup import srp_code_sql
+    from fegis_spark.operators.dedup import srp_code
 
     k, disc = NDCG_K, _ndcg_disc_duck()
     rels = (
@@ -957,7 +958,7 @@ def _srp_ndcg_oracle() -> str:
     )
     return f"""
     WITH codes AS MATERIALIZED (
-      SELECT vec_id, embedding, {srp_code_sql('embedding', EMB_DIM)} AS code
+      SELECT vec_id, embedding, {srp_code('embedding', EMB_DIM, spark=False)} AS code
       FROM embeddings
     ), panel AS (
       SELECT vec_id AS query_id, embedding AS qv, code AS qcode
@@ -1040,7 +1041,7 @@ def srp_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         dot_sql,
         norm_sql,
     )
-    from fegis_spark.operators.dedup import srp_code_expr
+    from fegis_spark.operators.dedup import srp_code
 
     k = NDCG_K
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1049,7 +1050,7 @@ def srp_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = emb.select(
         "vec_id",
         "embedding",
-        F.expr(srp_code_expr("embedding", EMB_DIM)).alias("code"),
+        F.expr(srp_code("embedding", EMB_DIM)).alias("code"),
         F.expr(norm_sql("embedding")).alias("__nrm"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     panel = codes.filter(F.col("vec_id") < NDCG_PANEL).select(
@@ -1135,35 +1136,44 @@ def _ndcg_metrics(lists: DataFrame) -> DataFrame:
 # Portable IVF twin ([EXT]-ann, K1-approx)
 
 
+def _ivfp_cq() -> str:
+    """The ``cq`` CTE of the portable-IVF oracles: every embedding with
+    its ivfp routing dots."""
+    from fegis_spark.operators.knn import ivfp_dots
+
+    return f"""cq AS MATERIALIZED (
+      SELECT vec_id, embedding, {ivfp_dots("embedding", 64, spark=False)} AS dots FROM embeddings
+    )"""
+
+
 def _ivfp_oracle() -> str:
     """DuckDB restatement of ann_ivf_portable: the SAME md5-derived
-    literal centroids (operators/knn.ivfp_centroids), exact-integer
-    routing dots, first-max list assignment (list_position = Spark
-    array_position semantics), top-n_probe probes per query with a
-    (dot DESC, list_id) total order, candidate join restricted to the
-    probed lists, sequential-fold float64 cosine re-rank rounded to
-    6 dp. Because routing compares exact integers, the candidate SETS
-    — not just the surviving top-k — are identical cross-engine."""
-    from fegis_spark.operators.knn import IVFP_LISTS, IVFP_PROBE, ivfp_dots_sql
+    literal centroids (operators/knn.ivfp_dots), exact-integer
+    routing dots, first-max list assignment (first_arg_sql), the
+    ivfp_probe_rank_sql probe order per query, candidate join
+    restricted to the probed lists, sequential-fold float64 cosine
+    re-rank rounded to 6 dp. Because routing compares exact integers,
+    the candidate SETS — not just the surviving top-k — are identical
+    cross-engine."""
+    from fegis_spark.operators.knn import (
+        IVFP_LISTS,
+        IVFP_PROBE,
+        first_arg_sql,
+        ivfp_probe_rank_sql,
+    )
 
-    dots = ivfp_dots_sql("embedding", 64)
     cos = _cos_pair("c.cv", "p.qv")
     return f"""
-    WITH cq AS MATERIALIZED (
-      SELECT vec_id, embedding, {dots} AS dots FROM embeddings
-    ), corp AS (
+    WITH {_ivfp_cq()}, corp AS (
       SELECT vec_id AS corpus_id, embedding AS cv,
-             CAST(list_position(dots, list_max(dots)) - 1 AS INT) AS list_id
+             {first_arg_sql("dots", False)} AS list_id
       FROM cq
     ), probes AS (
       SELECT query_id, qv, list_id FROM (
         SELECT vec_id AS query_id, embedding AS qv,
                CAST(r.range AS INT) AS list_id,
                dots[CAST(r.range AS INT) + 1] AS dot,
-               row_number() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY dots[CAST(r.range AS INT) + 1] DESC,
-                          CAST(r.range AS INT)) AS rn
+               {ivfp_probe_rank_sql("vec_id", 15)} AS rn
         FROM cq CROSS JOIN range(0, {IVFP_LISTS}) r
         WHERE vec_id < 3
       ) WHERE rn <= {IVFP_PROBE}
@@ -1227,28 +1237,26 @@ def _ann_curve_oracle() -> str:
     and exact-integer routing as _ivfp_oracle, brute-force true top-k
     per panel query, probe rank per (query, list), then conditional
     hit sums over the literal probe ladder."""
-    from fegis_spark.operators.knn import IVFP_LISTS, ivfp_dots_sql
+    from fegis_spark.operators.knn import (
+        IVFP_LISTS,
+        first_arg_sql,
+        ivfp_probe_rank_sql,
+    )
 
-    dots = ivfp_dots_sql("embedding", 64)
     cos = _cos_pair("c.cv", "q.qv")
     probes_values = ", ".join(f"({p})" for p in ANN_CURVE_PROBES)
     denom = ANN_CURVE_PANEL * ANN_CURVE_K
     return f"""
-    WITH cq AS MATERIALIZED (
-      SELECT vec_id, embedding, {dots} AS dots FROM embeddings
-    ), corp AS (
+    WITH {_ivfp_cq()}, corp AS (
       SELECT vec_id AS corpus_id, embedding AS cv,
-             CAST(list_position(dots, list_max(dots)) - 1 AS INT) AS list_id
+             {first_arg_sql("dots", False)} AS list_id
       FROM cq
     ), panel AS (
       SELECT vec_id AS query_id, embedding AS qv, dots
       FROM cq WHERE vec_id < {ANN_CURVE_PANEL}
     ), pr AS MATERIALIZED (
       SELECT query_id, CAST(r.range AS INT) AS list_id,
-             row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY dots[CAST(r.range AS INT) + 1] DESC,
-                        CAST(r.range AS INT)) AS probe_rank
+             {ivfp_probe_rank_sql("query_id", 13)} AS probe_rank
       FROM panel CROSS JOIN range(0, {IVFP_LISTS}) r
     ), truth AS (
       SELECT query_id, corpus_id, list_id FROM (
@@ -1316,19 +1324,23 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         dot_sql,
         norm_sql,
     )
-    from fegis_spark.operators.knn import IVFP_LISTS, ivfp_dots_expr
+    from fegis_spark.operators.knn import (
+        IVFP_LISTS,
+        first_arg_sql,
+        ivfp_dots,
+        ivfp_probe_ranks,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    dots = ivfp_dots_expr("embedding", 64)
-    cq = emb.select("vec_id", "embedding", F.expr(dots).alias("__dots"))
+    cq = emb.select(
+        "vec_id", "embedding", F.expr(ivfp_dots("embedding", 64)).alias("__dots")
+    )
     # norms once per side of the truth fanout (bit-identical, r14)
     corp = cq.select(
         F.col("vec_id").alias("corpus_id"),
         F.col("embedding").alias("__cv"),
         F.expr(norm_sql("embedding")).alias("__cn"),
-        F.expr(
-            "CAST(array_position(__dots, array_max(__dots)) - 1 AS INT)"
-        ).alias("list_id"),
+        F.expr(first_arg_sql("__dots", True)).alias("list_id"),
     )
     panel = cq.filter(F.col("vec_id") < ANN_CURVE_PANEL).select(
         F.col("vec_id").alias("query_id"),
@@ -1336,15 +1348,7 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(norm_sql("embedding")).alias("__qn"),
         "__dots",
     )
-    # panel-ok: input is |panel| x n_lists posexploded rows — bounded
-    wpr = Window.partitionBy("query_id").orderBy(F.desc("__dot"), F.col("list_id"))
-    pr = (
-        panel.select(
-            "query_id", F.posexplode("__dots").alias("list_id", "__dot")
-        )
-        .withColumn("probe_rank", F.row_number().over(wpr))
-        .select("query_id", F.col("list_id").cast("int").alias("list_id"), "probe_rank")
-    )
+    pr = ivfp_probe_ranks(panel).select("query_id", "list_id", "probe_rank")
     # panel-ok: WindowGroupLimit(Partial); input pruned to probed lists
     wt = Window.partitionBy("query_id").orderBy(
         F.desc("__score"), F.col("corpus_id")
@@ -1551,8 +1555,7 @@ def label_separation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: integer recipe — both engines round doubles half-away-from-zero, so
 #: the BIGINT is exact cross-engine; never a decimal cast on floats).
 _NORM_Q_SPARK = (
-    "aggregate(transform(embedding,"
-    " x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT)),"
+    f"aggregate({int_quant_sql('embedding', True)},"
     " CAST(0 AS BIGINT), (a, v) -> a + v * v)"
 )
 _NORM_Q_DUCK = (
@@ -1615,7 +1618,7 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_adc_oracle() -> str:
     """DuckDB restatement of ann_pq_adc: the SAME md5-derived ±1
-    codebooks (operators/knn.pq_codebooks), exact-integer subspace
+    codebooks (operators/knn.PQ_BOOKS), exact-integer subspace
     encode (argmax codeword dot, first-max list_position tiebreak),
     nested-list LUT indexing for the ADC sum, (adc DESC, corpus_id)
     total order. Every compared quantity is an exact integer, so code
@@ -1657,7 +1660,7 @@ def ann_pq_adc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     each query precomputes one 8x8 LUT of exact-integer codeword
     dots, and the ADC score is the summed coded LUT entries — for
     constant-norm codebooks this ranking is EXACTLY the L2 ADC
-    ranking (see pq_codebooks).
+    ranking (see PQ_BOOKS).
 
     100 TB posture: corpus codes are 8 ints per vector (the corpus
     scan that matters reads codes, not floats), query LUTs broadcast
@@ -1826,32 +1829,27 @@ def _ivfpq_oracle() -> str:
     from fegis_spark.operators.knn import (
         IVFP_LISTS,
         IVFP_PROBE,
-        ivfp_dots_sql,
+        first_arg_sql,
+        ivfp_probe_rank_sql,
         pq_adc_sql,
         pq_codes_expr,
         pq_luts_expr,
     )
 
-    dots = ivfp_dots_sql("embedding", 64)
     codes = pq_codes_expr("embedding", spark=False)
     luts = pq_luts_expr("embedding", spark=False)
     score = pq_adc_sql("c.codes", "p.luts")
     return f"""
-    WITH cq AS MATERIALIZED (
-      SELECT vec_id, embedding, {dots} AS dots FROM embeddings
-    ), corp AS MATERIALIZED (
+    WITH {_ivfp_cq()}, corp AS MATERIALIZED (
       SELECT vec_id AS corpus_id,
-             CAST(list_position(dots, list_max(dots)) - 1 AS INT) AS list_id,
+             {first_arg_sql("dots", False)} AS list_id,
              {codes} AS codes
       FROM cq
     ), probes AS MATERIALIZED (
       SELECT query_id, luts, list_id FROM (
         SELECT vec_id AS query_id, {luts} AS luts,
                CAST(r.range AS INT) AS list_id,
-               row_number() OVER (
-                 PARTITION BY vec_id
-                 ORDER BY dots[CAST(r.range AS INT) + 1] DESC,
-                          CAST(r.range AS INT)) AS rn
+               {ivfp_probe_rank_sql("vec_id", 15)} AS rn
         FROM cq CROSS JOIN range(0, {IVFP_LISTS}) r
         WHERE vec_id < 3
       ) WHERE rn <= {IVFP_PROBE}
@@ -1890,40 +1888,33 @@ def ann_ivfpq_portable_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids/codebooks slot in as literals without changing the
     plan."""
     from fegis_spark.operators.knn import (
-        IVFP_LISTS,
         IVFP_PROBE,
         PQ_ADC_EXPR,
-        ivfp_dots_expr,
+        first_arg_sql,
+        ivfp_dots,
+        ivfp_probe_ranks,
         pq_codes_expr,
         pq_luts_expr,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    dots = ivfp_dots_expr("embedding", 64)
+    dots = ivfp_dots("embedding", 64)
     corpus = emb.select(
         F.col("vec_id").alias("corpus_id"),
         F.expr(dots).alias("__dots"),
         F.expr(pq_codes_expr("embedding")).alias("codes"),
     ).select(
-        "corpus_id", "codes",
-        F.expr(
-            "CAST(array_position(__dots, array_max(__dots)) - 1 AS INT)"
-        ).alias("list_id"),
+        "corpus_id", "codes", F.expr(first_arg_sql("__dots", True)).alias("list_id")
     )
     qd = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"),
         F.expr(pq_luts_expr("embedding")).alias("luts"),
         F.expr(dots).alias("__dots"),
     )
-    pr = qd.select(
-        "query_id", "luts", F.posexplode("__dots").alias("list_id", "__dot")
-    )
-    # panel-ok: input is |panel| x n_lists posexploded rows — bounded
-    w = Window.partitionBy("query_id").orderBy(F.desc("__dot"), F.col("list_id"))
     probes = (
-        pr.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= IVFP_PROBE)
-        .select("query_id", "luts", F.col("list_id").cast("int").alias("list_id"))
+        ivfp_probe_ranks(qd, "luts")
+        .filter(F.col("probe_rank") <= IVFP_PROBE)
+        .select("query_id", "luts", "list_id")
     )
     cand = corpus.join(F.broadcast(probes), "list_id")  # bcast-ok: n_probe probe rows per panel query
     scored = cand.withColumn("adc", F.expr(PQ_ADC_EXPR))
@@ -2007,31 +1998,44 @@ def ann_pq_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     |corpus| to |shortlist| per query. Both stages are deterministic
     (exact-integer ADC + the established cosine recipe), so the
     composed two-stage plan is fully oracle-checked."""
-    from fegis_spark.functions.vector import cosine
-    from fegis_spark.operators.knn import PQ_ADC_EXPR, pq_codes_expr, pq_luts_expr
+    from fegis_spark.operators.knn import pq_codes_expr, pq_luts_expr
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    return _pq_rerank(
+        load_table(spark, sf_dir, "embeddings"),
+        pq_codes_expr("embedding"),
+        pq_luts_expr("embedding"),
+        F.desc("adc"),
+    ).drop("adc")
+
+
+def _pq_rerank(emb: DataFrame, codes: str, luts: str, adc_order: Column) -> DataFrame:
+    """The one PQ shortlist → exact re-rank body (ann_pq_rerank and
+    ann_pq_rerank_trained): the ``codes``/``luts`` expressions score
+    every corpus row against the 3 panel queries by PQ_ADC_EXPR, the
+    PQ_RERANK_SHORTLIST best by (``adc_order``, corpus_id) are fetched,
+    and exact cosine re-ranks them → (query_id, corpus_id, adc, score,
+    rank <= PQ_RERANK_K)."""
+    from fegis_spark.functions.vector import cosine
+    from fegis_spark.operators.knn import PQ_ADC_EXPR
+
     corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"),
-        F.expr(pq_codes_expr("embedding")).alias("codes"),
+        F.col("vec_id").alias("corpus_id"), F.expr(codes).alias("codes")
     )
     qs = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
-        F.expr(pq_luts_expr("embedding")).alias("luts"),
+        F.expr(luts).alias("luts"),
     )
     cand = corpus.crossJoin(F.broadcast(qs.select("query_id", "luts")))  # bcast-ok: 3 panel query LUTs
     # panel-ok: WindowGroupLimit(Partial) below the exchange bounds the
     # shuffled candidates to shortlist-size per (query, map partition);
     # adc is materialized as a column so the order key is attribute-only
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.col("corpus_id")
-    )
+    ws = Window.partitionBy("query_id").orderBy(adc_order, F.col("corpus_id"))
     short = (
         cand.withColumn("adc", F.expr(PQ_ADC_EXPR))
         .withColumn("rs", F.row_number().over(ws))
         .filter(F.col("rs") <= PQ_RERANK_SHORTLIST)
-        .select("query_id", "corpus_id")
+        .select("query_id", "corpus_id", "adc")
     )
     fetch = (
         emb.select(F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("cv"))
@@ -2055,7 +2059,7 @@ def ann_pq_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rank", F.row_number().over(wk))
         .filter(F.col("rank") <= PQ_RERANK_K)
         .select(
-            "query_id", "corpus_id", "score",
+            "query_id", "corpus_id", "adc", "score",
             F.col("rank").cast("bigint").alias("rank"),
         )
     )
@@ -2178,51 +2182,15 @@ def ann_pq_rerank_trained_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the FAISS posture at any corpus scale. Trained-vs-demo recall at
     equal shortlist fractions is measured in
     evidence/pq_trained_recall_r12.json (SCALE.md)."""
-    from fegis_spark.functions.vector import cosine
     from fegis_spark.operators.knn import (
-        PQ_ADC_EXPR,
         pq_trained_codes_expr,
         pq_trained_luts_expr,
     )
 
     books = _pqt_books(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"),
-        F.expr(pq_trained_codes_expr(books, "embedding")).alias("codes"),
-    )
-    qs = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.expr(pq_trained_luts_expr(books, "embedding")).alias("luts"),
-    )
-    cand = corpus.crossJoin(F.broadcast(qs.select("query_id", "luts")))  # bcast-ok: 3 panel query LUTs
-    # panel-ok: WindowGroupLimit(Partial) below the exchange bounds the
-    # shuffled candidates to shortlist-size per (query, map partition)
-    ws = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.col("corpus_id"))
-    short = (
-        cand.withColumn("adc", F.expr(PQ_ADC_EXPR))
-        .withColumn("rs", F.row_number().over(ws))
-        .filter(F.col("rs") <= PQ_RERANK_SHORTLIST)
-        .select("query_id", "corpus_id", "adc")
-    )
-    fetch = (
-        emb.select(F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("cv"))
-        .join(F.broadcast(short), "corpus_id")  # bcast-ok: shortlist x panel id pairs
-        .join(F.broadcast(qs.select("query_id", "qv")), "query_id")  # bcast-ok: 3 panel query vectors
-    )
-    # panel-ok: input is shortlist x panel rows — bounded; cosine
-    # materialized once (r14, see ann_pq_rerank)
-    wk = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("corpus_id")
-    )
-    return (
-        # UNROUNDED sequential-fold cosine (r8 rule / r11 ADVICE)
-        fetch.withColumn("score", cosine(F.col("qv"), F.col("cv")))
-        .withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= PQ_RERANK_K)
-        .select(
-            "query_id", "corpus_id", "adc", "score",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
+    return _pq_rerank(
+        load_table(spark, sf_dir, "embeddings"),
+        pq_trained_codes_expr(books, "embedding"),
+        pq_trained_luts_expr(books, "embedding"),
+        F.asc("adc"),
     )

@@ -104,17 +104,28 @@ def test_session_new_operators_empty(spark, empty_docs):
     assert cdc_chunks(empty_docs).count() == 0
 
 
+def test_trained_ivf_empty(spark):
+    """No rows to sample means no centroids: the trained-centroid
+    paths return empty frames instead of failing in k-means."""
+    from fegis_spark.operators.dedup import semantic_dedup_trained
+    from fegis_spark.operators.knn import ann_ivf
+
+    empty_vecs = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    assert ann_ivf(empty_vecs, empty_vecs, "vec_id", "vec_id", n_lists=4).count() == 0
+    assert semantic_dedup_trained(empty_vecs, "embedding", "vec_id", n_lists=4).count() == 0
+
+
 def test_srp_and_cdc_sink_empty(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from fegis_spark.operators.dedup import srp_code_expr
+    from fegis_spark.operators.dedup import srp_code
     from fegis_spark.streaming.cdc import apply_cdc_batch, cdc_sink
 
     empty_vecs = spark.createDataFrame(
         [], "vec_id long, embedding array<float>"
     )
     assert (
-        empty_vecs.select(F.expr(srp_code_expr("embedding", 8)).alias("c")).count()
+        empty_vecs.select(F.expr(srp_code("embedding", 8)).alias("c")).count()
         == 0
     )
     # CDC fold of an empty batch over no base: empty snapshot, no raise

@@ -612,10 +612,10 @@ def test_semantic_dedup_keeps_the_outlier(spark):
     similarity falls back to dropping the higher id; zero vectors get
     a NULL centroid_sim (nullif guard) and never pair (cosine()'s
     zero-norm convention is 0.0)."""
+    from fegis_spark.functions.vector import md5_signs
     from fegis_spark.operators.dedup import semantic_dedup
-    from fegis_spark.operators.knn import ivfp_centroids
 
-    c = ivfp_centroids(16, 64)
+    c = md5_signs("ivfp:", 16, 64)
     c0 = [float(x) for x in c[0]]
     v1 = list(c0)                      # csim = 8 exactly (= sqrt(64))
     v2 = [3.0 * c0[0]] + c0[1:]        # same cluster, csim ~7.78 < 8

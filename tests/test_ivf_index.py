@@ -149,6 +149,39 @@ def test_distributed_kmeans_training_route(spark, tmp_path_factory):
     assert fresh == stored and stored
 
 
+@pytest.fixture(scope="module")
+def null_bearing(spark):
+    """200 random 64-d vectors plus one NULL embedding (vec_id 200)."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.standard_normal(64)]) for i in range(200)]
+    rows.append((200, None))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_ann_ivf_trains_past_a_null_vector(spark, null_bearing):
+    """The training sample drops NULL vectors, so ann_ivf trains and
+    answers: every query's own vector is its rank-1 hit."""
+    queries = null_bearing.filter(F.col("vec_id") < 3)
+    got = ann_ivf(queries, null_bearing, "vec_id", "vec_id", k=3, n_lists=4).collect()
+    assert {(r.query_id, r.corpus_id) for r in got if r.rank == 1} == {
+        (i, i) for i in range(3)
+    }
+
+
+def test_semantic_dedup_trained_past_a_null_vector(spark, null_bearing):
+    from fegis_spark.operators.dedup import semantic_dedup_trained
+
+    got = {
+        r.vec_id: r
+        for r in semantic_dedup_trained(
+            null_bearing, "embedding", "vec_id", n_lists=4
+        ).collect()
+    }
+    assert len(got) == 201 and not got[200].is_dup
+
+
 def test_compaction_reduces_files_preserves_rows(spark, ivf_index, tmp_path_factory):
     import os
 
@@ -181,7 +214,7 @@ def test_compaction_reduces_files_preserves_rows(spark, ivf_index, tmp_path_fact
     # layout still partitioned (pruning keeps working)
     dirs = [d for d in os.listdir(ivf_corpus_dir(path)) if d.startswith("list_id=")]
     assert len(dirs) > 1
-    # target_files_per_list honored: default target=1 -> exactly one
+    # IVF_FILES_PER_LIST honored: 1 -> exactly one
     # data file inside every list partition (hash collisions between
     # lists may co-locate two lists in one task, but each task still
     # writes one file per list directory)
@@ -203,15 +236,11 @@ class TestPortablePQ:
     def _ref_codes(self, vec):
         import numpy as np
 
-        from fegis_spark.operators.knn import (
-            IVFP_SCALE,
-            PQ_DSUB,
-            PQ_M,
-            pq_codebooks,
-        )
+        from fegis_spark.functions.vector import INT_SCALE
+        from fegis_spark.operators.knn import PQ_BOOKS, PQ_DSUB, PQ_M
 
-        books = pq_codebooks()
-        q = np.round(np.asarray(vec, dtype=np.float64) * IVFP_SCALE).astype(
+        books = PQ_BOOKS
+        q = np.round(np.asarray(vec, dtype=np.float64) * INT_SCALE).astype(
             np.int64
         )
         codes = []
@@ -226,10 +255,10 @@ class TestPortablePQ:
         import numpy as np
 
         from fegis_spark.operators.knn import (
+            PQ_BOOKS,
             PQ_DSUB,
             PQ_M,
             pq_adc_sql,
-            pq_codebooks,
             pq_codes_expr,
             pq_luts_expr,
         )
@@ -248,7 +277,7 @@ class TestPortablePQ:
             f"SELECT vec_id, {pq_codes_expr('embedding', spark=False)} AS c "
             "FROM embeddings ORDER BY vec_id"
         ).fetchall()
-        books = pq_codebooks()
+        books = PQ_BOOKS
         for i, (vid, c) in enumerate(got):
             ref, _q = self._ref_codes(vecs[i])
             assert list(c) == ref, (i, c, ref)
@@ -272,52 +301,20 @@ class TestPortablePQ:
             assert a == want, (vid, a, want)
 
     def test_codebooks_deterministic_and_pm1(self):
-        from fegis_spark.operators.knn import PQ_DSUB, PQ_K, PQ_M, pq_codebooks
+        from fegis_spark.functions.vector import md5_signs
+        from fegis_spark.operators.knn import PQ_BOOKS, PQ_DSUB, PQ_K, PQ_M
 
-        b1, b2 = pq_codebooks(), pq_codebooks()
+        b1 = PQ_BOOKS
+        b2 = [md5_signs(f"pq:{m}:", PQ_K, PQ_DSUB) for m in range(PQ_M)]
         assert b1 == b2
         assert len(b1) == PQ_M and len(b1[0]) == PQ_K and len(b1[0][0]) == PQ_DSUB
         assert {v for m in b1 for row in m for v in row} <= {1, -1}
 
 
-class TestIvfPqIndexed:
-    """r11: the stored IVF-PQ index (build once, query many). The
-    invariant: identical candidate sets/ranks to ann_ivfpq_portable
-    (same literal centroids + codebooks), with the probe scan pruned
-    to the probed list_id partitions and no float vectors read."""
-
-    def test_indexed_equals_portable_and_prunes(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from fegis_spark.catalog import catalog
-        from fegis_spark.model import load_table
-        from fegis_spark.operators.knn import (
-            ann_ivfpq_indexed,
-            build_ivfpq_index,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        emb = load_table(spark, sf, "embeddings")
-        build_ivfpq_index(emb, str(tmp_path), "vec_id")
-        got = ann_ivfpq_indexed(
-            spark, str(tmp_path), emb.filter(F.col("vec_id") < 3), "vec_id", k=3
-        )
-        want = catalog()["ann_ivfpq_portable"].builder(spark, sf)
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        assert "dynamicpruning" in plan, plan[:1500]
-        # the stored corpus carries codes, not float vectors
-        stored = spark.read.parquet(ivf_corpus_dir(str(tmp_path)))
-        assert set(stored.columns) == {"corpus_id", "codes", "list_id"}
-
-
 class TestTrainedPQ:
-    """r11: trained PQ codebooks (library tier — data-dependent, so no
-    static oracle; the catalog ships the certified md5-book queries
-    and the shortlist+rerank recipe instead, see
-    evidence/pq_rerank_r11.json for the honest recall findings)."""
+    """Trained PQ codebooks (train_pq_books_portable, the trainer the
+    catalog's ann_pq_rerank_trained uses): deterministic, and the
+    Spark and DuckDB spellings of the trained encode agree."""
 
     def test_trained_books_deterministic_and_expressions_agree(self, spark):
         import duckdb
@@ -327,15 +324,15 @@ class TestTrainedPQ:
         from fegis_spark.operators.knn import (
             pq_trained_codes_expr,
             pq_trained_luts_expr,
-            train_pq_codebooks,
+            train_pq_books_portable,
         )
         from pyspark.sql import functions as F
 
         sf = "/root/testdata/sf0.001"
         emb = load_table(spark, sf, "embeddings")
-        b1 = train_pq_codebooks(emb, "vec_id")
-        b2 = train_pq_codebooks(emb, "vec_id")
-        assert b1 == b2  # same sample, same seed ⇒ same books
+        b1 = train_pq_books_portable(emb, "vec_id")
+        b2 = train_pq_books_portable(emb, "vec_id")
+        assert b1 == b2  # same sample, rng-free trainer ⇒ same books
         # Spark and DuckDB spellings of the trained encode agree
         sub = emb.filter(F.col("vec_id") < 12)
         got_s = {

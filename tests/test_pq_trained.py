@@ -56,6 +56,28 @@ def test_python_trainer_matches_sql_retraining(spark):
     assert len(got) == n_cw
 
 
+def test_null_vector_is_skipped_by_both_trainers(spark, tmp_path):
+    # the sf0.001 table plus one NULL embedding: 501 rows keep the
+    # cutoff at 100%, so the NULL row reaches the sample and both
+    # trainers must drop it there — and still agree
+    con = duckdb.connect()
+    con.sql(
+        f"COPY (SELECT * FROM read_parquet('{SF}/embeddings.parquet') "
+        "UNION ALL SELECT 500, NULL, 0) "
+        f"TO '{tmp_path}/embeddings.parquet' (FORMAT PARQUET)"
+    )
+    emb = load_table(spark, str(tmp_path), "embeddings")
+    assert emb.filter("embedding IS NULL").count() == 1
+    books = train_pq_books_portable(emb, "vec_id")
+    got = _sql_books(str(tmp_path))
+    assert len(got) == PQ_M * PQ_K
+    for mm, book in enumerate(books):
+        for j, cw in enumerate(book):
+            assert [got[(mm, j)][d] for d in range(PQ_DSUB)] == cw, (mm, j)
+    # the NULL row leaves the sample, so the books equal the NULL-free ones
+    assert books == train_pq_books_portable(load_table(spark, SF, "embeddings"), "vec_id")
+
+
 def test_trained_books_are_data_scaled(spark):
     # trained codewords live at the quantized data magnitude (~1e5-1e6
     # micro-units), nothing like the ±1 demo books — and the subspace

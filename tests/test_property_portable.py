@@ -212,14 +212,14 @@ def test_srp_code_engine_agreement(spark, vecs):
     """SRP codes must agree across engines on arbitrary float32
     vectors — integer quantization makes each hyperplane dot exact, so
     any disagreement is a recipe bug, not noise."""
-    from fegis_spark.operators.dedup import srp_code_expr, srp_code_sql
+    from fegis_spark.operators.dedup import srp_code
 
     dim = 8
     rows = [(i, v) for i, v in enumerate(vecs)]
     got_s = {
         r["i"]: r["code"]
         for r in spark.createDataFrame(rows, "i int, embedding array<float>")
-        .select("i", F.expr(srp_code_expr("embedding", dim)).alias("code"))
+        .select("i", F.expr(srp_code("embedding", dim)).alias("code"))
         .collect()
     }
     con = duckdb.connect()
@@ -227,7 +227,7 @@ def test_srp_code_engine_agreement(spark, vecs):
     con.executemany("INSERT INTO v VALUES (?, ?)", rows)
     got_d = dict(
         con.execute(
-            f"SELECT i, {srp_code_sql('embedding', dim)} FROM v"
+            f"SELECT i, {srp_code('embedding', dim, spark=False)} FROM v"
         ).fetchall()
     )
     assert got_s == got_d
@@ -241,11 +241,11 @@ def test_ivfp_routing_engine_agreement(spark, vecs):
     quantized dots are exact integers, so argmax-by-first-occurrence
     (array_position/list_position) picks the same list everywhere.
     Any disagreement is a recipe bug, not float noise."""
-    from fegis_spark.operators.knn import ivfp_dots_expr, ivfp_dots_sql
+    from fegis_spark.operators.knn import ivfp_dots
 
     dim, n_lists = 8, 4
     rows = [(i, v) for i, v in enumerate(vecs)]
-    dots = ivfp_dots_expr("embedding", dim, n_lists)
+    dots = ivfp_dots("embedding", dim, n_lists)
     got_s = {
         r["i"]: (tuple(r["dots"]), r["list_id"])
         for r in spark.createDataFrame(rows, "i int, embedding array<float>")
@@ -261,7 +261,7 @@ def test_ivfp_routing_engine_agreement(spark, vecs):
     con = duckdb.connect()
     con.execute("CREATE TABLE v (i INTEGER, embedding FLOAT[])")
     con.executemany("INSERT INTO v VALUES (?, ?)", rows)
-    dsql = ivfp_dots_sql("embedding", dim, n_lists)
+    dsql = ivfp_dots("embedding", dim, n_lists, spark=False)
     got_d = {
         r[0]: (tuple(int(x) for x in r[1]), r[2])
         for r in con.execute(

@@ -12,12 +12,8 @@ import pytest
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from fegis_spark.operators.dedup import (
-    SRP_BITS,
-    SRP_SCALE,
-    srp_code_expr,
-    srp_signs,
-)
+from fegis_spark.functions.vector import INT_SCALE, md5_signs
+from fegis_spark.operators.dedup import SRP_BITS, srp_code
 
 DIM = 16
 
@@ -34,8 +30,8 @@ def spark():
 
 
 def ref_code(vec) -> int:
-    signs = np.array(srp_signs(SRP_BITS, DIM), dtype=np.int64)
-    q = np.round(np.array(vec, dtype=np.float64) * SRP_SCALE).astype(np.int64)
+    signs = np.array(md5_signs("", SRP_BITS, DIM), dtype=np.int64)
+    q = np.round(np.array(vec, dtype=np.float64) * INT_SCALE).astype(np.int64)
     dots = signs @ q
     return int(sum(1 << p for p in range(SRP_BITS) if dots[p] >= 0))
 
@@ -48,7 +44,7 @@ def spark_codes(spark, vecs):
     return {
         r.vec_id: r.code
         for r in df.select(
-            "vec_id", F.expr(srp_code_expr("embedding", DIM)).alias("code")
+            "vec_id", F.expr(srp_code("embedding", DIM)).alias("code")
         ).collect()
     }
 
