@@ -4,9 +4,9 @@ Closes the compressed-image SWAP POINTs that need no external library:
 r9 landed JPEG *header* parsing (multimodal.parse_jpeg_header); r10
 added baseline 4:4:4 decode/encode; r11 adds PROGRESSIVE (SOF2)
 decode AND chroma subsampling (4:2:0/4:2:2) on both paths — together
-the majority profiles of real crawl JPEGs — plus progressive (4:4:4
-AND subsampled) and 4:2:0/4:2:2 encoders so every scan/MCU shape is
-self-certifying in this container. The decoder
+the majority profiles of real crawl JPEGs — and both encoders emit
+every sampling, so every scan/MCU shape is self-certifying in this
+container. The decoder
 is a multi-scan coefficient-domain machine (ITU-T T.81 Annex F + G):
 entropy-coded Huffman data accumulates into per-component coefficient
 arrays across scans (spectral selection Ss..Se, successive
@@ -29,14 +29,20 @@ decode-wrong-is-worse-than-fail rule):
 
 The encoders exist so the codec is self-certifying in this container
 (no PIL to produce test payloads): standard Annex K quantization and
-Huffman tables, quality-scaled per the IJG recipe. encode_jpeg emits
-SOF0; encode_jpeg_progressive emits SOF2 with a 2-level successive
-approximation script (DC first Al=1 → per-component AC first Al=1 →
-DC refine → per-component AC refine), which exercises every scan
-type the decoder implements — and because the refinement passes reach
-Al=0, progressive and baseline encodings of the SAME image decode to
-BIT-IDENTICAL pixels (same quantized coefficients), which is the
-strongest cross-check available without an independent decoder.
+Huffman tables, quality-scaled per the IJG recipe. Both take the same
+arguments (quality, restart_interval, y_samp = gray/4:4:4 (1, 1),
+4:2:0 (2, 2) or 4:2:2 (2, 1)) and share one forward path (_forward),
+one block layout (_mcu_walk for interleaved scans, _comp_raster for
+a component's own raster — the decoder walks the same two) and one
+restart-interval writer (_entropy_scan). encode_jpeg emits SOF0 with
+one interleaved scan; encode_jpeg_progressive emits SOF2 with a
+2-level successive approximation script (DC first Al=1 →
+per-component AC first Al=1 → DC refine → per-component AC refine),
+which exercises every scan type the decoder implements — and because
+the refinement passes reach Al=0, progressive and baseline encodings
+of the SAME image decode to BIT-IDENTICAL pixels (same quantized
+coefficients), which is the strongest cross-check available without
+an independent decoder.
 JPEG is lossy, so tests assert PSNR bounds and BIT-EXACT determinism
 (pure integer/float64 numpy, no RNG), not pixel equality;
 decode(encode(x)) is a pure function of x, which is what the media
@@ -52,6 +58,7 @@ refinement correction-bit buffering follows the spec's G.1.2.3 model
 from __future__ import annotations
 
 import struct
+from typing import NamedTuple
 
 import numpy as np
 
@@ -323,187 +330,78 @@ def _extend(bits: int, cat: int) -> int:
     return bits
 
 
-def _quantize_components(
-    arr: np.ndarray, quality: int
-) -> tuple[list[np.ndarray], list[np.ndarray], list[int], int, int, int, int]:
-    """Forward path shared by the baseline and progressive encoders:
-    color transform, 8x8 tiling with edge-replicate padding, DCT,
-    quantization, zigzag. Returns (coefs, qtbls, qids, h, w, bh, bw)
-    with coefs[ci] an int64 (bh*bw, 64) array in zigzag order — ONE
-    quantization, so the two encoders emit the same coefficients and
-    their decodes are bit-identical (the cross-check the tests pin)."""
-    gray = arr.ndim == 2
-    h, w = arr.shape[0], arr.shape[1]
-    if gray:
-        planes = [arr.astype(np.float64)]
-        qtbls = [_quality_scale(QTBL_LUMA, quality)]
-        qids = [0]
-    else:
-        ycc = _rgb_to_ycbcr(arr)
-        planes = [ycc[..., 0], ycc[..., 1], ycc[..., 2]]
-        qtbls = [
-            _quality_scale(QTBL_LUMA, quality),
-            _quality_scale(QTBL_CHROMA, quality),
-        ]
-        qids = [0, 1, 1]
-    bh, bw = (h + 7) // 8, (w + 7) // 8
-    coefs = []
-    for ci, plane in enumerate(planes):
-        q = qtbls[qids[ci]]
-        out = np.zeros((bh * bw, 64), dtype=np.int64)
-        for by in range(bh):
-            for bx in range(bw):
-                block = np.full((8, 8), 0.0)
-                ys, xs = by * 8, bx * 8
-                ye, xe = min(ys + 8, h), min(xs + 8, w)
-                tile = plane[ys:ye, xs:xe]
-                # edge-replicate padding
-                block[: ye - ys, : xe - xs] = tile
-                if xe - xs < 8:
-                    block[: ye - ys, xe - xs :] = tile[:, -1:]
-                if ye - ys < 8:
-                    block[ye - ys :, :] = block[ye - ys - 1, :]
-                coeffs = _D @ (block - 128.0) @ _D.T
-                # round half away from zero (deterministic, symmetric)
-                quant = np.sign(coeffs) * np.floor(np.abs(coeffs) / q + 0.5)
-                quant = quant.astype(np.int64)
-                out[by * bw + bx] = [quant[r, c] for r, c in ZIGZAG]
-        coefs.append(out)
-    return coefs, qtbls, qids, h, w, bh, bw
+def _comp_dims(h: int, w: int, samp: list[tuple[int, int]], ci: int) -> tuple[int, int]:
+    """The component's own (height, width): the frame scaled by its
+    sampling factors relative to the largest (T.81 A.1.1)."""
+    hmax = max(s[0] for s in samp)
+    vmax = max(s[1] for s in samp)
+    hi, vi = samp[ci]
+    return (h * vi + vmax - 1) // vmax, (w * hi + hmax - 1) // hmax
 
 
-def _emit_headers(
-    out: bytearray,
-    sof_marker: bytes,
-    qtbls: list[np.ndarray],
-    qids: list[int],
-    h: int,
-    w: int,
-    ac_tabs: tuple | None = None,
-    samp: list[tuple[int, int]] | None = None,
-) -> None:
-    """DQT + SOFn + DHT segments (all tables the scans reference are
-    emitted up front, which is legal for both modes). Baseline uses the
-    Annex K AC tables; progressive passes HUFF_AC_UNIVERSAL (the Annex
-    K AC tables lack EOBn symbols). ``samp`` carries per-component
-    (hi, vi) sampling factors into the SOF (r11 — defaults to 4:4:4)."""
-    ncomp = len(qids)
-    ac0, ac1 = ac_tabs or (HUFF_AC_LUMA, HUFF_AC_CHROMA)
-    for tid, q in enumerate(qtbls):
-        zzq = bytes(int(q[r, c]) for r, c in ZIGZAG)
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tid]) + zzq
-    samp = samp or [(1, 1)] * ncomp
-    comp_spec = b"".join(
-        bytes([ci + 1, (samp[ci][0] << 4) | samp[ci][1], qids[ci]])
-        for ci in range(ncomp)
-    )
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp]) + comp_spec
-    out += sof_marker + struct.pack(">H", len(sof) + 2) + sof
-    tabs = [(0x00, HUFF_DC_LUMA), (0x10, ac0)]
-    if ncomp == 3:
-        tabs += [(0x01, HUFF_DC_CHROMA), (0x11, ac1)]
-    for tc, (bits, vals) in tabs:
-        body = bytes([tc]) + bytes(bits) + bytes(vals)
-        out += b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
+def _mcu_walk(
+    comps: list[int],
+    samp: list[tuple[int, int]],
+    grids: list[tuple[int, int]],
+    mcuy: int,
+    mcux: int,
+) -> list[list[tuple[int, int]]]:
+    """Interleaved scan order (T.81 A.2.3): MCUs in raster order, each
+    MCU the hi x vi data units of every scan component in turn,
+    row-major. Items are (position in ``comps``, block index in that
+    component's MCU-padded grid); all-1x1 sampling reduces to the flat
+    block raster."""
+    units = []
+    for my in range(mcuy):
+        for mx in range(mcux):
+            mcu = []
+            for si, ci in enumerate(comps):
+                hi, vi = samp[ci]
+                gx = grids[ci][1]
+                for v in range(vi):
+                    for hh in range(hi):
+                        mcu.append((si, (my * vi + v) * gx + mx * hi + hh))
+            units.append(mcu)
+    return units
 
 
-def encode_jpeg(
-    arr: np.ndarray, quality: int = 75, restart_interval: int = 0
-) -> bytes:
-    """uint8 (h, w) grayscale or (h, w, 3) RGB → baseline JPEG bytes
-    (SOF0, 4:4:4, Annex K tables quality-scaled). Deterministic.
-    restart_interval > 0 emits a DRI segment and RSTn markers every
-    that many MCUs with DC-predictor resets (r11 — self-certifies the
-    restart decode path). Restarts only re-base the DC differences, so
-    decode(encode(x, restart_interval=r)) is BIT-IDENTICAL to
-    decode(encode(x)) — pinned in tests."""
-    coefs, qtbls, qids, h, w, bh, bw = _quantize_components(arr, quality)
-    ncomp = len(qids)
-    dc_codes = [_huff_codes(*t) for t in (HUFF_DC_LUMA, HUFF_DC_CHROMA)]
-    ac_codes = [_huff_codes(*t) for t in (HUFF_AC_LUMA, HUFF_AC_CHROMA)]
-
-    writer = _BitWriter()
-    prev_dc = [0] * ncomp
-    rst = 0
-    for b in range(bh * bw):
-        if restart_interval and b and b % restart_interval == 0:
-            writer.flush()
-            writer.out += bytes([0xFF, 0xD0 + rst % 8])
-            rst += 1
-            prev_dc = [0] * ncomp
-        for ci in range(ncomp):
-            zz = coefs[ci][b]
-            hsel = 0 if qids[ci] == 0 else 1
-            # DC
-            diff = int(zz[0]) - prev_dc[ci]
-            prev_dc[ci] = int(zz[0])
-            cat, bits = _magnitude_cat(diff)
-            code, ln = dc_codes[hsel][cat]
-            writer.write(code, ln)
-            if cat:
-                writer.write(bits, cat)
-            # AC with run-lengths
-            run = 0
-            for k in range(1, 64):
-                v = int(zz[k])
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    code, ln = ac_codes[hsel][0xF0]  # ZRL
-                    writer.write(code, ln)
-                    run -= 16
-                cat, bits = _magnitude_cat(v)
-                code, ln = ac_codes[hsel][(run << 4) | cat]
-                writer.write(code, ln)
-                writer.write(bits, cat)
-                run = 0
-            if run:
-                code, ln = ac_codes[hsel][0x00]  # EOB
-                writer.write(code, ln)
-    writer.flush()
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    _emit_headers(out, b"\xff\xc0", qtbls, qids, h, w)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    scan_spec = b"".join(
-        bytes([ci + 1, (0x00 if qids[ci] == 0 else 0x11)]) for ci in range(ncomp)
-    )
-    sos = bytes([ncomp]) + scan_spec + bytes([0, 63, 0])
-    out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-    out += writer.out
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+def _comp_raster(
+    h: int, w: int, samp: list[tuple[int, int]], grids: list[tuple[int, int]], ci: int
+) -> list[int]:
+    """Non-interleaved scan order (T.81 A.2.2): the component's OWN
+    block raster, ceil(component dims / 8), as indices into its
+    MCU-padded grid — the padded grid's extra blocks are skipped."""
+    ch, cw = _comp_dims(h, w, samp, ci)
+    gx = grids[ci][1]
+    return [by * gx + bx for by in range((ch + 7) // 8) for bx in range((cw + 7) // 8)]
 
 
-def _quantize_plane(plane: np.ndarray, q: np.ndarray, bh: int, bw: int) -> np.ndarray:
-    """One component plane → int64 (bh*bw, 64) zigzag coefficient grid
-    (same DCT/quant math as _quantize_components, on an arbitrary
-    per-component grid — the 4:2:0 encoder quantizes Y and the
-    downsampled chroma planes on their own grids)."""
+def _quantize_plane(plane: np.ndarray, q: np.ndarray, bh: int, bw: int) -> list[list[int]]:
+    """One component plane → (bh*bw) blocks of 64 zigzag-ordered
+    quantized DCT coefficients, edge-replicate padded out to the
+    block grid (a subsampled MCU grid can extend whole blocks past
+    the plane)."""
     h, w = plane.shape
-    # edge-replicate out to the full (possibly MCU-padded) block grid —
-    # a subsampled-chroma MCU grid can extend whole blocks past the
-    # plane, so pad once up front instead of per-tile
     padded = np.pad(
         plane.astype(np.float64),
         ((0, bh * 8 - h), (0, bw * 8 - w)),
         mode="edge",
     )
-    out = np.zeros((bh * bw, 64), dtype=np.int64)
+    out = []
     for by in range(bh):
         for bx in range(bw):
             block = padded[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
             coeffs = _D @ (block - 128.0) @ _D.T
+            # round half away from zero (deterministic, symmetric)
             quant = np.sign(coeffs) * np.floor(np.abs(coeffs) / q + 0.5)
-            out[by * bw + bx] = [int(quant[r, c]) for r, c in ZIGZAG]
+            out.append([int(quant[r, c]) for r, c in ZIGZAG])
     return out
 
 
 def _downsample(plane: np.ndarray, fy: int, fx: int) -> np.ndarray:
     """fy x fx mean downsample with edge-replicate padding — the chroma
-    reduction of the subsampled encoders (float64, deterministic)."""
+    reduction of subsampled frames (float64, deterministic; 1x1 is
+    the identity)."""
     h, w = plane.shape
     if h % fy:
         plane = np.vstack([plane] + [plane[-1:]] * (fy - h % fy))
@@ -516,122 +414,201 @@ def _downsample(plane: np.ndarray, fy: int, fx: int) -> np.ndarray:
     return acc / (fy * fx)
 
 
-def encode_jpeg_420(arr: np.ndarray, quality: int = 75) -> bytes:
-    """uint8 (h, w, 3) RGB → baseline 4:2:0 JPEG bytes (SOF0, Y at
-    2x2 sampling, Cb/Cr at 1x1 over 2x2-mean-downsampled planes) —
-    the majority chroma layout of real crawl JPEGs, emitted here so
-    the subsampled decode path is self-certifying. Interleaved MCUs:
-    4 Y blocks + 1 Cb + 1 Cr per 16x16 macroblock. Deterministic.
+class _Frame(NamedTuple):
+    """An encoder's quantized frame: per-component sampling, quant
+    table ids and MCU-padded block grids, plus the zigzag
+    coefficients of every grid block."""
 
-    Cross-check invariant (pinned in tests): for an image with
-    CONSTANT chroma (e.g. any grayscale image stored as RGB),
-    downsampling loses nothing, so decode(encode_jpeg_420(x)) ==
-    decode(encode_jpeg(x)) bit-for-bit."""
-    return _encode_jpeg_subsampled(arr, quality, y_samp=(2, 2))
-
-
-def encode_jpeg_422(arr: np.ndarray, quality: int = 75) -> bytes:
-    """uint8 (h, w, 3) RGB → baseline 4:2:2 JPEG bytes (Y at 2x1
-    sampling — chroma halved horizontally only; 2 Y + 1 Cb + 1 Cr per
-    16x8 MCU). Same constant-chroma cross-check invariant as 4:2:0."""
-    return _encode_jpeg_subsampled(arr, quality, y_samp=(2, 1))
+    h: int
+    w: int
+    samp: list[tuple[int, int]]
+    qtbls: list[np.ndarray]
+    qids: list[int]
+    grids: list[tuple[int, int]]
+    mcuy: int
+    mcux: int
+    coefs: list[list[list[int]]]
 
 
-def _encode_jpeg_subsampled(
-    arr: np.ndarray, quality: int, y_samp: tuple[int, int]
-) -> bytes:
-    if arr.ndim != 3:
-        raise ValueError("subsampled encode takes RGB input (grayscale has no chroma)")
+def _forward(arr: np.ndarray, quality: int, y_samp: tuple[int, int]) -> _Frame:
+    """The one forward path of both encoders, for every frame they
+    emit (gray, 4:4:4, 4:2:0, 4:2:2): color transform, chroma
+    downsample by the luma sampling factors, then per component 8x8
+    DCT + quantization + zigzag over its share of the MCU grid. ONE
+    quantization, so a baseline and a progressive encoding of the
+    same image carry the same coefficients and decode bit-identically
+    (the cross-check the tests pin)."""
     h, w = arr.shape[0], arr.shape[1]
     hy, vy = y_samp
-    ycc = _rgb_to_ycbcr(arr)
-    qy = _quality_scale(QTBL_LUMA, quality)
-    qc = _quality_scale(QTBL_CHROMA, quality)
+    if arr.ndim == 2:
+        if y_samp != (1, 1):
+            raise ValueError("subsampled encode takes RGB input (grayscale has no chroma)")
+        planes = [arr]
+        qtbls = [_quality_scale(QTBL_LUMA, quality)]
+        qids = [0]
+        samp = [(1, 1)]
+    else:
+        ycc = _rgb_to_ycbcr(arr)
+        planes = [
+            ycc[..., 0],
+            _downsample(ycc[..., 1], vy, hy),
+            _downsample(ycc[..., 2], vy, hy),
+        ]
+        qtbls = [
+            _quality_scale(QTBL_LUMA, quality),
+            _quality_scale(QTBL_CHROMA, quality),
+        ]
+        qids = [0, 1, 1]
+        samp = [(hy, vy), (1, 1), (1, 1)]
     mcux = (w + 8 * hy - 1) // (8 * hy)
     mcuy = (h + 8 * vy - 1) // (8 * vy)
-    planes = [
-        ycc[..., 0],
-        _downsample(ycc[..., 1], vy, hy),
-        _downsample(ycc[..., 2], vy, hy),
-    ]
-    grids = [(mcuy * vy, mcux * hy), (mcuy, mcux), (mcuy, mcux)]
-    qsel = [qy, qc, qc]
+    grids = [(mcuy * vi, mcux * hi) for hi, vi in samp]
     coefs = [
-        _quantize_plane(planes[ci], qsel[ci], *grids[ci]) for ci in range(3)
+        _quantize_plane(planes[ci], qtbls[qids[ci]], *grids[ci])
+        for ci in range(len(qids))
     ]
-    dc_codes = [_huff_codes(*t) for t in (HUFF_DC_LUMA, HUFF_DC_CHROMA)]
-    ac_codes = [_huff_codes(*t) for t in (HUFF_AC_LUMA, HUFF_AC_CHROMA)]
-    samp = [(hy, vy), (1, 1), (1, 1)]
+    return _Frame(h, w, samp, qtbls, qids, grids, mcuy, mcux, coefs)
 
-    writer = _BitWriter()
-    prev_dc = [0, 0, 0]
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for ci in range(3):
-                hi, vi = samp[ci]
-                bw_i = grids[ci][1]
-                hsel = 0 if ci == 0 else 1
-                for v in range(vi):
-                    for hh in range(hi):
-                        zz = coefs[ci][(my * vi + v) * bw_i + (mx * hi + hh)]
-                        diff = int(zz[0]) - prev_dc[ci]
-                        prev_dc[ci] = int(zz[0])
-                        cat, bits = _magnitude_cat(diff)
-                        code, ln = dc_codes[hsel][cat]
-                        writer.write(code, ln)
-                        if cat:
-                            writer.write(bits, cat)
-                        run = 0
-                        for k in range(1, 64):
-                            val = int(zz[k])
-                            if val == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                code, ln = ac_codes[hsel][0xF0]
-                                writer.write(code, ln)
-                                run -= 16
-                            cat, bits = _magnitude_cat(val)
-                            code, ln = ac_codes[hsel][(run << 4) | cat]
-                            writer.write(code, ln)
-                            writer.write(bits, cat)
-                            run = 0
-                        if run:
-                            code, ln = ac_codes[hsel][0x00]
-                            writer.write(code, ln)
-    writer.flush()
 
-    out = bytearray(b"\xff\xd8")
-    for tid, q in enumerate((qy, qc)):
+def _emit_headers(
+    out: bytearray,
+    sof_marker: bytes,
+    f: _Frame,
+    ac_tabs: tuple,
+    restart_interval: int,
+) -> None:
+    """DQT + SOFn + DHT (+ DRI) segments. All tables the scans
+    reference are emitted up front, which is legal for both modes.
+    Baseline passes the Annex K AC tables; progressive passes
+    HUFF_AC_UNIVERSAL (the Annex K AC tables lack EOBn symbols)."""
+    ncomp = len(f.qids)
+    for tid, q in enumerate(f.qtbls):
         zzq = bytes(int(q[r, c]) for r, c in ZIGZAG)
         out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tid]) + zzq
     comp_spec = b"".join(
-        bytes([ci + 1, (samp[ci][0] << 4) | samp[ci][1], 0 if ci == 0 else 1])
-        for ci in range(3)
+        bytes([ci + 1, (f.samp[ci][0] << 4) | f.samp[ci][1], f.qids[ci]])
+        for ci in range(ncomp)
     )
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([3]) + comp_spec
-    out += b"\xff\xc0" + struct.pack(">H", len(sof) + 2) + sof
-    for tc, (bits, vals) in [
-        (0x00, HUFF_DC_LUMA), (0x10, HUFF_AC_LUMA),
-        (0x01, HUFF_DC_CHROMA), (0x11, HUFF_AC_CHROMA),
-    ]:
+    sof = bytes([8]) + struct.pack(">HH", f.h, f.w) + bytes([ncomp]) + comp_spec
+    out += sof_marker + struct.pack(">H", len(sof) + 2) + sof
+    tabs = [(0x00, HUFF_DC_LUMA), (0x10, ac_tabs[0])]
+    if ncomp == 3:
+        tabs += [(0x01, HUFF_DC_CHROMA), (0x11, ac_tabs[1])]
+    for tc, (bits, vals) in tabs:
         body = bytes([tc]) + bytes(bits) + bytes(vals)
         out += b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
-    scan_spec = b"".join(
-        bytes([ci + 1, 0x00 if ci == 0 else 0x11]) for ci in range(3)
+    if restart_interval:
+        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
+
+
+def _emit_scan(
+    out: bytearray, qids: list[int], comps: list[int],
+    ss: int, se: int, ah: int, al: int, payload: bytes,
+) -> None:
+    """SOS header + entropy-coded payload. Chroma components use table
+    1 for AC, and for DC in a DC-carrying scan (Ss=0)."""
+    spec = b"".join(
+        bytes([ci + 1, ((qids[ci] if ss == 0 else 0) << 4) | qids[ci]])
+        for ci in comps
     )
-    sos = bytes([3]) + scan_spec + bytes([0, 63, 0])
-    out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos
-    out += writer.out
-    out += b"\xff\xd9"
-    return bytes(out)
+    sos = bytes([len(comps)]) + spec + bytes([ss, se, (ah << 4) | al])
+    out += b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos + payload
+
+
+def _entropy_scan(units: list, restart_interval: int, code, *args) -> bytes:
+    """Entropy-code one scan: ``code(writer, interval, *args)`` for
+    each restart interval of ``units`` (the whole walk when
+    restart_interval is 0), each interval after the first opened by
+    its cycling RSTn marker on a 1-filled byte boundary (T.81 E.1.4).
+    ``code`` starts every interval with fresh DC predictors and ends
+    it with no EOB run pending."""
+    step = restart_interval or len(units) or 1
+    intervals = [units[i : i + step] for i in range(0, len(units), step)] or [[]]
+    wtr = _BitWriter()
+    code(wtr, intervals[0], *args)
+    for rst, interval in enumerate(intervals[1:]):
+        wtr.flush()
+        wtr.out += bytes([0xFF, 0xD0 + rst % 8])
+        code(wtr, interval, *args)
+    wtr.flush()
+    return bytes(wtr.out)
+
+
+def _put_dc(wtr: _BitWriter, codes: dict, diff: int) -> None:
+    """A DC difference: its category's Huffman code + the appended bits."""
+    cat, bits = _magnitude_cat(diff)
+    wtr.write(*codes[cat])
+    wtr.write(bits, cat)
+
+
+def _put_ac(wtr: _BitWriter, codes: dict, vals: list[int]) -> bool:
+    """Run/size-code the nonzero values of an AC band (T.81 F.1.2.2),
+    with a ZRL per 16 zeros before a nonzero. Returns True when zeros
+    trail the last nonzero (the caller codes EOB or counts an EOB run)."""
+    run = 0
+    for v in vals:
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            wtr.write(*codes[0xF0])  # ZRL
+            run -= 16
+        cat, bits = _magnitude_cat(v)
+        wtr.write(*codes[(run << 4) | cat])
+        wtr.write(bits, cat)
+        run = 0
+    return run > 0
+
+
+def _sequential_interval(wtr: _BitWriter, mcus: list, f: _Frame, dc: list, ac: list) -> None:
+    """Baseline: full-band DC + AC of every data unit (T.81 F.1.2)."""
+    prev = [0] * len(f.qids)
+    for mcu in mcus:
+        for ci, b in mcu:
+            zz = f.coefs[ci][b]
+            t = f.qids[ci]
+            _put_dc(wtr, dc[t], zz[0] - prev[ci])
+            prev[ci] = zz[0]
+            if _put_ac(wtr, ac[t], zz[1:]):
+                wtr.write(*ac[t][0x00])  # EOB
+
+
+def encode_jpeg(
+    arr: np.ndarray,
+    quality: int = 75,
+    restart_interval: int = 0,
+    y_samp: tuple[int, int] = (1, 1),
+) -> bytes:
+    """uint8 (h, w) grayscale or (h, w, 3) RGB → baseline JPEG bytes
+    (SOF0, one interleaved scan, Annex K tables quality-scaled).
+    Deterministic. y_samp=(2, 2) / (2, 1) emits 4:2:0 / 4:2:2 (Y at
+    that sampling, Cb/Cr at 1x1 over mean-downsampled planes; RGB
+    input only), the majority chroma layouts of real crawl JPEGs.
+    restart_interval > 0 emits a DRI segment and RSTn markers every
+    that many MCUs with DC-predictor resets.
+
+    Cross-checks (pinned in tests): restarts only re-base the DC
+    differences, so decode(encode_jpeg(x, restart_interval=r)) is
+    BIT-IDENTICAL to decode(encode_jpeg(x)); and for an image with
+    CONSTANT chroma (any grayscale image stored as RGB) downsampling
+    loses nothing, so every y_samp decodes to the 4:4:4 pixels."""
+    f = _forward(arr, quality, y_samp)
+    comps = list(range(len(f.qids)))
+    dc = [_huff_codes(*t) for t in (HUFF_DC_LUMA, HUFF_DC_CHROMA)]
+    ac = [_huff_codes(*t) for t in (HUFF_AC_LUMA, HUFF_AC_CHROMA)]
+    mcus = _mcu_walk(comps, f.samp, f.grids, f.mcuy, f.mcux)
+    out = bytearray(b"\xff\xd8")  # SOI
+    _emit_headers(out, b"\xff\xc0", f, (HUFF_AC_LUMA, HUFF_AC_CHROMA), restart_interval)
+    _emit_scan(out, f.qids, comps, 0, 63, 0, 0,
+               _entropy_scan(mcus, restart_interval, _sequential_interval, f, dc, ac))
+    return bytes(out + b"\xff\xd9")  # EOI
 
 
 class _ProgACWriter:
-    """AC-scan emitter state for one progressive scan: EOB-run
-    accumulation (T.81 G.1.2.2) plus, for refinement scans, the
-    buffered correction bits that must follow the next emitted symbol
-    (G.1.2.3 — the IJG encoder's BE buffer)."""
+    """AC-scan emitter state for one restart interval of a progressive
+    scan: EOB-run accumulation (T.81 G.1.2.2) plus, for refinement
+    scans, the buffered correction bits that must follow the next
+    emitted symbol (G.1.2.3 — the IJG encoder's BE buffer)."""
 
     def __init__(self, writer: _BitWriter, ac_codes: dict) -> None:
         self.w = writer
@@ -640,8 +617,7 @@ class _ProgACWriter:
         self.pending: list[int] = []  # correction bits owed after next symbol
 
     def emit_symbol(self, sym: int) -> None:
-        code, ln = self.ac[sym]
-        self.w.write(code, ln)
+        self.w.write(*self.ac[sym])
 
     def flush_eobrun(self) -> None:
         if self.eobrun > 0:
@@ -661,6 +637,89 @@ class _ProgACWriter:
             self.flush_eobrun()
 
 
+def _dc_first_interval(wtr: _BitWriter, mcus: list, f: _Frame, dc: list) -> None:
+    """Progressive DC first pass at Al=1: DC differences of the
+    arithmetically shifted coefficients (G.1.2.1)."""
+    prev = [0] * len(f.qids)
+    for mcu in mcus:
+        for ci, b in mcu:
+            v = f.coefs[ci][b][0] >> 1
+            _put_dc(wtr, dc[f.qids[ci]], v - prev[ci])
+            prev[ci] = v
+
+
+def _dc_refine_interval(wtr: _BitWriter, mcus: list, f: _Frame) -> None:
+    """Progressive DC refinement to Al=0: one raw bit per data unit."""
+    for mcu in mcus:
+        for ci, b in mcu:
+            wtr.write(f.coefs[ci][b][0] & 1, 1)
+
+
+def _ac_first_interval(wtr: _BitWriter, blocks: list[int], zzs: list, ac: dict) -> None:
+    """Progressive AC first pass at Al=1 over Ss=1..Se=63 (G.1.2.2):
+    all-zero bands and zero tails fold into EOB runs."""
+    pw = _ProgACWriter(wtr, ac)
+    for b in blocks:
+        vals = [(1 if v >= 0 else -1) * (abs(v) >> 1) for v in zzs[b][1:]]
+        if not any(vals):
+            pw.count_eob([])
+            continue
+        pw.flush_eobrun()
+        if _put_ac(wtr, ac, vals):
+            pw.count_eob([])
+    pw.flush_eobrun()
+
+
+def _ac_refine_interval(wtr: _BitWriter, blocks: list[int], zzs: list, ac: dict) -> None:
+    """Progressive AC refinement to Al=0 (G.1.2.3): newly-nonzero
+    coefficients as (run, 1) symbols + sign, buffered correction bits
+    for the already-nonzero ones."""
+    pw = _ProgACWriter(wtr, ac)
+    for b in blocks:
+        zz = zzs[b]
+        absv = [abs(v) for v in zz[1:]]  # temp at Al=0
+        # index of last NEWLY-NONZERO coefficient (temp == 1); ZRLs
+        # are only needed up to here — the tail folds into EOB runs
+        eobpos = -1
+        for i, t in enumerate(absv):
+            if t == 1:
+                eobpos = i
+        run = 0
+        br: list[int] = []  # correction bits since last symbol
+        for i, t in enumerate(absv):
+            if t == 0:
+                run += 1
+                continue
+            # ZRL reduction runs at EVERY nonzero temp (correction
+            # coeffs too, per G.1.2.3): it keeps run <= 15 whenever
+            # a nonzero coeff is buffered, which is what guarantees
+            # every buffered correction bit lies inside the next
+            # symbol's 16-zero decoder advance window. Not emitted
+            # past the last newly-nonzero coeff — those runs fold
+            # into the EOB run.
+            while run > 15 and i <= eobpos:
+                pw.flush_eobrun()
+                pw.emit_symbol(0xF0)
+                run -= 16
+                for bit in br:
+                    wtr.write(bit, 1)
+                br = []
+            if t > 1:
+                br.append(t & 1)  # history-visible: correction bit
+                continue
+            # t == 1: newly nonzero at this precision
+            pw.flush_eobrun()
+            pw.emit_symbol((run << 4) | 1)
+            wtr.write(1 if zz[i + 1] >= 0 else 0, 1)
+            for bit in br:
+                wtr.write(bit, 1)
+            br = []
+            run = 0
+        if run > 0 or br:
+            pw.count_eob(br)
+    pw.flush_eobrun()
+
+
 def encode_jpeg_progressive(
     arr: np.ndarray,
     quality: int = 75,
@@ -669,8 +728,8 @@ def encode_jpeg_progressive(
 ) -> bytes:
     """uint8 (h, w) grayscale or (h, w, 3) RGB → progressive JPEG
     bytes (SOF2, Annex K tables quality-scaled). Deterministic.
-    y_samp=(2,2)/(2,1) emits PROGRESSIVE 4:2:0/4:2:2 (r11): the DC
-    scans interleave hi×vi data units per MCU, the AC scans walk each
+    y_samp=(2,2)/(2,1) emits PROGRESSIVE 4:2:0/4:2:2: the DC scans
+    interleave hi×vi data units per MCU, the AC scans walk each
     component's own block raster (T.81 A.2.2).
 
     Scan script (2-level successive approximation — exercises every
@@ -680,227 +739,34 @@ def encode_jpeg_progressive(
       3. DC refinement, interleaved, Ah=1 Al=0 (raw bits)
       4. per component: AC refinement, Ss=1 Se=63, Ah=1 Al=0
          (newly-nonzero + buffered correction bits)
-    Because the script refines to Al=0, the decoded coefficients equal
-    the baseline encoder's exactly — decode(encode_jpeg_progressive(x))
-    == decode(encode_jpeg(x)) bit-for-bit at 4:4:4, and ==
-    decode(encode_jpeg_420/422(x)) at the matching y_samp (both pinned
-    in tests; the subsampled pair shares _quantize_plane/_downsample).
-    restart_interval > 0 emits DRI + per-scan RSTn markers every that
-    many MCUs/blocks (DC predictors and EOB runs flushed at each
-    boundary, r11) — still bit-identical to the restart-free decode."""
-    if y_samp == (1, 1):
-        coefs, qtbls, qids, h, w, bh, bw = _quantize_components(arr, quality)
-        ncomp = len(qids)
-        samp = [(1, 1)] * ncomp
-        grids = [(bh, bw)] * ncomp
-        mcuy, mcux = bh, bw
-    else:
-        if arr.ndim != 3:
-            raise ValueError(
-                "subsampled progressive encode takes RGB input "
-                "(grayscale has no chroma)"
-            )
-        h, w = arr.shape[0], arr.shape[1]
-        hy, vy = y_samp
-        ycc = _rgb_to_ycbcr(arr)
-        qtbls = [
-            _quality_scale(QTBL_LUMA, quality),
-            _quality_scale(QTBL_CHROMA, quality),
-        ]
-        qids = [0, 1, 1]
-        ncomp = 3
-        mcux = (w + 8 * hy - 1) // (8 * hy)
-        mcuy = (h + 8 * vy - 1) // (8 * vy)
-        planes = [
-            ycc[..., 0],
-            _downsample(ycc[..., 1], vy, hy),
-            _downsample(ycc[..., 2], vy, hy),
-        ]
-        grids = [(mcuy * vy, mcux * hy), (mcuy, mcux), (mcuy, mcux)]
-        samp = [(hy, vy), (1, 1), (1, 1)]
-        coefs = [
-            _quantize_plane(planes[ci], qtbls[qids[ci]], *grids[ci])
-            for ci in range(3)
-        ]
-    # data-unit walks mirroring the decoder: MCU-major interleave for
-    # the DC scans, per-component true block raster for the AC scans
-    hmax = max(si[0] for si in samp)
-    vmax = max(si[1] for si in samp)
-    comp_blocks: list[list[int]] = []
-    for ci in range(ncomp):
-        hi, vi = samp[ci]
-        cbh = (((h * vi + vmax - 1) // vmax) + 7) // 8
-        cbw = (((w * hi + hmax - 1) // hmax) + 7) // 8
-        gx = grids[ci][1]
-        comp_blocks.append(
-            [by * gx + bx for by in range(cbh) for bx in range(cbw)]
-        )
-    mcu_units: list[list[tuple[int, int]]] = []
-    for my in range(mcuy):
-        for mx in range(mcux):
-            mcu = []
-            for ci in range(ncomp):
-                hi, vi = samp[ci]
-                gx = grids[ci][1]
-                for v in range(vi):
-                    for hh in range(hi):
-                        mcu.append((ci, (my * vi + v) * gx + (mx * hi + hh)))
-            mcu_units.append(mcu)
-    dc_codes = [_huff_codes(*t) for t in (HUFF_DC_LUMA, HUFF_DC_CHROMA)]
-    ac_univ = _huff_codes(*HUFF_AC_UNIVERSAL)
-    ac_codes = [ac_univ, ac_univ]
-
+    Because the script refines to Al=0 and both encoders share one
+    forward path (_forward), the decoded coefficients equal the
+    baseline encoder's exactly: decode(encode_jpeg_progressive(x, q,
+    y_samp=s)) == decode(encode_jpeg(x, q, y_samp=s)) bit-for-bit
+    (pinned in tests). restart_interval > 0 emits DRI + per-scan RSTn
+    markers every that many MCUs/blocks (DC predictors and EOB runs
+    flushed at each boundary) — still bit-identical to the
+    restart-free decode."""
+    f = _forward(arr, quality, y_samp)
+    comps = list(range(len(f.qids)))
+    dc = [_huff_codes(*t) for t in (HUFF_DC_LUMA, HUFF_DC_CHROMA)]
+    ac = _huff_codes(*HUFF_AC_UNIVERSAL)
+    mcus = _mcu_walk(comps, f.samp, f.grids, f.mcuy, f.mcux)
+    rasters = [_comp_raster(f.h, f.w, f.samp, f.grids, ci) for ci in comps]
+    ri = restart_interval
     out = bytearray(b"\xff\xd8")  # SOI
-    _emit_headers(out, b"\xff\xc2", qtbls, qids, h, w,
-                  ac_tabs=(HUFF_AC_UNIVERSAL, HUFF_AC_UNIVERSAL), samp=samp)
-    if restart_interval:
-        out.extend(b"\xff\xdd" + struct.pack(">HH", 4, restart_interval))
-
-    def emit_sos(comp_ids: list[int], ss: int, se: int, ah: int, al: int,
-                 payload: bytes) -> None:
-        spec = b"".join(
-            bytes([ci + 1, ((0x00 if qids[ci] == 0 else 0x11) if ss == 0
-                            else (0x00 if qids[ci] == 0 else 0x01))])
-            for ci in comp_ids
-        )
-        sos = bytes([len(comp_ids)]) + spec + bytes([ss, se, (ah << 4) | al])
-        out.extend(b"\xff\xda" + struct.pack(">H", len(sos) + 2) + sos)
-        out.extend(payload)
-
-    # scan 1: DC first (interleaved), Al=1 ------------------------------
-    wtr = _BitWriter()
-    prev = [0] * ncomp
-    rst = 0
-    for m, mcu in enumerate(mcu_units):
-        if restart_interval and m and m % restart_interval == 0:
-            wtr.flush()
-            wtr.out += bytes([0xFF, 0xD0 + rst % 8])
-            rst += 1
-            prev = [0] * ncomp
-        for ci, bidx in mcu:
-            v = int(coefs[ci][bidx, 0]) >> 1  # arithmetic shift per G.1.2.1
-            diff = v - prev[ci]
-            prev[ci] = v
-            cat, bits = _magnitude_cat(diff)
-            code, ln = dc_codes[0 if qids[ci] == 0 else 1][cat]
-            wtr.write(code, ln)
-            if cat:
-                wtr.write(bits, cat)
-    wtr.flush()
-    emit_sos(list(range(ncomp)), 0, 0, 0, 1, bytes(wtr.out))
-
-    # scan 2: per-component AC first, Ss=1 Se=63, Al=1 -------------------
-    for ci in range(ncomp):
-        wtr = _BitWriter()
-        pw = _ProgACWriter(wtr, ac_codes[0 if qids[ci] == 0 else 1])
-        rst = 0
-        for n, b in enumerate(comp_blocks[ci]):
-            if restart_interval and n and n % restart_interval == 0:
-                pw.flush_eobrun()
-                wtr.flush()
-                wtr.out += bytes([0xFF, 0xD0 + rst % 8])
-                rst += 1
-            zz = coefs[ci][b]
-            vals = [
-                (1 if int(zz[k]) >= 0 else -1) * (abs(int(zz[k])) >> 1)
-                for k in range(1, 64)
-            ]
-            if not any(vals):
-                pw.count_eob([])
-                continue
-            pw.flush_eobrun()
-            run = 0
-            last_nz = max(i for i, v in enumerate(vals) if v)
-            for i, v in enumerate(vals):
-                if i > last_nz:
-                    break
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    pw.emit_symbol(0xF0)  # ZRL
-                    run -= 16
-                cat, bits = _magnitude_cat(v)
-                pw.emit_symbol((run << 4) | cat)
-                wtr.write(bits, cat)
-                run = 0
-            if last_nz < 62:
-                pw.count_eob([])
-        pw.flush_eobrun()
-        wtr.flush()
-        emit_sos([ci], 1, 63, 0, 1, bytes(wtr.out))
-
-    # scan 3: DC refinement (interleaved), Ah=1 Al=0 — raw bits ----------
-    wtr = _BitWriter()
-    rst = 0
-    for m, mcu in enumerate(mcu_units):
-        if restart_interval and m and m % restart_interval == 0:
-            wtr.flush()
-            wtr.out += bytes([0xFF, 0xD0 + rst % 8])
-            rst += 1
-        for ci, bidx in mcu:
-            wtr.write(int(coefs[ci][bidx, 0]) & 1, 1)
-    wtr.flush()
-    emit_sos(list(range(ncomp)), 0, 0, 1, 0, bytes(wtr.out))
-
-    # scan 4: per-component AC refinement, Ah=1 Al=0 ---------------------
-    for ci in range(ncomp):
-        wtr = _BitWriter()
-        pw = _ProgACWriter(wtr, ac_codes[0 if qids[ci] == 0 else 1])
-        rst = 0
-        for n, b in enumerate(comp_blocks[ci]):
-            if restart_interval and n and n % restart_interval == 0:
-                pw.flush_eobrun()
-                wtr.flush()
-                wtr.out += bytes([0xFF, 0xD0 + rst % 8])
-                rst += 1
-            zz = coefs[ci][b]
-            absv = [abs(int(zz[k])) for k in range(1, 64)]  # temp at Al=0
-            # index of last NEWLY-NONZERO coefficient (temp == 1); ZRLs
-            # are only needed up to here — the tail folds into EOB runs
-            eobpos = -1
-            for i, t in enumerate(absv):
-                if t == 1:
-                    eobpos = i
-            run = 0
-            br: list[int] = []  # correction bits since last symbol
-            for i, t in enumerate(absv):
-                if t == 0:
-                    run += 1
-                    continue
-                # ZRL reduction runs at EVERY nonzero temp (correction
-                # coeffs too, per G.1.2.3): it keeps run <= 15 whenever
-                # a nonzero coeff is buffered, which is what guarantees
-                # every buffered correction bit lies inside the next
-                # symbol's 16-zero decoder advance window. Not emitted
-                # past the last newly-nonzero coeff — those runs fold
-                # into the EOB run.
-                while run > 15 and i <= eobpos:
-                    pw.flush_eobrun()
-                    pw.emit_symbol(0xF0)
-                    run -= 16
-                    for bit in br:
-                        wtr.write(bit, 1)
-                    br = []
-                if t > 1:
-                    br.append(t & 1)  # history-visible: correction bit
-                    continue
-                # t == 1: newly nonzero at this precision
-                pw.flush_eobrun()
-                pw.emit_symbol((run << 4) | 1)
-                wtr.write(1 if int(zz[i + 1]) >= 0 else 0, 1)
-                for bit in br:
-                    wtr.write(bit, 1)
-                br = []
-                run = 0
-            if run > 0 or br:
-                pw.count_eob(br)
-        pw.flush_eobrun()
-        wtr.flush()
-        emit_sos([ci], 1, 63, 1, 0, bytes(wtr.out))
-
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    _emit_headers(out, b"\xff\xc2", f, (HUFF_AC_UNIVERSAL, HUFF_AC_UNIVERSAL), ri)
+    _emit_scan(out, f.qids, comps, 0, 0, 0, 1,
+               _entropy_scan(mcus, ri, _dc_first_interval, f, dc))
+    for ci in comps:
+        _emit_scan(out, f.qids, [ci], 1, 63, 0, 1,
+                   _entropy_scan(rasters[ci], ri, _ac_first_interval, f.coefs[ci], ac))
+    _emit_scan(out, f.qids, comps, 0, 0, 1, 0,
+               _entropy_scan(mcus, ri, _dc_refine_interval, f))
+    for ci in comps:
+        _emit_scan(out, f.qids, [ci], 1, 63, 1, 0,
+                   _entropy_scan(rasters[ci], ri, _ac_refine_interval, f.coefs[ci], ac))
+    return bytes(out + b"\xff\xd9")  # EOI
 
 
 def _find_scan_end(data: bytes, start: int) -> int:
@@ -933,17 +799,13 @@ def _decode_scan_sequential(
     scan_idx: list[tuple[int, int, int]],
     huff: dict,
     coefs: list[np.ndarray],
-    samp: list[tuple[int, int]],
-    grids: list[tuple[int, int]],
-    mcuy: int,
-    mcux: int,
+    units: list[list[tuple[int, int]]],
     restart_interval: int = 0,
 ) -> None:
     """One baseline scan: interleaved DC+AC, full band, no successive
-    approximation (T.81 Annex F), into the coefficient arrays. MCU
-    order with per-component sampling sub-blocks (hi x vi data units
-    per MCU — 4:2:0/4:2:2 decode, r11; all-1x1 reduces to the flat
-    block raster)."""
+    approximation (T.81 Annex F), into the coefficient arrays.
+    ``units`` is the scan's MCU walk (_mcu_walk: hi x vi data units
+    per component per MCU — 4:2:0/4:2:2 decode, r11)."""
     prev_dc = [0] * len(scan_idx)
 
     def one_block(ci: int, si: int, bidx: int, dc_tab, ac_tab) -> None:
@@ -978,31 +840,17 @@ def _decode_scan_sequential(
         if dc_tab is None or ac_tab is None:
             raise ValueError("missing Huffman table for scan")
         tabs.append((dc_tab, ac_tab))
-    mcu_done = 0
     rst = 0
-    total = mcuy * mcux
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for si, (ci, _td, _ta) in enumerate(scan_idx):
-                hi, vi = samp[ci]
-                bw_i = grids[ci][1]
-                for v in range(vi):
-                    for hh in range(hi):
-                        one_block(
-                            ci, si, (my * vi + v) * bw_i + (mx * hi + hh), *tabs[si]
-                        )
-            mcu_done += 1
-            if (
-                restart_interval
-                and mcu_done % restart_interval == 0
-                and mcu_done < total
-            ):
-                # RSTn at the interval boundary: byte-align, check the
-                # cycling marker, reset the DC predictors (T.81 F.2.1.3)
-                reader.restart(rst % 8)
-                rst += 1
-                for i in range(len(prev_dc)):
-                    prev_dc[i] = 0
+    for m, mcu in enumerate(units):
+        if restart_interval and m and m % restart_interval == 0:
+            # RSTn at the interval boundary: byte-align, check the
+            # cycling marker, reset the DC predictors (T.81 F.2.1.3)
+            reader.restart(rst % 8)
+            rst += 1
+            for i in range(len(prev_dc)):
+                prev_dc[i] = 0
+        for si, bidx in mcu:
+            one_block(scan_idx[si][0], si, bidx, *tabs[si])
 
 
 def _decode_scan_dc(
@@ -1260,12 +1108,13 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                         f"sampling factor {hi}x{vi} not supported (1 or 2 only)"
                     )
                 comps.append((cid, tq, hi, vi))
-            hmax = max(c[2] for c in comps)
-            vmax = max(c[3] for c in comps)
+            samp = [(hi, vi) for (_cid, _tq, hi, vi) in comps]
+            hmax = max(hi for hi, _vi in samp)
+            vmax = max(vi for _hi, vi in samp)
             mcux = (w + 8 * hmax - 1) // (8 * hmax)
             mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-            grids = [(mcuy * vi, mcux * hi) for (_cid, _tq, hi, vi) in comps]
-            sof = (h, w, comps, hmax, vmax, mcux, mcuy, grids)
+            grids = [(mcuy * vi, mcux * hi) for hi, vi in samp]
+            sof = (h, w, comps, samp, mcux, mcuy, grids)
             coefs = [
                 np.zeros((gy * gx, 64), dtype=np.int32) for (gy, gx) in grids
             ]
@@ -1277,20 +1126,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         elif marker == 0xDA:  # SOS — decode this scan, then keep walking
             if sof is None or coefs is None:
                 raise ValueError("SOS before SOF frame header")
-            h, w, comps, hmax, vmax, mcux, mcuy, grids = sof
-            samp = [(hi, vi) for (_cid, _tq, hi, vi) in comps]
-
-            def comp_block_ids(ci: int) -> list[int]:
-                """Grid indices of the component's OWN block raster in
-                raster order (T.81 A.2.2 — non-interleaved scans skip
-                the padded MCU grid's extra blocks)."""
-                _cid, _tq, hi, vi = comps[ci]
-                ch_ = (h * vi + vmax - 1) // vmax
-                cw_ = (w * hi + hmax - 1) // hmax
-                cbh, cbw = (ch_ + 7) // 8, (cw_ + 7) // 8
-                gx = grids[ci][1]
-                return [by * gx + bx for by in range(cbh) for bx in range(cbw)]
-
+            h, w, comps, samp, mcux, mcuy, grids = sof
             ns = body[0]
             scan_idx = []
             cid_to_ci = {cid: ci for ci, (cid, *_rest) in enumerate(comps)}
@@ -1306,35 +1142,25 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             scan_start = pos + 2 + seglen
             scan_end = _find_scan_end(data, scan_start)
             reader = _BitReader(data[scan_start:scan_end])
+            scan_comps = [ci for ci, _td, _ta in scan_idx]
             if not progressive:
+                # every baseline scan walks the MCU grid, one-component
+                # scans included
                 _decode_scan_sequential(
-                    reader, scan_idx, huff, coefs, samp, grids, mcuy, mcux,
+                    reader, scan_idx, huff, coefs,
+                    _mcu_walk(scan_comps, samp, grids, mcuy, mcux),
                     restart_interval,
                 )
             elif ss == 0:
                 if se != 0:
                     raise ValueError("progressive DC scan must have Se=0")
                 if len(scan_idx) > 1:
-                    # interleaved DC: MCU-major, hi×vi data units per
-                    # component per MCU (subsampled progressive, r11)
-                    units = []
-                    for my in range(mcuy):
-                        for mx in range(mcux):
-                            mcu = []
-                            for si, (ci, _td, _ta) in enumerate(scan_idx):
-                                hi, vi = samp[ci]
-                                gx = grids[ci][1]
-                                for v in range(vi):
-                                    for hh in range(hi):
-                                        mcu.append(
-                                            (si, (my * vi + v) * gx
-                                             + (mx * hi + hh))
-                                        )
-                            units.append(mcu)
+                    units = _mcu_walk(scan_comps, samp, grids, mcuy, mcux)
                 else:
                     # non-interleaved DC: the component's own raster
                     units = [
-                        [(0, b)] for b in comp_block_ids(scan_idx[0][0])
+                        [(0, b)]
+                        for b in _comp_raster(h, w, samp, grids, scan_comps[0])
                     ]
                 _decode_scan_dc(
                     reader, scan_idx, huff, coefs, units, ah, al,
@@ -1349,23 +1175,20 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 ac_tab = huff.get((1, ta))
                 if ac_tab is None:
                     raise ValueError("missing AC Huffman table for scan")
-                if ah == 0:
-                    _decode_scan_ac_first(
-                        reader, ci, ac_tab, coefs, comp_block_ids(ci),
-                        ss, se, al, restart_interval,
-                    )
-                else:
-                    _decode_scan_ac_refine(
-                        reader, ci, ac_tab, coefs, comp_block_ids(ci),
-                        ss, se, al, restart_interval,
-                    )
+                decode_ac = _decode_scan_ac_refine if ah else _decode_scan_ac_first
+                decode_ac(
+                    reader, ci, ac_tab, coefs, _comp_raster(h, w, samp, grids, ci),
+                    ss, se, al, restart_interval,
+                )
             n_scans += 1
             pos = scan_end
             continue
         pos += 2 + seglen
     if sof is None or coefs is None or n_scans == 0:
         raise ValueError("no SOF frame / SOS scan found")
-    h, w, comps, hmax, vmax, mcux, mcuy, grids = sof
+    h, w, comps, samp, mcux, mcuy, grids = sof
+    hmax = max(hi for hi, _vi in samp)
+    vmax = max(vi for _hi, vi in samp)
     planes = []
     for ci, (_cid, tq, hi, vi) in enumerate(comps):
         q = qtbls.get(tq)
@@ -1385,8 +1208,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 )
         # crop to the component's true dims, then replication-upsample
         # subsampled chroma back to full resolution (r11 — 4:2:0/4:2:2)
-        ch = (h * vi + vmax - 1) // vmax
-        cw = (w * hi + hmax - 1) // hmax
+        ch, cw = _comp_dims(h, w, samp, ci)
         plane = plane[:ch, :cw]
         if vi < vmax:
             plane = np.repeat(plane, vmax // vi, axis=0)

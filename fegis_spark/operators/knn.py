@@ -104,17 +104,23 @@ LSH_TABLES = 3
 LSH_MAX_DISTANCE = 10.0
 
 
-def _features(vec_col: str) -> Column:
+def _features(df: DataFrame, vec_col: str, *cols: Column) -> DataFrame:
+    """``cols`` plus the vector as the MLlib "features" column of the
+    BRP-LSH operators. A NULL vector takes no part: its row is dropped
+    (MLlib's array_to_vector fails on NULL)."""
     from pyspark.ml.functions import array_to_vector
 
-    return array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+    return df.filter(F.col(vec_col).isNotNull()).select(
+        *cols, array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+    )
 
 
-def _brp_model(corpus_df: DataFrame, vec_col: str, feats: DataFrame):
+def _brp_model(feats: DataFrame):
     """The one seeded BRP-LSH fit (seed 42, LSH_TABLES tables) over
-    ``feats``' "features" column. The bucket length is sigma/2 =
-    0.5/sqrt(dim), dim read from corpus_df's first row (1-row bounded
-    driver round-trip): a unit vector projects onto a random unit
+    ``feats``' "features" column (a _features frame). The bucket
+    length is sigma/2 = 0.5/sqrt(dim), dim read from the first
+    features row (1-row bounded driver round-trip; 64 when there is
+    none): a unit vector projects onto a random unit
     hyperplane with std 1/sqrt(dim), so any fixed bucket length >>
     sigma puts every row in the one or two buckets around zero and the
     per-table equi-join degenerates to ~n^2/2 brute force (the r11
@@ -123,8 +129,8 @@ def _brp_model(corpus_df: DataFrame, vec_col: str, feats: DataFrame):
     evidence/brp_occupancy_r12.json)."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
 
-    first = corpus_df.select(vec_col).head()
-    dim = len(first[0]) if first is not None else 64
+    first = feats.select("features").head()
+    dim = first[0].size if first is not None else 64
     return BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="hashes",
@@ -146,9 +152,9 @@ def knn_join_lsh(
     cosine on normalized vectors; model and bucket length from
     _brp_model). Candidate generation is a bucket equi-join — no cross
     product. Rows-only correctness (approximate by construction)."""
-    q = queries_df.select(F.col(query_id).alias("query_id"), _features(vec_col))
-    c = corpus_df.select(F.col(corpus_id).alias("corpus_id"), _features(vec_col))
-    model = _brp_model(corpus_df, vec_col, c)
+    q = _features(queries_df, vec_col, F.col(query_id).alias("query_id"))
+    c = _features(corpus_df, vec_col, F.col(corpus_id).alias("corpus_id"))
+    model = _brp_model(c)
     pairs = model.approxSimilarityJoin(c, q, LSH_MAX_DISTANCE, distCol="dist")
     flat = pairs.select(
         F.col("datasetB.query_id").alias("query_id"),
@@ -175,8 +181,8 @@ def lsh_bucket_stats(corpus_df: DataFrame, vec_col: str = "embedding") -> DataFr
     ann_lsh_recall_audit)."""
     from pyspark.ml.functions import vector_to_array
 
-    c = corpus_df.select(_features(vec_col))
-    t = _brp_model(corpus_df, vec_col, c).transform(c).select(
+    c = _features(corpus_df, vec_col)
+    t = _brp_model(c).transform(c).select(
         vector_to_array(F.col("hashes")[0])[0].cast("bigint").alias("b0")
     )
     return (
@@ -392,13 +398,16 @@ def _nearest_lists(
     ``n_keep`` most cosine-similar lists of ``cent_df`` (list_id,
     centroid), ties to the lower list_id. Adds list_id, the row norm
     ``__rn`` (reused by probe scans) and the centroid cosine
-    ``__sim``. Norms are precomputed per side (row norm once per row,
-    centroid norms once on the panel — bit-identical to the cosine()
+    ``__sim``. A NULL vector takes no part: its row is dropped (every
+    centroid cosine would be NULL and the list_id tie-break would file
+    it under list 0). Norms are precomputed per side (row norm once
+    per row, centroid norms once on the panel — bit-identical to the cosine()
     fold, 1.8x less CPU per pair; evidence/cosine_codegen_ab_r14.json).
     """
     cents = cent_df.withColumn("__ctn", F.expr(norm_sql("centroid")))
     scored = (
-        df.withColumn("__rn", F.expr(norm_sql(vec_col)))
+        df.filter(F.col(vec_col).isNotNull())
+        .withColumn("__rn", F.expr(norm_sql(vec_col)))
         .crossJoin(F.broadcast(cents))  # bcast-ok: n_lists centroids
         .withColumn("__sim", _parts(vec_col, "centroid", "__rn", "__ctn"))
     )

@@ -23,7 +23,6 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: canonical multimodal record: opaque payload + typed metadata
@@ -154,13 +153,20 @@ def encode_bmp(arr: np.ndarray) -> bytes:
     return header + dib + pixel_bytes
 
 
-def make_bmp(width: int, height: int, seed: int = 0) -> bytes:
-    """Deterministic real 24-bit BMP bytes (same gradient as make_ppm)."""
+def _gradient_rgb(width: int, height: int, seed: int = 0) -> np.ndarray:
+    """The seeded uint8 (height, width, 3) RGB gradient every raster
+    image fixture draws (make_ppm, make_bmp, make_jpeg_real,
+    make_jpeg_prog_real): R = 7x, G = 11y, B = x + y, each + seed,
+    mod 256."""
     y, x = np.mgrid[0:height, 0:width]
-    rgb = np.stack(
+    return np.stack(
         [(x * 7 + seed) % 256, (y * 11 + seed) % 256, (x + y + seed) % 256], axis=-1
     ).astype(np.uint8)
-    return encode_bmp(rgb)
+
+
+def make_bmp(width: int, height: int, seed: int = 0) -> bytes:
+    """Deterministic real 24-bit BMP bytes (the _gradient_rgb raster)."""
+    return encode_bmp(_gradient_rgb(width, height, seed))
 
 
 #: SOF segment markers (C0-CF minus DHT C4, JPG C8, DAC CC) — the
@@ -240,68 +246,36 @@ def make_jpeg(
 
 def make_jpeg_real(
     width: int, height: int, seed: int = 0, quality: int = 90,
-    restart_interval: int = 0,
+    restart_interval: int = 0, y_samp: tuple[int, int] = (1, 1),
 ) -> bytes:
-    """Deterministic REAL baseline JPEG bytes (entropy-coded scan, the
-    make_ppm/make_bmp gradient family) via operators/jpegcodec —
-    unlike make_jpeg, whose payload is metadata-only. restart_interval
-    emits DRI/RSTn markers (r11)."""
+    """Deterministic REAL baseline JPEG bytes (entropy-coded scan over
+    the _gradient_rgb raster) via operators/jpegcodec.encode_jpeg —
+    unlike make_jpeg, whose payload is metadata-only.
+    restart_interval emits DRI/RSTn markers (r11); y_samp=(2, 2) /
+    (2, 1) emits 4:2:0 / 4:2:2 interleaved subsampled MCUs."""
     from fegis_spark.operators.jpegcodec import encode_jpeg
 
-    y, x = np.mgrid[0:height, 0:width]
-    rgb = np.stack(
-        [(x * 7 + seed) % 256, (y * 11 + seed) % 256, (x + y + seed) % 256],
-        axis=-1,
-    ).astype(np.uint8)
-    return encode_jpeg(rgb, quality=quality, restart_interval=restart_interval)
-
-
-def make_jpeg_prog420_real(width: int, height: int, seed: int = 0) -> bytes:
-    """Deterministic real PROGRESSIVE 4:2:0 JPEG (r11): SOF2 multi-scan
-    with interleaved subsampled DC scans + per-component AC scans —
-    the combined profile that was the codec's last named stub."""
-    from fegis_spark.operators.jpegcodec import encode_jpeg_progressive
-
-    y, x = np.mgrid[0:height, 0:width]
-    rgb = np.stack(
-        [(x * 7 + seed) % 256, (y * 11 + seed) % 256, (x + y + seed) % 256],
-        axis=-1,
-    ).astype(np.uint8)
-    return encode_jpeg_progressive(rgb, y_samp=(2, 2))
+    return encode_jpeg(
+        _gradient_rgb(width, height, seed), quality=quality,
+        restart_interval=restart_interval, y_samp=y_samp,
+    )
 
 
 def make_jpeg_prog_real(
-    width: int, height: int, seed: int = 0, quality: int = 90
+    width: int, height: int, seed: int = 0, quality: int = 90,
+    y_samp: tuple[int, int] = (1, 1),
 ) -> bytes:
     """Deterministic REAL progressive JPEG bytes (SOF2, 2-level
-    successive-approximation scan script; same gradient family as
-    make_jpeg_real) via operators/jpegcodec.encode_jpeg_progressive —
-    decodes to the SAME pixels as the baseline encoding of the same
-    gradient (the codec's cross-check invariant)."""
+    successive-approximation scan script over the _gradient_rgb raster)
+    via operators/jpegcodec.encode_jpeg_progressive — decodes to the
+    SAME pixels as make_jpeg_real at the same quality and y_samp (the
+    codec's cross-check invariant). y_samp=(2, 2) gives interleaved
+    subsampled DC scans + per-component AC scans (r11)."""
     from fegis_spark.operators.jpegcodec import encode_jpeg_progressive
 
-    y, x = np.mgrid[0:height, 0:width]
-    rgb = np.stack(
-        [(x * 7 + seed) % 256, (y * 11 + seed) % 256, (x + y + seed) % 256],
-        axis=-1,
-    ).astype(np.uint8)
-    return encode_jpeg_progressive(rgb, quality=quality)
-
-
-def make_jpeg_420_real(
-    width: int, height: int, seed: int = 0, quality: int = 90
-) -> bytes:
-    """Deterministic REAL baseline 4:2:0 JPEG bytes (interleaved
-    2x2-sampled MCUs; same gradient family) via
-    operators/jpegcodec.encode_jpeg_420."""
-    from fegis_spark.operators.jpegcodec import encode_jpeg_420
-
-    y, x = np.mgrid[0:height, 0:width]
-    rgb = np.stack(
-        [(x * 7 + seed) % 256, (y * 11 + seed) % 256, (x + y + seed) % 256],
-        axis=-1,
-    ).astype(np.uint8)
-    return encode_jpeg_420(rgb, quality=quality)
+    return encode_jpeg_progressive(
+        _gradient_rgb(width, height, seed), quality=quality, y_samp=y_samp
+    )
 
 
 def parse_png_header(data: bytes) -> dict:
@@ -1432,13 +1406,9 @@ def audio_stats(df: DataFrame, codec: Codec | None = None) -> DataFrame:
 
 
 def make_ppm(width: int, height: int, seed: int = 0) -> bytes:
-    """Deterministic real P6 PPM bytes (gradient + seed offset)."""
+    """Deterministic real P6 PPM bytes (the _gradient_rgb raster)."""
     header = f"P6\n# test image\n{width} {height}\n255\n".encode()
-    y, x = np.mgrid[0:height, 0:width]
-    rgb = np.stack(
-        [(x * 7 + seed) % 256, (y * 11 + seed) % 256, (x + y + seed) % 256], axis=-1
-    ).astype(np.uint8)
-    return header + rgb.tobytes()
+    return header + _gradient_rgb(width, height, seed).tobytes()
 
 
 def make_pgm(width: int, height: int, seed: int = 0) -> bytes:

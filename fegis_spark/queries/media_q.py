@@ -49,16 +49,11 @@ def _audio_payload(i: int) -> bytes:
 def _image_payload(i: int) -> tuple[bytes, str]:
     from fegis_spark.operators.multimodal import (
         make_bmp,
+        make_gif,
+        make_jpeg_prog_real,
         make_jpeg_real,
         make_png,
         make_ppm,
-    )
-
-    from fegis_spark.operators.multimodal import (
-        make_gif,
-        make_jpeg_420_real,
-        make_jpeg_prog420_real,
-        make_jpeg_prog_real,
     )
 
     # alternate codecs so the magic-byte dispatch is exercised; PNG
@@ -97,7 +92,7 @@ def _image_payload(i: int) -> tuple[bytes, str]:
     if k == 6:
         return make_png(16, 12, color_type=6, seed=i), "image/png"
     if k == 7:
-        return make_jpeg_420_real(16, 12, seed=i), "image/jpeg"
+        return make_jpeg_real(16, 12, seed=i, y_samp=(2, 2)), "image/jpeg"
     if k == 8:
         return make_jpeg_real(16, 12, seed=i, restart_interval=2), "image/jpeg"
     if k == 10:
@@ -116,7 +111,10 @@ def _image_payload(i: int) -> tuple[bytes, str]:
     if k == 15:
         return make_gif(16, 12, seed=i, local_palette=True), "image/gif"
     if k == 16:
-        return make_jpeg_prog420_real(16, 12, seed=i), "image/jpeg"
+        return (
+            make_jpeg_prog_real(16, 12, seed=i, quality=75, y_samp=(2, 2)),
+            "image/jpeg",
+        )
     return make_gif(16, 12, seed=i), "image/gif"
 
 

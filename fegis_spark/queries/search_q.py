@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from fegis_spark.catalog import register
 from fegis_spark.model import load_table
 from fegis_spark.operators.rrf import rrf_fuse
-from fegis_spark.operators.text_analysis import occurrences, padded
 from fegis_spark.queries.sqlfrag import duck_tokens, portable_ln
 from fegis_spark.queries.vector_q import _COS, _query_vec
 

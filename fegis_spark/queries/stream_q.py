@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from fegis_spark.catalog import register
 from fegis_spark.ingest import ingest_batch
 from fegis_spark.model import load_table
-from fegis_spark.streaming.sessionize import session_stats_batch
 
 
 @register(
@@ -47,8 +46,6 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # deterministic total order under ties: add event_id to the window sort
     from pyspark.sql import Window
-
-    from fegis_spark.streaming.sessionize import sessionize_batch
 
     # grpwin-ok: user_id cardinality scales with input
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

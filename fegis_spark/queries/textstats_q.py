@@ -2099,8 +2099,6 @@ def text_mojibake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from fegis_spark.operators.sketches import (  # noqa: E402
-    CMS_D,
-    CMS_W,
     cms_bucket_sql,
     cms_build,
     cms_estimate,
@@ -2139,7 +2137,7 @@ _CMS_ROWS_SQL = "(SELECT * FROM (VALUES (0), (1), (2), (3)) v(r))"
 )
 def cms_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] Count-Min Sketch audit (Cormode & Muthukrishnan 2005):
-    build a {CMS_D}x{CMS_W} CMS over the corpus token stream, point-
+    build a CMS_D x CMS_W CMS over the corpus token stream, point-
     query it for the exact top-20 tokens, and emit estimate vs truth
     with the one-sided-error invariant (a CMS can only OVERcount) as
     an oracle-asserted boolean per row — the trust-but-verify audit
@@ -2148,7 +2146,7 @@ def cms_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-stream hashing makes the sketch deterministic and therefore
     value-checkable cross-engine — no seeded RNG.
 
-    Scale: the token stream fans out x{CMS_D} map-side but partial
+    Scale: the token stream fans out x CMS_D map-side but partial
     aggregation caps the CMS shuffle at partitions*d*w rows; the
     probe/estimate side is broadcast-only. Corpus-size input,
     constant-size state — the CMS contract. (The exact top-20 side

@@ -8,17 +8,10 @@ stream — here, per-user event values drifting from an expected level.
 State is O(1) per key (three numbers), no window buffering — exactly
 the shape arbitrary-state APIs exist for.
 
-Two implementations of the same fold:
-
-* ``cusum_drift_stream`` — `applyInPandasWithState`, fully working in
-  this environment and driven end-to-end in tests/test_drift_stream.py.
-* ``cusum_drift_stream_tws`` — the Spark 4 `transformWithStateInPandas`
-  form with a typed ValueState. Its driver worker hard-requires
-  `google.protobuf` (state-schema messages), which this container does
-  not ship, so the function import-gates and raises with a clear
-  message — same policy as the qdrant/fastembed surfaces. The fold and
-  schemas are identical, so flipping to it is a one-call swap where
-  protobuf exists.
+``cusum_drift_stream`` runs the fold through `applyInPandasWithState`,
+driven end-to-end in tests/test_drift_stream.py. Spark 4's
+`transformWithStateInPandas` is not used: its driver worker requires
+`google.protobuf`.
 
 Rows are folded in event-time order WITHIN each micro-batch (sorted
 on ts before the fold) so results are deterministic for a given batch
@@ -69,68 +62,6 @@ def cusum_drift_stream(
 
     return events.groupBy("user_id").applyInPandasWithState(
         fn, OUTPUT_SCHEMA, STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def cusum_drift_stream_tws(
-    events: DataFrame,
-    target: float,
-    slack: float,
-    h: float,
-) -> DataFrame:
-    """`transformWithStateInPandas` form of the same fold (typed
-    ValueState, RocksDB state store). Requires `google.protobuf` for
-    the state-schema driver worker — absent from this container, so
-    this raises ImportError up front instead of crashing the query
-    mid-run (verified failure mode: STREAMING_PYTHON_RUNNER_
-    INITIALIZATION_FAILURE, 'cannot import name descriptor')."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:  # pragma: no cover - environment-blocked
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf (not shipped "
-            "in this container); use cusum_drift_stream instead"
-        ) from e
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class CusumProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("cusum", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            pos, neg, n = (
-                self._state.get() if self._state.exists() else (0.0, 0.0, 0)
-            )
-            batch = pd.concat(list(rows))
-            if len(batch):
-                for x in batch.sort_values("ts")["value"]:
-                    pos = max(0.0, pos + (float(x) - target - slack))
-                    neg = min(0.0, neg + (float(x) - target + slack))
-                    n += 1
-            self._state.update((pos, neg, n))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "cusum_pos": [pos],
-                    "cusum_neg": [neg],
-                    "drifted": [pos > h or neg < -h],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=CusumProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

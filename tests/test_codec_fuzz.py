@@ -27,7 +27,6 @@ from fegis_spark.operators.multimodal import (
     make_bmp,
     make_gif,
     make_jpeg,
-    make_jpeg_420_real,
     make_jpeg_prog_real,
     make_jpeg_real,
     make_png,
@@ -45,7 +44,7 @@ FIXTURES = {
     "jpeg_hdr": make_jpeg(32, 24),
     "jpeg_real": make_jpeg_real(16, 12),
     "jpeg_prog": make_jpeg_prog_real(16, 12),
-    "jpeg_420": make_jpeg_420_real(16, 12),
+    "jpeg_420": make_jpeg_real(16, 12, y_samp=(2, 2)),
     "avi": make_avi_mjpeg(16, 12, 3),
     "wav": make_wav(800),
 }

@@ -1,8 +1,6 @@
 """CUSUM drift detection as a custom stateful streaming operator
 (streaming/drift.py): end-to-end through readStream + AvailableNow,
-final per-key state pinned against the sequential CUSUM fold. The
-transformWithStateInPandas twin is environment-blocked (needs
-google.protobuf) — its guard is pinned instead."""
+final per-key state pinned against the sequential CUSUM fold."""
 
 from __future__ import annotations
 
@@ -12,11 +10,7 @@ import time
 import pytest
 from pyspark.sql import SparkSession
 
-from fegis_spark.streaming.drift import (
-    cusum_drift_stream,
-    cusum_drift_stream_tws,
-    cusum_reference,
-)
+from fegis_spark.streaming.drift import cusum_drift_stream, cusum_reference
 
 TARGET, SLACK, H = 10.0, 0.5, 25.0
 
@@ -86,24 +80,3 @@ def test_cusum_stream_matches_sequential_fold(spark, tmp_path):
         assert r.drifted == drifted, (user, r)
     # the construction actually exercises both outcomes
     assert final["u1"].drifted and not final["u2"].drifted
-
-
-def test_tws_form_is_import_gated(spark):
-    """The transformWithStateInPandas twin must fail fast with a clear
-    message where protobuf is absent (instead of crashing the query
-    mid-run), and must work identically where it is present."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    sdf = spark.readStream.format("rate").load().selectExpr(
-        "CAST(value AS STRING) AS user_id", "value AS ts",
-        "CAST(value AS DOUBLE) AS value"
-    )
-    if not has_protobuf:
-        with pytest.raises(ImportError, match="protobuf"):
-            cusum_drift_stream_tws(sdf, TARGET, SLACK, H)
-    else:  # pragma: no cover - exercised only in protobuf-equipped envs
-        assert cusum_drift_stream_tws(sdf, TARGET, SLACK, H) is not None

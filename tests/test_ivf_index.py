@@ -170,6 +170,51 @@ def test_ann_ivf_trains_past_a_null_vector(spark, null_bearing):
     }
 
 
+def test_ann_ivf_skips_null_vectors(spark, null_bearing):
+    """A NULL vector takes no part: probing every list with k past the
+    corpus size returns each non-NULL corpus row once per non-NULL
+    query, never the NULL row, and no answer for the NULL query."""
+    queries = null_bearing.filter((F.col("vec_id") < 2) | (F.col("vec_id") == 200))
+    got = ann_ivf(
+        queries, null_bearing, "vec_id", "vec_id", k=500, n_lists=4, n_probe=4
+    ).collect()
+    assert {r.query_id for r in got} == {0, 1}
+    assert len(got) == 2 * 200
+    assert all(r.corpus_id != 200 and r.score is not None for r in got)
+
+
+def test_build_ivf_index_skips_null_vectors(spark, null_bearing, tmp_path):
+    path = str(tmp_path / "index")
+    build_ivf_index(null_bearing, path, "vec_id", n_lists=4)
+    stored = spark.read.parquet(ivf_corpus_dir(path))
+    assert stored.count() == 200
+    assert stored.filter(F.col("vec_id") == 200).count() == 0
+
+
+def test_knn_join_lsh_skips_null_vectors(spark, null_bearing):
+    """NULL vectors on either side drop out of the BRP-LSH join — also
+    when the corpus's first row is NULL (the dim is read from the
+    first non-NULL vector)."""
+    from fegis_spark.operators.knn import knn_join_lsh
+
+    null_first = null_bearing.filter(F.col("vec_id") == 200).unionByName(
+        null_bearing.filter(F.col("vec_id") != 200)
+    ).coalesce(1)
+    queries = null_bearing.filter((F.col("vec_id") < 3) | (F.col("vec_id") == 200))
+    got = knn_join_lsh(queries, null_first, "vec_id", "vec_id", k=3).collect()
+    assert 200 not in {r.query_id for r in got} | {r.corpus_id for r in got}
+    assert {(r.query_id, r.corpus_id) for r in got if r.rank == 1} == {
+        (i, i) for i in range(3)
+    }
+
+
+def test_lsh_bucket_stats_skips_null_vectors(spark, null_bearing):
+    from fegis_spark.operators.knn import lsh_bucket_stats
+
+    (row,) = lsh_bucket_stats(null_bearing).collect()
+    assert row.n_rows == 200 and row.max_bucket <= row.n_rows
+
+
 def test_semantic_dedup_trained_past_a_null_vector(spark, null_bearing):
     from fegis_spark.operators.dedup import semantic_dedup_trained
 
@@ -179,7 +224,7 @@ def test_semantic_dedup_trained_past_a_null_vector(spark, null_bearing):
             null_bearing, "embedding", "vec_id", n_lists=4
         ).collect()
     }
-    assert len(got) == 201 and not got[200].is_dup
+    assert len(got) == 200 and 200 not in got
 
 
 def test_compaction_reduces_files_preserves_rows(spark, ivf_index, tmp_path_factory):

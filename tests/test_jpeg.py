@@ -274,8 +274,7 @@ class TestProgressiveSubsampled:
 
         from fegis_spark.operators.jpegcodec import (
             decode_jpeg,
-            encode_jpeg_420,
-            encode_jpeg_422,
+            encode_jpeg,
             encode_jpeg_progressive,
         )
 
@@ -287,11 +286,11 @@ class TestProgressiveSubsampled:
             img = rng.integers(0, 256, shape, dtype=np.uint8)
             assert (
                 decode_jpeg(encode_jpeg_progressive(img, y_samp=(2, 2)))
-                == decode_jpeg(encode_jpeg_420(img))
+                == decode_jpeg(encode_jpeg(img, y_samp=(2, 2)))
             ).all(), shape
             assert (
                 decode_jpeg(encode_jpeg_progressive(img, y_samp=(2, 1)))
-                == decode_jpeg(encode_jpeg_422(img))
+                == decode_jpeg(encode_jpeg(img, y_samp=(2, 1)))
             ).all(), shape
 
     def test_prog420_with_restarts(self):
@@ -299,13 +298,13 @@ class TestProgressiveSubsampled:
 
         from fegis_spark.operators.jpegcodec import (
             decode_jpeg,
-            encode_jpeg_420,
+            encode_jpeg,
             encode_jpeg_progressive,
         )
 
         rng = np.random.default_rng(43)
         img = rng.integers(0, 256, (24, 40, 3), dtype=np.uint8)
-        want = decode_jpeg(encode_jpeg_420(img))
+        want = decode_jpeg(encode_jpeg(img, y_samp=(2, 2)))
         for ri in (1, 2, 3):
             got = decode_jpeg(
                 encode_jpeg_progressive(img, y_samp=(2, 2), restart_interval=ri)
@@ -315,14 +314,14 @@ class TestProgressiveSubsampled:
     def test_fixture_header_and_determinism(self):
         from fegis_spark.operators.jpegcodec import decode_jpeg
         from fegis_spark.operators.multimodal import (
-            make_jpeg_prog420_real,
+            make_jpeg_prog_real,
             parse_jpeg_header,
         )
 
-        p = make_jpeg_prog420_real(16, 12, seed=5)
+        p = make_jpeg_prog_real(16, 12, seed=5, quality=75, y_samp=(2, 2))
         hdr = parse_jpeg_header(p)
         assert hdr["progressive"] and (hdr["width"], hdr["height"]) == (16, 12)
-        assert p == make_jpeg_prog420_real(16, 12, seed=5)
+        assert p == make_jpeg_prog_real(16, 12, seed=5, quality=75, y_samp=(2, 2))
         assert decode_jpeg(p).shape == (12, 16, 3)
 
     def test_grayscale_subsampled_encode_rejected(self):
@@ -429,25 +428,21 @@ class TestSubsampled420:
     identically — any MCU-ordering or upsample bug breaks it."""
 
     def test_constant_chroma_identical_to_444(self):
-        from fegis_spark.operators.jpegcodec import encode_jpeg_420
-
         rng = np.random.default_rng(9)
         for shape in [(24, 24), (17, 19), (15, 33)]:
             g = rng.integers(0, 256, shape, dtype=np.uint8)
             gr = np.stack([g, g, g], -1)
             a = decode_jpeg(encode_jpeg(gr, 85))
-            b = decode_jpeg(encode_jpeg_420(gr, 85))
+            b = decode_jpeg(encode_jpeg(gr, 85, y_samp=(2, 2)))
             assert a.shape == b.shape == gr.shape
             assert (a == b).all()
 
     def test_smooth_color_fidelity_and_size_win(self):
-        from fegis_spark.operators.jpegcodec import encode_jpeg_420
-
         y, x = np.mgrid[0:33, 0:41]
         img = np.stack(
             [(x * 3 + y) % 256, (y * 2 + x) % 256, (x + y) % 256], -1
         ).astype(np.uint8)
-        p420 = encode_jpeg_420(img, 90)
+        p420 = encode_jpeg(img, 90, y_samp=(2, 2))
         d = decode_jpeg(p420)
         assert d.shape == img.shape
         assert _psnr(img, d) > 40
@@ -455,29 +450,25 @@ class TestSubsampled420:
         assert len(p420) < len(encode_jpeg(img, 90))
 
     def test_partial_mcu_shapes(self):
-        from fegis_spark.operators.jpegcodec import encode_jpeg_420
-
         rng = np.random.default_rng(2)
         for shape in [(17, 19, 3), (15, 33, 3), (8, 8, 3), (1, 1, 3), (9, 40, 3)]:
             im = rng.integers(0, 256, shape, dtype=np.uint8)
-            assert decode_jpeg(encode_jpeg_420(im, 95)).shape == shape
+            assert decode_jpeg(encode_jpeg(im, 95, y_samp=(2, 2))).shape == shape
 
     def test_determinism_and_sampling_byte(self):
-        from fegis_spark.operators.jpegcodec import encode_jpeg_420
-
         img = _gradient(20, 18, seed=4)
-        p1, p2 = encode_jpeg_420(img, 80), encode_jpeg_420(img, 80)
+        p1 = encode_jpeg(img, 80, y_samp=(2, 2))
+        p2 = encode_jpeg(img, 80, y_samp=(2, 2))
         assert p1 == p2
         # SOF0 with Y sampling 0x22
         sof_at = p1.index(b"\xff\xc0")
         assert p1[sof_at + 11] == 0x22  # comp 1 sampling byte
 
     def test_codec_dispatch_decodes_420(self):
-        from fegis_spark.operators.jpegcodec import encode_jpeg_420
         from fegis_spark.operators.multimodal import Codec
 
         img = _gradient(16, 12, seed=6)
-        out = Codec(fake=False).decode_image(encode_jpeg_420(img, 90))
+        out = Codec(fake=False).decode_image(encode_jpeg(img, 90, y_samp=(2, 2)))
         assert out.shape == (12, 16, 3)
         assert _psnr(img, out) > 35
 
@@ -487,24 +478,18 @@ class TestSubsampled420:
         4:2:0 stream to SOF2 must still reject: its single interleaved
         full-band scan (Ss=0, Se=63) is an invalid progressive scan
         script."""
-        from fegis_spark.operators.jpegcodec import encode_jpeg_420
-
-        payload = encode_jpeg_420(_gradient(16, 16), 80)
+        payload = encode_jpeg(_gradient(16, 16), 80, y_samp=(2, 2))
         prog = payload.replace(b"\xff\xc0", b"\xff\xc2")
         with pytest.raises(ValueError, match="Se=0"):
             decode_jpeg(prog)
 
     def test_gray_rejects_in_420_encoder(self):
-        from fegis_spark.operators.jpegcodec import encode_jpeg_420
-
         with pytest.raises(ValueError, match="RGB"):
-            encode_jpeg_420(np.zeros((8, 8), np.uint8))
+            encode_jpeg(np.zeros((8, 8), np.uint8), y_samp=(2, 2))
 
     def test_property_shapes_and_constant_chroma(self):
         from hypothesis import given, settings
         from hypothesis import strategies as st
-
-        from fegis_spark.operators.jpegcodec import encode_jpeg_420
 
         @settings(max_examples=10, deadline=None, derandomize=True)
         @given(
@@ -517,7 +502,7 @@ class TestSubsampled420:
             g = rng.integers(0, 256, (h, w), dtype=np.uint8)
             gr = np.stack([g, g, g], -1)
             a = decode_jpeg(encode_jpeg(gr, 85))
-            b = decode_jpeg(encode_jpeg_420(gr, 85))
+            b = decode_jpeg(encode_jpeg(gr, 85, y_samp=(2, 2)))
             assert (a == b).all()
 
         check()
@@ -526,20 +511,19 @@ class TestSubsampled420:
 def test_422_constant_chroma_identity_and_fidelity():
     # r11: 4:2:2 (2x1 Y sampling) — certifies the horizontal-only
     # subsampled MCU walk the same way 4:2:0 certifies 2x2
-    from fegis_spark.operators.jpegcodec import encode_jpeg_422
-
     rng = np.random.default_rng(13)
     for shape in [(24, 24), (17, 19), (15, 33)]:
         g = rng.integers(0, 256, shape, dtype=np.uint8)
         gr = np.stack([g, g, g], -1)
         assert (
-            decode_jpeg(encode_jpeg(gr, 85)) == decode_jpeg(encode_jpeg_422(gr, 85))
+            decode_jpeg(encode_jpeg(gr, 85))
+            == decode_jpeg(encode_jpeg(gr, 85, y_samp=(2, 1)))
         ).all()
     y, x = np.mgrid[0:33, 0:41]
     img = np.stack(
         [(x * 3 + y) % 256, (y * 2 + x) % 256, (x + y) % 256], -1
     ).astype(np.uint8)
-    payload = encode_jpeg_422(img, 90)
+    payload = encode_jpeg(img, 90, y_samp=(2, 1))
     assert _psnr(img, decode_jpeg(payload)) > 40
     assert payload[payload.index(b"\xff\xc0") + 11] == 0x21
 
@@ -569,14 +553,21 @@ class TestRestartIntervals:
         assert b"\xff\xdd" in payload  # DRI segment present
 
     def test_subsampled_restarts_decode(self):
-        # DRI applies per MCU — on the 4:2:0 grid too. No subsampled
-        # restart ENCODER (scope), so splice: re-encode 444 w/ restarts
-        # is covered above; here just check a 420 stream with DRI=0
-        # (no restarts declared) still decodes — and that a corrupted
-        # restart sequence rejects loudly
+        # DRI applies per MCU — on the 4:2:0 (16x16) and 4:2:2 (16x8)
+        # grids too: restarts stay bit-identical to the restart-free
+        # decode, and a corrupted restart sequence rejects loudly
         rng = np.random.default_rng(7)
-        img = rng.integers(0, 256, (24, 24, 3), dtype=np.uint8)
-        payload = encode_jpeg(img, 85, restart_interval=3)
+        for shape in [(24, 24, 3), (17, 23, 3), (8, 8, 3), (33, 41, 3), (9, 40, 3)]:
+            img = rng.integers(0, 256, shape, dtype=np.uint8)
+            for y_samp in ((2, 2), (2, 1)):
+                base = decode_jpeg(encode_jpeg(img, 85, y_samp=y_samp))
+                for r in (1, 2, 3, 5):
+                    got = decode_jpeg(
+                        encode_jpeg(img, 85, restart_interval=r, y_samp=y_samp)
+                    )
+                    assert (got == base).all(), (shape, y_samp, r)
+        img = rng.integers(0, 256, (24, 40, 3), dtype=np.uint8)
+        payload = encode_jpeg(img, 85, restart_interval=3, y_samp=(2, 2))
         # corrupt the first RST marker's index (D0+k -> D7)
         idx = None
         for i in range(len(payload) - 1):
@@ -610,3 +601,38 @@ class TestRestartIntervals:
                     encode_jpeg_progressive(img, 85, restart_interval=r)
                 )
                 assert (got == base).all()
+
+
+#: sha256 of fixed encodings of one 21x19 gradient at quality 85 —
+#: these bytes feed the media fixtures and their oracles
+_ENCODER_DIGESTS = {
+    "base_gray": "b9abe9c514f678c52ae04a2f3ca9a3210af2c38e9f5a8958f75b28cc30e91ab5",
+    "base_444": "ec765eaccbf9e90fe4e0042f339d57b311ffdd262aa668be35aa4ee0b60016a5",
+    "base_444_r2": "15a2587c8343bd9c6d374ca1bd5cf86553e294f12b36b708b00e974328e55aa0",
+    "base_420": "8c48ec81fe0ab54de171effed2f284e0e6c771c4803fc7c24b23b09495ece62c",
+    "base_422": "5c579266dc0fc93ee9fc214a5a4c315fa5c3d782b7b246581a37a75e3b1acb78",
+    "prog_444": "edf3ca229698bd395c9f984f2ad06d2fe9fe4db279073997812bd4b56d16a967",
+    "prog_444_r2": "904ad44d9c74d0e7154f1835691d43932f797bc062bc24df3796d435ed472b87",
+    "prog_420": "260a8f4685822709c5b1185b49d6765d878dcfff727bc74fcdc506da6db5649c",
+    "prog_420_r2": "ec723bea6a19449f03a4d6b81570807640ceb5573eb7047d2a6dca143f11d3ef",
+    "prog_422": "0adf1ac78332ec5a427416d3309ce8fb68bb75fac4b5c8b9dfc8958a3fc2a556",
+    "prog_422_r2": "0c20ffac56d0badf4178382db30cf92a68d1d8415277310114ddf971885186e0",
+}
+
+
+def test_encoder_bytes_pinned():
+    import hashlib
+
+    from fegis_spark.operators.jpegcodec import encode_jpeg_progressive
+
+    rgb = _gradient(21, 19, seed=5)
+    samplings = {"444": (1, 1), "420": (2, 2), "422": (2, 1)}
+    got = {"base_gray": encode_jpeg(rgb[..., 2], 85)}
+    got["base_444_r2"] = encode_jpeg(rgb, 85, restart_interval=2)
+    for name, y_samp in samplings.items():
+        got[f"base_{name}"] = encode_jpeg(rgb, 85, y_samp=y_samp)
+        got[f"prog_{name}"] = encode_jpeg_progressive(rgb, 85, y_samp=y_samp)
+        got[f"prog_{name}_r2"] = encode_jpeg_progressive(
+            rgb, 85, restart_interval=2, y_samp=y_samp
+        )
+    assert {k: hashlib.sha256(v).hexdigest() for k, v in got.items()} == _ENCODER_DIGESTS

@@ -49,7 +49,7 @@ LIBRARY_ONLY = {
     "[EXT]-c4-lines": ("C4-style line cleaning + Gopher line-shape rules (single-line corpus → library)", "operators/text_analysis.c4_clean_lines + line_shape_metrics (tests/test_gopher.py)"),
     "[EXT]-webdataset": ("WebDataset tar shard export (byte-deterministic, manifest-returning)", "sources/export.write_webdataset_shards (tests/test_webdataset.py)"),
     "§2.10-cdc": ("streaming CDC merge into pointer-committed parquet snapshots (idempotent epoch replay)", "streaming/cdc.py (tests/test_cdc_stream.py)"),
-    "§2.10-drift": ("per-key CUSUM drift detection (applyInPandasWithState; transformWithState twin import-gated on protobuf)", "streaming/drift.py (tests/test_drift_stream.py)"),
+    "§2.10-drift": ("per-key CUSUM drift detection (applyInPandasWithState)", "streaming/drift.py (tests/test_drift_stream.py)"),
     "[EXT]-semdedup-trained": ("SemDeDup with trained centroids (seeded k-means||) — the n_lists-scales-with-corpus production route; verdict algebra shared verbatim with the oracle-checked dedup_semantic twin", "operators/dedup.semantic_dedup_trained (tests/test_ingest_dedup.py, evidence/semdedup_scaling_r14.json)"),
 }
 
