@@ -10,7 +10,7 @@ Okapi BM25 with the Lucene idf form (always positive):
 where tf is the term's token frequency in the document, dl the
 document's token count, and avgdl the corpus mean. Term/token matching
 uses the same Unicode analyzer as the dedup family
-(operators.dedup.tokens), so CJK queries work per codepoint.
+(queries/sqlfrag.tokens_sql), so CJK queries work per codepoint.
 
 Scale shape: ONE narrow projection per document — (id, dl, tf_1..tf_k)
 for the k query terms, k small — persisted because it feeds both the
@@ -97,9 +97,9 @@ def bm25_scores(
     # *_expr fast-path convention): the repeated tok_sql text is
     # deduplicated by codegen's common-subexpression elimination, same
     # as the repeated Column reference was.
-    from fegis_spark.operators.dedup import tokens_sql
+    from fegis_spark.queries.sqlfrag import tokens_sql
 
-    tok_sql = tokens_sql(text_col)
+    tok_sql = tokens_sql(text_col, spark=True)
     tfs = df.selectExpr(
         f"{id_col} AS id",
         f"CAST(size({tok_sql}) AS DOUBLE) AS dl",

@@ -32,11 +32,11 @@ EOW = "</w>"
 def words_to_symbols(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(doc, word_symbols): one row per word occurrence, value = the
     word split into single-character symbols with EOW appended to the
-    last one. Uses the shared tokenizer (operators/dedup.tokens)."""
+    last one. Uses the shared tokenizer (queries/sqlfrag.tokens_sql)."""
     from fegis_spark.operators.dedup import tokens
 
     words = df.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("w")
+        F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("w")
     )
     chars = F.split(F.col("w"), "")
     syms = F.transform(
@@ -178,7 +178,7 @@ def encode_with_merges(
         )
 
     base = df.select(
-        F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("ws")
+        F.col(id_col).alias("doc"), tokens(text_col).alias("ws")
     )
     out = base.select("doc", enc(F.col("ws")).alias("tokens"))
     return out.withColumn("n_tokens", F.size("tokens"))

@@ -42,39 +42,12 @@ from fegis_spark.functions.vector import (
     int_quant_sql,
     md5_signs,
 )
+from fegis_spark.queries.sqlfrag import md5_int_sql, norm_text_sql, tokens_sql
 
 
-def normalize_text(col: Column) -> Column:
-    """Canonical form for exact dedup: lowercase, collapse whitespace."""
-    return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-
-
-# Unsegmented scripts (no whitespace word boundaries): each codepoint
-# becomes its own token, so token n-grams degrade to codepoint n-grams
-# — the standard CJK dedup unit. Java spells Unicode scripts \p{IsXxx};
-# the DuckDB oracle mirror (queries/sqlfrag.py) uses RE2's \p{Xxx}.
-_CJK_JAVA = r"[\p{IsHan}\p{IsHiragana}\p{IsKatakana}\p{IsHangul}]"
-
-
-def tokens(col: Column) -> Column:
-    """Unicode-aware lowercase tokens: runs of letters/digits
-    (\\p{L}\\p{N}, not just ASCII), with CJK codepoints first split out
-    as single-char tokens so unsegmented scripts aren't silently
-    invisible to the minhash/simhash/jaccard/contamination family."""
-    spaced = F.regexp_replace(F.lower(col), "(" + _CJK_JAVA + ")", " $1 ")
-    return F.filter(
-        F.split(spaced, r"[^\p{L}\p{N}]+"), lambda t: t != F.lit("")
-    )
-
-
-def tokens_sql(col: str) -> str:
-    """The Spark-SQL string spelling of tokens() — for *_expr fast
-    paths that build ONE parsed expression instead of a py4j Column
-    chain (CLAUDE.md driver-side plan-construction rule). Equivalence
-    is pinned in tests/test_search.py."""
-    cjk = _CJK_JAVA.replace("\\", "\\\\")
-    spaced = f"regexp_replace(lower({col}), '({cjk})', ' $1 ')"
-    return f"filter(split({spaced}, '[^\\\\p{{L}}\\\\p{{N}}]+'), t -> t != '')"
+def tokens(c: str) -> Column:
+    """The Column form of sqlfrag.tokens_sql over text expression `c`."""
+    return F.expr(tokens_sql(c, spark=True))
 
 
 #: MinHash geometry, decided here only: MINHASH_HASHES per-seed
@@ -95,19 +68,12 @@ SIMHASH_BITS = 64
 SIMHASH_BITS_PORTABLE = 60
 
 
-def _h60(c: str) -> str:
-    """The md5-60 hash of SQL expression `c` in Spark SQL: the first 15
-    md5 hex chars as a bigint. One parsed string rather than a py4j
-    Column chain, which costs a round-trip per node at plan build."""
-    return f"CAST(conv(substring(md5({c}), 1, 15), 16, 10) AS BIGINT)"
-
-
 def _shingle_tokens(text_col: str) -> Column:
     """NGram input column `tok`: the tokens of `text_col`, empty (not
     NULL) for NULL text. NGram throws on a NULL array, and a null
     filter in front of it is no guard: codegen CSE may run the NGram
     call before the filter's null check."""
-    return tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("tok")
+    return tokens(f"coalesce({text_col}, '')").alias("tok")
 
 
 def with_shingles(
@@ -136,7 +102,7 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
     Output: one row per distinct content (keeper_id, n_copies, hash).
     """
-    h = F.md5(normalize_text(F.col(text_col))).alias("content_hash")
+    h = F.expr(f"md5({norm_text_sql(text_col, spark=True)})").alias("content_hash")
     return (
         df.select(F.col(id_col), h)
         .groupBy("content_hash")
@@ -331,7 +297,7 @@ def minhash_sig_bands(
     ``portable`` only picks how three hashes are spelled — the gram
     hash, the per-seed hash and the band hash: xxhash64 (the gram
     string hashed once, the k seeds re-hash that 8-byte base; measured
-    ~1.4x over per-seed string hashes at sf0.1) or md5-60 (_h60; seeds
+    ~1.4x over per-seed string hashes at sf0.1) or md5-60 (md5_int_sql; seeds
     hash "gh-i", bands are md5 hex strings), the family DuckDB replays.
     Either family is a pure function of the text, so sketches computed
     in separate calls (corpus and batch sides of the incremental form,
@@ -363,10 +329,10 @@ def minhash_sig_bands(
     from pyspark import StorageLevel
 
     if portable:
-        gram_h, band_h = _h60("g"), "md5"
+        gram_h, band_h = md5_int_sql("g", 15, spark=True), "md5"
 
         def seed_h(i: int) -> str:
-            return _h60(f"concat(CAST(gh AS STRING), '-{i}')")
+            return md5_int_sql(f"concat(CAST(gh AS STRING), '-{i}')", 15, spark=True)
     else:
         gram_h, band_h = "xxhash64(g)", "xxhash64"
 
@@ -519,9 +485,9 @@ def simhash_pairs(
     bits = SIMHASH_BITS_PORTABLE if portable else SIMHASH_BITS
     width = bits // SIMHASH_BANDS
     ex = df.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("t")
+        F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("t")
     )
-    h = F.expr(_h60("t")) if portable else F.xxhash64("t")
+    h = F.expr(md5_int_sql("t", 15, spark=True)) if portable else F.xxhash64("t")
     counters = ex.groupBy("doc").agg(
         *[
             F.sum((F.shiftright(h, b).bitwiseAND(1) * 2 - 1).cast("long")).alias(f"c{b}")

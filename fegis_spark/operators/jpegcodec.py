@@ -802,10 +802,12 @@ def _decode_scan_sequential(
     units: list[list[tuple[int, int]]],
     restart_interval: int = 0,
 ) -> None:
-    """One baseline scan: interleaved DC+AC, full band, no successive
+    """One baseline scan: DC+AC, full band, no successive
     approximation (T.81 Annex F), into the coefficient arrays.
-    ``units`` is the scan's MCU walk (_mcu_walk: hi x vi data units
-    per component per MCU — 4:2:0/4:2:2 decode, r11)."""
+    ``units`` is the scan's MCU sequence: the _mcu_walk of an
+    interleaved scan (hi x vi data units per component per MCU), or
+    one data unit per MCU along _comp_raster for a one-component scan
+    (T.81 A.2.2)."""
     prev_dc = [0] * len(scan_idx)
 
     def one_block(ci: int, si: int, bidx: int, dc_tab, ac_tab) -> None:
@@ -1143,25 +1145,21 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             scan_end = _find_scan_end(data, scan_start)
             reader = _BitReader(data[scan_start:scan_end])
             scan_comps = [ci for ci, _td, _ta in scan_idx]
+            if len(scan_comps) > 1:
+                units = _mcu_walk(scan_comps, samp, grids, mcuy, mcux)
+            else:
+                # non-interleaved (T.81 A.2.2), in either mode: one data
+                # unit per MCU, in the component's own block raster
+                units = [
+                    [(0, b)] for b in _comp_raster(h, w, samp, grids, scan_comps[0])
+                ]
             if not progressive:
-                # every baseline scan walks the MCU grid, one-component
-                # scans included
                 _decode_scan_sequential(
-                    reader, scan_idx, huff, coefs,
-                    _mcu_walk(scan_comps, samp, grids, mcuy, mcux),
-                    restart_interval,
+                    reader, scan_idx, huff, coefs, units, restart_interval
                 )
             elif ss == 0:
                 if se != 0:
                     raise ValueError("progressive DC scan must have Se=0")
-                if len(scan_idx) > 1:
-                    units = _mcu_walk(scan_comps, samp, grids, mcuy, mcux)
-                else:
-                    # non-interleaved DC: the component's own raster
-                    units = [
-                        [(0, b)]
-                        for b in _comp_raster(h, w, samp, grids, scan_comps[0])
-                    ]
                 _decode_scan_dc(
                     reader, scan_idx, huff, coefs, units, ah, al,
                     restart_interval,

@@ -43,6 +43,7 @@ from fegis_spark.functions.vector import (
     md5_signs,
     norm_sql,
 )
+from fegis_spark.queries.sqlfrag import md5_int_sql
 
 #: per-pair cosine with per-SIDE precomputed norms — bit-identical to
 #: cosine() (pinned in tests/test_search.py) at 1 HOF dot per pair
@@ -212,15 +213,9 @@ def ivf_training_sample(
     """
     n = corpus_df.select(corpus_id).count()
     frac = min(1.0, (1.2 * target) / max(n, 1))
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ivf-sample:"), F.col(corpus_id).cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = F.expr(
+        md5_int_sql(f"concat('ivf-sample:', CAST({corpus_id} AS STRING))", 8, spark=True)
+    )
     return (
         corpus_df.select(
             F.col(corpus_id).cast("string").alias("__id"),
@@ -939,7 +934,7 @@ def pq_trained_books_sql(
       SELECT id, v FROM (
         SELECT CAST({id_col} AS VARCHAR) AS id,
                CAST({vec_col} AS DOUBLE[]) AS v,
-               CAST(('0x' || substr(md5('ivf-sample:' || CAST({id_col} AS VARCHAR)), 1, 8)) AS BIGINT) AS h
+               {md5_int_sql(f"'ivf-sample:' || CAST({id_col} AS VARCHAR)", 8, spark=False)} AS h
         FROM {table}
       ), pqt_cut WHERE h <= cut AND v IS NOT NULL ORDER BY h, id LIMIT {PQT_TARGET}
     ),
@@ -948,7 +943,7 @@ def pq_trained_books_sql(
     pqt_rn AS MATERIALIZED (
       SELECT id, v, row_number() OVER (ORDER BY h2, id) AS rn FROM (
         SELECT id, v,
-               CAST(('0x' || substr(md5('ivf-sample:' || id), 1, 8)) AS BIGINT) AS h2
+               {md5_int_sql("'ivf-sample:' || id", 8, spark=False)} AS h2
         FROM pqt_samp
       )
     ),

@@ -20,36 +20,27 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fegis_spark.functions.vector import cosine_lit_sql
-from fegis_spark.operators.text_analysis import occurrences, padded
+from fegis_spark.operators.text_analysis import occurrences_sql, padded_sql
 from fegis_spark.operators.topk import ranked_topk
 
 RRF_K = 60
 
 
-def lexical_score(text: Column, terms: Sequence[str]) -> Column:
-    """Occurrence-count lexical relevance (portable; BM25 needs corpus
-    stats — this is the deterministic stand-in the fusion rank needs)."""
-    p = padded(text)
-    return sum([occurrences(p, f" {t} ") for t in terms], F.lit(0).cast("double"))
-
-
-def lexical_score_sql(text_col: str, terms: Sequence[str]) -> str:
-    """Spark-SQL string spelling of lexical_score() — ONE parsed
-    expression instead of a py4j Column chain per term (CLAUDE.md
-    driver-side plan-cost rule). Equivalence pinned in
-    tests/test_search.py."""
-    p = f"concat(' ', lower(trim(regexp_replace({text_col}, '\\\\s+', ' '))), ' ')"
-    occs = " + ".join(
-        "(length({p}) - length(replace({p}, ' {t} ', ''))) / {d}".format(
-            p=p, t=t.replace("'", "''"), d=len(t) + 2
-        )
-        for t in terms
+def lexical_score_sql(text_col: str, terms: Sequence[str], *, spark: bool) -> str:
+    """Occurrence-count lexical relevance of text expression `text_col`
+    (portable; BM25 needs corpus stats — this is the deterministic
+    stand-in the fusion rank needs): the space-padded occurrences of
+    each term, summed onto a DOUBLE zero. ONE parsed expression on the
+    Spark side instead of a py4j Column chain per term (CLAUDE.md
+    driver-side plan-cost rule)."""
+    p = padded_sql(text_col, spark=spark)
+    return "CAST(0 AS DOUBLE)" + "".join(
+        f" + {occurrences_sql(p, f' {t} ')}" for t in terms
     )
-    return f"CAST(0 AS DOUBLE) + {occs}" if occs else "CAST(0 AS DOUBLE)"
 
 
 def rrf_fuse(
@@ -96,7 +87,7 @@ def rrf_fuse(
     scored = df.selectExpr(
         f"{id_col} AS id",
         cosine_lit_sql(vec_col, query_vec) + " AS dense",
-        lexical_score_sql(text_col, query_terms) + " AS lex",
+        lexical_score_sql(text_col, query_terms, spark=True) + " AS lex",
     )
     if cache_intermediate:
         from pyspark import StorageLevel
@@ -169,7 +160,7 @@ def rrf_fuse_pooled(
     scored = df.selectExpr(
         f"{id_col} AS id",
         cosine_lit_sql(vec_col, query_vec) + " AS dense",
-        lexical_score_sql(text_col, query_terms) + " AS lex",
+        lexical_score_sql(text_col, query_terms, spark=True) + " AS lex",
     )
     from pyspark import StorageLevel
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fegis_spark.queries.sqlfrag import md5_int_sql
+
 
 def salted_count_agg(
     df: DataFrame,
@@ -100,11 +102,8 @@ def pack_greedy_sharded(
     # portable md5 shard (same recipe as the split/sample buckets) so
     # the whole hierarchical pack is reproducible on any engine —
     # which is also what lets the catalog query oracle-check it
-    shard = (
-        F.conv(
-            F.substring(F.md5(F.col(order_col).cast("string")), 1, 8), 16, 10
-        ).cast("bigint")
-        % shards
+    shard = F.expr(
+        f"{md5_int_sql(f'CAST({order_col} AS STRING)', 8, spark=True)} % {shards}"
     )
     base = df.withColumn("shard", shard)
     w = (

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fegis_spark.queries.sqlfrag import md5_int_sql
+
 
 def _mg_partition(cap: int):
     """mapInPandas op: one mergeable Misra-Gries summary per partition.
@@ -86,19 +88,11 @@ CMS_D = 4
 CMS_W = 512
 
 
-def cms_bucket(col: F.Column, row: F.Column, w: int = CMS_W) -> F.Column:
-    """Bucket of `col` under hash row `row`: the repo's portable md5
-    recipe over 'r:value' (independent rows come from the salt)."""
-    key = F.concat(row.cast("string"), F.lit(":"), col.cast("string"))
-    return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint") % w
-
-
-def cms_bucket_sql(col: str, row: str, w: int = CMS_W) -> str:
-    """DuckDB twin of cms_bucket (same md5 sub-stream recipe)."""
-    return (
-        f"CAST(('0x' || substr(md5(CAST({row} AS VARCHAR) || ':' ||"
-        f" CAST({col} AS VARCHAR)), 1, 8)) AS BIGINT) % {w}"
-    )
+def cms_key_sql(col: str, row: str) -> str:
+    """The string hash row `row` hashes item `col` as: 'row:item'
+    (independent rows come from the salt). The bucket is the md5
+    recipe of it mod w. One spelling, valid in both SQL dialects."""
+    return f"CAST({row} AS STRING) || ':' || CAST({col} AS STRING)"
 
 
 def cms_build(
@@ -138,7 +132,9 @@ def cms_build(
         stream.crossJoin(F.broadcast(rows))  # bcast-ok: d hash rows
         .select(
             "r",
-            cms_bucket(F.col("t"), F.col("r"), w).alias("bucket"),
+            F.expr(f"{md5_int_sql(cms_key_sql('t', 'r'), 8, spark=True)} % {w}").alias(
+                "bucket"
+            ),
             *([weight_col] if weight_col else []),
         )
         .groupBy("r", "bucket")
@@ -156,7 +152,7 @@ def cms_estimate(cms: DataFrame, terms: DataFrame, col: str = "t",
     rows = spark.range(d).select(F.col("id").cast("int").alias("r"))
     probes = terms.select(F.col(col).alias("t")).crossJoin(
         F.broadcast(rows)  # bcast-ok: d hash rows
-    ).select("t", "r", cms_bucket(F.col("t"), F.col("r"), w).alias("bucket"))
+    ).selectExpr("t", "r", f"{md5_int_sql(cms_key_sql('t', 'r'), 8, spark=True)} % {w} AS bucket")
     return (
         probes.join(F.broadcast(cms), ["r", "bucket"], "left")  # bcast-ok: <=d*w sketch counters
         .groupBy("t")

@@ -1,10 +1,16 @@
 """Text-analysis operators for training-data pipelines ([EXT]).
 
-Language ID, quality scoring, token counting, and document
-fingerprinting — all as portable Column expressions (the same
-arithmetic is restated in the DuckDB oracles, so every operator here
-is hash-checkable; occurrence counts use length-difference instead of
-engine-specific regex counters).
+Language ID, quality scoring, token counting, HTML stripping and
+document fingerprinting. Each scorer is ONE generator,
+``x_sql(c, *, spark)``, that returns the Spark-SQL (spark=True) or
+DuckDB (spark=False) spelling of the same arithmetic over text
+expression `c`: Spark builders wrap it in F.expr, the DuckDB oracles
+interpolate it, so every operator is hash-checkable and the two sides
+cannot drift. Where the dialects need different constructs the
+generator branches inside (Spark's greatest over structs and its [0]
+let-binds, DuckDB's 'g' regex flag and 1-based lists). Occurrence
+counts use length-difference instead of engine-specific regex
+counters.
 
 Scale: each operator is a per-row projection — no shuffle at all; they
 pipeline inside one whole-stage-codegen span over the scan.
@@ -14,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from fegis_spark.queries.sqlfrag import md5_int_sql, norm_text_sql
 
 MOD = 1_000_000_007
 
@@ -33,99 +41,187 @@ LANG_ORDER = sorted(LANG_MARKERS)
 STOPWORDS = ["the", "and", "of", "a", "to", "in", "is", "it"]
 
 
-def occurrences(haystack: Column, needle: str) -> Column:
-    """Substring occurrence count via length difference — identical
-    semantics in Spark and DuckDB (no regex dialect involved)."""
-    n = len(needle)
-    return (F.length(haystack) - F.length(F.replace(haystack, F.lit(needle)))) / n
-
-
 def occurrences_sql(haystack: str, needle: str) -> str:
+    """Substring occurrence count of `needle` in `haystack` via length
+    difference. No regex dialect is involved, so this one spelling is
+    valid in both engines and takes no dialect flag."""
     n = needle.replace("'", "''")
     return f"(length({haystack}) - length(replace({haystack}, '{n}', ''))) / {len(needle)}"
 
 
-def padded(col: Column) -> Column:
-    """' ' || collapsed-lower text || ' ' — gives word-ish boundaries
-    for the space-padded markers."""
-    return F.concat(
-        F.lit(" "), F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))), F.lit(" ")
-    )
+def padded_sql(c: str, *, spark: bool) -> str:
+    """' ' || normalized text || ' ' — word-ish boundaries for the
+    space-padded markers."""
+    return f"' ' || {norm_text_sql(c, spark=spark)} || ' '"
 
 
-PADDED_SQL = "' ' || lower(trim(regexp_replace({c}, '\\s+', ' ', 'g'))) || ' '"
+def _lang_scores_sql(p: str) -> list[str]:
+    """Marker-occurrence score per language over padded text `p`, in
+    LANG_ORDER."""
+    return [
+        "(" + " + ".join(occurrences_sql(p, m) for m in LANG_MARKERS[lang]) + ")"
+        for lang in LANG_ORDER
+    ]
 
 
-def lang_id_sql(c: str) -> str:
-    """The exact same argmax restated for DuckDB (generated from the
-    same marker table — cannot drift)."""
-    p = PADDED_SQL.format(c=c)
-    score = {
-        lang: "(" + " + ".join(occurrences_sql(p, m) for m in markers) + ")"
-        for lang, markers in LANG_MARKERS.items()
-    }
-    mx = "greatest(" + ", ".join(score[lang] for lang in LANG_ORDER) + ")"
+def lang_id_sql(c: str, *, spark: bool) -> str:
+    """Predicted language of text expression `c` = argmax marker-
+    occurrence score; ties and all-zero fall back to the first language
+    in alphabetical order whose score equals the max ('de' before 'en'
+    ...), NULL text to the last language.
+
+    DuckDB: a CASE chain testing each score against their greatest().
+    Spark: each score spelled once, in a (score, rank, lang) struct:
+    greatest() takes the highest score, then the highest rank, which
+    is the earliest language. NULL text has all-NULL scores, so the
+    rank alone decides and the last language ranks first, as in the
+    CASE-ELSE fallthrough. That guard sits in the rank because a CASE
+    around greatest() would be a branch, where codegen CSE cannot
+    merge the padded-text copies."""
+    scores = _lang_scores_sql(padded_sql(c, spark=spark))
+    if spark:
+        n = len(LANG_ORDER)
+        ranks = [str(n - i) for i in range(n - 1)] + [f"IF({c} IS NULL, {n + 1}, 1)"]
+        cands = ", ".join(
+            f"named_struct('s', {score}, 'r', {rank}, 'l', '{lang}')"
+            for lang, score, rank in zip(LANG_ORDER, scores, ranks)
+        )
+        return f"greatest({cands}).l"
+    mx = "greatest(" + ", ".join(scores) + ")"
     expr = f"'{LANG_ORDER[-1]}'"
-    for lang in reversed(LANG_ORDER[:-1]):
-        expr = f"CASE WHEN {score[lang]} = {mx} THEN '{lang}' ELSE {expr} END"
+    for lang, score in reversed(list(zip(LANG_ORDER[:-1], scores))):
+        expr = f"CASE WHEN {score} = {mx} THEN '{lang}' ELSE {expr} END"
     return expr
 
 
-def token_count_ws(col: Column) -> Column:
-    """Whitespace token count."""
-    t = F.trim(col)
-    return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
+def lang_margin_sql(c: str, *, spark: bool) -> str:
+    """Language-ID confidence: top score minus runner-up score (the
+    argmax margin). Ambiguous documents (margin ~ 0) are the ones a
+    confidence-gated pipeline drops or routes to a real model. Same
+    score fragments as lang_id_sql; Spark binds the padded text and the
+    sorted scores once per row, DuckDB indexes its list_sort 1-based."""
+    n = len(LANG_ORDER)
+    if spark:
+        scores = ", ".join(_lang_scores_sql("_mp"))
+        return (
+            f"transform(array({padded_sql(c, spark=True)}), _mp ->"
+            f" transform(array(array_sort(array({scores}))), _ms ->"
+            f" element_at(_ms, {n}) - element_at(_ms, {n - 1}))[0])[0]"
+        )
+    arr = f"list_sort([{', '.join(_lang_scores_sql(padded_sql(c, spark=False)))}])"
+    return f"({arr}[{n}] - {arr}[{n - 1}])"
 
 
-TOKEN_COUNT_WS_SQL = (
-    "CASE WHEN trim({c}) = '' THEN 0 ELSE len(string_split_regex(trim({c}), '\\s+')) END"
-)
+def token_count_ws_sql(c: str, *, spark: bool) -> str:
+    """Whitespace token count of text expression `c`."""
+    if spark:
+        n = f"size(split(trim({c}), '\\\\s+'))"
+    else:
+        n = f"len(string_split_regex(trim({c}), '\\s+'))"
+    return f"CASE WHEN trim({c}) = '' THEN 0 ELSE {n} END"
 
 
-def token_count_bpe_ish(col: Column) -> Column:
+def token_count_bpe_sql(c: str, *, spark: bool) -> str:
     """BPE-ish sub-word count: alnum runs + each non-space symbol counts
     one (the classic pre-tokenizer regex \\w+|[^\\w\\s], ASCII classes
     in both engines)."""
-    return F.size(F.regexp_extract_all(col, F.lit(r"\w+|[^\w\s]"), 0))
+    if spark:
+        return f"size(regexp_extract_all({c}, '\\\\w+|[^\\\\w\\\\s]', 0))"
+    return f"len(regexp_extract_all({c}, '\\w+|[^\\w\\s]'))"
 
 
-TOKEN_COUNT_BPE_SQL = "len(regexp_extract_all({c}, '\\w+|[^\\w\\s]'))"
-
-
-def quality_score_sql(c: str) -> str:
-    p = PADDED_SQL.format(c=c)
-    stop_hits = " + ".join(occurrences_sql(p, f" {s} ") for s in STOPWORDS)
-    n_tok = TOKEN_COUNT_WS_SQL.format(c=c)
-    return f"""round(
-      0.4 * (CASE WHEN length({c}) BETWEEN 100 AND 10000 THEN 1.0 ELSE 0.0 END)
-      + 0.3 * greatest(0.0, 1.0 - (CASE WHEN length({c}) > 0
-          THEN (length({c}) - length(regexp_replace({c}, '[.,!?;:]', '', 'g')))::DOUBLE / length({c})
-          ELSE 0.0 END) * 5)
-      + 0.3 * (CASE WHEN ({n_tok}) > 0
-          THEN least(1.0, ({stop_hits})::DOUBLE / ({n_tok}) * 4)
-          ELSE 0.0 END), 6)"""
-
-
-def fingerprint(col: Column) -> Column:
-    """Polynomial rolling hash over codepoints, mod 1e9+7 — an
-    order-sensitive document fingerprint computable identically in any
-    engine with a fold (unlike xxhash/md5-of-text it also supports
-    windowed substring hashing at ingest)."""
-    codes = F.transform(F.split(col, ""), lambda ch: F.ascii(ch).cast("long"))
-    return F.aggregate(
-        codes, F.lit(0).cast("long"), lambda acc, x: (acc * 31 + x) % MOD
+def quality_score_sql(c: str, *, spark: bool) -> str:
+    """Composite quality heuristic in [0,1] of text expression `c`:
+    0.4·length_ok + 0.3·(1-punct_ratio·5 clamped) + 0.3·stopword
+    presence. Deterministic double arithmetic, term for term the same
+    in both dialects. The stop-hit sum sits in a CASE branch, where
+    codegen CSE cannot merge copies, so Spark binds the padded text
+    once per row with transform(array(v), _qp -> ...)[0]."""
+    g = "" if spark else ", 'g'"
+    n_tok = f"CAST(({token_count_ws_sql(c, spark=spark)}) AS DOUBLE)"
+    if spark:
+        hits = " + ".join(occurrences_sql("_qp", f" {s} ") for s in STOPWORDS)
+        stop_hits = f"transform(array({padded_sql(c, spark=True)}), _qp -> {hits})[0]"
+    else:
+        p = padded_sql(c, spark=False)
+        stop_hits = "(" + " + ".join(occurrences_sql(p, f" {s} ") for s in STOPWORDS) + ")"
+    punct_ratio = (
+        f"CASE WHEN length({c}) > 0 "
+        f"THEN CAST(length({c}) - length(regexp_replace({c}, '[.,!?;:]', ''{g})) AS DOUBLE)"
+        f" / length({c}) ELSE 0.0 END"
+    )
+    return (
+        f"round(0.4 * (CASE WHEN length({c}) BETWEEN 100 AND 10000 THEN 1.0 ELSE 0.0 END)"
+        f" + 0.3 * greatest(0.0, 1.0 - ({punct_ratio}) * 5)"
+        f" + 0.3 * (CASE WHEN ({n_tok}) > 0"
+        f" THEN least(1.0, {stop_hits} / ({n_tok}) * 4)"
+        f" ELSE 0.0 END), 6)"
     )
 
 
-#: empty-string guard: Spark's ascii('') folds to 0, but DuckDB's
-#: ord('') is -1 — found by tests/test_property_portable.py; no corpus
-#: row is empty, but the fragments must agree on ALL inputs.
-FINGERPRINT_SQL = (
-    "CASE WHEN length({c}) = 0 THEN 0 ELSE "
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(string_split({c}, ''), ch -> CAST(ord(ch) AS BIGINT))), "
-    f"(acc, x) -> (acc * 31 + x) % {MOD}) END"
-)
+def fingerprint_sql(c: str, *, spark: bool) -> str:
+    """Polynomial rolling hash over the codepoints of text expression
+    `c`, mod 1e9+7 — an order-sensitive document fingerprint computable
+    identically in any engine with a fold (unlike xxhash/md5-of-text it
+    also supports windowed substring hashing at ingest). DuckDB guards
+    the empty string: Spark's ascii('') folds to 0, but DuckDB's
+    ord('') is -1 (found by tests/test_property_portable.py; no corpus
+    row is empty, but the two spellings must agree on ALL inputs)."""
+    if spark:
+        return (
+            f"aggregate(transform(split({c}, ''), _ch -> CAST(ascii(_ch) AS BIGINT)), "
+            f"CAST(0 AS BIGINT), (_acc, _x) -> (_acc * 31 + _x) % {MOD})"
+        )
+    return (
+        f"CASE WHEN length({c}) = 0 THEN 0 ELSE "
+        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
+        f"list_transform(string_split({c}, ''), _ch -> CAST(ord(_ch) AS BIGINT))), "
+        f"(_acc, _x) -> (_acc * 31 + _x) % {MOD}) END"
+    )
+
+
+#: (pattern, replacement) pipeline for HTML → text, applied in order.
+#: Regexes are RE2/Java-compatible ((?is) inline flags; the one
+#: backreference is expanded for RE2) so Spark and DuckDB agree
+#: byte-for-byte. Entity unescape does &amp; LAST, so "&amp;lt;"
+#: yields the literal text "&lt;" (correct double-escape handling),
+#: and script/style bodies go before tag removal.
+HTML_STRIP_STEPS: list[tuple[str, str]] = [
+    (r"(?is)<(script|style)\b[^>]*>.*?</\1\s*>", " "),
+    (r"(?s)<!--.*?-->", " "),
+    (r"(?s)<[^>]+>", " "),
+    (r"&nbsp;", " "),
+    (r"&lt;", "<"),
+    (r"&gt;", ">"),
+    (r"&quot;", '"'),
+    (r"&#39;", "'"),
+    (r"&amp;", "&"),
+    (r"\s+", " "),
+]
+
+
+def strip_html_sql(c: str, *, spark: bool) -> str:
+    """HTML/boilerplate → clean text: drop script/style bodies,
+    comments, and tags; unescape the common entities; collapse
+    whitespace. Regex-only (whole-stage codegen, zero shuffle) — the
+    standard first pass over crawled corpora before quality/dedup.
+    Generated from HTML_STRIP_STEPS for both dialects. Spark SQL
+    literals take backslash escapes; RE2 (DuckDB) needs the 'g' flag
+    and lacks backreferences, so the </\\1 closing tag is expanded per
+    tag."""
+    out = c
+    for pat, rep in HTML_STRIP_STEPS:
+        if spark:
+            lits = [s.replace("\\", "\\\\").replace("'", "\\'") for s in (pat, rep)]
+            out = f"regexp_replace({out}, '{lits[0]}', '{lits[1]}')"
+        elif r"</\1" in pat:
+            for tag in ("script", "style"):
+                p = pat.replace(r"(script|style)", tag).replace(r"</\1", f"</{tag}")
+                out = f"regexp_replace({out}, '{p}', ' ', 'g')"
+        else:
+            sq = rep.replace("'", "''")
+            out = f"regexp_replace({out}, '{pat}', '{sq}', 'g')"
+    return f"trim({out})"
 
 
 #: winnowing parameters (Schleimer et al. 2003, "Winnowing: Local
@@ -170,17 +266,16 @@ def winnow_fp_sets(docs, text_col: str = "text", id_col: str = "doc_id"):
     # Scala NGram for the gram strings (2× the HOF slice/concat chain,
     # measured at sf0.1); only the per-gram md5 stays a HOF transform.
     base = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("__tok")
+        F.col(id_col).alias("doc_id"), tokens(text_col).alias("__tok")
     )
     base = (
         NGram(n=WINNOW_K, inputCol="__tok", outputCol="__g")
         .transform(base)
         .select(
             "doc_id",
-            F.expr(
-                "transform(__g, g -> "
-                "CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT))"
-            ).alias("__gh"),
+            F.expr(f"transform(__g, _g -> {md5_int_sql('_g', 15, spark=True)})").alias(
+                "__gh"
+            ),
         )
     )
     return base.select(
@@ -333,7 +428,7 @@ def unigram_logprob(
     from fegis_spark.operators.dedup import tokens
 
     tok = docs.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("t")
+        F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("t")
     )
     vocab = (
         tok.groupBy("t")
@@ -395,7 +490,7 @@ def bigram_logprob(
     from fegis_spark.operators.dedup import tokens
 
     toks = docs.select(
-        F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("tok")
+        F.col(id_col).alias("doc"), tokens(text_col).alias("tok")
     ).where(F.size("tok") >= 2)
     # sequence(1, size-1) is safe here: size >= 2 keeps it ascending
     bg = toks.select(
@@ -445,154 +540,6 @@ def bigram_logprob(
 
 
 # ---------------------------------------------------------------------------
-# Spark forms of the scorers: each is ONE generated Spark-SQL string
-# (one py4j call), from the same marker/stopword tables as the DuckDB
-# oracles above, so the two cannot drift. Codegen's common-subexpression
-# elimination only merges copies in always-evaluated positions: the
-# HOF-free lang_id_expr spells each of its five scores once and lets
-# CSE merge the padded-text copies; where the shared part sits under a
-# HOF (lang_margin_expr's
-# array_sort) or in a conditional branch (quality_score_expr's stop-hit
-# sum) the padded text is bound once per row with
-# transform(array(v), _x -> ...)[0]. Lambda variables carry a leading
-# underscore so they cannot shadow a caller's column.
-
-PADDED_SPARK = r"' ' || lower(trim(regexp_replace({c}, '\\s+', ' '))) || ' '"
-_TOKEN_WS_SPARK = (
-    r"CASE WHEN trim({c}) = '' THEN 0 "
-    r"ELSE size(split(trim({c}), '\\s+')) END"
-)
-
-
-def _lang_scores_sql(p: str) -> list[str]:
-    """Marker-occurrence score per language over padded text `p`, in
-    LANG_ORDER."""
-    return [
-        "(" + " + ".join(occurrences_sql(p, m) for m in LANG_MARKERS[lang]) + ")"
-        for lang in LANG_ORDER
-    ]
-
-
-def lang_id_expr(c: str) -> Column:
-    """Predicted language of column expression `c` = argmax marker-
-    occurrence score; ties and all-zero fall back to the first language
-    in alphabetical order whose score equals the max ('de' before 'en'
-    ...). Each score is spelled once, in a (score, rank, lang) struct:
-    greatest() takes the highest score, then the highest rank, which
-    is the earliest language. NULL text has all-NULL scores, so the
-    rank alone decides and the last language ranks first, as in
-    lang_id_sql's CASE-ELSE fallthrough. That guard sits in the rank
-    because a CASE around greatest() would be a branch, where CSE
-    cannot merge the padded-text copies."""
-    n = len(LANG_ORDER)
-    ranks = [str(n - i) for i in range(n - 1)] + [f"IF({c} IS NULL, {n + 1}, 1)"]
-    cands = ", ".join(
-        f"named_struct('s', {score}, 'r', {rank}, 'l', '{lang}')"
-        for lang, score, rank in zip(
-            LANG_ORDER, _lang_scores_sql(PADDED_SPARK.format(c=c)), ranks
-        )
-    )
-    return F.expr(f"greatest({cands}).l")
-
-
-def quality_score_expr(c: str) -> Column:
-    """Composite quality heuristic in [0,1] of column expression `c`:
-    0.4·length_ok + 0.3·(1-punct_ratio·5 clamped) + 0.3·stopword presence.
-    Deterministic double arithmetic, term for term as quality_score_sql;
-    the stop-hit sum (in a CASE branch) binds the padded text once."""
-    p = PADDED_SPARK.format(c=c)
-    stop_hits = " + ".join(occurrences_sql("_qp", f" {s} ") for s in STOPWORDS)
-    n_tok = f"CAST(({_TOKEN_WS_SPARK.format(c=c)}) AS DOUBLE)"
-    punct_ratio = (
-        f"CASE WHEN length({c}) > 0 "
-        f"THEN CAST(length({c}) - length(regexp_replace({c}, '[.,!?;:]', '')) AS DOUBLE)"
-        f" / length({c}) ELSE 0.0 END"
-    )
-    return F.expr(
-        f"round(0.4 * (CASE WHEN length({c}) BETWEEN 100 AND 10000 THEN 1.0 ELSE 0.0 END)"
-        f" + 0.3 * greatest(0.0, 1.0 - ({punct_ratio}) * 5)"
-        f" + 0.3 * (CASE WHEN ({n_tok}) > 0"
-        f" THEN least(1.0, transform(array({p}), _qp -> {stop_hits})[0] / ({n_tok}) * 4)"
-        f" ELSE 0.0 END), 6)"
-    )
-
-
-#: (pattern, replacement) pipeline for HTML → text, applied in order.
-#: Regexes are RE2/Java-compatible ((?is) inline flags, no backrefs) so
-#: Spark and DuckDB agree byte-for-byte. Entity unescape does &amp;
-#: LAST, so "&amp;lt;" yields the literal text "&lt;" (correct double-
-#: escape handling), and script/style bodies go before tag removal.
-HTML_STRIP_STEPS: list[tuple[str, str]] = [
-    (r"(?is)<(script|style)\b[^>]*>.*?</\1\s*>", " "),
-    (r"(?s)<!--.*?-->", " "),
-    (r"(?s)<[^>]+>", " "),
-    (r"&nbsp;", " "),
-    (r"&lt;", "<"),
-    (r"&gt;", ">"),
-    (r"&quot;", '"'),
-    (r"&#39;", "'"),
-    (r"&amp;", "&"),
-    (r"\s+", " "),
-]
-
-
-def strip_html(col: Column) -> Column:
-    """HTML/boilerplate → clean text: drop script/style bodies,
-    comments, and tags; unescape the common entities; collapse
-    whitespace. Regex-only (whole-stage codegen, zero shuffle) — the
-    standard first pass over crawled corpora before quality/dedup.
-    Mirrored in SQL by strip_html_sql from the same step table."""
-    out = col
-    for pat, rep in HTML_STRIP_STEPS:
-        out = F.regexp_replace(out, pat, rep)
-    return F.trim(out)
-
-
-def strip_html_sql(c: str) -> str:
-    """DuckDB restatement generated from HTML_STRIP_STEPS — cannot
-    drift. RE2 needs (?i) spelled inline and 'g' for global."""
-    out = c
-    for pat, rep in HTML_STRIP_STEPS:
-        # RE2 lacks backreferences: expand the \1 closing-tag pattern
-        if r"</\1" in pat:
-            for tag in ("script", "style"):
-                p = pat.replace(r"(script|style)", tag).replace(r"</\1", f"</{tag}")
-                out = f"regexp_replace({out}, '{p}', ' ', 'g')"
-            continue
-        sq = rep.replace("'", "''")
-        out = f"regexp_replace({out}, '{pat}', '{sq}', 'g')"
-    return f"trim({out})"
-
-
-def lang_margin_expr(c: str) -> Column:
-    """Language-ID confidence: top score minus runner-up score (the
-    argmax margin). Ambiguous documents (margin ~ 0) are the ones a
-    confidence-gated pipeline drops or routes to a real model. Same
-    generated score fragments as lang_id_expr — one Spark-SQL string,
-    the padded text and the sorted scores each bound once per row.
-    """
-    scores = ", ".join(_lang_scores_sql("_mp"))
-    n = len(LANG_ORDER)
-    return F.expr(
-        f"transform(array({PADDED_SPARK.format(c=c)}), _mp ->"
-        f" transform(array(array_sort(array({scores}))), _ms ->"
-        f" element_at(_ms, {n}) - element_at(_ms, {n - 1}))[0])[0]"
-    )
-
-
-def lang_margin_sql(c: str) -> str:
-    """DuckDB mirror of lang_margin_expr (list_sort + 1-based index)."""
-    p = PADDED_SQL.format(c=c)
-    scores = [
-        "(" + " + ".join(occurrences_sql(p, m) for m in LANG_MARKERS[lang]) + ")"
-        for lang in LANG_ORDER
-    ]
-    arr = f"list_sort([{', '.join(scores)}])"
-    n = len(scores)
-    return f"({arr}[{n}] - {arr}[{n - 1}])"
-
-
-# ---------------------------------------------------------------------------
 # Gopher-rule document filter (Rae et al. 2021, "Scaling Language
 # Models: Methods, Analysis & Insights from Training Gopher", App. A1.1)
 # — the standard pre-training hard-filter rule set: word-count window,
@@ -638,13 +585,12 @@ def gopher_metrics_sql(c: str, *, spark: bool) -> dict[str, str]:
         n_words = f"size({words})"
         alpha = f"size(filter({words}, w -> w rlike '[A-Za-z]'))"
         nonws = f"length(regexp_replace({c}, '\\\\s', ''))"
-        p = PADDED_SPARK.format(c=c)
     else:
         words = f"regexp_extract_all({c}, '\\S+')"
         n_words = f"len({words})"
         alpha = f"len(list_filter({words}, w -> regexp_matches(w, '[A-Za-z]')))"
         nonws = f"length(regexp_replace({c}, '\\s', '', 'g'))"
-        p = PADDED_SQL.format(c=c)
+    p = padded_sql(c, spark=spark)
     hash_cnt = f"(length({c}) - length(replace({c}, '#', '')))"
     ell_cnt = f"CAST((length({c}) - length(replace({c}, '...', ''))) / 3 AS BIGINT)"
     mwl = (
@@ -734,11 +680,16 @@ def line_shape_metrics(col: Column) -> Column:
     )
 
 
+#: the Kneser-Ney discount, an SQL literal spliced identically into
+#: the Spark plan and the DuckDB oracle (a derived 1-d constant would
+#: diverge in IEEE)
+KN_DISCOUNT = "CAST(0.75 AS DOUBLE)"
+
 #: interpolated-KN smoothed probability over the bigram-type columns
 #: (c, cv, n1v, n1w, n1tot) — ONE string valid in both SQL dialects
 #: (all operands cast to DOUBLE, left-assoc division as spelled), so
 #: the Spark plan and the DuckDB oracle share the exact IEEE DAG.
-#: {d} is the discount spliced as an SQL snippet.
+#: {d} is the discount (KN_DISCOUNT) spliced as an SQL snippet.
 KN_P_SQL = (
     "(greatest(CAST(c AS DOUBLE) - {d}, 0.0e0) / CAST(cv AS DOUBLE))"
     " + (({d} * CAST(n1v AS DOUBLE) / CAST(cv AS DOUBLE))"
@@ -748,7 +699,7 @@ KN_P_SQL = (
 
 def kn_bigram_logprob(
     docs, text_col: str = "text", id_col: str = "doc_id",
-    broadcast_vocab: bool = True, discount: str = "CAST(0.75 AS DOUBLE)",
+    broadcast_vocab: bool = True,
 ):
     """Interpolated Kneser-Ney bigram scoring (Kneser & Ney 1995;
     Chen & Goodman 1998 formulation) — the top rung of the repo's
@@ -764,8 +715,8 @@ def kn_bigram_logprob(
     mass is always redistributable.
 
     Determinism: every term is a ratio of integer counts; the discount
-    is a string LITERAL spliced identically into both engines (a
-    derived 1-d constant would diverge in IEEE); the formula is
+    is the string LITERAL KN_DISCOUNT, spliced identically into both
+    engines; the formula is
     spelled with the same association on both sides; -ln transits
     DECIMAL(38,6) before the per-doc mean.
 
@@ -778,9 +729,8 @@ def kn_bigram_logprob(
 
     from fegis_spark.operators.dedup import tokens
 
-    d = discount
     toks = docs.select(
-        F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("tok")
+        F.col(id_col).alias("doc"), tokens(text_col).alias("tok")
     ).where(F.size("tok") >= 2)
     bg = toks.select(
         "doc",
@@ -820,7 +770,7 @@ def kn_bigram_logprob(
         vocab.join(ctx, "w1")
         .join(pred, "w2")
         .crossJoin(tot)  # bcast-ok: 1-row total agg
-        .select("b", F.expr(KN_P_SQL.format(d=d)).alias("p"))
+        .select("b", F.expr(KN_P_SQL.format(d=KN_DISCOUNT)).alias("p"))
         .select("b", (-F.expr(portable_ln("p", spark=True))).alias("nl"))
     )
     if broadcast_vocab:

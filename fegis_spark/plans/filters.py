@@ -107,13 +107,13 @@ def _ts_lit(value: str) -> Column:
     return F.lit(dt.replace(tzinfo=None)).cast("timestamp_ntz")
 
 
-# Driver-side mirror of operators.dedup.tokens(): lowercase; CJK
-# codepoints (unsegmented scripts) become single-char tokens; other
-# alphanumeric runs become word tokens. Query strings are tokenized in
+# Driver-side mirror of the tokenizer (queries/sqlfrag.tokens_sql):
+# lowercase; CJK codepoints (unsegmented scripts) become single-char
+# tokens; other alphanumeric runs become word tokens. Query strings are tokenized in
 # Python, field values in Spark — both must agree.
 #
 # This table is NOT the Unicode *blocks* — it is the exact codepoint
-# set matched by the JVM regex in operators.dedup._CJK_JAVA
+# set matched by the JVM regex in queries/sqlfrag._CJK_JAVA
 # ([\p{IsHan}\p{IsHiragana}\p{IsKatakana}\p{IsHangul}], i.e. Unicode
 # Script classes), generated by running that regex via Spark rlike over
 # every assigned codepoint in planes 0/2/3 and compressing to ranges.
@@ -176,7 +176,7 @@ def _is_cjk(ch: str) -> bool:
 
 
 def analyzer_tokens(s: str) -> list[str]:
-    """Python-side analyzer matching operators.dedup.tokens()."""
+    """Python-side analyzer matching queries/sqlfrag.tokens_sql."""
     out: list[str] = []
     run: list[str] = []
     for ch in s.lower():
@@ -196,9 +196,10 @@ def analyzer_tokens(s: str) -> list[str]:
     return out
 
 
-def match_text(col: Column, query: str) -> Column:
+def match_text(col: str, query: str) -> Column:
     """Qdrant ``MatchText`` semantics: true when EVERY analyzer token of
-    ``query`` appears among the analyzer tokens of the field (word
+    ``query`` appears among the analyzer tokens of field expression
+    ``col`` (word
     tokenizer + lowercase — Qdrant's text-index default). This is the
     semantics the reference actually gets on text-indexed fields
     (strategies.py:240-259 emits MatchText); the substring variant in
@@ -219,11 +220,12 @@ def match_text(col: Column, query: str) -> Column:
 
 
 def compile_condition(
-    col: Column, field: str, operator: str, value: Any, is_timestamp: bool,
+    path: str, field: str, operator: str, value: Any, is_timestamp: bool,
     text_match: bool = False,
 ) -> Column:
-    """One filter spec → one boolean Column (reference _build_condition,
-    strategies.py:160-259)."""
+    """One filter spec on column path ``path`` → one boolean Column
+    (reference _build_condition, strategies.py:160-259)."""
+    col = F.col(path)
     if operator == "is":
         return col == F.lit(value)
     if operator == "is_not":
@@ -248,7 +250,7 @@ def compile_condition(
             # Text-indexed field → MatchText. The reference's three case
             # variants {v, v.lower(), v.capitalize()} collapse to one:
             # the analyzer lowercases before matching.
-            return match_text(col, str(value))
+            return match_text(path, str(value))
         if not isinstance(value, str):
             return col.cast("string").contains(F.lit(str(value)))
         variants = {value, value.lower(), value.capitalize()}
@@ -286,7 +288,7 @@ def compile_filters(
         field = spec["field"]
         path = mapping.get(field, field)
         cond = compile_condition(
-            F.col(path), field, spec["operator"], spec["value"], field in timestamp_fields,
+            path, field, spec["operator"], spec["value"], field in timestamp_fields,
             text_match=field in text_index_fields,
         )
         pred = pred & cond

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from fegis_spark.catalog import register
 from fegis_spark.model import load_table
-from fegis_spark.queries.sqlfrag import duck_tokens
+from fegis_spark.queries.sqlfrag import tokens_sql
 
 DEC = "decimal(38,6)"
 
@@ -314,7 +314,7 @@ def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT tok, n, rnk FROM (
       SELECT tok, n, row_number() OVER (ORDER BY n DESC, tok) AS rnk FROM (
         SELECT tok, COUNT(*) AS n FROM (
-          SELECT unnest({duck_tokens('text')}) AS tok
+          SELECT unnest({tokens_sql('text', spark=False)}) AS tok
           FROM documents
         ) GROUP BY tok
       )
@@ -332,7 +332,7 @@ def word_count_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
+        docs.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("n"))
     )

@@ -25,11 +25,13 @@ from fegis_spark.queries.sqlfrag import (
     HOT_CAP,
     HOT_MOD,
     duck_hot_docs,
-    duck_tokens,
+    md5_int_sql,
+    norm_text_sql,
     spark_hot_docs,
+    tokens_sql,
 )
 
-_TOKS = duck_tokens("text")
+_TOKS = tokens_sql("text", spark=False)
 
 
 def _mh_pipeline_cte(src: str, base_mat: str = "") -> str:
@@ -42,6 +44,7 @@ def _mh_pipeline_cte(src: str, base_mat: str = "") -> str:
     in every oracle at once instead of needing hand-mirroring across
     SQL blocks."""
     n, k, r = SHINGLE_N, MINHASH_HASHES, MINHASH_HASHES // MINHASH_BANDS
+    seed_h = md5_int_sql("CAST(gh AS VARCHAR) || '-' || CAST(i AS VARCHAR)", 15, spark=False)
     return rf"""base AS {base_mat}(
       SELECT doc_id AS doc,
              list_distinct(list_transform(range(0, len(tok)-{n - 1}),
@@ -49,11 +52,11 @@ def _mh_pipeline_cte(src: str, base_mat: str = "") -> str:
       FROM (SELECT *, {_TOKS} AS tok FROM {src})
       WHERE len(tok) >= {n}
     ), ex AS (
-      SELECT doc, CAST(('0x' || substr(md5(g), 1, 15)) AS BIGINT) AS gh
+      SELECT doc, {md5_int_sql('g', 15, spark=False)} AS gh
       FROM (SELECT doc, unnest(sh) AS g FROM base)
     ), mh AS (
       SELECT doc, i,
-             MIN(CAST(('0x' || substr(md5(CAST(gh AS VARCHAR) || '-' || CAST(i AS VARCHAR)), 1, 15)) AS BIGINT)) AS m
+             MIN({seed_h}) AS m
       FROM ex, (SELECT unnest(range({k})) AS i)
       GROUP BY doc, i
     ), sig AS (
@@ -90,9 +93,9 @@ _MH_VERIFY = (
 
 @register(
     "dedup_exact",
-    oracle=r"""
+    oracle=f"""
     SELECT content_hash, keeper_id, n_copies FROM (
-      SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS content_hash,
+      SELECT md5({norm_text_sql('text', spark=False)}) AS content_hash,
              min(doc_id) AS keeper_id, count(*) AS n_copies
       FROM documents GROUP BY 1
     )
@@ -365,12 +368,11 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_incremental",
-    oracle="""
+    oracle=f"""
     WITH hashed AS (
       SELECT doc_id, lang,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100
-               AS bucket,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
+             {md5_int_sql('CAST(doc_id AS VARCHAR)', 8, spark=False)} % 100 AS bucket,
+             md5({norm_text_sql('text', spark=False)}) AS h
       FROM documents
     ),
     corpus AS (SELECT h FROM hashed WHERE bucket < 50),
@@ -390,16 +392,13 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a single hash key: both sides shuffle once on h — at 100 TB the
     corpus hash index is the big side, so pre-bucket it by h (operators/
     scale.write_bucketed) and only the daily batch moves."""
-    from fegis_spark.operators.dedup import normalize_text
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast("bigint") % 100
-        ).alias("bucket"),
-        F.md5(normalize_text(F.col("text"))).alias("h"),
+        F.expr(f"{md5_int_sql('CAST(doc_id AS STRING)', 8, spark=True)} % 100").alias(
+            "bucket"
+        ),
+        F.expr(f"md5({norm_text_sql('text', spark=True)})").alias("h"),
     )
     corpus = docs.filter(F.col("bucket") < 50).select("h")
     batch = docs.filter(F.col("bucket") >= 50)
@@ -477,7 +476,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = (
         load_table(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("doc"), tokens(F.col("text")).alias("tok"))
+        .select(F.col("doc_id").alias("doc"), tokens("text").alias("tok"))
         .filter(F.size("tok") >= 8)
     )
     ng = NGram(n=8, inputCol="tok", outputCol="__g")
@@ -626,7 +625,7 @@ def _simhash_portable_oracle() -> str:
     WITH ex AS (
       SELECT doc_id AS doc, unnest({_TOKS}) AS t FROM documents
     ), th AS (
-      SELECT doc, CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT) AS th FROM ex
+      SELECT doc, {md5_int_sql('t', 15, spark=False)} AS th FROM ex
     ), counters AS (
       SELECT doc,
              {counters}
@@ -688,7 +687,7 @@ def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from fegis_spark.operators.text_analysis import quality_score_sql  # noqa: E402
 
-_Q = quality_score_sql("text")
+_Q = quality_score_sql("text", spark=False)
 
 
 @register(
@@ -696,7 +695,7 @@ _Q = quality_score_sql("text")
     oracle=rf"""
     WITH scored AS (
       SELECT doc_id,
-             md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS content_hash,
+             md5({norm_text_sql('text', spark=False)}) AS content_hash,
              round({_Q}, 6) AS q
       FROM documents
     )
@@ -725,26 +724,24 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised on constructed duplicate clusters in
     tests/test_ingest_dedup.py (sf0.01 documents has no exact dups, so
     the gate alone checks this query vacuously)."""
-    from fegis_spark.operators.dedup import keep_best_dedup, normalize_text
-    from fegis_spark.operators.text_analysis import quality_score_expr
+    from fegis_spark.operators.dedup import keep_best_dedup
 
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
-        F.md5(normalize_text(F.col("text"))).alias("content_hash"),
-        F.round(quality_score_expr("text"), 6).alias("q"),
+        F.expr(f"md5({norm_text_sql('text', spark=True)})").alias("content_hash"),
+        F.round(F.expr(quality_score_sql("text", spark=True)), 6).alias("q"),
     )
     return keep_best_dedup(scored, "content_hash", "doc_id", "q")
 
 
 @register(
     "dedup_bloom_incremental",
-    oracle="""
+    oracle=f"""
     WITH hashed AS (
       SELECT doc_id, lang,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100
-               AS bucket,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
+             {md5_int_sql('CAST(doc_id AS VARCHAR)', 8, spark=False)} % 100 AS bucket,
+             md5({norm_text_sql('text', spark=False)}) AS h
       FROM documents
     ),
     corpus AS (SELECT h FROM hashed WHERE bucket < 50),
@@ -778,16 +775,13 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index size in production. No-false-negative + exact-verify
     behavior pinned in tests/test_bloom_dedup.py; result equality with
     the plain anti-join is the oracle itself."""
-    from fegis_spark.operators.dedup import normalize_text
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast("bigint") % 100
-        ).alias("bucket"),
-        F.md5(normalize_text(F.col("text"))).alias("h"),
+        F.expr(f"{md5_int_sql('CAST(doc_id AS STRING)', 8, spark=True)} % 100").alias(
+            "bucket"
+        ),
+        F.expr(f"md5({norm_text_sql('text', spark=True)})").alias("h"),
     )
     corpus = docs.filter(F.col("bucket") < 50).select("h")
     batch = docs.filter(F.col("bucket") >= 50)
@@ -811,8 +805,7 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH {_mh_pipeline_cte('documents')}, bk AS (
       SELECT doc_id AS doc,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100
-               AS bucket
+             {md5_int_sql('CAST(doc_id AS VARCHAR)', 8, spark=False)} % 100 AS bucket
       FROM documents
     ),
     cand AS (
@@ -845,10 +838,7 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fegis_spark.operators.dedup import minhash_incremental_pairs_portable
 
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = F.expr(f"{md5_int_sql('CAST(doc_id AS STRING)', 8, spark=True)} % 100")
     docs = docs.withColumn("bucket", bucket)
     # band-ok: 2^60 md5 band keyspace, oracle replays the uncapped
     # candidate set exactly (see dedup_minhash_portable); the capped
@@ -867,7 +857,7 @@ def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH {_mh_pipeline_cte("documents", "MATERIALIZED ")}, ids AS MATERIALIZED (
       SELECT doc_id AS doc,
-             CAST(CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 3 AS INT) AS chunk
+             CAST({md5_int_sql('CAST(doc_id AS VARCHAR)', 8, spark=False)} % 3 AS INT) AS chunk
       FROM documents
     ), cand AS (
       SELECT DISTINCT l.doc AS a, r.doc AS b
@@ -943,10 +933,7 @@ def dedup_streaming_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fegis_spark.streaming.neardup import neardup_replay_chunks
 
     docs = load_table(spark, sf_dir, "documents")
-    chunk = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 3
-    ).cast("int")
+    chunk = F.expr(f"CAST({md5_int_sql('CAST(doc_id AS STRING)', 8, spark=True)} % 3 AS INT)")
     docs = docs.withColumn("chunk3", chunk)
     return neardup_replay_chunks(spark, docs, "text", "doc_id", "chunk3", 3)
 
@@ -1379,7 +1366,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted AS (
       SELECT source,
              count(*) OVER (
-               PARTITION BY md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
+               PARTITION BY md5({norm_text_sql('text', spark=False)})
              ) AS dup_count
       FROM hot
     )
@@ -1412,13 +1399,12 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB posture: one scan, one exchange on the content hash for the
     count window, one hash-agg — no join-back, no corpus x corpus
     shape; the same plan as exact dedup plus a bounded histogram agg."""
-    from fegis_spark.operators.dedup import normalize_text
     from fegis_spark.queries.sqlfrag import spark_hot_docs
 
     from pyspark.sql import Window
 
     docs = spark_hot_docs(load_table(spark, sf_dir, "documents"))
-    h = F.md5(normalize_text(F.col("text")))
+    h = F.expr(f"md5({norm_text_sql('text', spark=True)})")
     # grpwin-ok: content-hash keyspace scales with input
     w = Window.partitionBy(h)
     counted = docs.select(

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from fegis_spark.catalog import register
 from fegis_spark.model import load_table
-from fegis_spark.queries.sqlfrag import duck_tokens, portable_ln
+from fegis_spark.queries.sqlfrag import md5_int_sql, portable_ln, tokens_sql
 
 #: hashed-feature space size for DSIR. 256 keeps the bucket table
 #: trivially broadcastable at any corpus size (the table is B rows no
@@ -26,20 +26,13 @@ from fegis_spark.queries.sqlfrag import duck_tokens, portable_ln
 DSIR_BUCKETS = 256
 
 
-def _tok_bucket(col):
-    """Portable md5 bucket of a token (CLAUDE.md md5-bucket recipe)."""
-    return (
-        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint") % DSIR_BUCKETS
-    )
-
-
 @register(
     "dsir_importance",
     oracle=f"""
     WITH tok AS (
       SELECT doc_id, lang,
-             CAST(('0x' || substr(md5(t), 1, 8)) AS BIGINT) % {DSIR_BUCKETS} AS bucket
-      FROM (SELECT doc_id, lang, unnest({duck_tokens('text')}) AS t FROM documents)
+             {md5_int_sql('t', 8, spark=False)} % {DSIR_BUCKETS} AS bucket
+      FROM (SELECT doc_id, lang, unnest({tokens_sql('text', spark=False)}) AS t FROM documents)
     ),
     counts AS MATERIALIZED (
       SELECT bucket,
@@ -97,8 +90,10 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("t")
-    ).select("doc_id", "lang", _tok_bucket(F.col("t")).alias("bucket"))
+        "doc_id", "lang", F.explode(tokens("text")).alias("t")
+    ).selectExpr(
+        "doc_id", "lang", f"{md5_int_sql('t', 8, spark=True)} % {DSIR_BUCKETS} AS bucket"
+    )
     counts = (
         tok.groupBy("bucket")
         .agg(
@@ -246,8 +241,8 @@ WOR_K = 50
     oracle=f"""
     WITH u AS (
       SELECT doc_id, lang, n_chars,
-             (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                AS BIGINT) + 0.5) / 4294967296.0 AS u
+             ({md5_int_sql('CAST(doc_id AS VARCHAR)', 8, spark=False)} + 0.5)
+               / 4294967296.0 AS u
       FROM documents
     ), keyed AS (
       SELECT doc_id, lang, n_chars,
@@ -278,11 +273,9 @@ def weighted_sample_wor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln()'s 1-ulp divergence is no longer needed; the key is emitted
     unrounded and doc_id totalizes."""
     docs = load_table(spark, sf_dir, "documents")
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        + 0.5
-    ) / F.lit(4294967296.0)
+    u = (F.expr(md5_int_sql("CAST(doc_id AS STRING)", 8, spark=True)) + 0.5) / F.lit(
+        4294967296.0
+    )
     keyed = docs.select("doc_id", "lang", "n_chars", u.alias("u")).select(
         "doc_id",
         "lang",

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from fegis_spark.catalog import register
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes
 from fegis_spark.queries.aggregates import dsum
+from fegis_spark.queries.sqlfrag import md5_int_sql
 
 
 @register(
@@ -468,15 +469,15 @@ def outer_join_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "snapshot_diff",
-    oracle="""
+    oracle=f"""
     WITH a AS (
       SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-      WHERE CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8)) AS BIGINT) % 10 < 9
+      WHERE {md5_int_sql('CAST(o_orderkey AS VARCHAR)', 8, spark=False)} % 10 < 9
     ), b AS (
       SELECT o_orderkey, o_orderstatus,
              CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1.0 ELSE o_totalprice END AS o_totalprice
       FROM orders
-      WHERE CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8)) AS BIGINT) % 10 > 0
+      WHERE {md5_int_sql('CAST(o_orderkey AS VARCHAR)', 8, spark=False)} % 10 > 0
     )
     SELECT change, COUNT(*) AS n FROM (
       SELECT CASE
@@ -500,10 +501,7 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/scale.write_bucketed) and the join is co-located with
     no shuffle at all."""
     o = load_table(spark, sf_dir, "orders")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 10
-    )
+    bucket = F.expr(f"{md5_int_sql('CAST(o_orderkey AS STRING)', 8, spark=True)} % 10")
     a = o.filter(bucket < 9).select(
         "o_orderkey", "o_orderstatus", F.col("o_totalprice").alias("price")
     )
@@ -642,12 +640,12 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "apply_changes",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT doc_id, lang, n_chars FROM documents WHERE doc_id % 2 = 0
     ), src AS (
       SELECT doc_id, lang, n_chars,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 3 AS op3
+             {md5_int_sql('CAST(doc_id AS VARCHAR)', 8, spark=False)} % 3 AS op3
       FROM documents WHERE doc_id % 2 = 1
     ), ups AS (
       SELECT CASE WHEN op3 = 0 THEN doc_id - 1 ELSE doc_id END AS key,
@@ -686,10 +684,7 @@ def apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     constructed set scales with the corpus — over the gate AQE picks
     the strategy)."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket3 = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 3
-    )
+    bucket3 = F.expr(f"{md5_int_sql('CAST(doc_id AS STRING)', 8, spark=True)} % 3")
     base = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang", "n_chars")
     src = docs.filter(F.col("doc_id") % 2 == 1).withColumn("op3", bucket3)
     ups = src.filter(F.col("op3").isin(0, 1)).select(

@@ -19,22 +19,13 @@ from pyspark.sql import functions as F
 
 from fegis_spark.catalog import register
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes
-from fegis_spark.queries.sqlfrag import duck_tokens
-
-#: Spark-side md5 bucket in [0, 100): deterministic, uniform-ish, and
-#: reproducible in any engine with md5 (DuckDB form below).
-def _hash_bucket(col: F.Column, buckets: int = 100) -> F.Column:
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("bigint")
-        % buckets
-    )
+from fegis_spark.queries.sqlfrag import md5_int_sql, norm_text_sql, tokens_sql
 
 
-def _hash_bucket_sql(col: str, buckets: int = 100) -> str:
-    return (
-        f"CAST(('0x' || substr(md5(CAST({col} AS VARCHAR)), 1, 8)) AS BIGINT)"
-        f" % {buckets}"
-    )
+def _bucket_sql(col: str, buckets: int = 100, *, spark: bool) -> str:
+    """md5 bucket in [0, buckets) of column expression `col`:
+    deterministic, uniform-ish, the same on both engines."""
+    return f"{md5_int_sql(f'CAST({col} AS STRING)', 8, spark=spark)} % {buckets}"
 
 
 def _split_case(bucket_col: str = "bucket") -> str:
@@ -52,8 +43,8 @@ _SPLIT_CASE = _split_case()
 
 def _split_case_sql(col: str) -> str:
     """DuckDB split assignment straight from a column (md5 bucket
-    inlined) — the oracle twin of _split_of(_hash_bucket(col))."""
-    b = _hash_bucket_sql(col)
+    inlined) — the oracle twin of _split_of over _bucket_sql(col)."""
+    b = _bucket_sql(col, spark=False)
     return f"CASE WHEN {b} < 80 THEN 'train' WHEN {b} < 90 THEN 'val' ELSE 'test' END"
 
 
@@ -67,7 +58,7 @@ def _split_of(bucket: F.Column) -> F.Column:
     oracle=f"""
     WITH bucketed AS (
       SELECT doc_id, lang, n_chars,
-             {_hash_bucket_sql('doc_id')} AS bucket
+             {_bucket_sql('doc_id', spark=False)} AS bucket
       FROM documents
     )
     SELECT {_SPLIT_CASE} AS split,
@@ -91,7 +82,7 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "n_chars",
-        _hash_bucket(F.col("doc_id")).alias("bucket"),
+        F.expr(_bucket_sql("doc_id", spark=True)).alias("bucket"),
     )
     split = F.when(F.col("bucket") < 80, "train").when(
         F.col("bucket") < 90, "val"
@@ -115,8 +106,8 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
              {_split_case('gbucket')} AS grp_split
       FROM (
         SELECT source,
-               {_hash_bucket_sql('doc_id')} AS bucket,
-               {_hash_bucket_sql('source')} AS gbucket
+               {_bucket_sql('doc_id', spark=False)} AS bucket,
+               {_bucket_sql('source', spark=False)} AS gbucket
         FROM documents
       )
     ), per_source AS (
@@ -173,8 +164,8 @@ def group_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     assigned = docs.select(
         "source",
-        _split_of(_hash_bucket(F.col("doc_id"))).alias("doc_split"),
-        _split_of(_hash_bucket(F.col("source"))).alias("grp_split"),
+        _split_of(F.expr(_bucket_sql("doc_id", spark=True))).alias("doc_split"),
+        _split_of(F.expr(_bucket_sql("source", spark=True))).alias("grp_split"),
     )
     # "straddles >1 split" == min != max (3 split values) — avoids the
     # countDistinct Expand (3x map-side rows + an extra exchange)
@@ -232,7 +223,7 @@ def group_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id AS doc, lang, source,
              list_distinct(list_transform(range(0, len(tok)-2),
                            i -> array_to_string(list_slice(tok, i+1, i+3), ' '))) AS sh
-      FROM (SELECT *, {duck_tokens('text')} AS tok FROM documents)
+      FROM (SELECT *, {tokens_sql('text', spark=False)} AS tok FROM documents)
       WHERE len(tok) >= 3
     ), ex AS (
       SELECT doc, lang, source, len(sh) AS n_sh, unnest(sh) AS g FROM base
@@ -294,11 +285,11 @@ def split_leakage_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id", ["lang"],
         ngram=3, threshold=0.5, payload_cols=("source",),
     )
-    doc_cross = _split_of(_hash_bucket(F.col("a"))) != _split_of(
-        _hash_bucket(F.col("b"))
+    doc_cross = _split_of(F.expr(_bucket_sql("a", spark=True))) != _split_of(
+        F.expr(_bucket_sql("b", spark=True))
     )
-    grp_cross = _split_of(_hash_bucket(F.col("a_source"))) != _split_of(
-        _hash_bucket(F.col("b_source"))
+    grp_cross = _split_of(F.expr(_bucket_sql("a_source", spark=True))) != _split_of(
+        F.expr(_bucket_sql("b_source", spark=True))
     )
     wide = pairs.agg(
         F.count("*").alias("n_pairs"),
@@ -384,7 +375,7 @@ SAMPLE_RATES = {"en": 25, "zh": 50, "de": 100, "fr": 100, "es": 100}
     oracle=f"""
     WITH bucketed AS (
       SELECT doc_id, lang,
-             {_hash_bucket_sql('doc_id')} AS bucket
+             {_bucket_sql('doc_id', spark=False)} AS bucket
       FROM documents
     )
     SELECT lang, COUNT(*) AS n_kept
@@ -407,9 +398,9 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.when(F.col("lang") == k, F.lit(v)) for k, v in SAMPLE_RATES.items()],
         F.lit(100),
     )
-    kept = docs.select("doc_id", "lang", _hash_bucket(F.col("doc_id")).alias("bucket")).filter(
-        F.col("bucket") < rate
-    )
+    kept = docs.selectExpr(
+        "doc_id", "lang", f"{_bucket_sql('doc_id', spark=True)} AS bucket"
+    ).filter(F.col("bucket") < rate)
     return kept.groupBy("lang").agg(F.count("*").alias("n_kept"))
 
 
@@ -467,16 +458,14 @@ CDC_WINDOW, CDC_DIVISOR = 4, 16
 #: geometry cannot drift between them).
 _CDC_CHUNKS_SQL = f"""
     WITH base AS (
-      SELECT doc_id, {duck_tokens('text')} AS tok FROM documents
+      SELECT doc_id, {tokens_sql('text', spark=False)} AS tok FROM documents
     ), b AS (
       SELECT doc_id, tok,
              list_concat(list_concat(
                [CAST(0 AS BIGINT)],
                CASE WHEN len(tok) >= {CDC_WINDOW} THEN
                  list_filter(list_transform(range({CDC_WINDOW}, len(tok) + 1),
-                   i -> CASE WHEN CAST(('0x' || substr(md5(array_to_string(
-                            list_slice(tok, i - {CDC_WINDOW} + 1, i), ' ')),
-                            1, 8)) AS BIGINT) % {CDC_DIVISOR} = 0
+                   i -> CASE WHEN {md5_int_sql(f"array_to_string(list_slice(tok, i - {CDC_WINDOW} + 1, i), ' ')", 8, spark=False)} % {CDC_DIVISOR} = 0
                           AND i < len(tok)
                         THEN i ELSE CAST(-1 AS BIGINT) END),
                    p -> p >= 0)
@@ -522,11 +511,11 @@ def cdc_chunks(docs: DataFrame) -> DataFrame:
     from fegis_spark.operators.dedup import tokens
 
     B, D = CDC_WINDOW, CDC_DIVISOR
-    base = docs.select("doc_id", tokens(F.col("text")).alias("tok")).filter(
+    base = docs.select("doc_id", tokens("text").alias("tok")).filter(
         F.size("tok") > 0
     )
     gram = f"concat_ws(' ', slice(tok, i - {B} + 1, {B}))"
-    bucket = f"CAST(conv(substring(md5({gram}), 1, 8), 16, 10) AS BIGINT) % {D}"
+    bucket = f"{md5_int_sql(gram, 8, spark=True)} % {D}"
     bounds = (
         f"concat(array(CAST(0 AS BIGINT)), "
         f"CASE WHEN size(tok) >= {B} THEN "
@@ -573,7 +562,7 @@ EVAL_MOD = 53
       SELECT doc_id AS doc,
              list_distinct(list_transform(range(0, len(tok)-{CONTAM_NGRAM - 1}),
                            i -> array_to_string(list_slice(tok, i+1, i+{CONTAM_NGRAM}), ' '))) AS sh
-      FROM (SELECT *, {duck_tokens('text')} AS tok
+      FROM (SELECT *, {tokens_sql('text', spark=False)} AS tok
             FROM documents)
       WHERE len(tok) >= {CONTAM_NGRAM}
     ),
@@ -690,7 +679,7 @@ def mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH s AS (
       SELECT lang, doc_id, n_chars,
-             {_hash_bucket_sql('doc_id', 4)} AS shard
+             {_bucket_sql('doc_id', 4, spark=False)} AS shard
       FROM documents
     ), l AS (
       SELECT *, CAST(floor(
@@ -741,7 +730,7 @@ def pack_sequences_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pack_shard_probe",
     oracle=f"""
-    SELECT {_hash_bucket_sql('doc_id', 4)} AS shard,
+    SELECT {_bucket_sql('doc_id', 4, spark=False)} AS shard,
            COUNT(*) AS n_docs,
            CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
            min(doc_id) AS min_doc_id,
@@ -760,11 +749,7 @@ def pack_shard_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (this passes, pack_sequences_sharded fails). Pure integer outputs:
     no float formatting anywhere."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % 4
-    )
+    shard = F.expr(_bucket_sql("doc_id", 4, spark=True))
     return docs.select("doc_id", shard.alias("shard")).groupBy("shard").agg(
         F.count("*").alias("n_docs"),
         F.sum("doc_id").alias("sum_doc_id"),
@@ -814,8 +799,8 @@ from fegis_spark.operators.text_analysis import quality_score_sql  # noqa: E402
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, lang,
-             {quality_score_sql('text')} AS quality,
-             {_hash_bucket_sql('doc_id')} AS bucket
+             {quality_score_sql('text', spark=False)} AS quality,
+             {_bucket_sql('doc_id', spark=False)} AS bucket
       FROM documents
     )
     SELECT lang, COUNT(*) AS n_kept,
@@ -835,14 +820,12 @@ def quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     other engines agree row-for-row). The importance-sampling step of
     a curation pipeline, zero RNG. One scan; the keep filter prunes
     before the only shuffle (the reporting agg)."""
-    from fegis_spark.operators.text_analysis import quality_score_expr
-
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
         "lang",
-        quality_score_expr("text").alias("quality"),
-        _hash_bucket(F.col("doc_id")).alias("bucket"),
+        F.expr(quality_score_sql("text", spark=True)).alias("quality"),
+        F.expr(_bucket_sql("doc_id", spark=True)).alias("bucket"),
     )
     kept = scored.filter(
         F.col("bucket") < F.floor(F.col("quality") * 100).cast("bigint")
@@ -871,7 +854,7 @@ def quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT d.source, r.n_orig,
            COUNT(*) FILTER (
-             WHERE {_hash_bucket_sql('d.doc_id', 10000)} < rate * 10000
+             WHERE {_bucket_sql('d.doc_id', 10000, spark=False)} < rate * 10000
            ) AS n_kept,
            r.rate AS rate
     FROM documents d JOIN rates r USING (source)
@@ -902,7 +885,7 @@ def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(
                 F.when(
-                    _hash_bucket(F.col("doc_id"), 10000) < F.col("rate") * 10000, 1
+                    F.expr(_bucket_sql("doc_id", 10000, spark=True)) < F.col("rate") * 10000, 1
                 ).otherwise(0)
             )
             .cast("bigint")
@@ -920,7 +903,7 @@ def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "curriculum_shards",
     oracle=f"""
     WITH scored AS (
-      SELECT doc_id, round({quality_score_sql('text')}, 6) AS q FROM documents
+      SELECT doc_id, round({quality_score_sql('text', spark=False)}, 6) AS q FROM documents
     ), cuts AS (
       SELECT quantile_cont(q, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS c
       FROM scored
@@ -959,11 +942,9 @@ def curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.catalog.clearCache())."""
     from pyspark import StorageLevel
 
-    from fegis_spark.operators.text_analysis import quality_score_expr
-
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
-        "doc_id", F.round(quality_score_expr("text"), 6).alias("q")
+        "doc_id", F.round(F.expr(quality_score_sql("text", spark=True)), 6).alias("q")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     cuts = scored.agg(
         F.percentile("q", F.lit([i / 10.0 for i in range(1, 10)])).alias("c")
@@ -1011,9 +992,9 @@ def _js_sum(cp: str, cq: str, n_p: str, n_q: str, spark: bool = False) -> str:
     "split_divergence",
     oracle=f"""
     WITH b AS (
-      SELECT doc_id, text, {_hash_bucket_sql('doc_id')} AS bucket FROM documents
+      SELECT doc_id, text, {_bucket_sql('doc_id', spark=False)} AS bucket FROM documents
     ), tok AS (
-      SELECT {_SPLIT_CASE} AS split, unnest({duck_tokens('text')}) AS t FROM b
+      SELECT {_SPLIT_CASE} AS split, unnest({tokens_sql('text', spark=False)}) AS t FROM b
     ), cnt AS (
       SELECT t,
              SUM(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS c_train,
@@ -1065,11 +1046,11 @@ def split_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     split = (
-        F.when(_hash_bucket(F.col("doc_id")) < 80, "train")
-        .when(_hash_bucket(F.col("doc_id")) < 90, "val")
+        F.when(F.expr(_bucket_sql("doc_id", spark=True)) < 80, "train")
+        .when(F.expr(_bucket_sql("doc_id", spark=True)) < 90, "val")
         .otherwise("test")
     )
-    tok = docs.select(split.alias("split"), F.explode(tokens(F.col("text"))).alias("t"))
+    tok = docs.select(split.alias("split"), F.explode(tokens("text")).alias("t"))
     cnt = (
         tok.groupBy("t")
         .agg(
@@ -1103,39 +1084,29 @@ def split_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _manifest_hash_sql(*, spark: bool) -> str:
+    """Per-document manifest hash: the md5 recipe (15 hex digits) over
+    doc_id:normalized text."""
+    key = f"concat_ws(':', CAST(doc_id AS STRING), {norm_text_sql('text', spark=spark)})"
+    return md5_int_sql(key, 15, spark=spark)
+
+
 def _manifest_sql(src: str) -> str:
     """DuckDB bucket-XOR manifest over `src` — the ONE recipe string
     both corpus_checksums and checksum_drift_detect interpolate (the
     shared-fragment anti-drift rule)."""
-    return f"""SELECT {_hash_bucket_sql('doc_id')} AS bucket,
+    return f"""SELECT {_bucket_sql('doc_id', spark=False)} AS bucket,
            COUNT(*) AS n_docs,
-           bit_xor(CAST(('0x' || substr(md5(
-             CAST(doc_id AS VARCHAR) || ':' ||
-             lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))
-           ), 1, 15)) AS BIGINT)) AS xor_hash
+           bit_xor({_manifest_hash_sql(spark=False)}) AS xor_hash
     FROM {src}
     GROUP BY 1"""
 
 
 def _manifest(docs: DataFrame) -> DataFrame:
     """Spark twin of _manifest_sql: (bucket, n_docs, xor_hash)."""
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.col("doc_id").cast("string"),
-                    F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = F.expr(_manifest_hash_sql(spark=True))
     return (
-        docs.select(_hash_bucket(F.col("doc_id")).alias("bucket"), h.alias("h"))
+        docs.select(F.expr(_bucket_sql("doc_id", spark=True)).alias("bucket"), h.alias("h"))
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1318,7 +1289,7 @@ _FS_DECILES = [i / 10.0 for i in range(1, 10)]
     WITH keptdocs AS MATERIALIZED (
       SELECT doc_id, n_chars, text, q FROM (
         SELECT doc_id, n_chars, text,
-               round({quality_score_sql('text')}, 6) AS q,
+               round({quality_score_sql('text', spark=False)}, 6) AS q,
                {_FS_GOPHER_KEEP_DUCK} AS gk
         FROM documents
       ) WHERE gk = 1 AND q >= 0.5
@@ -1347,7 +1318,7 @@ _FS_DECILES = [i / 10.0 for i in range(1, 10)]
     ), assigned AS (
       SELECT doc_id, n_chars, q,
              len(list_filter(c, x -> q > x)) AS shard,
-             {_hash_bucket_sql('doc_id', 4)} AS sub
+             {_bucket_sql('doc_id', 4, spark=False)} AS sub
       FROM surv, cuts
     ), lp AS (
       SELECT *, CAST(floor(
@@ -1415,14 +1386,13 @@ def curation_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fegis_spark.operators.dedup import minhash_lsh_pairs
     from fegis_spark.operators.scale import pack_greedy_sharded
-    from fegis_spark.operators.text_analysis import quality_score_expr
 
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
         "n_chars",
         "text",
-        F.round(quality_score_expr("text"), 6).alias("q"),
+        F.round(F.expr(quality_score_sql("text", spark=True)), 6).alias("q"),
         F.expr(_FS_GOPHER_KEEP_SPARK).alias("gk"),
     )
     kept = (
@@ -1583,7 +1553,7 @@ OVERLAP_NGRAM = 3
       SELECT source,
              list_distinct(list_transform(range(0, len(tok)-{OVERLAP_NGRAM - 1}),
                            i -> array_to_string(list_slice(tok, i+1, i+{OVERLAP_NGRAM}), ' '))) AS sh
-      FROM (SELECT source, {duck_tokens('text')} AS tok FROM documents)
+      FROM (SELECT source, {tokens_sql('text', spark=False)} AS tok FROM documents)
       WHERE len(tok) >= {OVERLAP_NGRAM}
     ), g AS (
       SELECT DISTINCT source, md5(g) AS h
@@ -1887,25 +1857,15 @@ def dedup_chunk_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
 HRW_SHARDS = 8
 
 
-def _hrw_weight_sql(key: str, shard: int, spark: bool = False) -> str:
-    """md5-derived rendezvous weight of (key, shard) — the first 8 hex
-    digits as a BIGINT. Same value on both engines, engine-specific
-    spelling (the CLAUDE.md md5-bucket recipe: Spark has no hex-string
-    cast, DuckDB has no conv)."""
-    if spark:
-        return (
-            f"CAST(conv(substring(md5(CAST({key} AS STRING) || ':{shard}'),"
-            f" 1, 8), 16, 10) AS BIGINT)"
-        )
-    return (
-        f"CAST(('0x' || substr(md5(CAST({key} AS VARCHAR) || ':{shard}'),"
-        f" 1, 8)) AS BIGINT)"
-    )
+def _hrw_weight_sql(key: str, shard: int, *, spark: bool) -> str:
+    """md5-derived rendezvous weight of (key, shard): the md5 recipe
+    over 'key:shard'."""
+    return md5_int_sql(f"CAST({key} AS STRING) || ':{shard}'", 8, spark=spark)
 
 
 def _hrw_oracle() -> str:
     n = HRW_SHARDS
-    w = [_hrw_weight_sql("doc_id", s) for s in range(n + 1)]
+    w = [_hrw_weight_sql("doc_id", s, spark=False) for s in range(n + 1)]
     greatest_n = "greatest(" + ", ".join(w[:n]) + ")"
     # argmax by weight with shard-index tiebreak (lowest shard wins on
     # equal weights — ties are astronomically unlikely but must be

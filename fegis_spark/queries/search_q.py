@@ -8,23 +8,11 @@ from pyspark.sql import functions as F
 
 from fegis_spark.catalog import register
 from fegis_spark.model import load_table
-from fegis_spark.operators.rrf import rrf_fuse
-from fegis_spark.queries.sqlfrag import duck_tokens, portable_ln
+from fegis_spark.operators.rrf import lexical_score_sql, rrf_fuse
+from fegis_spark.queries.sqlfrag import portable_ln, tokens_sql
 from fegis_spark.queries.vector_q import _COS, _query_vec
 
 _TERMS = ["data", "model", "system"]
-
-
-def _lex_sql(c: str) -> str:
-    p = "' ' || lower(trim(regexp_replace({c}, '\\s+', ' ', 'g'))) || ' '".format(c=c)
-    return (
-        "("
-        + " + ".join(
-            f"(length({p}) - length(replace({p}, ' {t} ', ''))) / {len(t) + 2}"
-            for t in _TERMS
-        )
-        + ")"
-    )
 
 
 @register(
@@ -33,7 +21,7 @@ def _lex_sql(c: str) -> str:
     WITH scored AS (
       SELECT d.doc_id AS id,
              {_COS} AS dense,
-             {_lex_sql('d.text')}::DOUBLE AS lex
+             {lexical_score_sql('d.text', _TERMS, spark=False)} AS lex
       FROM documents d
       JOIN embeddings a ON a.vec_id = d.doc_id
       CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
@@ -116,7 +104,7 @@ def search_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH scored AS (
       SELECT d.doc_id AS id,
              {_COS} AS dense,
-             {_lex_sql('d.text')}::DOUBLE AS lex
+             {lexical_score_sql('d.text', _TERMS, spark=False)} AS lex
       FROM documents d
       JOIN embeddings a ON a.vec_id = d.doc_id
       CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
@@ -165,8 +153,6 @@ def _bm25_oracle(terms: list[str], k: int = 10, k1: float = 1.2, b: float = 0.75
     term list and constants so the arithmetic cannot drift. idf goes
     through portable_ln on the 1-row stats (bit-identical cross-engine,
     see evidence/ln_ulp_probe_r8.json), so scores ship UNROUNDED."""
-    from fegis_spark.queries.sqlfrag import duck_tokens, portable_ln
-
     tf_cols = ",\n             ".join(
         f"CAST(len(list_filter(tok, x -> x = '{t}')) AS DOUBLE) AS tf{i}"
         for i, t in enumerate(terms)
@@ -190,7 +176,7 @@ def _bm25_oracle(terms: list[str], k: int = 10, k1: float = 1.2, b: float = 0.75
     )
     return f"""
     WITH tok AS (
-      SELECT doc_id AS id, {duck_tokens('text')} AS tok FROM documents
+      SELECT doc_id AS id, {tokens_sql('text', spark=False)} AS tok FROM documents
     ), tfs AS (
       SELECT id, CAST(len(tok) AS DOUBLE) AS dl,
              {tf_cols}
@@ -234,7 +220,7 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,  # production-shaped hybrid tracked alongside rrf_hybrid_search (r4 verdict #6)
     oracle=f"""
     WITH tok AS (
-      SELECT d.doc_id AS id, {duck_tokens('d.text')} AS tok, d.text, a.embedding
+      SELECT d.doc_id AS id, {tokens_sql('d.text', spark=False)} AS tok, d.text, a.embedding
       FROM documents d JOIN embeddings a ON a.vec_id = d.doc_id
     ), tfs AS (
       SELECT id, embedding, CAST(len(tok) AS DOUBLE) AS dl,

@@ -1,16 +1,63 @@
-"""Shared DuckDB SQL fragments mirroring Spark-side expression
-recipes, so every oracle spells the exact same semantics once.
+"""The portable SQL recipes, each spelled ONCE as a generator that
+returns its Spark-SQL (spark=True) or DuckDB (spark=False) form, so a
+Spark builder (``F.expr(x_sql(..., spark=True))``) and its DuckDB
+oracle interpolate the same recipe and cannot drift:
 
-The tokenizer fragment must stay in lockstep with
-operators.dedup.tokens(): lowercase -> space out CJK codepoints
-(unsegmented scripts tokenize per codepoint) -> split on runs of
-non-letter/non-digit -> drop empties. Java regex spells Unicode
-scripts \\p{IsHan}; RE2 (DuckDB) spells them \\p{Han}.
+* md5_int_sql — the first k md5 hex digits of an expression as a
+  BIGINT (Spark has no hex-string cast, DuckDB has no conv); callers
+  add their own salt and ``% n``;
+* norm_text_sql — lowercased, trimmed, whitespace-collapsed text (the
+  exact-dedup key and the padded text of the lexical scorers);
+* tokens_sql — the Unicode tokenizer: lowercase -> space out CJK
+  codepoints (unsegmented scripts tokenize per codepoint) -> split on
+  runs of non-letter/non-digit -> drop empties. Java regex spells
+  Unicode scripts \\p{IsHan}; RE2 (DuckDB) spells them \\p{Han};
+* portable_ln — a natural log bit-identical on both engines.
+
+The text_analysis scorers (operators/text_analysis.py) are generators
+of the same shape. ``spark`` is keyword-only with no default, so no
+caller gets a dialect by accident; lambda variables start with ``_``
+so they cannot shadow a caller's column.
 """
 
 from __future__ import annotations
 
+_CJK_JAVA = r"[\p{IsHan}\p{IsHiragana}\p{IsKatakana}\p{IsHangul}]"
 _CJK_RE2 = r"[\p{Han}\p{Hiragana}\p{Katakana}\p{Hangul}]"
+
+
+def md5_int_sql(x: str, k: int, *, spark: bool) -> str:
+    """The first `k` hex digits of md5(`x`) as a BIGINT (k <= 15 keeps
+    it non-negative). Same value on both engines; Spark converts the
+    hex digits with conv, DuckDB casts a '0x' literal."""
+    if spark:
+        return f"CAST(conv(substring(md5({x}), 1, {k}), 16, 10) AS BIGINT)"
+    return f"CAST(('0x' || substr(md5({x}), 1, {k})) AS BIGINT)"
+
+
+def norm_text_sql(c: str, *, spark: bool) -> str:
+    """`c` lowercased and trimmed, every whitespace run collapsed to one
+    space. Spark's regexp_replace is global and its SQL literals take
+    backslash escapes; DuckDB needs the 'g' flag and reads the literal
+    raw."""
+    if spark:
+        return f"lower(trim(regexp_replace({c}, '\\\\s+', ' ')))"
+    return f"lower(trim(regexp_replace({c}, '\\s+', ' ', 'g')))"
+
+
+def tokens_sql(c: str, *, spark: bool) -> str:
+    """The token array of text expression `c`: runs of letters/digits
+    (\\p{L}\\p{N}, not just ASCII), lowercased, with CJK codepoints
+    first split out as single-character tokens so unsegmented scripts
+    are not invisible to the minhash/simhash/jaccard/contamination
+    family. Empty strings are dropped."""
+    if spark:
+        cjk = _CJK_JAVA.replace("\\", "\\\\")
+        spaced = f"regexp_replace(lower({c}), '({cjk})', ' $1 ')"
+        return f"filter(split({spaced}, '[^\\\\p{{L}}\\\\p{{N}}]+'), _t -> _t != '')"
+    spaced = f"regexp_replace(lower({c}), '({_CJK_RE2})', ' \\1 ', 'g')"
+    return f"list_filter(string_split_regex({spaced}, '[^\\p{{L}}\\p{{N}}]+'), _t -> _t <> '')"
+
 
 #: Constructed hot-bucket corpus for the *_capped dedup queries:
 #: every doc with doc_id % HOT_MOD == 0 gets this boilerplate text, so
@@ -91,18 +138,8 @@ def duck_match_text(col: str, query: str) -> str:
     qtoks = list(dict.fromkeys(analyzer_tokens(query)))
     if not qtoks:
         return "TRUE"
-    toks = duck_tokens(col)
+    toks = tokens_sql(col, spark=False)
     return " AND ".join(f"list_contains({toks}, '{t}')" for t in qtoks)
-
-
-def duck_tokens(col: str) -> str:
-    """DuckDB expression producing the same token list as
-    operators.dedup.tokens() over `col` (a SQL expression string)."""
-    return (
-        "list_filter(string_split_regex("
-        f"regexp_replace(lower({col}), '({_CJK_RE2})', ' \\1 ', 'g'), "
-        r"'[^\p{L}\p{N}]+'), x -> x <> '')"
-    )
 
 
 def _ln_coeffs(terms: int = 19) -> list[float]:

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from fegis_spark.catalog import register
 from fegis_spark.ingest import ingest_batch
 from fegis_spark.model import load_table
+from fegis_spark.queries.sqlfrag import md5_int_sql
 
 
 @register(
@@ -42,34 +43,14 @@ from fegis_spark.model import load_table
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] batch sessionization (30-min gap): lag + running sum of
     breaks — one shuffle on user_id; same result session_window gives
-    a complete stream."""
-    ev = load_table(spark, sf_dir, "events")
-    # deterministic total order under ties: add event_id to the window sort
-    from pyspark.sql import Window
+    a complete stream. The library window orders by ts alone, the
+    oracle's by (ts, event_id); the output is the same either way:
+    rows with equal ts are 0 s apart, so only the first of them can
+    break, and the running sum gives every tied row the same
+    session_seq."""
+    from fegis_spark.streaming.sessionize import session_stats_batch
 
-    # grpwin-ok: user_id cardinality scales with input
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    is_brk = (
-        prev.isNull()
-        | (
-            (F.col("ts").cast("timestamp").cast("long") - prev.cast("timestamp").cast("long"))
-            > 1800
-        )
-    ).cast("int")
-    sess = ev.withColumn("__brk", is_brk).withColumn(
-        "session_seq",
-        F.sum("__brk").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return sess.groupBy("user_id", "session_seq").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count("*").alias("n_events"),
-        (
-            F.max(F.col("ts").cast("timestamp")).cast("long")
-            - F.min(F.col("ts").cast("timestamp")).cast("long")
-        ).alias("duration_s"),
-    )
+    return session_stats_batch(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -302,11 +283,10 @@ def sliding_counts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cdc_upsert_conflicts",
-    oracle="""
+    oracle=f"""
     WITH ch AS (
       SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
-             CASE WHEN CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8))
-                       AS BIGINT) % 100 = 0
+             CASE WHEN {md5_int_sql('CAST(event_id AS VARCHAR)', 8, spark=False)} % 100 = 0
                   THEN 'delete' ELSE 'upsert' END AS op
       FROM events
     ), ups AS (
@@ -342,10 +322,7 @@ def cdc_upsert_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "value"
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = F.expr(f"{md5_int_sql('CAST(event_id AS STRING)', 8, spark=True)} % 100")
     ch = ev.withColumn(
         "op", F.when(bucket == 0, F.lit("delete")).otherwise(F.lit("upsert"))
     )

@@ -15,6 +15,7 @@ from fegis_spark.functions.textfns import (
     relative_time,
 )
 from fegis_spark.model import load_table
+from fegis_spark.queries.sqlfrag import norm_text_sql
 
 # Shared DuckDB CTE: cleaned text + sentence list + 2-sentence summary,
 # mirroring functions/textfns.py branch-for-branch.
@@ -133,11 +134,11 @@ def relative_time_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "capitalize_variants",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            upper(substr(source, 1, 1)) || lower(substr(source, 2)) AS cap,
            lower(source) AS lo,
-           md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS norm_hash
+           md5({norm_text_sql('text', spark=False)}) AS norm_hash
     FROM documents
     """,
     covers=("T10", "K9-prep"),
@@ -146,28 +147,27 @@ def capitalize_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T10 Python-capitalize semantics + the md5 normalized-text hash
     that exact dedup keys on (portable across engines)."""
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     return docs.select(
         "doc_id",
         capitalize(F.col("source")).alias("cap"),
         F.lower("source").alias("lo"),
-        F.md5(norm).alias("norm_hash"),
+        F.expr(f"md5({norm_text_sql('text', spark=True)})").alias("norm_hash"),
     )
 
 
-from fegis_spark.operators.text_analysis import strip_html, strip_html_sql  # noqa: E402
+from fegis_spark.operators.text_analysis import strip_html_sql  # noqa: E402
 
 _WRAP = ("<div class=\"doc\"><!-- hdr -->", "</div><script>track(1&amp;2);</script>")
+#: each doc in a deterministic HTML shell, one spelling for both dialects
+_WRAPPED = f"'{_WRAP[0]}' || text || '{_WRAP[1]}'"
 
 
 @register(
     "strip_html_docs",
     oracle=f"""
     SELECT doc_id,
-           substr({strip_html_sql("'" + _WRAP[0] + "' || text || '" + _WRAP[1] + "'")}, 1, 60)
-             AS head,
-           length({strip_html_sql("'" + _WRAP[0] + "' || text || '" + _WRAP[1] + "'")})
-             AS n_clean
+           substr({strip_html_sql(_WRAPPED, spark=False)}, 1, 60) AS head,
+           length({strip_html_sql(_WRAPPED, spark=False)}) AS n_clean
     FROM documents
     """,
     covers=("[EXT]-htmlstrip",),
@@ -180,8 +180,7 @@ def strip_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     strips it back out — exercising every rule on real text. Pure
     regex projection: zero shuffle, whole-stage codegen."""
     docs = load_table(spark, sf_dir, "documents")
-    wrapped = F.concat(F.lit(_WRAP[0]), F.col("text"), F.lit(_WRAP[1]))
-    clean = strip_html(wrapped)
+    clean = F.expr(strip_html_sql(_WRAPPED, spark=True))
     return docs.select(
         "doc_id",
         F.substring(clean, 1, 60).alias("head"),

@@ -1,7 +1,7 @@
 """Text-analysis catalog queries ([EXT]): lang-id, quality, token
-counts, fingerprints over `documents`. Every oracle is generated from
-the same constant tables as the Column expressions (operators/
-text_analysis.py) so the two sides cannot drift."""
+counts, fingerprints over `documents`. Builder and oracle interpolate
+the same generators (operators/text_analysis.py, queries/sqlfrag.py),
+spelled for Spark or DuckDB, so the two sides cannot drift."""
 
 from __future__ import annotations
 
@@ -13,23 +13,21 @@ from fegis_spark.model import load_table, maybe_broadcast, table_bytes
 from fegis_spark.queries.sqlfrag import (
     HOT_CAP,
     duck_hot_docs,
-    duck_tokens,
+    md5_int_sql,
+    norm_text_sql,
     portable_ln,
     spark_hot_docs,
+    tokens_sql,
 )
 from fegis_spark.operators.text_analysis import (
-    FINGERPRINT_SQL,
+    KN_DISCOUNT,
     KN_P_SQL,
-    TOKEN_COUNT_BPE_SQL,
-    TOKEN_COUNT_WS_SQL,
-    fingerprint,
-    lang_id_expr,
+    fingerprint_sql,
     lang_id_sql,
     lang_margin_sql,
-    quality_score_expr,
     quality_score_sql,
-    token_count_bpe_ish,
-    token_count_ws,
+    token_count_bpe_sql,
+    token_count_ws_sql,
 )
 
 
@@ -42,13 +40,13 @@ def _winnow_fp_cte(src: str, materialized: bool = False) -> str:
     fp CTE AS MATERIALIZED for oracles that self-join it (DuckDB
     inlines plain CTEs, re-scanning parquet per reference)."""
     mat = " MATERIALIZED" if materialized else ""
+    gram_h = md5_int_sql("array_to_string(list_slice(tok, i + 1, i + 3), ' ')", 15, spark=False)
     return f"""base AS (
-      SELECT doc_id, {duck_tokens('text')} AS tok FROM {src}
+      SELECT doc_id, {tokens_sql('text', spark=False)} AS tok FROM {src}
     ), g AS (
       SELECT doc_id,
              list_transform(range(0, greatest(len(tok) - 2, 0)),
-               i -> CAST(('0x' || substr(md5(array_to_string(
-                      list_slice(tok, i + 1, i + 3), ' ')), 1, 15)) AS BIGINT))
+               i -> {gram_h})
                AS gh,
              least(4, greatest(len(tok) - 2, 0)) AS wlen
       FROM base
@@ -69,7 +67,7 @@ def _winnow_fp_cte(src: str, materialized: bool = False) -> str:
 @register(
     "text_lang_id",
     oracle=f"""
-    SELECT doc_id, lang, {lang_id_sql('text')} AS predicted_lang
+    SELECT doc_id, lang, {lang_id_sql('text', spark=False)} AS predicted_lang
     FROM documents
     """,
     covers=("[EXT]-langid",),
@@ -79,15 +77,15 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] n-gram/marker language ID — pure projection, zero shuffle;
     the stored lang column rides along so accuracy is inspectable."""
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", "lang", lang_id_expr("text").alias("predicted_lang"))
+    return docs.selectExpr("doc_id", "lang", f"{lang_id_sql('text', spark=True)} AS predicted_lang")
 
 
 @register(
     "text_token_counts",
     oracle=f"""
     SELECT doc_id,
-           {TOKEN_COUNT_WS_SQL.format(c='text')} AS n_tokens_ws,
-           {TOKEN_COUNT_BPE_SQL.format(c='text')} AS n_tokens_bpe
+           {token_count_ws_sql('text', spark=False)} AS n_tokens_ws,
+           {token_count_bpe_sql('text', spark=False)} AS n_tokens_bpe
     FROM documents
     """,
     covers=("[EXT]-tokens",),
@@ -97,15 +95,15 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        token_count_ws(F.col("text")).cast("bigint").alias("n_tokens_ws"),
-        token_count_bpe_ish(F.col("text")).cast("bigint").alias("n_tokens_bpe"),
+        F.expr(token_count_ws_sql("text", spark=True)).cast("bigint").alias("n_tokens_ws"),
+        F.expr(token_count_bpe_sql("text", spark=True)).cast("bigint").alias("n_tokens_bpe"),
     )
 
 
 @register(
     "text_quality_score",
     oracle=f"""
-    SELECT doc_id, {quality_score_sql('text')} AS quality
+    SELECT doc_id, {quality_score_sql('text', spark=False)} AS quality
     FROM documents
     """,
     covers=("[EXT]-quality",),
@@ -114,13 +112,13 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] composite quality heuristic (length window, punctuation
     density, stopword presence)."""
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", quality_score_expr("text").alias("quality"))
+    return docs.select("doc_id", F.expr(quality_score_sql("text", spark=True)).alias("quality"))
 
 
 @register(
     "text_fingerprint",
     oracle=f"""
-    SELECT doc_id, {FINGERPRINT_SQL.format(c='text')} AS fp
+    SELECT doc_id, {fingerprint_sql('text', spark=False)} AS fp
     FROM documents
     """,
     covers=("[EXT]-fingerprint",),
@@ -128,7 +126,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] polynomial rolling-hash fingerprint over codepoints."""
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", fingerprint(F.col("text")).alias("fp"))
+    return docs.select("doc_id", F.expr(fingerprint_sql("text", spark=True)).alias("fp"))
 
 
 @register(
@@ -244,7 +242,7 @@ def winnow_match_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_distinct_ngrams",
     oracle=f"""
     WITH base AS (
-      SELECT lang, {duck_tokens('text')} AS tok FROM documents
+      SELECT lang, {tokens_sql('text', spark=False)} AS tok FROM documents
     ), g AS (
       SELECT lang, 1 AS n, unnest(tok) AS gram FROM base
       UNION ALL
@@ -279,7 +277,7 @@ def corpus_distinct_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fegis_spark.operators.dedup import tokens
 
     base = load_table(spark, sf_dir, "documents").select(
-        "lang", tokens(F.col("text")).alias("tok")
+        "lang", tokens("text").alias("tok")
     )
     ng2 = NGram(n=2, inputCol="tok", outputCol="g2")
     ng3 = NGram(n=3, inputCol="tok", outputCol="g3")
@@ -305,9 +303,9 @@ def corpus_distinct_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH scored AS (
       SELECT doc_id, lang, source, n_chars,
-             {quality_score_sql('text')} AS quality,
-             {lang_id_sql('text')} AS predicted_lang,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS content_hash
+             {quality_score_sql('text', spark=False)} AS quality,
+             {lang_id_sql('text', spark=False)} AS predicted_lang,
+             md5({norm_text_sql('text', spark=False)}) AS content_hash
       FROM documents
     ), kept AS (
       SELECT * FROM scored
@@ -342,7 +340,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     it Catalyst pushes the quality/lang gates below the projection, so
     the plan spells both scorers twice (filter and project) and
     evaluates them twice per surviving row. The scorers are linear-size
-    and quality_score_expr's transform bind keeps that filter+project
+    and quality_score_sql's transform bind keeps that filter+project
     out of whole-stage codegen, so it no longer overflows janino's 64KB
     method limit, and the barrier now saves little: 0.88-0.91 s with it
     vs 0.90-1.13 s without at sf0.1 on 4 cores. At warehouse scale you
@@ -352,16 +350,14 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo-wide cache-ownership policy)."""
     from pyspark import StorageLevel
 
-    from fegis_spark.operators.dedup import normalize_text
-
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
         "lang",
         "n_chars",
-        quality_score_expr("text").alias("quality"),
-        lang_id_expr("text").alias("predicted_lang"),
-        F.md5(normalize_text(F.col("text"))).alias("content_hash"),
+        F.expr(quality_score_sql("text", spark=True)).alias("quality"),
+        F.expr(lang_id_sql("text", spark=True)).alias("predicted_lang"),
+        F.expr(f"md5({norm_text_sql('text', spark=True)})").alias("content_hash"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     kept = scored.filter(
         (F.col("quality") >= 0.5) & (F.col("predicted_lang") == F.col("lang"))
@@ -389,7 +385,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id AS doc,
              list_distinct(list_transform(range(0, len(tok)-7),
                            i -> array_to_string(list_slice(tok, i+1, i+8), ' '))) AS sh
-      FROM (SELECT *, {duck_tokens('text')} AS tok
+      FROM (SELECT *, {tokens_sql('text', spark=False)} AS tok
             FROM documents)
       WHERE len(tok) >= 8
     )
@@ -434,7 +430,7 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
              len(tok) - 2 AS n_grams,
              len(list_distinct(list_transform(range(0, len(tok)-2),
                  i -> array_to_string(list_slice(tok, i+1, i+3), ' ')))) AS n_distinct
-      FROM (SELECT doc_id, {duck_tokens('text')} AS tok
+      FROM (SELECT doc_id, {tokens_sql('text', spark=False)} AS tok
             FROM documents)
       WHERE len(tok) >= 3
     )
@@ -451,7 +447,7 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fegis_spark.operators.dedup import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", tokens(F.col("text")).alias("tok"))
+    base = docs.select("doc_id", tokens("text").alias("tok"))
     ng = NGram(n=3, inputCol="tok", outputCol="g")
     out = (
         ng.transform(base)
@@ -478,7 +474,7 @@ def doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
            len(toks) AS n_tokens,
            array_to_string(toks[1:8], '|') AS head_tokens
     FROM (
-      SELECT doc_id, {duck_tokens("'语言模型训练 données Ausführung ' || text")} AS toks
+      SELECT doc_id, {tokens_sql("'语言模型训练 données Ausführung ' || text", spark=False)} AS toks
       FROM documents WHERE lang = 'zh'
     )
     ORDER BY doc_id
@@ -496,7 +492,7 @@ def tokenize_unicode_zh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fegis_spark.operators.dedup import tokens
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("lang") == "zh")
-    toks = tokens(F.concat(F.lit("语言模型训练 données Ausführung "), F.col("text")))
+    toks = tokens("concat('语言模型训练 données Ausführung ', text)")
     return docs.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_tokens"),
@@ -508,7 +504,7 @@ def tokenize_unicode_zh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_unigram_logprob",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({duck_tokens('text')}) AS t FROM documents
+      SELECT doc_id, unnest({tokens_sql('text', spark=False)}) AS t FROM documents
     ),
     vocab AS (SELECT t, count(*) AS cnt FROM tok GROUP BY t),
     tot AS (SELECT sum(cnt) AS n FROM vocab),
@@ -545,7 +541,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id AS doc,
              list_distinct(list_transform(range(0, len(tok)-2),
                            i -> array_to_string(list_slice(tok, i+1, i+3), ' '))) AS sh
-      FROM (SELECT *, {duck_tokens('text')} AS tok FROM documents)
+      FROM (SELECT *, {tokens_sql('text', spark=False)} AS tok FROM documents)
       WHERE len(tok) >= 3
     ), ex AS (SELECT doc, unnest(sh) AS g FROM base),
     freq AS (SELECT g, count(*) AS n_docs FROM ex GROUP BY g)
@@ -588,7 +584,7 @@ def doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_median_gate",
     oracle=f"""
     WITH scored AS (
-      SELECT lang, {quality_score_sql('text')} AS q FROM documents
+      SELECT lang, {quality_score_sql('text', spark=False)} AS q FROM documents
     ), med AS (
       SELECT lang, quantile_cont(q, 0.5) AS med FROM scored GROUP BY lang
     )
@@ -613,7 +609,7 @@ def quality_median_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
-        "lang", quality_score_expr("text").alias("q")
+        "lang", F.expr(quality_score_sql("text", spark=True)).alias("q")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     med = scored.groupBy("lang").agg(F.expr("percentile(q, 0.5)").alias("med"))
     return (
@@ -635,8 +631,8 @@ def quality_median_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_lang_confidence",
     oracle=f"""
-    SELECT doc_id, {lang_id_sql('text')} AS predicted_lang,
-           round({lang_margin_sql('text')}, 6) AS margin
+    SELECT doc_id, {lang_id_sql('text', spark=False)} AS predicted_lang,
+           round({lang_margin_sql('text', spark=False)}, 6) AS margin
     FROM documents
     """,
     covers=("[EXT]-langid",),
@@ -645,13 +641,11 @@ def text_lang_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] language ID with argmax margin — the confidence signal a
     gated pipeline thresholds on (margin ~ 0 = ambiguous, route to a
     real model or drop). Pure projection, zero shuffle."""
-    from fegis_spark.operators.text_analysis import lang_margin_expr
-
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        lang_id_expr("text").alias("predicted_lang"),
-        F.round(lang_margin_expr("text"), 6).alias("margin"),
+        F.expr(lang_id_sql("text", spark=True)).alias("predicted_lang"),
+        F.round(F.expr(lang_margin_sql("text", spark=True)), 6).alias("margin"),
     )
 
 
@@ -742,7 +736,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_bigram_logprob",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, {duck_tokens('text')} AS tok FROM documents
+      SELECT doc_id, {tokens_sql('text', spark=False)} AS tok FROM documents
     ), bg AS (
       SELECT doc_id,
              unnest(list_transform(range(1, len(tok)), i -> tok[i])) AS w1,
@@ -783,7 +777,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_heavy_hitters",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest({duck_tokens('text')}) AS t FROM documents
+      SELECT unnest({tokens_sql('text', spark=False)}) AS t FROM documents
     ), cnt AS (
       SELECT t, count(*) AS cnt FROM tok GROUP BY t
     ), tot AS (
@@ -805,7 +799,7 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fegis_spark.operators.sketches import heavy_hitters
 
     docs = load_table(spark, sf_dir, "documents")
-    stream = docs.select(F.explode(tokens(F.col("text"))).alias("t"))
+    stream = docs.select(F.explode(tokens("text")).alias("t"))
     return heavy_hitters(stream, "t", k=40)
 
 
@@ -813,7 +807,7 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_keywords_tfidf",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest({duck_tokens('text')}) AS t FROM documents
+      SELECT doc_id, unnest({tokens_sql('text', spark=False)}) AS t FROM documents
     ), tf AS (
       SELECT doc_id, t, count(*) AS tf FROM tok GROUP BY doc_id, t
     ), df AS (
@@ -853,7 +847,7 @@ def text_keywords_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select(F.col("doc_id").alias("doc"), F.explode(tokens(F.col("text"))).alias("t"))
+        docs.select(F.col("doc_id").alias("doc"), F.explode(tokens("text")).alias("t"))
         .groupBy("doc", "t")
         .agg(F.count(F.lit(1)).alias("tf"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -921,7 +915,7 @@ def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "langid_confusion",
     oracle=f"""
     WITH pred AS (
-      SELECT lang, {lang_id_sql('text')} AS predicted_lang FROM documents
+      SELECT lang, {lang_id_sql('text', spark=False)} AS predicted_lang FROM documents
     ), cells AS (
       SELECT lang, predicted_lang, COUNT(*) AS n
       FROM pred GROUP BY lang, predicted_lang
@@ -945,7 +939,7 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     cells = (
-        docs.select("lang", lang_id_expr("text").alias("predicted_lang"))
+        docs.select("lang", F.expr(lang_id_sql("text", spark=True)).alias("predicted_lang"))
         .groupBy("lang", "predicted_lang")
         .agg(F.count(F.lit(1)).alias("n"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -965,7 +959,7 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_percent_rank",
     oracle=f"""
     WITH scored AS (
-      SELECT doc_id, source, {quality_score_sql('text')} AS quality FROM documents
+      SELECT doc_id, source, {quality_score_sql('text', spark=False)} AS quality FROM documents
     )
     SELECT doc_id, source, quality,
            PERCENT_RANK() OVER (
@@ -986,7 +980,7 @@ def quality_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
-        "doc_id", "source", quality_score_expr("text").alias("quality")
+        "doc_id", "source", F.expr(quality_score_sql("text", spark=True)).alias("quality")
     )
     # grpwin-ok: source (domain) cardinality scales with the corpus
     w = Window.partitionBy("source").orderBy("quality", "doc_id")
@@ -1032,7 +1026,7 @@ def _bpe_audit_oracle(k: int = 3) -> str:
         f"""s0 AS MATERIALIZED (
       SELECT {_BPE_SYMS} AS syms
       FROM (SELECT regexp_extract_all(w, '.') AS cs
-            FROM (SELECT unnest({duck_tokens('text')}) AS w FROM documents))
+            FROM (SELECT unnest({tokens_sql('text', spark=False)}) AS w FROM documents))
     )"""
     ]
     for j in range(1, k + 1):
@@ -1060,14 +1054,12 @@ def _bpe_train_encode_oracle(k: int = 10) -> str:
     out of symbols that exist at step j; the equivalence is
     additionally pinned by tests/test_bpe.py::test_sequential_equals
     _priority_encode on the real corpus + adversarial words."""
-    bucket = (
-        "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100"
-    )
+    bucket = f"{md5_int_sql('CAST(doc_id AS VARCHAR)', 8, spark=False)} % 100"
     ctes = [
         f"""t0 AS MATERIALIZED (
       SELECT {_BPE_SYMS} AS syms
       FROM (SELECT regexp_extract_all(w, '.') AS cs
-            FROM (SELECT unnest({duck_tokens('text')}) AS w FROM documents
+            FROM (SELECT unnest({tokens_sql('text', spark=False)}) AS w FROM documents
                   WHERE {bucket} < 20))
     )"""
     ]
@@ -1082,7 +1074,7 @@ def _bpe_train_encode_oracle(k: int = 10) -> str:
         f"""e0 AS MATERIALIZED (
       SELECT doc, {_BPE_SYMS} AS syms
       FROM (SELECT doc, regexp_extract_all(w, '.') AS cs
-            FROM (SELECT doc_id AS doc, unnest({duck_tokens('text')}) AS w
+            FROM (SELECT doc_id AS doc, unnest({tokens_sql('text', spark=False)}) AS w
                   FROM documents))
     )"""
     )
@@ -1126,10 +1118,7 @@ def bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fegis_spark.operators.bpe import encode_with_merges, train_bpe
 
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = F.expr(f"{md5_int_sql('CAST(doc_id AS STRING)', 8, spark=True)} % 100")
     sample = docs.filter(bucket < 20)
     merges = train_bpe(sample, "text", "doc_id", num_merges=10)
     enc = encode_with_merges(docs, "text", "doc_id", merges)
@@ -1168,13 +1157,11 @@ DROPOUT_PCT = 15  #: of the md5 hash space per (doc, pos, token)
     "augment_token_dropout",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, {duck_tokens('text')} AS tok FROM documents
+      SELECT doc_id, {tokens_sql('text', spark=False)} AS tok FROM documents
     ), kept AS (
       SELECT doc_id, tok,
              list_filter(list_transform(tok, (x, i) ->
-               CASE WHEN CAST(('0x' || substr(md5(
-                        CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR) || ':' || x
-                      ), 1, 8)) AS BIGINT) % 100 >= {DROPOUT_PCT}
+               CASE WHEN {md5_int_sql("CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR) || ':' || x", 8, spark=False)} % 100 >= {DROPOUT_PCT}
                     THEN x ELSE NULL END),
                x -> x IS NOT NULL) AS kept_tok
       FROM base
@@ -1201,26 +1188,13 @@ def augment_token_dropout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fegis_spark.operators.dedup import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    def keep(x, i):
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.col("doc_id").cast("string"), (i + F.lit(1)).cast("string"), x
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint") % 100
-        return F.when(h >= DROPOUT_PCT, x)
-
-    base = docs.select("doc_id", tokens(F.col("text")).alias("tok"))
-    kept = F.filter(
-        F.transform("tok", keep), lambda x: x.isNotNull()
+    key = "concat_ws(':', CAST(doc_id AS STRING), CAST(_i + 1 AS STRING), _x)"
+    kept = F.expr(
+        f"filter(transform(tok, (_x, _i) -> CASE WHEN"
+        f" {md5_int_sql(key, 8, spark=True)} % 100 >= {DROPOUT_PCT} THEN _x END),"
+        f" _x -> _x IS NOT NULL)"
     )
+    base = docs.select("doc_id", tokens("text").alias("tok"))
     return base.select(
         "doc_id",
         F.size("tok").alias("n_tokens"),
@@ -1236,26 +1210,20 @@ def augment_token_dropout(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPAN_START_PCT = 5
 SPAN_LEN = 3
 
-_SPAN_START_SPARK = (
-    "CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':', "
-    "CAST({j} AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100 < "
-    f"{SPAN_START_PCT}"
-)
-_SPAN_START_DUCK = (
-    "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || "
-    "CAST({j} AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < "
-    f"{SPAN_START_PCT}"
-)
+def _span_start(j: str, *, spark: bool) -> str:
+    """Position `j` starts a span: md5(doc_id:j) lands in the bottom
+    SPAN_START_PCT% of hash space."""
+    key = f"CAST(doc_id AS STRING) || ':' || CAST({j} AS STRING)"
+    return f"{md5_int_sql(key, 8, spark=spark)} % 100 < {SPAN_START_PCT}"
 
 
-def _span_masked(start_tpl: str) -> str:
+def _span_masked(*, spark: bool) -> str:
     """Position i is masked iff a span starts at i, i-1, or i-2 (with
-    boundary guards) — the union of overlapping spans, shared template
-    for both dialects."""
+    boundary guards) — the union of overlapping spans."""
     return (
-        f"({start_tpl.format(j='i')}"
-        f" OR (i >= 2 AND {start_tpl.format(j='(i - 1)')})"
-        f" OR (i >= 3 AND {start_tpl.format(j='(i - 2)')}))"
+        f"({_span_start('i', spark=spark)}"
+        f" OR (i >= 2 AND {_span_start('(i - 1)', spark=spark)})"
+        f" OR (i >= 3 AND {_span_start('(i - 2)', spark=spark)}))"
     )
 
 
@@ -1263,15 +1231,15 @@ def _span_masked(start_tpl: str) -> str:
     "span_corruption_plan",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, source, {duck_tokens('text')} AS tok FROM documents
+      SELECT doc_id, source, {tokens_sql('text', spark=False)} AS tok FROM documents
     ), per_doc AS (
       -- range() is exclusive-end and yields [] when len = 0 (safe)
       SELECT source,
              len(tok) AS n_tokens,
              len(list_filter(range(1, len(tok) + 1),
-                 j -> {_SPAN_START_DUCK.format(j='j')})) AS n_spans,
+                 j -> {_span_start('j', spark=False)})) AS n_spans,
              len(list_filter(range(1, len(tok) + 1),
-                 i -> {_span_masked(_SPAN_START_DUCK)})) AS n_masked
+                 i -> {_span_masked(spark=False)})) AS n_masked
       FROM base
     )
     SELECT source,
@@ -1306,18 +1274,16 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure array-HOF projection (3 md5 gates per position) into a
     |sources|-row agg — zero joins, zero windows, map-side combined."""
     docs = load_table(spark, sf_dir, "documents")
-    from fegis_spark.operators.dedup import tokens_sql
-
     seq = "CASE WHEN size(tok) >= 1 THEN sequence(1, size(tok)) ELSE CAST(array() AS ARRAY<INT>) END"
     per_doc = docs.selectExpr(
         "source",
-        f"{tokens_sql('text')} AS tok",
+        f"{tokens_sql('text', spark=True)} AS tok",
         "doc_id",
     ).selectExpr(
         "source",
         "size(tok) AS n_tokens",
-        f"size(filter({seq}, j -> {_SPAN_START_SPARK.format(j='j')})) AS n_spans",
-        f"size(filter({seq}, i -> {_span_masked(_SPAN_START_SPARK)})) AS n_masked",
+        f"size(filter({seq}, j -> {_span_start('j', spark=True)})) AS n_spans",
+        f"size(filter({seq}, i -> {_span_masked(spark=True)})) AS n_masked",
     )
     return per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1336,11 +1302,11 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH base AS MATERIALIZED (
       SELECT doc_id, lang, n_chars,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h,
+             md5({norm_text_sql('text', spark=False)}) AS h,
              {_GOPHER_DUCK['keep']} AS keep,
-             {quality_score_sql('text')} AS q,
-             {TOKEN_COUNT_WS_SQL.format(c='text')} AS n_tok,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket
+             {quality_score_sql('text', spark=False)} AS q,
+             {token_count_ws_sql('text', spark=False)} AS n_tok,
+             {md5_int_sql('CAST(doc_id AS VARCHAR)', 8, spark=False)} % 100 AS bucket
       FROM documents
     ), overall AS (
       SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
@@ -1395,17 +1361,14 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = F.expr(f"{md5_int_sql('CAST(doc_id AS STRING)', 8, spark=True)} % 100")
     base = docs.select(
         "doc_id",
         "lang",
-        F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("h"),
+        F.expr(f"md5({norm_text_sql('text', spark=True)})").alias("h"),
         F.expr(_GOPHER_SPARK["keep"]).alias("keep"),
-        quality_score_expr("text").alias("q"),
-        token_count_ws(F.col("text")).alias("n_tok"),
+        F.expr(quality_score_sql("text", spark=True)).alias("q"),
+        F.expr(token_count_ws_sql("text", spark=True)).alias("n_tok"),
         bucket.alias("bucket"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -1465,7 +1428,7 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_kn_logprob",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {duck_tokens('text')} AS tok FROM documents
+      SELECT doc_id, {tokens_sql('text', spark=False)} AS tok FROM documents
     ), t2 AS (SELECT doc_id, tok FROM t WHERE len(tok) >= 2),
     bg AS (
       SELECT doc_id, tok[i] AS w1, tok[i+1] AS w2,
@@ -1488,7 +1451,7 @@ def corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     nlv AS (
       SELECT b, -{portable_ln('p')} AS nl FROM (
-        SELECT b, {KN_P_SQL.format(d='CAST(0.75 AS DOUBLE)')} AS p FROM rates
+        SELECT b, {KN_P_SQL.format(d=KN_DISCOUNT)} AS p FROM rates
       )
     ),
     scored AS (
@@ -1521,7 +1484,7 @@ def text_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pts AS (
       SELECT lang, CAST(n_chars AS DOUBLE) AS x,
-             {quality_score_sql('text')} AS y
+             {quality_score_sql('text', spark=False)} AS y
       FROM documents
     ), s AS (
       SELECT lang, COUNT(*) AS n,
@@ -1560,7 +1523,7 @@ def quality_length_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = docs.select(
         "lang",
         F.col("n_chars").cast("double").alias("x"),
-        quality_score_expr("text").alias("y"),
+        F.expr(quality_score_sql("text", spark=True)).alias("y"),
     )
     dd = lambda c: F.sum(c.cast("decimal(38,6)")).cast("double")  # noqa: E731
     x, y = F.col("x"), F.col("y")
@@ -1662,7 +1625,7 @@ def lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH scored AS (
       SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS grp,
-             {quality_score_sql('text')} AS q
+             {quality_score_sql('text', spark=False)} AS q
       FROM documents
     ),
     counts AS MATERIALIZED (
@@ -1704,7 +1667,7 @@ def quality_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         (F.col("lang") == "en").cast("int").alias("grp"),
-        quality_score_expr("text").alias("q"),
+        F.expr(quality_score_sql("text", spark=True)).alias("q"),
     )
     counts = (
         scored.groupBy("q")
@@ -1857,7 +1820,7 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS new_types_per_1k
     FROM tokc t LEFT JOIN newt n ON t.decile = n.decile
     WINDOW w AS (ORDER BY t.decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    """.format(tok=duck_tokens("text")),
+    """.format(tok=tokens_sql("text", spark=False)),
     covers=("[EXT]-vocab-growth", "§2.4-cumulative-distinct"),
 )
 def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1891,7 +1854,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(9),
                 F.floor(F.col("doc_id") * 10.0 / F.col("m")).cast("bigint"),
             ).alias("decile"),
-            tokens(F.col("text")).alias("tok"),
+            tokens("text").alias("tok"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -1982,8 +1945,8 @@ def pruning_hard_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
            tok_bpe / CAST(nullif(tok_ws, 0) AS DOUBLE) AS fertility
     FROM (
       SELECT lang, COUNT(*) AS n_docs,
-             CAST(SUM({TOKEN_COUNT_WS_SQL.format(c='text')}) AS BIGINT) AS tok_ws,
-             CAST(SUM({TOKEN_COUNT_BPE_SQL.format(c='text')}) AS BIGINT) AS tok_bpe
+             CAST(SUM({token_count_ws_sql('text', spark=False)}) AS BIGINT) AS tok_ws,
+             CAST(SUM({token_count_bpe_sql('text', spark=False)}) AS BIGINT) AS tok_bpe
       FROM documents GROUP BY lang
     )
     """,
@@ -2005,8 +1968,8 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     agg = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_count_ws(F.col("text"))).cast("bigint").alias("tok_ws"),
-        F.sum(token_count_bpe_ish(F.col("text"))).cast("bigint").alias("tok_bpe"),
+        F.sum(F.expr(token_count_ws_sql("text", spark=True))).cast("bigint").alias("tok_ws"),
+        F.sum(F.expr(token_count_bpe_sql("text", spark=True))).cast("bigint").alias("tok_bpe"),
     )
     return agg.select(
         "lang",
@@ -2099,9 +2062,10 @@ def text_mojibake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from fegis_spark.operators.sketches import (  # noqa: E402
-    cms_bucket_sql,
+    CMS_W,
     cms_build,
     cms_estimate,
+    cms_key_sql,
 )
 
 _CMS_ROWS_SQL = "(SELECT * FROM (VALUES (0), (1), (2), (3)) v(r))"
@@ -2111,16 +2075,18 @@ _CMS_ROWS_SQL = "(SELECT * FROM (VALUES (0), (1), (2), (3)) v(r))"
     "cms_heavy_hitters_audit",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest({duck_tokens('text')}) AS t FROM documents
+      SELECT unnest({tokens_sql('text', spark=False)}) AS t FROM documents
     ), cnt AS (
       SELECT t, count(*) AS c FROM tok GROUP BY t
     ), top AS (
       SELECT t, c FROM cnt ORDER BY c DESC, t LIMIT 20
     ), cms AS (
-      SELECT r, {cms_bucket_sql('t', 'r')} AS bucket, count(*) AS cnt
+      SELECT r, {md5_int_sql(cms_key_sql('t', 'r'), 8, spark=False)} % {CMS_W} AS bucket,
+             count(*) AS cnt
       FROM tok CROSS JOIN {_CMS_ROWS_SQL} GROUP BY 1, 2
     ), probe AS (
-      SELECT top.t, top.c, v.r, {cms_bucket_sql('top.t', 'v.r')} AS bucket
+      SELECT top.t, top.c, v.r,
+             {md5_int_sql(cms_key_sql('top.t', 'v.r'), 8, spark=False)} % {CMS_W} AS bucket
       FROM top CROSS JOIN {_CMS_ROWS_SQL} v
     ), est AS (
       SELECT p.t, MIN(COALESCE(cms.cnt, 0)) AS est_n
@@ -2163,7 +2129,7 @@ def cms_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identical to counting stream instances while hashing 27k
     # distinct tokens x4 instead of ~500k instances x4); persist the
     # vocab (two consumers), not the corpus-size token stream
-    stream = docs.select(F.explode(tokens(F.col("text"))).alias("t"))
+    stream = docs.select(F.explode(tokens("text")).alias("t"))
     cnt = stream.groupBy("t").agg(F.count(F.lit(1)).alias("c")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -2182,17 +2148,17 @@ def cms_heavy_hitters_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DRIFT_HALF_SQL = (
-    "CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)"
-    " % 100 < 50 THEN 1 ELSE 0 END"
-)
+def _drift_half_sql(*, spark: bool) -> str:
+    """1 for the md5 half of the corpus a drift query compares, else 0."""
+    bucket = md5_int_sql("CAST(doc_id AS STRING)", 8, spark=spark)
+    return f"CASE WHEN {bucket} % 100 < 50 THEN 1 ELSE 0 END"
 
 
 @register(
     "vocab_drift_topk",
     oracle=f"""
     WITH tok AS (
-      SELECT {_DRIFT_HALF_SQL} AS half, unnest({duck_tokens('text')}) AS t
+      SELECT {_drift_half_sql(spark=False)} AS half, unnest({tokens_sql('text', spark=False)}) AS t
       FROM documents
     ), counts AS (
       SELECT t,
@@ -2246,14 +2212,8 @@ def vocab_drift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fegis_spark.operators.dedup import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    # Spark spelling of _DRIFT_HALF_SQL's md5 bucket (the repo recipe)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
-    half = F.when(bucket < 50, 1).otherwise(0)
     tok = docs.select(
-        half.alias("half"), F.explode(tokens(F.col("text"))).alias("t")
+        F.expr(_drift_half_sql(spark=True)).alias("half"), F.explode(tokens("text")).alias("t")
     )
     counts = tok.groupBy("t").agg(
         F.sum("half").cast("bigint").alias("ca"),
@@ -2297,7 +2257,7 @@ def _zipf_oracle() -> str:
     return f"""
     WITH cnt AS (
       SELECT t, COUNT(*) AS c FROM (
-        SELECT unnest({duck_tokens('text')}) AS t FROM documents
+        SELECT unnest({tokens_sql('text', spark=False)}) AS t FROM documents
       ) GROUP BY t
     ), top AS MATERIALIZED (
       SELECT t, c, row_number() OVER (ORDER BY c DESC, t) AS rk
@@ -2351,7 +2311,7 @@ def vocab_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     cnt = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("t"))
+        docs.select(F.explode(tokens("text")).alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("c"))
     )

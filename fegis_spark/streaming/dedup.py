@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fegis_spark.operators.dedup import normalize_text
+from fegis_spark.queries.sqlfrag import norm_text_sql
 
 
 def dedup_stream(
@@ -27,7 +27,7 @@ def dedup_stream(
 ) -> DataFrame:
     """First-seen rows only, keyed by normalized-content md5."""
     return (
-        stream_df.withColumn("content_hash", F.md5(normalize_text(F.col(text_col))))
+        stream_df.withColumn("content_hash", F.expr(f"md5({norm_text_sql(text_col, spark=True)})"))
         .withWatermark(ts_col, delay)
         .dropDuplicatesWithinWatermark(["content_hash"])
     )

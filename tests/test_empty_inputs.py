@@ -67,7 +67,7 @@ def test_search_empty(spark):
 def test_match_text_empty(spark, empty_docs):
     from fegis_spark.plans.filters import match_text
 
-    assert empty_docs.filter(match_text(F.col("text"), "the data")).count() == 0
+    assert empty_docs.filter(match_text("text", "the data")).count() == 0
 
 
 def test_portable_twins_and_media_empty(spark, empty_docs):

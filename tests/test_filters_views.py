@@ -160,17 +160,17 @@ class TestMatchText:
         from fegis_spark.plans.filters import analyzer_tokens, match_text
 
         assert analyzer_tokens("模型data") == ["模", "型", "data"]
-        assert self._ids(docs, match_text(F.col("text"), "模 data")) == [5]
+        assert self._ids(docs, match_text("text", "模 data")) == [5]
 
     def test_empty_query_matches_all(self, docs):
         from fegis_spark.plans.filters import match_text
 
-        assert self._ids(docs, match_text(F.col("text"), "  !! ")) == [1, 2, 3, 4, 5]
+        assert self._ids(docs, match_text("text", "  !! ")) == [1, 2, 3, 4, 5]
 
 
 def test_python_analyzer_matches_spark_tokens(spark):
     """plans.filters.analyzer_tokens (query side, driver Python) and
-    operators.dedup.tokens (field side, JVM codegen) must tokenize
+    queries/sqlfrag.tokens_sql (field side, JVM codegen) must tokenize
     identically — MatchText correctness depends on the lockstep."""
     import random
 
@@ -208,7 +208,7 @@ def test_python_analyzer_matches_spark_tokens(spark):
     df = spark.createDataFrame([(i, s) for i, s in enumerate(cases)], "i long, s string")
     got = {
         r.i: list(r.t)
-        for r in df.select("i", tokens(F.col("s")).alias("t")).collect()
+        for r in df.select("i", tokens("s").alias("t")).collect()
     }
     for i, s in enumerate(cases):
         assert got[i] == analyzer_tokens(s), (s, got[i], analyzer_tokens(s))

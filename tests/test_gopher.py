@@ -44,8 +44,8 @@ def py_gopher(text: str) -> dict:
     mwl = round(nonws / n, 6) if n else 0.0
     fa = round(alpha / n, 6) if n else 0.0
     sym = round((hashes + ell) / n, 6) if n else 0.0
-    padded = " " + re.sub(r"\s+", " ", text.strip()).lower() + " "
-    sw = sum(1 for s in STOPWORDS if f" {s} " in padded)
+    pad = " " + re.sub(r"\s+", " ", text.strip()).lower() + " "
+    sw = sum(1 for s in STOPWORDS if f" {s} " in pad)
     keep = int(
         GOPHER_MIN_WORDS <= n <= GOPHER_MAX_WORDS
         and GOPHER_MWL_LO <= mwl <= GOPHER_MWL_HI

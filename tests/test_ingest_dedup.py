@@ -192,7 +192,7 @@ def test_tokens_unicode_cjk(spark):
         (3, "한국어 텍스트 처리"),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    got = {r.id: r.t for r in df.select("id", tokens(F.col("text")).alias("t")).collect()}
+    got = {r.id: r.t for r in df.select("id", tokens("text").alias("t")).collect()}
     # Han/Kana/Hangul codepoints come out as single-char tokens;
     # accented Latin words survive whole (old ASCII tokenizer split them)
     assert got[1] == ["hello", "世", "界", "ausführung", "données"]

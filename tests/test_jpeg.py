@@ -603,6 +603,50 @@ class TestRestartIntervals:
                 assert (got == base).all()
 
 
+def _baseline_per_component_scans(rgb, quality, y_samp, restart_interval):
+    """A baseline file whose Y, Cb and Cr each get their own scan (the
+    non-interleaved layout of T.81 A.2.2: one data unit per MCU, along
+    the component's own block raster), assembled from the encoder's
+    parts; encode_jpeg itself only writes one interleaved scan."""
+    from fegis_spark.operators.jpegcodec import (
+        HUFF_AC_CHROMA,
+        HUFF_AC_LUMA,
+        HUFF_DC_CHROMA,
+        HUFF_DC_LUMA,
+        _comp_raster,
+        _emit_headers,
+        _emit_scan,
+        _entropy_scan,
+        _forward,
+        _huff_codes,
+        _sequential_interval,
+    )
+
+    f = _forward(rgb, quality, y_samp)
+    dc = [_huff_codes(*t) for t in (HUFF_DC_LUMA, HUFF_DC_CHROMA)]
+    ac = [_huff_codes(*t) for t in (HUFF_AC_LUMA, HUFF_AC_CHROMA)]
+    out = bytearray(b"\xff\xd8")
+    _emit_headers(out, b"\xff\xc0", f, (HUFF_AC_LUMA, HUFF_AC_CHROMA), restart_interval)
+    for ci in range(3):
+        units = [[(ci, b)] for b in _comp_raster(f.h, f.w, f.samp, f.grids, ci)]
+        payload = _entropy_scan(units, restart_interval, _sequential_interval, f, dc, ac)
+        _emit_scan(out, f.qids, [ci], 0, 63, 0, 0, payload)
+    return bytes(out + b"\xff\xd9")
+
+
+@pytest.mark.parametrize("restart_interval", [0, 2])
+def test_baseline_non_interleaved_scans_decode(restart_interval):
+    # 4:2:0 at 21x19: the luma MCU walk (2x2 blocks per MCU over a 4x4
+    # padded grid) and the luma raster (3x3 blocks) differ in both
+    # order and count, so a decoder that walks the MCU grid for a
+    # one-component scan reads the wrong blocks
+    rgb = _gradient(21, 19, seed=5)
+    want = decode_jpeg(encode_jpeg(rgb, 85, y_samp=(2, 2)))
+    payload = _baseline_per_component_scans(rgb, 85, (2, 2), restart_interval)
+    assert payload.count(b"\xff\xda") == 3
+    assert (decode_jpeg(payload) == want).all()
+
+
 #: sha256 of fixed encodings of one 21x19 gradient at quality 85 —
 #: these bytes feed the media fixtures and their oracles
 _ENCODER_DIGESTS = {

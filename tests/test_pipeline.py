@@ -121,11 +121,11 @@ def test_split_assignment_stable_across_scale_factors(spark):
     # the hash split must be a pure function of doc_id: growing the
     # corpus (sf0.001 -> sf0.01) cannot move any shared doc between
     # splits — the property that makes incremental re-splits safe
-    from fegis_spark.queries.pipeline_q import _hash_bucket
+    from fegis_spark.queries.pipeline_q import _bucket_sql
 
     def assignment(sf_dir):
-        df = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", _hash_bucket(F.col("doc_id")).alias("bucket")
+        df = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+            "doc_id", f"{_bucket_sql('doc_id', spark=True)} AS bucket"
         )
         return {r.doc_id: r.bucket for r in df.collect()}
 
@@ -144,11 +144,11 @@ def test_sorted_shards_are_globally_ordered(spark, tmp_path_factory):
     import os
 
     from fegis_spark.model import load_table
-    from fegis_spark.operators.text_analysis import quality_score_expr
+    from fegis_spark.operators.text_analysis import quality_score_sql
     from fegis_spark.sources.export import write_sorted_shards
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", quality_score_expr("text").alias("q")
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents").selectExpr(
+        "doc_id", f"{quality_score_sql('text', spark=True)} AS q"
     )
     out = str(tmp_path_factory.mktemp("curriculum") / "shards")
     write_sorted_shards(docs, out, "q", num_shards=4)

@@ -17,12 +17,15 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from fegis_spark.operators.text_analysis import (
-    FINGERPRINT_SQL,
     GOPHER_COLS,
-    fingerprint,
+    fingerprint_sql,
     gopher_metrics_sql,
+    lang_id_sql,
+    lang_margin_sql,
+    quality_score_sql,
+    strip_html_sql,
 )
-from fegis_spark.queries.sqlfrag import duck_tokens
+from fegis_spark.queries.sqlfrag import md5_int_sql, tokens_sql
 
 # printable-ish unicode incl. CJK, punctuation, digits, whitespace;
 # excludes control/surrogate categories DuckDB VARCHAR cannot carry.
@@ -62,77 +65,40 @@ def test_gopher_fragments_engine_agreement(spark, texts):
     assert got_s == got_d
 
 
+def _agree(spark, texts, *frags):
+    """Every generator in `frags` (text expression -> SQL, spelled for
+    either dialect) computes the same value on Spark and on DuckDB for
+    every text in `texts`."""
+    rows = list(enumerate(texts))
+    got_s = {
+        r[0]: tuple(r[1:])
+        for r in spark.createDataFrame(rows, "i int, text string")
+        .select("i", *[F.expr(f("text", spark=True)).alias(f"c{j}") for j, f in enumerate(frags)])
+        .collect()
+    }
+    sel = ", ".join(f("text", spark=False) for f in frags)
+    got_d = {r[0]: tuple(r[1:]) for r in _duck(rows).execute(f"SELECT i, {sel} FROM t").fetchall()}
+    assert got_s == got_d
+
+
 @settings(**SETTINGS)
 @given(BATCH)
 def test_tokenizer_engine_agreement(spark, texts):
-    """tokens() vs duck_tokens() — the shared substrate under minhash,
-    contamination, unigram/bigram LM, TF-IDF, and split divergence."""
-    from fegis_spark.operators.dedup import tokens
-
-    rows = list(enumerate(texts))
-    got_s = {
-        r["i"]: tuple(r["tok"])
-        for r in spark.createDataFrame(rows, "i int, text string")
-        .select("i", tokens(F.col("text")).alias("tok"))
-        .collect()
-    }
-    got_d = {
-        r[0]: tuple(r[1])
-        for r in _duck(rows)
-        .execute(f"SELECT i, {duck_tokens('text')} FROM t")
-        .fetchall()
-    }
-    assert got_s == got_d
+    """tokens_sql — the shared substrate under minhash, contamination,
+    unigram/bigram LM, TF-IDF, and split divergence."""
+    _agree(spark, texts, tokens_sql)
 
 
 @settings(**SETTINGS)
 @given(BATCH)
 def test_fingerprint_engine_agreement(spark, texts):
-    rows = list(enumerate(texts))
-    got_s = {
-        r["i"]: r["fp"]
-        for r in spark.createDataFrame(rows, "i int, text string")
-        .select("i", fingerprint(F.col("text")).alias("fp"))
-        .collect()
-    }
-    q = FINGERPRINT_SQL.format(c="text")
-    got_d = {r[0]: r[1] for r in _duck(rows).execute(f"SELECT i, {q} FROM t").fetchall()}
-    assert got_s == got_d
+    _agree(spark, texts, fingerprint_sql)
 
 
 @settings(**SETTINGS)
 @given(BATCH)
 def test_quality_and_langid_engine_agreement(spark, texts):
-    from fegis_spark.operators.text_analysis import (
-        lang_id_sql,
-        lang_margin_expr,
-        lang_margin_sql,
-        quality_score_sql,
-    )
-    from fegis_spark.operators.text_analysis import lang_id_expr, quality_score_expr
-
-    rows = list(enumerate(texts))
-    got_s = {
-        r["i"]: (r["q"], r["lang"], r["m"])
-        for r in spark.createDataFrame(rows, "i int, text string")
-        .select(
-            "i",
-            quality_score_expr("text").alias("q"),
-            lang_id_expr("text").alias("lang"),
-            lang_margin_expr("text").alias("m"),
-        )
-        .collect()
-    }
-    got_d = {
-        r[0]: r[1:]
-        for r in _duck(rows)
-        .execute(
-            f"SELECT i, {quality_score_sql('text')}, {lang_id_sql('text')},"
-            f" {lang_margin_sql('text')} FROM t"
-        )
-        .fetchall()
-    }
-    assert got_s == got_d
+    _agree(spark, texts, quality_score_sql, lang_id_sql, lang_margin_sql)
 
 
 HTMLISH = st.lists(
@@ -155,47 +121,36 @@ HTMLISH = st.lists(
 @settings(**SETTINGS)
 @given(st.lists(HTMLISH, min_size=8, max_size=24))
 def test_strip_html_engine_agreement(spark, texts):
-    from fegis_spark.operators.text_analysis import strip_html, strip_html_sql
-
-    rows = list(enumerate(texts))
-    got_s = {
-        r["i"]: r["clean"]
-        for r in spark.createDataFrame(rows, "i int, text string")
-        .select("i", strip_html(F.col("text")).alias("clean"))
-        .collect()
-    }
-    got_d = {
-        r[0]: r[1]
-        for r in _duck(rows).execute(f"SELECT i, {strip_html_sql('text')} FROM t").fetchall()
-    }
-    assert got_s == got_d
+    _agree(spark, texts, strip_html_sql)
 
 
 @settings(**SETTINGS)
 @given(st.lists(st.integers(min_value=-(2**62), max_value=2**62), min_size=8, max_size=24, unique=True))
 def test_hash_bucket_engine_agreement(spark, ids):
-    """The md5-bucket fragment — the split/sample/incremental-dedup/
-    checksum substrate — must agree across engines for any bigint id."""
-    from fegis_spark.queries.pipeline_q import _hash_bucket, _hash_bucket_sql
-
+    """The md5 integer hash — the split/sample/incremental-dedup/
+    checksum bucket (8 hex digits) and the md5-60 sketch hash (15) —
+    must agree across engines for any bigint id."""
     rows = [(i,) for i in ids]
+
+    def frags(spark):
+        h = "CAST(doc_id AS STRING)"
+        return [f"{md5_int_sql(h, 8, spark=spark)} % 100", md5_int_sql(h, 15, spark=spark)]
+
     got_s = {
-        r["doc_id"]: r["b"]
+        r[0]: tuple(r[1:])
         for r in spark.createDataFrame(rows, "doc_id long")
-        .select("doc_id", _hash_bucket(F.col("doc_id")).alias("b"))
+        .selectExpr("doc_id", *frags(True))
         .collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE t (doc_id BIGINT)")
     con.executemany("INSERT INTO t VALUES (?)", rows)
     got_d = {
-        r[0]: r[1]
-        for r in con.execute(
-            f"SELECT doc_id, {_hash_bucket_sql('doc_id')} FROM t"
-        ).fetchall()
+        r[0]: tuple(r[1:])
+        for r in con.execute(f"SELECT doc_id, {', '.join(frags(False))} FROM t").fetchall()
     }
     assert got_s == got_d
-    assert all(0 <= b < 100 for b in got_s.values())
+    assert all(0 <= b < 100 for b, _ in got_s.values())
 
 
 VEC = st.lists(

@@ -136,7 +136,7 @@ def test_checksum_drift_buckets_attributed(spark):
     corrupted/dropped doc ids — detection is exact, with no false
     positives from clean buckets."""
     from fegis_spark.model import load_table
-    from fegis_spark.queries.pipeline_q import _hash_bucket, checksum_drift_detect
+    from fegis_spark.queries.pipeline_q import _bucket_sql, checksum_drift_detect
 
     docs = load_table(spark, SF_DIR, "documents")
     expected = {
@@ -144,7 +144,7 @@ def test_checksum_drift_buckets_attributed(spark):
         for r in docs.filter(
             (F.col("doc_id") % 97 == 0) | (F.col("doc_id") % 101 == 0)
         )
-        .select(_hash_bucket(F.col("doc_id")).alias("bucket"))
+        .selectExpr(f"{_bucket_sql('doc_id', spark=True)} AS bucket")
         .distinct()
         .collect()
     }

@@ -20,6 +20,14 @@ from fegis_spark.schema import (
 )
 
 ARCHETYPES = sorted(glob.glob("/root/reference/archetypes/*.yaml"))
+if not ARCHETYPES:
+    # without this the parametrize ids callback below is handed
+    # pytest's NOTSET placeholder and the module errors at collection
+    pytest.skip(
+        "no archetype YAMLs: the reference checkout's archetypes/ "
+        "directory, which the ARCHETYPES glob reads, is absent",
+        allow_module_level=True,
+    )
 
 
 def test_all_archetypes_load():

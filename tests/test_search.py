@@ -124,7 +124,7 @@ def test_rrf_fuse_matches_corpus_wide_windows(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from fegis_spark.operators.rrf import RRF_K, lexical_score, rrf_fuse
+    from fegis_spark.operators.rrf import RRF_K, lexical_score_sql, rrf_fuse
     from fegis_spark.functions.vector import cosine, lit_vector
 
     import random
@@ -145,7 +145,7 @@ def test_rrf_fuse_matches_corpus_wide_windows(spark):
     scored = df.select(
         F.col("id"),
         cosine(F.col("embedding"), lit_vector(qv)).alias("dense"),
-        lexical_score(F.col("text"), terms).alias("lex"),
+        F.expr(lexical_score_sql("text", terms, spark=True)).alias("lex"),
     )
     w0 = Window.partitionBy(F.lit(0))
     naive = (
@@ -299,13 +299,13 @@ def test_cosine_sql_bitwise_matches_column_form(spark):
     assert a[1].c == 0.0
 
 
-def test_lexical_score_sql_bitwise_matches_column_form(spark):
-    """r14 single-parse fast path: lexical_score_sql must emit the same
-    padded-occurrence arithmetic as the Column form — bit-identical
-    scores, including multi-space collapse and case folding."""
-    from pyspark.sql import functions as F
+def test_lexical_score_sql_spark_matches_duckdb(spark):
+    """lexical_score_sql's two dialects give bit-identical padded-
+    occurrence scores, including multi-space collapse and case
+    folding."""
+    import duckdb
 
-    from fegis_spark.operators.rrf import lexical_score, lexical_score_sql
+    from fegis_spark.operators.rrf import lexical_score_sql
 
     texts = [
         "the Data model  of the\tsystem",
@@ -318,9 +318,15 @@ def test_lexical_score_sql_bitwise_matches_column_form(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "id int, text string"
     )
-    a = df.select("id", lexical_score(F.col("text"), terms).alias("s")).collect()
-    b = df.selectExpr("id", f"{lexical_score_sql('text', terms)} AS s").collect()
-    assert [r.s for r in a] == [r.s for r in b]
+    a = df.selectExpr("id", f"{lexical_score_sql('text', terms, spark=True)} AS s")
+    a = sorted(a.collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id INT, text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(texts)))
+    b = con.execute(
+        f"SELECT {lexical_score_sql('text', terms, spark=False)} FROM t ORDER BY id"
+    ).fetchall()
+    assert [r.s for r in a] == [r[0] for r in b]
     # adjacent occurrences share the pad space, so replace() counts 2
     # non-overlapping matches in " data data data "
     assert a[1].s == 2.0

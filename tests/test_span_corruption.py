@@ -14,9 +14,8 @@ from pyspark.sql import functions as F
 from fegis_spark.queries.textstats_q import (
     SPAN_LEN,
     SPAN_START_PCT,
-    _SPAN_START_DUCK,
-    _SPAN_START_SPARK,
     _span_masked,
+    _span_start,
 )
 
 
@@ -45,7 +44,7 @@ DOCS = [
 
 
 def test_span_plan_matches_python_reference_and_duckdb(spark):
-    from fegis_spark.operators.dedup import tokens_sql
+    from fegis_spark.queries.sqlfrag import tokens_sql
 
     seq = (
         "CASE WHEN size(tok) >= 1 THEN sequence(1, size(tok))"
@@ -55,12 +54,12 @@ def test_span_plan_matches_python_reference_and_duckdb(spark):
     got = {
         r.doc_id: (r.n_tokens, r.n_spans, r.n_masked)
         for r in df.selectExpr(
-            "doc_id", f"{tokens_sql('text')} AS tok"
+            "doc_id", f"{tokens_sql('text', spark=True)} AS tok"
         ).selectExpr(
             "doc_id",
             "size(tok) AS n_tokens",
-            f"size(filter({seq}, j -> {_SPAN_START_SPARK.format(j='j')})) AS n_spans",
-            f"size(filter({seq}, i -> {_span_masked(_SPAN_START_SPARK)})) AS n_masked",
+            f"size(filter({seq}, j -> {_span_start('j', spark=True)})) AS n_spans",
+            f"size(filter({seq}, i -> {_span_masked(spark=True)})) AS n_masked",
         ).collect()
     }
     # independent pure-Python restatement
@@ -84,8 +83,8 @@ def test_span_plan_matches_python_reference_and_duckdb(spark):
             f"""
             SELECT doc_id,
                    len(string_split(trim(text), ' ')) - CASE WHEN text = '' THEN 1 ELSE 0 END AS n_tokens,
-                   len(list_filter(range(1, n + 1), j -> {_SPAN_START_DUCK.format(j='j')})) AS n_spans,
-                   len(list_filter(range(1, n + 1), i -> {_span_masked(_SPAN_START_DUCK)})) AS n_masked
+                   len(list_filter(range(1, n + 1), j -> {_span_start('j', spark=False)})) AS n_spans,
+                   len(list_filter(range(1, n + 1), i -> {_span_masked(spark=False)})) AS n_masked
             FROM (SELECT doc_id, text,
                          CASE WHEN text = '' THEN 0
                               ELSE len(string_split(text, ' ')) END AS n

@@ -52,6 +52,49 @@ def _normalize_stream_events(sdf):
     return sdf
 
 
+def _py_session_stats(events, gap_s=1800):
+    """Pure-Python sessionization: per user, in ts order, a new
+    session starts where the gap to the previous event exceeds gap_s."""
+    out, by_user = [], {}
+    for _eid, user, ts in events:
+        by_user.setdefault(user, []).append(ts)
+    for user, tss in by_user.items():
+        tss.sort()
+        seq, start, prev, n = 0, None, None, 0
+        for ts in tss:
+            if prev is None or (ts - prev).total_seconds() > gap_s:
+                if start is not None:
+                    out.append((user, seq, start, prev, n))
+                seq, start, n = seq + 1, ts, 0
+            prev, n = ts, n + 1
+        out.append((user, seq, start, prev, n))
+    return sorted((u, q, a, b, n, int((b - a).total_seconds())) for u, q, a, b, n in out)
+
+
+def test_batch_sessions_with_tied_timestamps(spark):
+    """Equal-ts events on both sides of a 30-minute gap: the window
+    orders by ts alone, so tied rows come in any order, yet the output
+    is fixed — tied rows are 0 s apart, so only the first of them can
+    break, and the running sum gives them all the same session_seq."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    at = [t0, t0, t0 + dt.timedelta(minutes=10), t0 + dt.timedelta(minutes=10)]
+    # 31 minutes after the last tie: a break, then more ties
+    at += [t0 + dt.timedelta(minutes=41)] * 3 + [t0 + dt.timedelta(minutes=71)] * 2
+    # exactly 30 minutes later: no break
+    at += [t0 + dt.timedelta(minutes=101)]
+    events = [(i, 1, ts) for i, ts in enumerate(at)]
+    events += [(100 + i, 2, t0) for i in range(4)]  # one all-tied session
+    df = spark.createDataFrame(events, "event_id long, user_id long, ts timestamp")
+    got = sorted(
+        (r.user_id, r.session_seq, r.session_start, r.session_end, r.n_events, r.duration_s)
+        for r in session_stats_batch(df.repartition(3, "event_id")).collect()
+    )
+    assert got == _py_session_stats(events)
+    assert [(u, q, n) for u, q, _a, _b, n, _d in got] == [(1, 1, 4), (1, 2, 6), (2, 1, 4)]
+
+
 def test_streaming_sessionization_matches_batch(spark, events_stream):
     sdf, batch = events_stream
     agg = sessionize_stream(_normalize_stream_events(sdf), gap_minutes=30)
@@ -162,10 +205,9 @@ def test_streaming_dedup_matches_batch_distinct(spark, events_stream):
     )
     _drain(q)
     got = spark.sql("SELECT count(*) AS n FROM dedup_sink").collect()[0].n
-    from fegis_spark.operators.dedup import normalize_text as nt
-    from pyspark.sql import functions as FF
+    from fegis_spark.queries.sqlfrag import norm_text_sql
 
-    exp = batch.select(FF.md5(nt(FF.col("props"))).alias("h")).distinct().count()
+    exp = batch.selectExpr(f"md5({norm_text_sql('props', spark=True)}) AS h").distinct().count()
     assert got == exp
 
 

@@ -221,17 +221,14 @@ def test_unigram_logprob_known_values(spark):
 
 
 def test_expr_fast_paths_match_duckdb_oracles(spark):
-    """lang_id_expr / quality_score_expr / lang_margin_expr must stay
-    value-identical to their DuckDB twins (lang_id_sql, ...) on
-    representative text, including empty/edge rows."""
+    """lang_id_sql / quality_score_sql / lang_margin_sql give the same
+    values in their Spark and DuckDB spellings on representative text,
+    including empty/edge rows."""
     import duckdb
 
     from fegis_spark.operators.text_analysis import (
-        lang_id_expr,
         lang_id_sql,
-        lang_margin_expr,
         lang_margin_sql,
-        quality_score_expr,
         quality_score_sql,
     )
 
@@ -247,17 +244,17 @@ def test_expr_fast_paths_match_duckdb_oracles(spark):
     got = [
         (r.lang, r.q, r.m)
         for r in df.orderBy("i").select(
-            lang_id_expr("text").alias("lang"),
-            quality_score_expr("text").alias("q"),
-            lang_margin_expr("text").alias("m"),
+            F.expr(lang_id_sql("text", spark=True)).alias("lang"),
+            F.expr(quality_score_sql("text", spark=True)).alias("q"),
+            F.expr(lang_margin_sql("text", spark=True)).alias("m"),
         ).collect()
     ]
     con = duckdb.connect()
     con.execute("CREATE TABLE d (i BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO d VALUES (?, ?)", list(enumerate(texts)))
     want = con.execute(
-        f"SELECT {lang_id_sql('text')}, {quality_score_sql('text')}, "
-        f"{lang_margin_sql('text')} FROM d ORDER BY i"
+        f"SELECT {lang_id_sql('text', spark=False)}, {quality_score_sql('text', spark=False)}, "
+        f"{lang_margin_sql('text', spark=False)} FROM d ORDER BY i"
     ).fetchall()
     assert got == [tuple(w) for w in want]
 
@@ -266,18 +263,21 @@ def test_lang_id_ties_and_null(spark):
     """Ties go to the alphabetically first language whose score is the
     max: all-zero scores -> 'de', an en/fr tie -> 'en'; NULL text falls
     through to the last language, 'zh'."""
-    from fegis_spark.operators.text_analysis import lang_id_expr
+    from fegis_spark.operators.text_analysis import lang_id_sql
 
     rows = [(1, "xyz qrs"), (2, "the le"), (3, None), (4, "")]
     df = spark.createDataFrame(rows, "i long, t string")
-    got = {r.i: r.lang for r in df.select("i", lang_id_expr("t").alias("lang")).collect()}
+    got = {
+        r.i: r.lang
+        for r in df.selectExpr("i", f"{lang_id_sql('t', spark=True)} AS lang").collect()
+    }
     assert got == {1: "de", 2: "en", 3: "zh", 4: "de"}
 
 
 def test_strip_html_rules(spark):
     from pyspark.sql import functions as F
 
-    from fegis_spark.operators.text_analysis import strip_html
+    from fegis_spark.operators.text_analysis import strip_html_sql
 
     cases = {
         "<p>Hello <b>world</b></p>": "Hello world",
@@ -290,7 +290,7 @@ def test_strip_html_rules(spark):
         "plain": "plain",
     }
     df = spark.createDataFrame(list(cases.items()), "t string, want string")
-    bad = df.filter(strip_html(F.col("t")) != F.col("want")).count()
+    bad = df.filter(F.expr(strip_html_sql("t", spark=True)) != F.col("want")).count()
     assert bad == 0
 
 
@@ -306,12 +306,10 @@ def test_text_exprs_null_behavior_pinned(spark):
     from pyspark.sql import functions as F
 
     from fegis_spark.operators.text_analysis import (
-        lang_id_expr,
         lang_id_sql,
-        lang_margin_expr,
-        quality_score_expr,
+        lang_margin_sql,
         quality_score_sql,
-        strip_html,
+        strip_html_sql,
     )
     from fegis_spark.plans.filters import match_text
 
@@ -319,11 +317,11 @@ def test_text_exprs_null_behavior_pinned(spark):
     row = (
         df.select(
             "i",
-            lang_id_expr("t").alias("lang"),
-            quality_score_expr("t").alias("q"),
-            lang_margin_expr("t").alias("m"),
-            strip_html(F.col("t")).alias("s"),
-            match_text(F.col("t"), "data").alias("mt"),
+            F.expr(lang_id_sql("t", spark=True)).alias("lang"),
+            F.expr(quality_score_sql("t", spark=True)).alias("q"),
+            F.expr(lang_margin_sql("t", spark=True)).alias("m"),
+            F.expr(strip_html_sql("t", spark=True)).alias("s"),
+            match_text("t", "data").alias("mt"),
         )
         .filter(F.col("i") == 1)
         .first()
@@ -332,7 +330,7 @@ def test_text_exprs_null_behavior_pinned(spark):
     assert row.m is None and row.s is None and row.mt is None
     # DuckDB agrees on the fallthrough values
     d_lang, d_q = duckdb.connect().execute(
-        f"SELECT {lang_id_sql('t')}, round({quality_score_sql('t')}, 6) "
+        f"SELECT {lang_id_sql('t', spark=False)}, round({quality_score_sql('t', spark=False)}, 6) "
         "FROM (SELECT CAST(NULL AS VARCHAR) AS t)"
     ).fetchone()
     assert (d_lang, round(d_q, 6)) == ("zh", 0.3)

@@ -23,7 +23,7 @@ from fegis_spark.catalog import catalog  # noqa: E402
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes  # noqa: E402
 from fegis_spark.operators.dedup import minhash_lsh_pairs  # noqa: E402
 from fegis_spark.operators.scale import pack_greedy_sharded  # noqa: E402
-from fegis_spark.operators.text_analysis import quality_score_expr  # noqa: E402
+from fegis_spark.operators.text_analysis import quality_score_sql  # noqa: E402
 from fegis_spark.queries.pipeline_q import (  # noqa: E402
     _FS_DECILES,
     _FS_GOPHER_KEEP_SPARK,
@@ -71,7 +71,7 @@ def main() -> None:
             "doc_id",
             "n_chars",
             "text",
-            F.round(quality_score_expr("text"), 6).alias("q"),
+            F.round(F.expr(quality_score_sql("text", spark=True)), 6).alias("q"),
             F.expr(_FS_GOPHER_KEEP_SPARK).alias("gk"),
         )
         kept = scored.filter((F.col("gk") == 1) & (F.col("q") >= 0.5)).drop("gk")

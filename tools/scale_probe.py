@@ -24,6 +24,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from fegis_spark.model import load_table  # noqa: E402
 from fegis_spark.operators.bm25 import clear_memos
+from fegis_spark.queries.sqlfrag import md5_int_sql, norm_text_sql  # noqa: E402
 from fegis_spark.session import configure_for_oracle, get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
@@ -34,7 +35,7 @@ def replicate(spark, out_dir: str, factor: int, perturb: bool = True) -> None:
     (default) every token gets a per-copy suffix, making each copy's
     vocabulary disjoint: content actually scales, and the duplicate /
     near-dup RATE stays at the original corpus's level. The suffix is
-    applied per \\p{L}\\p{N} run — the same token boundaries tokens()
+    applied per \\p{L}\\p{N} run — the same token boundaries tokens_sql
     splits on — so punctuation-adjacent words are suffixed too (a
     space-split suffix would leave 'word.' contributing an unsuffixed
     'word' token across copies); CJK codepoint tokens still share the
@@ -142,7 +143,7 @@ def probes(spark, sf_dir: str, only: set | None = None) -> dict:
         .agg(F.sum(F.when(F.col("n_docs") == 1, 1).otherwise(0)).alias("u"))
         .agg(F.count("*").alias("n")),
         "curation_scan": lambda: docs.select(
-            F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("h")
+            F.expr(f"md5({norm_text_sql('text', spark=True)})").alias("h")
         )
         .groupBy("h")
         .agg(F.count("*").alias("n"))
@@ -212,7 +213,7 @@ def _cms_probe(docs):
     from fegis_spark.operators.dedup import tokens
     from fegis_spark.operators.sketches import cms_build
 
-    stream = docs.select(F.explode(tokens(F.col("text"))).alias("t"))
+    stream = docs.select(F.explode(tokens("text")).alias("t"))
     return cms_build(stream, "t").agg(
         F.count("*").alias("cells"), F.sum("cnt").alias("mass")
     )
@@ -273,10 +274,7 @@ def _srp_probe(spark, sf_dir: str):
 def _minhash_incremental_probe(docs):
     from fegis_spark.operators.dedup import minhash_incremental_pairs_portable
 
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = F.expr(f"{md5_int_sql('CAST(doc_id AS STRING)', 8, spark=True)} % 100")
     d = docs.withColumn("bucket", bucket)
     return minhash_incremental_pairs_portable(
         d.filter(F.col("bucket") < 50), d.filter(F.col("bucket") >= 50),

@@ -31,8 +31,8 @@ begin "3/7 bench smoke (sf0.001)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python bench.py 2>/dev/null | tail -1
 
 begin "4/7 pytest"
-# tier-1 flags: a module that fails to collect (tests/test_schema.py
-# needs the reference checkout) must not stop the other tests
+# tier-1 flags: a module that fails to collect must not stop the
+# other tests
 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider 2>/dev/null | tail -1
 
 begin "5/7 oracle lint + typed-schema parity"
