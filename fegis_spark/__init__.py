@@ -18,7 +18,6 @@ Layout:
   functions/textfns.py  content_preview / extract_summary / relative_time ...
   functions/vector.py   cosine/dot/norm as native higher-order functions
   functions/views.py    compact/summary/graph/full projections
-  operators/lineage.py  argmax, lineage self-join
   operators/dedup.py    exact / minhash-LSH / simhash / ngram-jaccard / cosine
                         + min-label and large-star/small-star components
   operators/knn.py      KNN join, brute-force + LSH/IVF scale paths
@@ -27,6 +26,7 @@ Layout:
   operators/text_analysis.py  lang-id, quality, token counts, fingerprints
   operators/multimodal.py     binary media decode/resize/features
                               (real PPM/WAV codecs, others stubbed)
+  queries/lineage_q.py  argmax, sequencing, lineage self-join (SQL texts)
   sources/tables.py     parquet scans of the driver testdata
   sources/qdrant_sink.py batch vector indexing to Qdrant (import-gated)
   ingest.py             batch ingest pipeline (validate/sequence/embed)

@@ -11,6 +11,22 @@ documents embeddings). Contract (see __spark_entry__.py):
 * column names must match exactly — every computed column is aliased
   identically on both sides.
 
+A relational query is ONE SQL text (``register_sql``): Spark runs it
+through ``spark.sql`` over ``load_table`` frames and DuckDB runs the
+same text as the oracle, so the two cannot drift. A query keeps a
+hand-written builder (``register``) only when:
+
+* it covers a library operator (its ``covers`` ids name one: the
+  dedup/sketch/ANN/media families, ``compile_filters``) — as SQL it
+  would stop exercising the operator;
+* its oracle asserts literals (e.g. ``TRUE AS within_rel_5pct``) that
+  stand in for a value only the builder computes;
+* its scale shape is absent from the oracle (a sharded window, a
+  bounded-slice aggregate, in-row pair generation, a persist, a
+  pandas UDF) — the oracle is the naive form the builder avoids;
+* its SQL text measured slower in an A/B (evidence/sql_text_ab_r11.json
+  lists each kept builder and why).
+
 Determinism rules applied throughout (SURVEY.md §7.4):
 * double aggregates go through DECIMAL(38,10) on both sides, then cast
   back to DOUBLE — exact, order-independent, hash-stable;
@@ -23,10 +39,16 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from string import Formatter
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fegis_spark.model import TABLES, load_table
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
+#: a query's SQL text, or a generator of it: ``sql(spark=True)`` is the
+#: Spark spelling, ``sql(spark=False)`` the DuckDB one
+SqlText = str | Callable[..., str]
 
 
 @dataclass
@@ -38,9 +60,18 @@ class CatalogEntry:
     covers: tuple[str, ...] = field(default=())
     #: queries included in bench.py's headline set
     bench: bool = False
+    #: the Spark-run SQL text (table placeholders unfilled) of a
+    #: register_sql entry; None for a hand-written builder
+    sql: str | None = None
 
 
 _REGISTRY: dict[str, CatalogEntry] = {}
+
+
+def _add(entry: CatalogEntry) -> None:
+    if entry.name in _REGISTRY:
+        raise ValueError(f"duplicate catalog entry: {entry.name}")
+    _REGISTRY[entry.name] = entry
 
 
 def register(
@@ -50,12 +81,44 @@ def register(
     bench: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
-        if name in _REGISTRY:
-            raise ValueError(f"duplicate catalog entry: {name}")
-        _REGISTRY[name] = CatalogEntry(name, fn, oracle, covers, bench)
+        _add(CatalogEntry(name, fn, oracle, covers, bench))
         return fn
 
     return deco
+
+
+def sql_entry(
+    name: str, sql: SqlText, covers: tuple[str, ...] = (), bench: bool = False
+) -> CatalogEntry:
+    """The catalog entry of a query written once as SQL.
+
+    `sql` names each base table as a ``{lineitem}``-style placeholder
+    at table positions only (a column or alias that happens to equal a
+    table name stays plain text). The builder fills the placeholders
+    with ``load_table`` frames, so the table memo and the events.ts
+    read apply; pyspark registers each frame as a temp view for the
+    one ``spark.sql`` call and drops it again. The oracle fills them
+    with the bare table names the driver registers in DuckDB."""
+    text = sql if callable(sql) else lambda *, spark: sql
+    spark_sql, duck_sql = text(spark=True), text(spark=False)
+    tables = sorted({f for _, f, _, _ in Formatter().parse(spark_sql) if f is not None})
+    if not set(tables) <= set(TABLES):
+        raise ValueError(f"{name}: placeholders {tables} must name tables {TABLES}")
+
+    def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(spark_sql, **{t: load_table(spark, sf_dir, t) for t in tables})
+
+    builder.__name__ = builder.__qualname__ = name
+    oracle = duck_sql.format(**{t: t for t in TABLES})
+    return CatalogEntry(name, builder, oracle, covers, bench, spark_sql)
+
+
+def register_sql(
+    name: str, sql: SqlText, covers: tuple[str, ...] = (), bench: bool = False
+) -> None:
+    """Register a query whose Spark builder and DuckDB oracle are one
+    SQL text (see sql_entry)."""
+    _add(sql_entry(name, sql, covers, bench))
 
 
 def catalog() -> dict[str, CatalogEntry]:

@@ -13,9 +13,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fegis_spark.catalog import register
+from fegis_spark.catalog import register, register_sql
 from fegis_spark.model import load_table
-from fegis_spark.queries.sqlfrag import tokens_sql
+from fegis_spark.queries.sqlfrag import tokens_sql, ts_sql
 
 DEC = "decimal(38,6)"
 
@@ -140,9 +140,11 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# [EXT] per-(lang, source) corpus statistics for a training-data
+# pipeline: counts, distincts, char totals.
+register_sql(
     "corpus_stats",
-    oracle="""
+    """
     SELECT lang, source,
            COUNT(*) AS n_docs,
            COUNT(DISTINCT doc_id) AS n_distinct_docs,
@@ -150,45 +152,26 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
            MIN(n_chars) AS min_chars,
            MAX(n_chars) AS max_chars,
            CAST(CAST(SUM(CAST(n_chars AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS DOUBLE) AS avg_chars
-    FROM documents
+    FROM {documents}
     GROUP BY lang, source
     """,
     covers=("§2.4-agg", "[EXT]-text-stats"),
 )
-def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] per-(lang, source) corpus statistics for a training-data
-    pipeline: counts, distincts, char totals."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.groupBy("lang", "source").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("doc_id").alias("n_distinct_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-        (dsum("n_chars") / F.count("*")).cast("double").alias("avg_chars"),
-    )
 
 
-@register(
+# ROLLUP hierarchy (type → type×day → grand total) — one shuffle,
+# grouping-set expansion is map-side.
+register_sql(
     "events_rollup",
-    oracle="""
+    """
     SELECT event_type, CAST(ts AS DATE) AS day,
            COUNT(*) AS n,
            CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
-    FROM events
+    FROM {events}
     GROUP BY ROLLUP(event_type, CAST(ts AS DATE))
     """,
     covers=("§2.4-rollup",),
 )
-def events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy (type → type×day → grand total) — one shuffle,
-    grouping-set expansion is map-side."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.withColumn("day", F.col("ts").cast("date"))
-        .rollup("event_type", "day")
-        .agg(F.count("*").alias("n"), dsum("value").alias("total_value"))
-    )
 
 
 @register(
@@ -274,9 +257,12 @@ def hll_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Variance from decimal-exact moment sums (sum, sum-of-squares) —
+# the order-independent form of stddev/var; the built-in var_samp is
+# a float accumulation whose partition order would flap the hash.
+register_sql(
     "stats_moments",
-    oracle="""
+    """
     SELECT l_returnflag,
            COUNT(*) AS n,
            CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS s1,
@@ -285,27 +271,10 @@ def hll_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                   - CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE)
                     * CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*))
                  / nullif(COUNT(*) - 1, 0) AS variance
-    FROM lineitem GROUP BY l_returnflag
+    FROM {lineitem} GROUP BY l_returnflag
     """,
     covers=("§2.4-stats",),
 )
-def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variance from decimal-exact moment sums (sum, sum-of-squares) —
-    the order-independent form of stddev/var; the built-in var_samp is
-    a float accumulation whose partition order would flap the hash."""
-    li = load_table(spark, sf_dir, "lineitem")
-    s1 = dsum("l_quantity")
-    s2 = dsum(F.col("l_quantity") * F.col("l_quantity"))
-    n = F.count("*")
-    return li.groupBy("l_returnflag").agg(
-        n.alias("n"),
-        s1.alias("s1"),
-        s2.alias("s2"),
-        # UNROUNDED: every operand is a decimal-exact sum cast to an
-        # identical double, so the IEEE chain is bit-identical on both
-        # engines; round(x, 6) would reintroduce the midpoint class
-        ((s2 - s1 * s1 / n) / F.nullif(n - 1, F.lit(0))).alias("variance"),
-    )
 
 
 @register(
@@ -500,30 +469,19 @@ def grouped_ntile_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("o_orderkey", "o_orderpriority", "decile")
 
 
-@register(
+# Explicit GROUPING SETS via the SQL API (Catalyst expands to one
+# shuffle, same as rollup/cube).
+register_sql(
     "grouping_sets_revenue",
-    oracle="""
+    """
     SELECT o_orderstatus, o_orderpriority,
            COUNT(*) AS n,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
-    FROM orders
+    FROM {orders}
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), (o_orderstatus, o_orderpriority))
     """,
     covers=("§2.4-grouping-sets",),
 )
-def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS via the SQL API (Catalyst expands to one
-    shuffle, same as rollup/cube)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("__orders_gs")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               COUNT(*) AS n,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
-        FROM __orders_gs
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), (o_orderstatus, o_orderpriority))
-        """
-    )
 
 
 @register(
@@ -551,17 +509,18 @@ def argmax_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: shared ordered-funnel CTE chain (first view -> later first click ->
 #: later first purchase, per user) — interpolated by BOTH the
-#: conversion-count oracle and the latency-percentile oracle.
+#: conversion-count text and the latency-percentile oracle ({events}
+#: is a register_sql table placeholder).
 _FUNNEL_CTE = """v AS (
-      SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY user_id
+      SELECT user_id, min(ts) AS t1 FROM {events} WHERE event_type = 'view' GROUP BY user_id
     ), c AS (
       SELECT e.user_id, min(e.ts) AS t2, min(v.t1) AS t1
-      FROM events e JOIN v ON e.user_id = v.user_id
+      FROM {events} e JOIN v ON e.user_id = v.user_id
       WHERE e.event_type = 'click' AND e.ts > v.t1
       GROUP BY e.user_id
     ), p AS (
       SELECT e.user_id, min(e.ts) AS t3, min(c.t2) AS t2
-      FROM events e JOIN c ON e.user_id = c.user_id
+      FROM {events} e JOIN c ON e.user_id = c.user_id
       WHERE e.event_type = 'purchase' AND e.ts > c.t2
       GROUP BY e.user_id
     )"""
@@ -590,30 +549,25 @@ def _funnel_stages(ev: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     return v, c, p
 
 
-@register(
+# [EXT] ordered funnel (view -> later click -> later purchase):
+# each stage is events ⋈ previous-stage users on user_id with a
+# strictly-later timestamp, then min-agg. All three joins and aggs
+# hash on the same user_id key, so a user_id-bucketed warehouse
+# layout runs the whole funnel shuffle-free; stage frontiers only
+# shrink, so every join's right side is smaller than the last. The
+# three 1-row counts meet in broadcast cross joins, one plan (as
+# scalar subqueries each would run as its own job first).
+register_sql(
     "funnel_conversion",
-    oracle=f"""
+    f"""
     WITH {_FUNNEL_CTE}
-    SELECT (SELECT count(*) FROM v) AS n_viewed,
-           (SELECT count(*) FROM c) AS n_clicked_after,
-           (SELECT count(*) FROM p) AS n_purchased_after
+    SELECT n_viewed, n_clicked_after, n_purchased_after
+    FROM (SELECT count(*) AS n_viewed FROM v) nv
+    CROSS JOIN (SELECT count(*) AS n_clicked_after FROM c) nc
+    CROSS JOIN (SELECT count(*) AS n_purchased_after FROM p) np
     """,
     covers=("[EXT]-funnel", "§2.4-agg"),
 )
-def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] ordered funnel (view -> later click -> later purchase):
-    each stage is events ⋈ previous-stage users on user_id with a
-    strictly-later timestamp, then min-agg. All three joins and aggs
-    hash on the same user_id key, so a user_id-bucketed warehouse
-    layout runs the whole funnel shuffle-free; stage frontiers only
-    shrink, so every join's right side is smaller than the last."""
-    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    v, c, p = _funnel_stages(ev)
-    return (
-        v.agg(F.count("*").alias("n_viewed"))
-        .crossJoin(c.agg(F.count("*").alias("n_clicked_after")))  # bcast-ok: 1-row agg
-        .crossJoin(p.agg(F.count("*").alias("n_purchased_after")))  # bcast-ok: 1-row agg
-    )
 
 
 def _lat_agg_sql(src: str, a: str, b: str, label: str) -> str:
@@ -632,7 +586,7 @@ def _lat_agg_sql(src: str, a: str, b: str, label: str) -> str:
 @register(
     "funnel_time_to_convert",
     oracle=f"""
-    WITH {_FUNNEL_CTE}
+    WITH {_FUNNEL_CTE.format(events="events")}
     {_lat_agg_sql('c', 't1', 't2', 'view_to_click')}
     UNION ALL
     {_lat_agg_sql('p', 't2', 't3', 'click_to_purchase')}
@@ -676,9 +630,18 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# [EXT] z-score anomaly counts per event_type: per-group moments
+# from decimal-exact sums (order-independent, unlike the float
+# var_samp accumulator), broadcast back to the stream, |z| > 3
+# flagged. The stats table is |event_types| rows — the second pass
+# is a broadcast join, so corpus-size work is two scans and two
+# partial aggs; the same shape monitors feature drift in a training
+# pipeline. The hint is needed: without CBO an aggregate's size
+# estimate is its input's, so the planner would broadcast the event
+# side instead while it is small and shuffle it once it is not.
+register_sql(
     "anomaly_zscore",
-    oracle="""
+    """
     WITH stats AS (
       SELECT event_type,
              COUNT(*) AS n,
@@ -688,42 +651,18 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE)
                   * CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*))
                / nullif(COUNT(*) - 1, 0), 0)) AS sd
-      FROM events GROUP BY event_type
+      FROM {events} GROUP BY event_type
     )
-    SELECT e.event_type,
+    -- bcast-ok: one row per event_type (bounded enum)
+    SELECT /*+ BROADCAST(s) */ e.event_type,
            s.n AS n_events,
            COUNT(*) FILTER (WHERE abs((e.value - s.mean) / s.sd) > 3.0) AS n_outliers
-    FROM events e JOIN stats s ON e.event_type = s.event_type
+    FROM {events} e JOIN stats s ON e.event_type = s.event_type
     WHERE s.sd > 0
     GROUP BY e.event_type, s.n
     """,
     covers=("[EXT]-anomaly", "§2.4-stats"),
 )
-def anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] z-score anomaly counts per event_type: per-group moments
-    from decimal-exact sums (order-independent, unlike the float
-    var_samp accumulator), broadcast back to the stream, |z| > 3
-    flagged. The stats table is |event_types| rows — the second pass
-    is a broadcast join, so corpus-size work is two scans and two
-    partial aggs; the same shape monitors feature drift in a training
-    pipeline."""
-    ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    n = F.count("*")
-    s1 = F.sum(F.col("value").cast("decimal(38,6)")).cast("double")
-    s2 = F.sum((F.col("value") * F.col("value")).cast("decimal(38,6)")).cast("double")
-    stats = ev.groupBy("event_type").agg(
-        n.alias("n"),
-        (s1 / n).alias("mean"),
-        F.sqrt(
-            F.greatest((s2 - s1 * s1 / n) / F.nullif(n - 1, F.lit(0)), F.lit(0.0))
-        ).alias("sd"),
-    )
-    z = F.abs((F.col("value") - F.col("mean")) / F.col("sd"))
-    return (
-        ev.join(F.broadcast(stats.filter(F.col("sd") > 0)), "event_type")  # bcast-ok: one row per event_type (bounded enum)
-        .groupBy("event_type", F.col("n").alias("n_events"))
-        .agg(F.count_if(z > 3.0).alias("n_outliers"))
-    )
 
 
 @register(
@@ -773,71 +712,42 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# [EXT] first-order Markov transition matrix over per-user event
+# sequences: P(next event_type | current event_type) — the standard
+# behavioral-sequence summary (drift monitoring, synthetic-session
+# generation, next-event baselines).
+#
+# Plan: one per-user lag window (same (user_id, ts, event_id) total
+# order as the lineage family) into a (prev, next)-keyed hash agg;
+# the per-prev context totals are a window over those transition
+# counts — one corpus pass, no persist, no join back (a ctx CTE joined
+# back to the counts re-ran the corpus window per consumer).
+# Transition-matrix cardinality is |event_types|^2, so everything
+# after the first agg is constant-size regardless of corpus scale.
+# n/ctx_n is exact integer-ratio division (no dsum needed), emitted
+# unrounded — the IEEE divide is bit-identical cross-engine.
+register_sql(
     "event_transition_matrix",
-    oracle="""
+    lambda *, spark: f"""
     WITH seq AS (
       SELECT user_id, event_type,
+             -- grpwin-ok: user_id cardinality scales with input
              lag(event_type) OVER (
-               PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
+               PARTITION BY user_id ORDER BY {ts_sql(spark=spark)}, event_id
              ) AS prev_type
-      FROM events
+      FROM {{events}}
     ), pairs AS (
       SELECT prev_type, event_type, COUNT(*) AS n
       FROM seq WHERE prev_type IS NOT NULL
       GROUP BY prev_type, event_type
-    ), ctx AS (
-      SELECT prev_type, CAST(SUM(n) AS BIGINT) AS ctx_n FROM pairs GROUP BY prev_type
     )
-    SELECT p.prev_type, p.event_type, p.n,
-           p.n / CAST(c.ctx_n AS DOUBLE) AS prob
-    FROM pairs p JOIN ctx c USING (prev_type)
+    SELECT prev_type, event_type, n,
+           -- panel-ok: bounded input, the |event_types|^2-row count table
+           n / CAST(SUM(n) OVER (PARTITION BY prev_type) AS DOUBLE) AS prob
+    FROM pairs
     """,
     covers=("[EXT]-transitions",),
 )
-def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] first-order Markov transition matrix over per-user event
-    sequences: P(next event_type | current event_type) — the standard
-    behavioral-sequence summary (drift monitoring, synthetic-session
-    generation, next-event baselines).
-
-    Plan: one per-user lag window (same (user_id, ts, event_id) total
-    order as the lineage family) into a (prev, next)-keyed hash agg;
-    the per-prev context totals derive from the transition counts —
-    no second corpus scan — and broadcast back. Transition-matrix
-    cardinality is |event_types|^2, so everything after the first agg
-    is constant-size regardless of corpus scale. n/ctx_n is exact
-    integer-ratio division (no dsum needed), emitted unrounded —
-    the IEEE divide is bit-identical cross-engine."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(  # grpwin-ok: user_id cardinality scales with input
-        F.col("ts").cast("timestamp"), F.col("event_id")
-    )
-    seq = e.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    ).where(F.col("prev_type").isNotNull())
-    from pyspark import StorageLevel
-
-    # |event_types|^2 rows; persisted because it feeds BOTH the context
-    # rollup and the output join — without the cache each consumer
-    # re-scans and re-windows the corpus
-    pairs = (
-        seq.groupBy("prev_type", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ctx = pairs.groupBy("prev_type").agg(F.sum("n").cast("bigint").alias("ctx_n"))
-    return (
-        pairs.join(F.broadcast(ctx), "prev_type")  # bcast-ok: one row per event_type
-        .select(
-            "prev_type",
-            "event_type",
-            "n",
-            # UNROUNDED exact-integer ratio (bit-identical IEEE
-            # divide); see CLAUDE.md on the round(k/n, 6) midpoint class
-            (F.col("n") / F.col("ctx_n").cast("double")).alias("prob"),
-        )
-    )
 
 
 @register(
@@ -957,9 +867,13 @@ HIST_BUCKETS = 20
 HIST_LO, HIST_HI = 0.0, 500.0
 
 
-@register(
+# Fixed-width histogram of events.value (20 buckets over [0,500],
+# clamped edges) — the distribution summary behind drift dashboards.
+# Bucket arithmetic is explicit floor division (width_bucket is not
+# portable to DuckDB); one hash agg over HIST_BUCKETS keys.
+register_sql(
     "value_histogram",
-    oracle=f"""
+    f"""
     SELECT bucket,
            -- CAST: DuckDB parses the width literal as DECIMAL, which
            -- would propagate a Decimal-typed column the driver's
@@ -973,52 +887,36 @@ HIST_LO, HIST_HI = 0.0, 500.0
              least({HIST_BUCKETS - 1}, greatest(0,
                CAST(floor((value - {HIST_LO}) / {(HIST_HI - HIST_LO) / HIST_BUCKETS}) AS INT)
              )) AS bucket
-      FROM events
+      FROM {{events}}
     )
     GROUP BY bucket
     """,
     covers=("§2.4-agg",),
 )
-def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram of events.value (20 buckets over [0,500],
-    clamped edges) — the distribution summary behind drift dashboards.
-    Bucket arithmetic is explicit floor division (width_bucket is not
-    portable to DuckDB); one hash agg over HIST_BUCKETS keys."""
-    e = load_table(spark, sf_dir, "events")
-    width = (HIST_HI - HIST_LO) / HIST_BUCKETS
-    bucket = F.least(
-        F.lit(HIST_BUCKETS - 1),
-        F.greatest(F.lit(0), F.floor((F.col("value") - HIST_LO) / width).cast("int")),
-    )
-    return (
-        e.select("value", bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value"))
-        .select(
-            "bucket",
-            # bucket * 25.0 is exact in double for every bucket index —
-            # no round needed on either side
-            (F.lit(HIST_LO) + F.col("bucket") * width).alias("lo"),
-            (F.lit(HIST_LO) + (F.col("bucket") + 1) * width).alias("hi"),
-            "n",
-            "total_value",
-        )
-    )
 
 
-@register(
+# §2.4 ext: distinct-users-to-date growth curve. Windowed COUNT
+# DISTINCT doesn't exist in Spark (or anywhere, scalably); the
+# standard decomposition is first-seen: each user contributes once
+# at MIN(day), daily new-user counts aggregate, and a running sum
+# over the DAY table yields the cumulative curve. Two hash shuffles
+# on corpus-scale data (first-seen agg, daily agg); the running-sum
+# window is unpartitioned but runs over the aggregated day table —
+# rows = distinct days, bounded by the calendar, not the corpus.
+register_sql(
     "cumulative_unique_users",
-    oracle="""
+    """
     WITH first AS (
       SELECT user_id,
              MIN(CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS TIMESTAMP))
                AS first_day
-      FROM events GROUP BY user_id
+      FROM {events} GROUP BY user_id
     ), daily AS (
       SELECT first_day AS day, COUNT(*) AS new_users
       FROM first GROUP BY first_day
     )
     SELECT day, new_users,
+           -- window-ok: one row per day (bounded date range)
            CAST(SUM(new_users) OVER (ORDER BY day
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
              AS cum_users
@@ -1026,26 +924,6 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     covers=("§2.4-ext", "§2.5-window"),
 )
-def cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.4 ext: distinct-users-to-date growth curve. Windowed COUNT
-    DISTINCT doesn't exist in Spark (or anywhere, scalably); the
-    standard decomposition is first-seen: each user contributes once
-    at MIN(day), daily new-user counts aggregate, and a running sum
-    over the DAY table yields the cumulative curve. Two hash shuffles
-    on corpus-scale data (first-seen agg, daily agg); the running-sum
-    window is unpartitioned but runs over the aggregated day table —
-    rows = distinct days, bounded by the calendar, not the corpus."""
-    e = load_table(spark, sf_dir, "events")
-    first = (
-        e.select("user_id", F.date_trunc("day", F.col("ts").cast("timestamp")).alias("d"))
-        .groupBy("user_id")
-        .agg(F.min("d").alias("day"))
-    )
-    daily = first.groupBy("day").agg(F.count("*").alias("new_users"))
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)  # window-ok: one row per day (bounded date range)
-    return daily.select(
-        "day", "new_users", F.sum("new_users").over(w).cast("bigint").alias("cum_users")
-    )
 
 
 @register(

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fegis_spark.catalog import register
+from fegis_spark.catalog import register, register_sql
 from fegis_spark.model import load_table
 from fegis_spark.queries.sqlfrag import md5_int_sql, portable_ln, tokens_sql
 
@@ -193,43 +193,32 @@ def epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 SOURCE_CAP = 10
 
 
-@register(
+# [EXT] per-source document cap (the domain-cap step of
+# CCNet/RefinedWeb-style curation): keep at most SOURCE_CAP
+# documents per source, preferring longer documents, doc_id as the
+# total-order tiebreak. One shuffle on source. At 100 TB this is
+# exactly the per-domain cap pass, and a skewed source (one domain =
+# half the crawl) is the norm: the guard is Spark's WindowGroupLimit
+# pushdown — the rank filter runs as a partial per-map top-k BEFORE
+# the exchange, so a hot source ships at most cap rows per map task
+# into the shuffle, not its full row set. (AQE skew-split does NOT
+# apply — it cannot split window partitions.) The pushdown is pinned
+# in tests/test_plans.py for the whole rank-filter family.
+register_sql(
     "source_cap_sample",
-    oracle=f"""
+    f"""
     SELECT source, doc_id, n_chars, rk
     FROM (
       SELECT source, doc_id, n_chars,
+             -- grpwin-ok: source (domain) cardinality scales with the corpus
              row_number() OVER (PARTITION BY source
                                 ORDER BY n_chars DESC, doc_id) AS rk
-      FROM documents
+      FROM {{documents}}
     )
     WHERE rk <= {SOURCE_CAP}
     """,
     covers=("[EXT]-source-caps", "§2.5-topk"),
 )
-def source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] per-source document cap (the domain-cap step of
-    CCNet/RefinedWeb-style curation): keep at most SOURCE_CAP
-    documents per source, preferring longer documents, doc_id as the
-    total-order tiebreak. One shuffle on source. At 100 TB this is
-    exactly the per-domain cap pass, and a skewed source (one domain =
-    half the crawl) is the norm: the guard is Spark's WindowGroupLimit
-    pushdown — the rank filter runs as a partial per-map top-k BEFORE
-    the exchange, so a hot source ships at most cap rows per map task
-    into the shuffle, not its full row set. (AQE skew-split does NOT
-    apply — it cannot split window partitions.) The pushdown is pinned
-    in tests/test_plans.py for the whole rank-filter family."""
-    docs = load_table(spark, sf_dir, "documents")
-    # grpwin-ok: source (domain) cardinality scales with the corpus
-    w = Window.partitionBy("source").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id")
-    )
-    return (
-        docs.select(
-            "source", "doc_id", "n_chars", F.row_number().over(w).alias("rk")
-        )
-        .filter(F.col("rk") <= SOURCE_CAP)
-    )
 
 
 #: exact-k weighted-without-replacement sample size.

@@ -9,131 +9,91 @@ facts shuffle once on their join key, top-k per group uses windows
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fegis_spark.catalog import register
+from fegis_spark.catalog import register, register_sql
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes
-from fegis_spark.queries.aggregates import dsum
-from fegis_spark.queries.sqlfrag import md5_int_sql
+from fegis_spark.queries.sqlfrag import md5_int_sql, ts_sql
 
 
-@register(
+# TPC-H Q5 shape: fact-to-fact join on orderkey, then hash joins for
+# customer and the region-filtered nation dimension. nation (25 rows)
+# and region (5 rows) are schema-bounded and pre-joined (the nr CTE),
+# so the fact side meets one tiny nation build side instead of two;
+# customer scales WITH the corpus and carries no hint — the size
+# threshold (AQE at runtime) picks its strategy. Pre-joining customer
+# into the CTE as well plans a sort-merge join: without CBO a join's
+# size estimate is the product of its inputs, so the customer x
+# nation x region side never fits the broadcast threshold (measured
+# slower at sf0.1, evidence/sql_text_ab_r11.json).
+register_sql(
     "revenue_by_nation",
-    oracle="""
-    SELECT n.n_name AS nation,
+    """
+    WITH nr AS (
+      SELECT n.n_nationkey, n.n_name
+      FROM {nation} n JOIN {region} r ON n.n_regionkey = r.r_regionkey
+      WHERE r.r_name IN ('ASIA', 'EUROPE')
+    )
+    SELECT nr.n_name AS nation,
            CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
            COUNT(*) AS n_items
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    WHERE r.r_name IN ('ASIA', 'EUROPE')
-      AND o.o_orderstatus = 'F'
-    GROUP BY n.n_name
+    FROM {lineitem} l
+    JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+    JOIN {customer} c ON o.o_custkey = c.c_custkey
+    JOIN nr ON c.c_nationkey = nr.n_nationkey
+    WHERE o.o_orderstatus = 'F'
+    GROUP BY nr.n_name
     """,
     covers=("§2.6-joins", "J1-general"),
     bench=True,
 )
-def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: fact-to-fact sort-merge on orderkey, then
-    hash joins for customer/nation/region. nation (25 rows) and region
-    (5 rows) are schema-bounded and broadcast unconditionally; customer
-    scales WITH the corpus, so its hint is size-gated (maybe_broadcast)
-    — under the gate the plan is the same BHJ as before, over it AQE
-    picks from runtime sizes. Catalyst reorders the dim filters below
-    the joins."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region").filter(
-        F.col("r_name").isin("ASIA", "EUROPE")
-    )
-    dims = maybe_broadcast(
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)  # bcast-ok: 25 nations
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)  # bcast-ok: 5 regions
-        .select("c_custkey", "n_name"),
-        table_bytes(sf_dir, "customer"),
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(dims, orders.o_custkey == dims.c_custkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
 
 
-@register(
+# Top-K per group: the same window pattern the KNN join uses —
+# partition-local heap, single shuffle on the group key. The rank
+# filter sits directly on row_number, so the plan keeps the
+# WindowGroupLimit pushdown (pinned in tests/test_plans.py); rnk is
+# cast to BIGINT after it (Spark's row_number is INT).
+register_sql(
     "top_orders_per_segment",
-    oracle="""
-    SELECT c_mktsegment, o_orderkey, o_totalprice, rnk FROM (
+    """
+    SELECT c_mktsegment, o_orderkey, o_totalprice, CAST(rnk AS BIGINT) AS rnk FROM (
       SELECT c.c_mktsegment, o.o_orderkey, o.o_totalprice,
+             -- panel-ok: WindowGroupLimit pushdown pinned (rank-filter family)
              row_number() OVER (PARTITION BY c.c_mktsegment
                                 ORDER BY o.o_totalprice DESC, o.o_orderkey) AS rnk
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+      FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
     ) WHERE rnk <= 3
     """,
     covers=("§2.5-topk", "K8-pattern"),
 )
-def top_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-K per group: the same window pattern the KNN join uses —
-    partition-local heap, single shuffle on the group key."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    # panel-ok: WindowGroupLimit pushdown pinned (rank-filter family)
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.desc("o_totalprice"), F.col("o_orderkey")
-    )
-    return (
-        orders.join(
-            maybe_broadcast(cust, table_bytes(sf_dir, "customer")),
-            orders.o_custkey == cust.c_custkey,
-        )
-        .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 3)
-        .select("c_mktsegment", "o_orderkey", "o_totalprice", "rnk")
-    )
 
 
-@register(
+# left_semi (EXISTS) + left_anti (NOT EXISTS) + union — the
+# existence joins never materialize the probe side's payload.
+register_sql(
     "semi_anti_join",
-    oracle="""
-    SELECT 'with_orders' AS kind, COUNT(*) AS n FROM customer c
-    WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+    """
+    SELECT 'with_orders' AS kind, COUNT(*) AS n FROM {customer} c
+    WHERE EXISTS (SELECT 1 FROM {orders} o WHERE o.o_custkey = c.c_custkey)
     UNION ALL
-    SELECT 'without_orders' AS kind, COUNT(*) AS n FROM customer c
-    WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+    SELECT 'without_orders' AS kind, COUNT(*) AS n FROM {customer} c
+    WHERE NOT EXISTS (SELECT 1 FROM {orders} o WHERE o.o_custkey = c.c_custkey)
     """,
     covers=("§2.6-semi", "§2.6-anti", "§2.9-union"),
 )
-def semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """left_semi (EXISTS) + left_anti (NOT EXISTS) + union — the
-    existence joins never materialize the probe side's payload."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey")
-    with_o = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-        .agg(F.count("*").alias("n"))
-        .select(F.lit("with_orders").alias("kind"), "n")
-    )
-    without_o = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .agg(F.count("*").alias("n"))
-        .select(F.lit("without_orders").alias("kind"), "n")
-    )
-    return with_o.unionAll(without_o)
 
 
-@register(
+# Range join: equi-key + interval predicate. The equi key keeps it
+# a hash/sort-merge join (the range is a post-join filter) — the
+# 100 TB-safe form of an interval join; a pure range join would need
+# bucketized keys.
+register_sql(
     "range_join_ship_window",
-    oracle="""
+    """
     SELECT o.o_orderkey, COUNT(*) AS n_shipped_30d
-    FROM orders o JOIN lineitem l
+    FROM {orders} o JOIN {lineitem} l
       ON l.l_orderkey = o.o_orderkey
      AND l.l_shipdate >= o.o_orderdate
      AND l.l_shipdate < o.o_orderdate + INTERVAL 30 DAY
@@ -141,114 +101,65 @@ def semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     covers=("§2.6-range",),
 )
-def range_join_ship_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range join: equi-key + interval predicate. The equi key keeps it
-    a hash/sort-merge join (the range is a post-join filter) — the
-    100 TB-safe form of an interval join; a pure range join would need
-    bucketized keys."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    cond = (
-        (li.l_orderkey == orders.o_orderkey)
-        & (li.l_shipdate >= orders.o_orderdate)
-        & (li.l_shipdate < F.date_add(orders.o_orderdate.cast("date"), 30).cast("timestamp_ntz"))
-    )
-    return (
-        orders.join(li, cond)
-        .groupBy("o_orderkey")
-        .agg(F.count("*").alias("n_shipped_30d"))
-    )
 
 
-@register(
+# INTERSECT / EXCEPT / UNION ALL over nation keys.
+register_sql(
     "nation_set_ops",
-    oracle="""
+    """
     SELECT 'both' AS kind, n_nationkey FROM (
-      SELECT DISTINCT c_nationkey AS n_nationkey FROM customer
+      SELECT DISTINCT c_nationkey AS n_nationkey FROM {customer}
       INTERSECT
-      SELECT DISTINCT s_nationkey FROM supplier
+      SELECT DISTINCT s_nationkey FROM {supplier}
     )
     UNION ALL
     SELECT 'customer_only' AS kind, n_nationkey FROM (
-      SELECT DISTINCT c_nationkey AS n_nationkey FROM customer
+      SELECT DISTINCT c_nationkey AS n_nationkey FROM {customer}
       EXCEPT
-      SELECT DISTINCT s_nationkey FROM supplier
+      SELECT DISTINCT s_nationkey FROM {supplier}
     )
     """,
     covers=("§2.9-intersect", "§2.9-except", "§2.9-union"),
 )
-def nation_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT / UNION ALL over nation keys."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("n_nationkey")
-    ).distinct()
-    supp = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("n_nationkey")
-    ).distinct()
-    both = cust.intersect(supp).select(F.lit("both").alias("kind"), "n_nationkey")
-    conly = cust.exceptAll(supp).select(
-        F.lit("customer_only").alias("kind"), "n_nationkey"
-    )
-    return both.unionAll(conly)
 
 
-@register(
+# Window frames: 4-row moving average + running decimal sum per
+# session. The 4-row avg sums at most 4 doubles in deterministic
+# frame order → identical IEEE result on both engines; the unbounded
+# running sum goes through decimal.
+register_sql(
     "moving_avg_frame",
-    oracle="""
+    lambda *, spark: f"""
     SELECT event_id, user_id,
+           -- grpwin-ok: user_id cardinality scales with input
            round(avg(value) OVER (PARTITION BY user_id
-                                  ORDER BY CAST(ts AS TIMESTAMP), event_id
+                                  ORDER BY {ts_sql(spark=spark)}, event_id
                                   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 6) AS mavg,
+           -- grpwin-ok: user_id cardinality scales with input
            CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER (PARTITION BY user_id
-                                  ORDER BY CAST(ts AS TIMESTAMP), event_id
+                                  ORDER BY {ts_sql(spark=spark)}, event_id
                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_sum
-    FROM events
+    FROM {{events}}
     """,
     covers=("§2.5-frames",),
 )
-def moving_avg_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window frames: 4-row moving average + running decimal sum per
-    session. The 4-row avg sums at most 4 doubles in deterministic
-    frame order → identical IEEE result on both engines; the unbounded
-    running sum goes through decimal."""
-    ev = load_table(spark, sf_dir, "events")
-    # grpwin-ok: user_id cardinality scales with input
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.avg("value").over(w.rowsBetween(-3, 0)), 6).alias("mavg"),
-        F.sum(F.col("value").cast("decimal(38,6)"))
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("double")
-        .alias("running_sum"),
-    )
 
 
-@register(
+# Pivot with explicit values (never let pivot infer values at
+# scale — that's an extra distinct pass over 100 TB).
+register_sql(
     "event_type_pivot",
-    oracle="""
+    """
     SELECT user_id,
            COUNT(*) FILTER (WHERE event_type = 'click') AS click,
            COUNT(*) FILTER (WHERE event_type = 'view') AS view,
            COUNT(*) FILTER (WHERE event_type = 'purchase') AS purchase,
            COUNT(*) FILTER (WHERE event_type = 'error') AS error,
            COUNT(*) FILTER (WHERE event_type = 'signup') AS signup
-    FROM events GROUP BY user_id
+    FROM {events} GROUP BY user_id
     """,
     covers=("§2.4-pivot",),
 )
-def event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot with explicit values (never let pivot infer values at
-    scale — that's an extra distinct pass over 100 TB)."""
-    ev = load_table(spark, sf_dir, "events")
-    kinds = ["click", "view", "purchase", "error", "signup"]
-    return (
-        ev.groupBy("user_id")
-        .pivot("event_type", kinds)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, kinds)
-    )
 
 
 @register(
@@ -416,13 +327,19 @@ def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("user_id", "event_id", "asof_v_event")
 
 
-@register(
+# §2.6 outer join: customers LEFT OUTER their order rollup, so
+# customers with no orders survive with NULL-coalesced zeros — the
+# canonical coverage/活跃度 report shape. Pre-aggregating orders
+# BEFORE the join keeps the outer join's build side at |customers
+# with orders| instead of |orders| (map-side combine first, join
+# second — the scale-correct order).
+register_sql(
     "outer_join_coverage",
-    oracle="""
+    """
     WITH per_cust AS (
       SELECT o_custkey, COUNT(*) AS n_orders,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS spend
-      FROM orders GROUP BY o_custkey
+      FROM {orders} GROUP BY o_custkey
     )
     SELECT c.c_mktsegment,
            COUNT(*) AS n_customers,
@@ -430,41 +347,11 @@ def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(COALESCE(p.n_orders, 0)) AS BIGINT) AS total_orders,
            -- lint: allow R3 (decimal transit; COALESCE paren hides it from the regex)
            round(CAST(SUM(CAST(COALESCE(p.spend, 0.0) AS DECIMAL(38,6))) AS DOUBLE), 6) AS total_spend
-    FROM customer c LEFT OUTER JOIN per_cust p ON c.c_custkey = p.o_custkey
+    FROM {customer} c LEFT OUTER JOIN per_cust p ON c.c_custkey = p.o_custkey
     GROUP BY c.c_mktsegment
     """,
     covers=("§2.6-outer",),
 )
-def outer_join_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.6 outer join: customers LEFT OUTER their order rollup, so
-    customers with no orders survive with NULL-coalesced zeros — the
-    canonical coverage/活跃度 report shape. Pre-aggregating orders
-    BEFORE the join keeps the outer join's build side at |customers
-    with orders| instead of |orders| (map-side combine first, join
-    second — the scale-correct order)."""
-    c = load_table(spark, sf_dir, "customer")
-    per_cust = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast("double").alias("spend"),
-        )
-    )
-    j = c.join(per_cust, c.c_custkey == per_cust.o_custkey, "left_outer")
-    return j.groupBy("c_mktsegment").agg(
-        F.count("*").alias("n_customers"),
-        F.sum(F.when(F.col("o_custkey").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_inactive"),
-        F.sum(F.coalesce(F.col("n_orders"), F.lit(0))).cast("bigint").alias("total_orders"),
-        F.round(
-            F.sum(F.coalesce(F.col("spend"), F.lit(0.0)).cast("decimal(38,6)")).cast(
-                "double"
-            ),
-            6,
-        ).alias("total_spend"),
-    )
 
 
 @register(
@@ -530,15 +417,22 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# TPC-H Q3 shape: segment-filtered customers joined into orders
+# (broadcast under the size threshold), fact-to-fact join to lineitem on orderkey, per-order
+# revenue agg, top-10 by revenue. Both date filters push to the
+# parquet scans; the only big exchange is the orderkey join + the
+# per-order agg; orderBy+limit fuses to TakeOrderedAndProject.
+# Ordering is on the DECIMAL-exact revenue (identical across
+# engines) with (o_orderdate, l_orderkey) completing a total order.
+register_sql(
     "shipping_priority",
-    oracle="""
+    """
     SELECT l_orderkey,
            CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
            o_orderdate, o_orderpriority
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    FROM {customer} c
+    JOIN {orders} o ON c.c_custkey = o.o_custkey
+    JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
     WHERE c.c_mktsegment = 'BUILDING'
       AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
       AND l.l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
@@ -548,41 +442,6 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     covers=("§2.6-joins", "O1", "O3"),
 )
-def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: segment-filtered customers broadcast into
-    orders, fact-to-fact join to lineitem on orderkey, per-order
-    revenue agg, top-10 by revenue. Both date filters push to the
-    parquet scans; the only big exchange is the orderkey join + the
-    per-order agg; orderBy+limit fuses to TakeOrderedAndProject.
-    Ordering is on the DECIMAL-exact revenue (identical across
-    engines) with (o_orderdate, l_orderkey) completing a total order."""
-    cust = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp_ntz")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01 00:00:00").cast("timestamp_ntz")
-    )
-    return (
-        li.join(
-            orders.join(
-                maybe_broadcast(
-                    cust.select("c_custkey"), table_bytes(sf_dir, "customer")
-                ),
-                orders.o_custkey == F.col("c_custkey"),
-            ).select("o_orderkey", "o_orderdate", "o_orderpriority"),
-            li.l_orderkey == F.col("o_orderkey"),
-        )
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
-        )
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.desc("revenue"), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
 
 
 COPURCHASE_MIN_SUPPORT = 3
@@ -714,21 +573,25 @@ def apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: shared SCD2 interval CTE chain (state-change collapse -> validity
-#: intervals) — interpolated by BOTH the history oracle and the as-of
-#: snapshot oracle (anti-drift rule).
+#: intervals) — interpolated by BOTH the history text and the as-of
+#: snapshot text (anti-drift rule). ts is cast on both engines: the
+#: outputs are TIMESTAMP.
 _SCD2_CTE = """changes AS (
       SELECT user_id, event_type, ts, event_id FROM (
         SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS ts, event_id,
+               -- grpwin-ok: user_id cardinality scales with input
                lag(event_type) OVER (
                  PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
                ) AS prev
-        FROM events
+        FROM {events}
       ) WHERE prev IS NULL OR event_type <> prev
     ), intervals AS (
       SELECT user_id, event_type, ts AS valid_from,
+             -- grpwin-ok: user_id cardinality scales with input
              lead(ts) OVER (
                PARTITION BY user_id ORDER BY ts, event_id
              ) AS valid_to,
+             -- grpwin-ok: user_id cardinality scales with input
              CASE WHEN lead(ts) OVER (
                PARTITION BY user_id ORDER BY ts, event_id
              ) IS NULL THEN 1 ELSE 0 END AS is_current
@@ -736,52 +599,21 @@ _SCD2_CTE = """changes AS (
     )"""
 
 
-def _scd2_frame(e: DataFrame) -> DataFrame:
-    """Spark twin of _SCD2_CTE: (user_id, event_type, valid_from,
-    valid_to, is_current)."""
-    w = Window.partitionBy("user_id").orderBy(  # grpwin-ok: user_id cardinality scales with input
-        F.col("ts").cast("timestamp"), F.col("event_id")
-    )
-    changes = (
-        e.select(
-            "user_id",
-            "event_type",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "event_id",
-            F.lag("event_type").over(w).alias("prev"),
-        )
-        .where(F.col("prev").isNull() | (F.col("event_type") != F.col("prev")))
-        .drop("prev")
-    )
-    # grpwin-ok: user_id cardinality scales with input
-    w2 = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    nxt = F.lead("ts").over(w2)
-    return changes.select(
-        "user_id",
-        "event_type",
-        F.col("ts").alias("valid_from"),
-        nxt.alias("valid_to"),
-        F.when(nxt.isNull(), 1).otherwise(0).alias("is_current"),
-    )
-
-
-@register(
+# [EXT] SCD-type-2 history build: collapse each user's event
+# stream into state-change validity intervals [valid_from, valid_to)
+# — lag() drops repeats of the same state, lead() closes each
+# interval at the next change (NULL = current row). Two windows over
+# the same user partitioning (one exchange; the second window reuses
+# the sort); the standard dimension-history reconstruction.
+register_sql(
     "scd2_intervals",
-    oracle=f"""
+    f"""
     WITH {_SCD2_CTE}
     SELECT user_id, event_type, valid_from, valid_to, is_current
     FROM intervals
     """,
     covers=("[EXT]-scd2", "§2.5-lead"),
 )
-def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] SCD-type-2 history build: collapse each user's event
-    stream into state-change validity intervals [valid_from, valid_to)
-    — lag() drops repeats of the same state, lead() closes each
-    interval at the next change (NULL = current row). Two windows over
-    the same user partitioning (one exchange; the second window reuses
-    the sort); the standard dimension-history reconstruction."""
-    return _scd2_frame(load_table(spark, sf_dir, "events"))
 
 
 #: literal as-of instant for the snapshot read: mid-range of the
@@ -789,9 +621,20 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SCD2_ASOF = "2024-01-15 00:00:00"
 
 
-@register(
+# [EXT] time-travel read over the SCD2 history: each user's state
+# AS OF a literal instant — the interval covering T (valid_from <=
+# T < valid_to, open current rows included). The consumer side of
+# scd2_intervals: dimension history answers 'what did the world look
+# like on Jan 15' without storing a snapshot per day. Both oracles
+# interpolate ONE shared interval CTE, so the history recipe cannot
+# drift from its reader.
+#
+# Scale: same one-exchange double window as scd2_intervals, then a
+# pure filter — at a warehouse this is a partition-pruned read of
+# the stored interval table instead.
+register_sql(
     "scd2_asof_snapshot",
-    oracle=f"""
+    f"""
     WITH {_SCD2_CTE}
     SELECT user_id, event_type AS state_at, valid_from
     FROM intervals
@@ -800,29 +643,17 @@ _SCD2_ASOF = "2024-01-15 00:00:00"
     """,
     covers=("[EXT]-scd2-asof", "[EXT]-scd2", "§2.6-asof"),
 )
-def scd2_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] time-travel read over the SCD2 history: each user's state
-    AS OF a literal instant — the interval covering T (valid_from <=
-    T < valid_to, open current rows included). The consumer side of
-    scd2_intervals: dimension history answers 'what did the world look
-    like on Jan 15' without storing a snapshot per day. Both oracles
-    interpolate ONE shared interval CTE, so the history recipe cannot
-    drift from its reader.
-
-    Scale: same one-exchange double window as scd2_intervals, then a
-    pure filter — at a warehouse this is a partition-pruned read of
-    the stored interval table instead."""
-    iv = _scd2_frame(load_table(spark, sf_dir, "events"))
-    t = F.lit(_SCD2_ASOF).cast("timestamp")
-    return iv.filter(
-        (F.col("valid_from") <= t)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > t))
-    ).select("user_id", F.col("event_type").alias("state_at"), "valid_from")
 
 
-@register(
+# TPC-H Q14 shape: monthly promo-revenue share. The part side
+# carries no broadcast hint (part scales with the corpus; the size
+# threshold, at runtime AQE, picks the strategy), lineitem scans once with only 4
+# columns read, and the month rollup is one agg shuffle; both sums
+# ride DECIMAL(38,6) and the percentage divides in double on both
+# engines.
+register_sql(
     "promo_revenue",
-    oracle="""
+    """
     SELECT CAST(ts_month AS DATE) AS month,
            100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
                    THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))
@@ -834,122 +665,60 @@ def scd2_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (
       SELECT date_trunc('month', CAST(l.l_shipdate AS TIMESTAMP)) AS ts_month,
              p.p_type, l.l_extendedprice, l.l_discount
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+      FROM {lineitem} l JOIN {part} p ON l.l_partkey = p.p_partkey
     )
     GROUP BY ts_month
     """,
     covers=("§2.6-joins", "§2.4-agg"),
 )
-def promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: monthly promo-revenue share. The part side's
-    broadcast hint is size-gated (part scales with the corpus; over
-    the gate AQE picks the strategy), lineitem scans once with only 4
-    columns read, and the month rollup is one agg shuffle; both sums
-    ride DECIMAL(38,6) and the percentage divides in double on both
-    engines."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
-    return (
-        li.join(
-            maybe_broadcast(part, table_bytes(sf_dir, "part")),
-            li.l_partkey == part.p_partkey,
-        )
-        .withColumn("month", F.date_trunc("month", F.col("l_shipdate").cast("timestamp")).cast("date"))
-        .groupBy("month")
-        .agg(
-            # UNROUNDED: both operands are decimal-exact sums cast to
-            # identical doubles, so the IEEE divide is bit-identical on
-            # both engines; round(x, 6) would reintroduce the midpoint
-            # tie-break class for nothing
-            (F.lit(100.0) * dsum(promo) / dsum(rev)).alias("promo_pct"),
-            dsum(rev).alias("total_revenue"),
-        )
-    )
 
 
 LARGE_ORDER_QTY = 150
 
 
-@register(
+# TPC-H Q18 shape: orders whose total lineitem quantity exceeds a
+# threshold, joined back to their customers. The HAVING filter runs
+# on the aggregated (small) side BEFORE any join — the surviving
+# order set is tiny in practice but corpus-proportional in the
+# worst case, so neither it nor the customer side carries a
+# broadcast hint: the size threshold (AQE at runtime) picks the
+# strategy. The lineitem agg is the only corpus-scale
+# exchange; decimal-exact quantity sums.
+register_sql(
     "large_volume_customers",
-    oracle=f"""
+    f"""
     WITH big AS (
       SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS total_qty
-      FROM lineitem GROUP BY l_orderkey
+      FROM {{lineitem}} GROUP BY l_orderkey
       HAVING SUM(CAST(l_quantity AS DECIMAL(38,6))) > {LARGE_ORDER_QTY}
     )
     SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_orderdate, b.total_qty
     FROM big b
-    JOIN orders o ON o.o_orderkey = b.l_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
+    JOIN {{orders}} o ON o.o_orderkey = b.l_orderkey
+    JOIN {{customer}} c ON c.c_custkey = o.o_custkey
     """,
     covers=("§2.6-joins", "§2.4-agg"),
 )
-def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: orders whose total lineitem quantity exceeds a
-    threshold, joined back to their customers. The HAVING filter runs
-    on the aggregated (small) side BEFORE any join — the surviving
-    order set is tiny in practice but corpus-proportional in the
-    worst case, so both its hint and the customer side's are
-    size-gated (maybe_broadcast): same BHJ plan under the gate, AQE's
-    runtime choice over it. The lineitem agg is the only corpus-scale
-    exchange; decimal-exact quantity sums."""
-    li = load_table(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(dsum("l_quantity").alias("total_qty"))
-        .where(F.col("total_qty") > LARGE_ORDER_QTY)
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        orders.join(
-            maybe_broadcast(big, table_bytes(sf_dir, "orders")),
-            orders.o_orderkey == big.l_orderkey,
-        )
-        .join(
-            maybe_broadcast(cust, table_bytes(sf_dir, "customer")),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .select("c_custkey", "c_name", "o_orderkey", "o_orderdate", "total_qty")
-    )
 
 
-@register(
+# TPC-H Q4 shape: per-priority counts of orders with at least one
+# late-shipping lineitem — an EXISTS expressed as left_semi, so the
+# probe side's payload never materializes and each order contributes
+# once regardless of how many lineitems match. One semi-join exchange
+# + one small agg.
+register_sql(
     "order_priority_counts",
-    oracle="""
+    """
     SELECT o_orderpriority, COUNT(*) AS n_orders
-    FROM orders o
+    FROM {orders} o
     WHERE EXISTS (
-      SELECT 1 FROM lineitem l
+      SELECT 1 FROM {lineitem} l
       WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate
     )
     GROUP BY o_orderpriority
     """,
     covers=("§2.6-semi", "§2.4-agg"),
 )
-def order_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: per-priority counts of orders with at least one
-    late-shipping lineitem — an EXISTS expressed as left_semi, so the
-    probe side's payload never materializes and each order contributes
-    once regardless of how many lineitems match. One semi-join exchange
-    + one small agg."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    cond = (li.l_orderkey == orders.o_orderkey) & (
-        li.l_shipdate > orders.o_orderdate
-    )
-    return (
-        orders.join(li, cond, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
 
 
 #: FK edges audited by fk_integrity_audit: (child, fk, parent, pk)
@@ -963,50 +732,34 @@ FK_EDGES = [
 ]
 
 
-@register(
+# Referential-integrity audit over every FK edge of the star
+# schema: per edge, child row count and orphan count (children whose
+# FK has no parent) — the data-quality gate a warehouse runs after
+# every load, and the check that certifies the join results above
+# aren't silently dropping rows. Each edge is one left_anti join
+# (existence probe — the parent's payload never materializes). No
+# parent carries a broadcast hint: schema-bounded parents (nation,
+# region) fall under the size threshold at any scale, corpus-scaled
+# parents (orders, part, customer) only while small — over it the
+# anti-join shuffles on the key, which is the correct 100 TB plan.
+# Each edge's two 1-row counts meet in a broadcast cross join (as
+# scalar subqueries each would run as its own job first); the six
+# 1-row results union. Plan shape pinned in tests/test_plans.py.
+register_sql(
     "fk_integrity_audit",
-    oracle=" UNION ALL ".join(
+    " UNION ALL ".join(
         f"""
-    SELECT '{child}.{fk}' AS edge,
-           (SELECT COUNT(*) FROM {child}) AS n_child,
-           (SELECT COUNT(*) FROM {child} c
-            WHERE NOT EXISTS (SELECT 1 FROM {parent} p WHERE p.{pk} = c.{fk})
-           ) AS n_orphans
+    SELECT '{child}.{fk}' AS edge, n_child, n_orphans
+    FROM (SELECT COUNT(*) AS n_child FROM {{{child}}}) t
+    CROSS JOIN (
+      SELECT COUNT(*) AS n_orphans FROM {{{child}}} c
+      WHERE NOT EXISTS (SELECT 1 FROM {{{parent}}} p WHERE p.{pk} = c.{fk})
+    ) o
     """
         for child, fk, parent, pk in FK_EDGES
     ),
     covers=("§2.6-anti", "§2.9-union"),
 )
-def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential-integrity audit over every FK edge of the star
-    schema: per edge, child row count and orphan count (children whose
-    FK has no parent) — the data-quality gate a warehouse runs after
-    every load, and the check that certifies the join results above
-    aren't silently dropping rows. Each edge is one left_anti join
-    (existence probe — the parent's payload never materializes); the
-    parent-side broadcast hint is SIZE-GATED per parent table
-    (maybe_broadcast): schema-bounded parents (nation, region) always
-    broadcast, corpus-scaled parents (orders, part, customer) only
-    while under the gate — over it the anti-join shuffles on the key,
-    which is the correct 100 TB plan. The six 1-row results union.
-    Plan shape pinned in tests/test_plans.py."""
-    parts = []
-    for child, fk, parent, pk in FK_EDGES:
-        c = load_table(spark, sf_dir, child).select(F.col(fk).alias("fk"))
-        p = load_table(spark, sf_dir, parent).select(F.col(pk).alias("pk"))
-        orphans = c.join(
-            maybe_broadcast(p, table_bytes(sf_dir, parent)), c.fk == p.pk, "left_anti"
-        ).agg(F.count(F.lit(1)).alias("n_orphans"))
-        total = c.agg(F.count(F.lit(1)).alias("n_child"))
-        parts.append(
-            total.crossJoin(F.broadcast(orphans)).select(  # bcast-ok: 1-row agg
-                F.lit(f"{child}.{fk}").alias("edge"), "n_child", "n_orphans"
-            )
-        )
-    out = parts[0]
-    for df in parts[1:]:
-        out = out.unionAll(df)
-    return out
 
 
 #: triangle-count edge set: co-purchase pairs recurring in >= 2 orders

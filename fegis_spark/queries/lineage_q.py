@@ -7,91 +7,74 @@ user_id ≅ session_id, ts ≅ arrival order, event_id ≅ memory_id
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-from fegis_spark.catalog import register
-from fegis_spark.model import load_table
-from fegis_spark.operators.lineage import resolve_predecessors
+from fegis_spark.catalog import register_sql
+from fegis_spark.queries.sqlfrag import ts_sql
 
 
-@register(
+# A1 argmax: the reference's every-ingest query (storage.py:113-143)
+# — latest memory per session — as one window pass over the batch.
+#
+# Single shuffle on user_id; no global sort. event_id tiebreak makes
+# the pick total-ordered (ts collisions exist in the data).
+register_sql(
     "latest_event_per_user",
-    oracle="""
+    lambda *, spark: f"""
     SELECT user_id, event_id, ts, event_type, value
     FROM (
-      SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value,
-             row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-      FROM events
+      SELECT user_id, event_id, {ts_sql(spark=spark)} AS ts, event_type, value,
+             -- grpwin-ok: user_id cardinality scales with input
+             row_number() OVER (PARTITION BY user_id ORDER BY {ts_sql(spark=spark)} DESC, event_id DESC) AS rn
+      FROM {{events}}
     ) WHERE rn = 1
     """,
     covers=("A1", "W1", "S6", "O1", "O3"),
     bench=True,
 )
-def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 argmax: the reference's every-ingest query (storage.py:113-143)
-    — latest memory per session — as one window pass over the batch.
-
-    Single shuffle on user_id; no global sort. event_id tiebreak makes
-    the pick total-ordered (ts collisions exist in the data).
-    """
-    events = load_table(spark, sf_dir, "events")
-    # grpwin-ok: user_id cardinality scales with input
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        events.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "ts", "event_type", "value")
-    )
 
 
-@register(
+# A2: contiguous 1-based per-session sequence assignment — the batch
+# form of the reference's per-call read-modify-write (storage.py:132-139).
+# BIGINT on both engines (Spark's row_number is INT).
+register_sql(
     "sequence_numbering",
-    oracle="""
+    lambda *, spark: f"""
     SELECT event_id, user_id,
-           row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS sequence_order
-    FROM events
+           -- grpwin-ok: user_id cardinality scales with input
+           CAST(row_number() OVER (PARTITION BY user_id ORDER BY {ts_sql(spark=spark)}, event_id) AS BIGINT) AS sequence_order
+    FROM {{events}}
     """,
     covers=("A2",),
 )
-def sequence_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: contiguous 1-based per-session sequence assignment — the batch
-    form of the reference's per-call read-modify-write (storage.py:132-139)."""
-    events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    # grpwin-ok: user_id cardinality scales with input
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return events.withColumn(
-        "sequence_order", F.row_number().over(w).cast("bigint")
-    ).select("event_id", "user_id", "sequence_order")
 
 
-@register(
+# W2: reproduce the reference's preceding_memory_id chain
+# (storage.py:181) with lag() — NULL for chain heads.
+register_sql(
     "lineage_lag",
-    oracle="""
+    lambda *, spark: f"""
     SELECT event_id, user_id,
-           lag(event_id) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS preceding_event_id
-    FROM events
+           -- grpwin-ok: user_id cardinality scales with input
+           lag(event_id) OVER (PARTITION BY user_id ORDER BY {ts_sql(spark=spark)}, event_id) AS preceding_event_id
+    FROM {{events}}
     """,
     covers=("W2",),
 )
-def lineage_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2: reproduce the reference's preceding_memory_id chain
-    (storage.py:181) with lag() — NULL for chain heads."""
-    events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    # grpwin-ok: user_id cardinality scales with input
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return events.withColumn("preceding_event_id", F.lag("event_id").over(w)).select(
-        "event_id", "user_id", "preceding_event_id"
-    )
 
 
-@register(
+# J1: graph-view edge materialization (formatters.py:44-58) — self
+# equi-join child.preceding = parent.id surfacing predecessor attrs.
+# The left join keeps chain heads (pred is NULL).
+#
+# event_id is unique, so the join is 1:1; sort-merge on the id at
+# scale, broadcast when the parent slice is small (AQE decides).
+register_sql(
     "lineage_self_join",
-    oracle="""
+    lambda *, spark: f"""
     WITH chain AS (
       SELECT event_id, user_id, event_type, value,
-             lag(event_id) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS preceding_event_id
-      FROM events
+             -- grpwin-ok: user_id cardinality scales with input
+             lag(event_id) OVER (PARTITION BY user_id ORDER BY {ts_sql(spark=spark)}, event_id) AS preceding_event_id
+      FROM {{events}}
     )
     SELECT c.event_id, c.user_id, c.preceding_event_id,
            p.event_type AS pred_event_type, p.value AS pred_value
@@ -100,22 +83,3 @@ def lineage_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers=("J1", "W2"),
     bench=True,
 )
-def lineage_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1: graph-view edge materialization (formatters.py:44-58) — self
-    equi-join child.preceding = parent.id surfacing predecessor attrs.
-
-    event_id is unique, so the join is 1:1; sort-merge on the id at
-    scale, broadcast when the parent slice is small (AQE decides).
-    """
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "event_type", "value"
-    )
-    # grpwin-ok: user_id cardinality scales with input
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    chain = events.withColumn("preceding_event_id", F.lag("event_id").over(w))
-    resolved = resolve_predecessors(
-        chain, "event_id", "preceding_event_id", ["event_type", "value"], prefix="pred_"
-    )
-    return resolved.select(
-        "event_id", "user_id", "preceding_event_id", "pred_event_type", "pred_value"
-    )

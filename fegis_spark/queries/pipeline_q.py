@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fegis_spark.catalog import register
+from fegis_spark.catalog import register, register_sql
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes
 from fegis_spark.queries.sqlfrag import md5_int_sql, norm_text_sql, tokens_sql
 
@@ -633,13 +633,20 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 EPOCH_DOCS = 10_000
 
 
-@register(
+# [EXT] corpus-mixture planning: per (lang, source) domain, the
+# epoch sampling quota under sqrt (temperature-2) re-weighting — the
+# standard move that keeps dominant domains from drowning the mix.
+# One agg shuffle down to |domains| rows; the grand total rides a
+# broadcast cross join of a 1-row aggregate. Weights are rounded
+# then decimal-summed so the total (and every floor() boundary) is
+# identical on any engine and any partition order.
+register_sql(
     "mixture_plan",
-    oracle=f"""
+    f"""
     WITH cells AS (
       SELECT lang, source, COUNT(*) AS n_docs,
              CAST(round(sqrt(COUNT(*)), 6) AS DECIMAL(38,6)) AS w
-      FROM documents GROUP BY lang, source
+      FROM {{documents}} GROUP BY lang, source
     ), tot AS (
       SELECT CAST(SUM(w) AS DOUBLE) AS total_w FROM cells
     )
@@ -650,28 +657,6 @@ EPOCH_DOCS = 10_000
     """,
     covers=("[EXT]-mixture", "§2.4-agg"),
 )
-def mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] corpus-mixture planning: per (lang, source) domain, the
-    epoch sampling quota under sqrt (temperature-2) re-weighting — the
-    standard move that keeps dominant domains from drowning the mix.
-    One agg shuffle down to |domains| rows; the grand total rides a
-    broadcast cross join of a 1-row aggregate. Weights are rounded
-    then decimal-summed so the total (and every floor() boundary) is
-    identical on any engine and any partition order."""
-    docs = load_table(spark, sf_dir, "documents")
-    cells = docs.groupBy("lang", "source").agg(
-        F.count("*").alias("n_docs"),
-        F.round(F.sqrt(F.count("*")), 6).cast("decimal(38,6)").alias("w"),
-    )
-    tot = cells.agg(F.sum("w").cast("double").alias("total_w"))
-    frac = F.col("w").cast("double") / F.col("total_w")
-    return cells.crossJoin(F.broadcast(tot)).select(  # bcast-ok: 1-row agg
-        "lang",
-        "source",
-        "n_docs",
-        F.round(frac, 6).alias("target_frac"),
-        F.floor(frac * EPOCH_DOCS).cast("bigint").alias("docs_per_epoch"),
-    )
 
 
 @register(
@@ -1650,14 +1635,27 @@ def _pad_bucket_sql(col: str) -> str:
     return f"CASE {arms} ELSE {PAD_BUCKETS[-1]} END"
 
 
-@register(
+# [EXT] padded-batch efficiency audit: bucket every document into
+# the smallest power-of-two length boundary in PAD_BUCKETS (cap =
+# context length; longer docs truncate) and report, per bucket, the
+# real/padding/truncated character mass and the padding fraction —
+# the number that tells you whether bucketed batching wastes 5% or
+# 40% of your accelerator FLOPs, and what a boundary change buys.
+# Companion to pack_sequences (packing ELIMINATES padding; this
+# audit prices the simpler padded-batch regime against it).
+#
+# 100 TB posture: pure map-side CASE projection + ONE partial
+# aggregate down to |buckets| rows — no join, no window, nothing
+# leaves the scan until the 4-row final agg. All masses are exact
+# integer sums; the single ratio divides two exact integers.
+register_sql(
     "pack_padding_audit",
-    oracle=f"""
+    f"""
     WITH b AS (
       SELECT {_pad_bucket_sql('n_chars')} AS bucket_len,
              LEAST(n_chars, {PAD_BUCKETS[-1]}) AS eff_len,
              n_chars
-      FROM documents
+      FROM {{documents}}
     )
     SELECT bucket_len,
            COUNT(*) AS n_docs,
@@ -1669,59 +1667,40 @@ def _pad_bucket_sql(col: str) -> str:
     """,
     covers=("[EXT]-packing-audit", "[EXT]-packing"),
 )
-def pack_padding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] padded-batch efficiency audit: bucket every document into
-    the smallest power-of-two length boundary {PAD_BUCKETS} (cap =
-    context length; longer docs truncate) and report, per bucket, the
-    real/padding/truncated character mass and the padding fraction —
-    the number that tells you whether bucketed batching wastes 5% or
-    40% of your accelerator FLOPs, and what a boundary change buys.
-    Companion to pack_sequences (packing ELIMINATES padding; this
-    audit prices the simpler padded-batch regime against it).
-
-    100 TB posture: pure map-side CASE projection + ONE partial
-    aggregate down to |buckets| rows — no join, no window, nothing
-    leaves the scan until the 4-row final agg. All masses are exact
-    integer sums; the single ratio divides two exact integers."""
-    docs = load_table(spark, sf_dir, "documents")
-    cap = PAD_BUCKETS[-1]
-    b = docs.select(
-        F.expr(_pad_bucket_sql("n_chars")).alias("bucket_len"),
-        F.least(F.col("n_chars"), F.lit(cap)).alias("eff_len"),
-        "n_chars",
-    )
-    return b.groupBy("bucket_len").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("eff_len").cast("bigint").alias("real_chars"),
-        F.sum(F.col("bucket_len") - F.col("eff_len")).cast("bigint").alias("pad_chars"),
-        F.sum(F.col("n_chars") - F.col("eff_len")).cast("bigint").alias("trunc_chars"),
-        F.round(
-            F.sum(F.col("bucket_len") - F.col("eff_len"))
-            / (F.count("*") * F.first("bucket_len")).cast("double"),
-            6,
-        ).alias("pad_frac"),
-    )
 
 
-@register(
+# [EXT] the one-row 'so what' of the packing family: total slot
+# characters a padded-batch regime consumes (bucket ladder, cap
+# truncates) vs what greedy packing consumes (packs x budget), their
+# utilizations, and the accelerator-time savings fraction packing
+# buys. Interpolates the SAME bucket ladder as pack_padding_audit
+# and the same running-sum recipe as pack_sequences, so the summary
+# cannot drift from the audits it summarizes.
+#
+# Scale: one map-side agg (padded side) + the per-lang packing
+# window collapsed to |langs| maxima; the final join is 1 row x
+# 1 row. Exact integer masses; the three ratios are unrounded
+# bit-identical IEEE divides.
+register_sql(
     "packing_vs_padding_savings",
-    oracle=f"""
+    f"""
     WITH pads AS (
       SELECT COUNT(*) AS n_docs,
              CAST(SUM(n_chars) AS BIGINT) AS real_chars,
              CAST(SUM(LEAST(n_chars, {PAD_BUCKETS[-1]})) AS BIGINT) AS real_capped,
              CAST(SUM({_pad_bucket_sql('n_chars')}) AS BIGINT) AS padded
-      FROM documents
+      FROM {{documents}}
     ), packs AS (
       SELECT CAST(SUM(mx + 1) * {PACK_BUDGET} AS BIGINT) AS packed FROM (
         SELECT lang,
                MAX(CAST(floor(run / {PACK_BUDGET}.0) AS BIGINT)) AS mx
         FROM (
           SELECT lang,
+                 -- panel-ok: per-lang running total — sharded twin is the scale path (operators/scale.py)
                  COALESCE(SUM(n_chars) OVER (
                    PARTITION BY lang ORDER BY doc_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS run
-          FROM documents
+          FROM {{documents}}
         ) GROUP BY lang
       )
     )
@@ -1735,60 +1714,6 @@ def pack_padding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     covers=("[EXT]-packing", "[EXT]-packing-audit"),
 )
-def packing_vs_padding_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] the one-row 'so what' of the packing family: total slot
-    characters a padded-batch regime consumes (bucket ladder, cap
-    truncates) vs what greedy packing consumes (packs x budget), their
-    utilizations, and the accelerator-time savings fraction packing
-    buys. Interpolates the SAME bucket ladder as pack_padding_audit
-    and the same running-sum recipe as pack_sequences, so the summary
-    cannot drift from the audits it summarizes.
-
-    Scale: one map-side agg (padded side) + the per-lang packing
-    window collapsed to |langs| maxima; the final join is 1 row x
-    1 row. Exact integer masses; the three ratios are unrounded
-    bit-identical IEEE divides."""
-    docs = load_table(spark, sf_dir, "documents")
-    cap = PAD_BUCKETS[-1]
-    pads = docs.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("real_chars"),
-        F.sum(F.least(F.col("n_chars"), F.lit(cap))).cast("bigint").alias(
-            "real_capped"
-        ),
-        F.sum(F.expr(_pad_bucket_sql("n_chars"))).cast("bigint").alias("padded"),
-    )
-    w = (
-        # panel-ok: per-lang running total — sharded twin is the scale path (operators/scale.py)
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    packs = (
-        docs.select(
-            "lang",
-            F.floor(
-                F.coalesce(F.sum("n_chars").over(w), F.lit(0))
-                / float(PACK_BUDGET)
-            ).alias("pk"),
-        )
-        .groupBy("lang")
-        .agg(F.max("pk").alias("mx"))
-        .agg((F.sum(F.col("mx") + 1) * PACK_BUDGET).cast("bigint").alias("packed"))
-    )
-    return pads.crossJoin(F.broadcast(packs)).select(  # bcast-ok: 1-row agg
-        "n_docs",
-        "real_chars",
-        F.col("padded").alias("padded_slot_chars"),
-        F.col("packed").alias("packed_slot_chars"),
-        # UNROUNDED exact-integer ratios (bit-identical IEEE divide);
-        # see CLAUDE.md on the round(k/n, 6) midpoint class
-        (F.col("real_capped") / F.col("padded").cast("double")).alias("util_padded"),
-        (F.col("real_chars") / F.col("packed").cast("double")).alias("util_packed"),
-        (
-            (F.col("padded") - F.col("packed")) / F.col("padded").cast("double")
-        ).alias("savings_frac"),
-    )
 
 
 @register(

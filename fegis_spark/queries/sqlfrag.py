@@ -12,7 +12,9 @@ oracle interpolate the same recipe and cannot drift:
   codepoints (unsegmented scripts tokenize per codepoint) -> split on
   runs of non-letter/non-digit -> drop empties. Java regex spells
   Unicode scripts \\p{IsHan}; RE2 (DuckDB) spells them \\p{Han};
-* portable_ln — a natural log bit-identical on both engines.
+* portable_ln — a natural log bit-identical on both engines;
+* ts_sql — events.ts as an ordering/output column: Spark reads it as
+  TIMESTAMP_NTZ already, DuckDB casts its TIMESTAMP_NS down.
 
 The text_analysis scorers (operators/text_analysis.py) are generators
 of the same shape. ``spark`` is keyword-only with no default, so no
@@ -24,6 +26,15 @@ from __future__ import annotations
 
 _CJK_JAVA = r"[\p{IsHan}\p{IsHiragana}\p{IsKatakana}\p{IsHangul}]"
 _CJK_RE2 = r"[\p{Han}\p{Hiragana}\p{Katakana}\p{Hangul}]"
+
+
+def ts_sql(*, spark: bool) -> str:
+    """events.ts at microsecond precision. load_table already yields a
+    TIMESTAMP_NTZ column on Spark, so it is used bare there: a per-row
+    CAST to TIMESTAMP in a window sort key costs exec time and turns
+    the output type into TIMESTAMP. DuckDB reads TIMESTAMP_NS and
+    casts to TIMESTAMP (microseconds, the same truncation)."""
+    return "ts" if spark else "CAST(ts AS TIMESTAMP)"
 
 
 def md5_int_sql(x: str, k: int, *, spark: bool) -> str:

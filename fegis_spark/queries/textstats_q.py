@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fegis_spark.catalog import register
+from fegis_spark.catalog import register, register_sql
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes
 from fegis_spark.queries.sqlfrag import (
     HOT_CAP,
@@ -2005,11 +2005,24 @@ _MOJIBAKE_CORRUPT = (
 )
 
 
-@register(
+# [EXT] encoding-corruption triage (ftfy-style detection, scan
+# side): per source, count documents carrying UTF-8-as-Latin-1
+# mojibake markers ('Ã' + continuation, 'â€' sequences) and U+FFFD
+# replacement characters — the two classes a crawl-ingest pass
+# routes to re-decode vs drop. The corpus text is clean, so
+# corruption is injected deterministically on both engines (see
+# _MOJIBAKE_CORRUPT; the json_quarantine_parse pattern), making the
+# detector non-vacuous at every sf. Marker counting is the
+# 1-char-marker length-replace recipe; both engines count length()
+# in characters.
+#
+# Scale: pure projection + |sources|-row agg, map-side combined —
+# zero joins, zero windows.
+register_sql(
     "text_mojibake_scan",
-    oracle=f"""
+    f"""
     WITH raw AS (
-      SELECT source, {_MOJIBAKE_CORRUPT} AS t FROM documents
+      SELECT source, {_MOJIBAKE_CORRUPT} AS t FROM {{documents}}
     )
     SELECT source,
            COUNT(*) AS n_docs,
@@ -2023,42 +2036,6 @@ _MOJIBAKE_CORRUPT = (
     """,
     covers=("[EXT]-mojibake", "[EXT]-quality"),
 )
-def text_mojibake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] encoding-corruption triage (ftfy-style detection, scan
-    side): per source, count documents carrying UTF-8-as-Latin-1
-    mojibake markers ('Ã' + continuation, 'â€' sequences) and U+FFFD
-    replacement characters — the two classes a crawl-ingest pass
-    routes to re-decode vs drop. The corpus text is clean, so
-    corruption is injected deterministically on both engines (see
-    _MOJIBAKE_CORRUPT; the json_quarantine_parse pattern), making the
-    detector non-vacuous at every sf. Marker counting is the
-    1-char-marker length-replace recipe; both engines count length()
-    in characters.
-
-    Scale: pure projection + |sources|-row agg, map-side combined —
-    zero joins, zero windows."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.expr(_MOJIBAKE_CORRUPT)
-    has_moji = F.expr(
-        f"contains({_MOJIBAKE_CORRUPT}, 'Ã') OR contains({_MOJIBAKE_CORRUPT}, 'â€')"
-    )
-    return (
-        docs.select(
-            "source",
-            F.when(has_moji, 1).otherwise(0).alias("moji"),
-            (F.length(t) - F.length(F.replace(t, F.lit("Ã"), F.lit("")))).alias(
-                "hits"
-            ),
-            F.when(t.contains(F.lit(_REPL_CHAR)), 1).otherwise(0).alias("repl"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("moji").cast("bigint").alias("n_mojibake_docs"),
-            F.sum("hits").cast("bigint").alias("mojibake_hits"),
-            F.sum("repl").cast("bigint").alias("n_replacement_docs"),
-        )
-    )
 
 
 from fegis_spark.operators.sketches import (  # noqa: E402

@@ -12,10 +12,14 @@ join predicates stay pushed into the scan. (Q2/Q11/Q16/Q20 need
 partsupp, Q12 needs l_shipmode, Q21 needs l_commitdate/l_receiptdate
 — columns the driver's generator does not emit.)
 
-Determinism discipline per CLAUDE.md: money sums via dsum (decimal
-lattice), ratios rounded to 6 dp on both sides, every top-k totally
-ordered, AVG thresholds computed as decimal-sum / count so the
-comparison input is bit-identical across engines.
+Each query is one SQL text run by both engines (register_sql), except
+volume_shipping: its builder pre-joins the nation-filtered supplier
+and customer dims under size-gated broadcast hints, which SQL cannot
+gate (the naive join order read ~25% slower at sf0.1, the pre-joined
+CTEs plan a sort-merge join). Determinism discipline per CLAUDE.md: money sums through the decimal
+lattice (REV), ratios rounded to 6 dp, every top-k totally ordered,
+AVG thresholds computed as decimal-sum / count so the comparison
+input is bit-identical across engines.
 """
 
 from __future__ import annotations
@@ -23,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fegis_spark.catalog import register
+from fegis_spark.catalog import register, register_sql
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes
 from fegis_spark.queries.aggregates import dsum
 
@@ -31,13 +35,19 @@ from fegis_spark.queries.aggregates import dsum
 REV = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))"
 
 
-@register(
+# TPC-H Q6 shape: pure filter + global agg, zero joins. The value
+# at 100 TB is the scan: all three predicates and the 3-column
+# projection push into the parquet reader (PushedFilters), so the
+# exchange carries one partial-agg row per task. The per-row product
+# is IEEE double on both engines; the sum goes through the decimal
+# lattice.
+register_sql(
     "revenue_forecast",
-    oracle="""
+    """
     SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(38,6))) AS DOUBLE)
              AS forecast_revenue,
            COUNT(*) AS n_items
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       AND l_shipdate <  TIMESTAMP '1997-01-01'
       AND l_discount BETWEEN 0.05 AND 0.07
@@ -45,29 +55,6 @@ REV = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))"
     """,
     covers=("§2.4-agg", "F5"),
 )
-def revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure filter + global agg, zero joins. The value
-    at 100 TB is the scan: all three predicates and the 3-column
-    projection push into the parquet reader (PushedFilters), so the
-    exchange carries one partial-agg row per task. The per-row product
-    is IEEE double on both engines; the sum goes through the decimal
-    lattice (dsum)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            dsum(F.col("l_extendedprice") * F.col("l_discount")).alias(
-                "forecast_revenue"
-            ),
-            F.count("*").alias("n_items"),
-        )
-    )
 
 
 @register(
@@ -135,9 +122,18 @@ def volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# TPC-H Q8 shape: one supplier nation's share of PROMO-part
+# revenue sold into ASIA, by year. The conditional-sum-over-total
+# ratio is a single grouped aggregate — no second pass. Part is
+# filtered to PROMO before joining, customers are pruned to the
+# ASIA region through broadcast nation/region (schema-bounded), and
+# the supplier nation arrives as a dim column the CASE inspects;
+# part, customer and supplier carry no broadcast hint (corpus-scaled
+# sides — the size threshold, AQE at runtime, decides). Decimal sums
+# on both engines; the ratio alone is IEEE, rounded to 6 dp.
+register_sql(
     "market_share",
-    oracle=f"""
+    f"""
     SELECT ship_year,
            round(CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN vol
                                ELSE CAST(0 AS DECIMAL(38,6)) END) AS DOUBLE)
@@ -147,90 +143,39 @@ def volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT CAST(year(l.l_shipdate) AS INT) AS ship_year,
              sn.n_name AS supp_nation,
              {REV} AS vol
-      FROM lineitem l
-      JOIN part p     ON l.l_partkey = p.p_partkey
-      JOIN orders o   ON l.l_orderkey = o.o_orderkey
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN nation cn  ON c.c_nationkey = cn.n_nationkey
-      JOIN region r   ON cn.n_regionkey = r.r_regionkey
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      JOIN nation sn  ON s.s_nationkey = sn.n_nationkey
+      FROM {{lineitem}} l
+      JOIN {{part}} p     ON l.l_partkey = p.p_partkey
+      JOIN {{orders}} o   ON l.l_orderkey = o.o_orderkey
+      JOIN {{customer}} c ON o.o_custkey = c.c_custkey
+      JOIN {{nation}} cn  ON c.c_nationkey = cn.n_nationkey
+      JOIN {{region}} r   ON cn.n_regionkey = r.r_regionkey
+      JOIN {{supplier}} s ON l.l_suppkey = s.s_suppkey
+      JOIN {{nation}} sn  ON s.s_nationkey = sn.n_nationkey
       WHERE r.r_name = 'ASIA' AND p.p_type = 'PROMO'
     )
     GROUP BY ship_year
     """,
     covers=("§2.6-joins", "§2.4-agg"),
 )
-def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: one supplier nation's share of PROMO-part
-    revenue sold into ASIA, by year. The conditional-sum-over-total
-    ratio is a single grouped aggregate — no second pass. Part is
-    filtered to PROMO before joining, customers are pruned to the
-    ASIA region through broadcast nation/region (schema-bounded), and
-    the supplier nation arrives as a dim column the CASE inspects;
-    the part/customer/supplier hints are size-gated (corpus-scaled
-    sides — over the gate AQE decides). Decimal sums on both engines; the ratio alone is IEEE,
-    rounded to 6 dp on both sides."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    cust_asia = (
-        load_table(spark, sf_dir, "customer")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))  # bcast-ok: 25 nations
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))  # bcast-ok: 5 regions
-        .select("c_custkey")
-    )
-    supp = (
-        load_table(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),  # bcast-ok: 25 nations
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    dvol = vol.cast("decimal(38,6)")
-    zero = F.lit(0).cast("decimal(38,6)")
-    return (
-        li.join(
-            maybe_broadcast(part.select("p_partkey"), table_bytes(sf_dir, "part")),
-            li.l_partkey == F.col("p_partkey"),
-        )
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(
-            maybe_broadcast(cust_asia, table_bytes(sf_dir, "customer")),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .join(
-            maybe_broadcast(supp, table_bytes(sf_dir, "supplier")),
-            li.l_suppkey == supp.s_suppkey,
-        )
-        .groupBy(F.year("l_shipdate").cast("int").alias("ship_year"))
-        .agg(
-            F.round(
-                F.sum(
-                    F.when(F.col("supp_nation") == "NATION_3", dvol).otherwise(zero)
-                ).cast("double")
-                / F.sum(dvol).cast("double"),
-                6,
-            ).alias("mkt_share"),
-            F.sum(dvol).cast("double").alias("total_volume"),
-        )
-    )
 
 
-@register(
+# TPC-H Q10 shape: top-20 customers by returned-item revenue in a
+# one-year window. The returnflag filter prunes lineitem at the scan
+# and the orderdate filter prunes orders before the fact-fact join;
+# customer+nation broadcast. orderBy+limit compiles to
+# TakeOrderedAndProject — a per-partition heap then a 20-row driver
+# merge, never a global sort. Tiebreak on c_custkey totalizes the
+# order.
+register_sql(
     "returned_item_revenue",
-    oracle=f"""
+    f"""
     SELECT c.c_custkey, c.c_name, n.n_name AS nation,
            CAST(SUM({REV}) AS DOUBLE) AS revenue,
            COUNT(*) AS n_items
-    FROM lineitem l
-    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n   ON c.c_nationkey = n.n_nationkey
+    FROM {{lineitem}} l
+    JOIN {{orders}} o   ON l.l_orderkey = o.o_orderkey
+    JOIN {{customer}} c ON o.o_custkey = c.c_custkey
+    JOIN {{nation}} n   ON c.c_nationkey = n.n_nationkey
     WHERE l.l_returnflag = 'R'
       AND o.o_orderdate >= TIMESTAMP '1997-01-01'
       AND o.o_orderdate <  TIMESTAMP '1998-01-01'
@@ -240,88 +185,52 @@ def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     covers=("§2.6-joins", "O3"),
 )
-def returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: top-20 customers by returned-item revenue in a
-    one-year window. The returnflag filter prunes lineitem at the scan
-    and the orderdate filter prunes orders before the fact-fact join;
-    customer+nation broadcast. orderBy+limit compiles to
-    TakeOrderedAndProject — a per-partition heap then a 20-row driver
-    merge, never a global sort. Tiebreak on c_custkey totalizes the
-    order."""
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    dims = maybe_broadcast(
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey).select(  # bcast-ok: 25 nations
-            "c_custkey", "c_name", F.col("n_name").alias("nation")
-        ),
-        table_bytes(sf_dir, "customer"),
-    )
-    return (
-        li.join(orders.select("o_orderkey", "o_custkey"), li.l_orderkey == F.col("o_orderkey"))
-        .join(dims, F.col("o_custkey") == dims.c_custkey)
-        .groupBy("c_custkey", "c_name", "nation")
-        .agg(
-            dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
-        .limit(20)
-    )
 
 
-@register(
+# TPC-H Q13 shape: distribution of per-customer order counts,
+# counting zero-order customers. Instead of LEFT JOIN on raw orders
+# (shuffles the full fact with customer payload attached), aggregate
+# orders per custkey first — the shuffle carries (custkey, count)
+# pairs — then left-join customer to the counts and coalesce misses
+# to 0. Same answer, one fact-wide shuffle less (the plain LEFT JOIN
+# on raw orders read ~30% slower at sf0.1); the priority filter sits
+# inside the aggregated side, so the outer join keeps every customer.
+register_sql(
     "customer_order_distribution",
-    oracle="""
+    """
     SELECT n_orders, COUNT(*) AS n_customers
     FROM (
-      SELECT c.c_custkey, COUNT(o.o_orderkey) AS n_orders
-      FROM customer c
-      LEFT OUTER JOIN orders o
-        ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-      GROUP BY c.c_custkey
+      SELECT COALESCE(o.n, 0) AS n_orders
+      FROM {customer} c
+      LEFT OUTER JOIN (
+        SELECT o_custkey, COUNT(*) AS n FROM {orders}
+        WHERE o_orderpriority <> '1-URGENT'
+        GROUP BY o_custkey
+      ) o ON c.c_custkey = o.o_custkey
     )
     GROUP BY n_orders
     """,
     covers=("§2.6-outer", "§2.4-agg"),
 )
-def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: distribution of per-customer order counts,
-    counting zero-order customers. Instead of LEFT JOIN on raw orders
-    (shuffles the full fact with customer payload attached), aggregate
-    orders per custkey first — the shuffle carries (custkey, count)
-    pairs — then left-join customer to the counts and coalesce misses
-    to 0. Same answer, one fact-wide shuffle less; the join-filter on
-    o_orderpriority keeps the outer-join-with-ON-predicate semantics
-    honest (it must NOT drop customers)."""
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    per_cust = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") != "1-URGENT")
-        .groupBy("o_custkey")
-        .agg(F.count("*").alias("cnt"))
-    )
-    return (
-        cust.join(per_cust, cust.c_custkey == per_cust.o_custkey, "left")
-        .select(F.coalesce(F.col("cnt"), F.lit(0)).alias("n_orders"))
-        .groupBy("n_orders")
-        .agg(F.count("*").alias("n_customers"))
-    )
 
 
-@register(
+# TPC-H Q17 shape: revenue of below-avg-quantity line items for
+# one brand — the classic correlated scalar AVG subquery,
+# decorrelated by hand into agg + join-back. The brand filter cuts
+# part to ~1/25 and broadcasts under the size threshold, so
+# lineitem is pruned before any shuffle; the per-part threshold table is tiny and broadcasts into
+# the verify join. AVG is computed as decimal-sum / count so the
+# threshold is bit-identical across engines (plain double AVG is
+# partition-order-dependent).
+register_sql(
     "small_qty_order_revenue",
-    oracle="""
+    """
     WITH brand_parts AS (
-      SELECT p_partkey FROM part WHERE p_brand = 'Brand#13'
+      SELECT p_partkey FROM {part} WHERE p_brand = 'Brand#13'
     ),
     li_brand AS (
       SELECT l.l_partkey, l.l_quantity, l.l_extendedprice
-      FROM lineitem l JOIN brand_parts p ON l.l_partkey = p.p_partkey
+      FROM {lineitem} l JOIN brand_parts p ON l.l_partkey = p.p_partkey
     ),
     thresholds AS (
       SELECT l_partkey,
@@ -338,53 +247,20 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     covers=("§2.6-joins", "§2.4-agg"),
 )
-def small_qty_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: revenue of below-avg-quantity line items for
-    one brand — the classic correlated scalar AVG subquery,
-    decorrelated by hand into agg + join-back. The brand filter cuts
-    part to ~1/25 and broadcasts, so lineitem is pruned before any
-    shuffle; the per-part threshold table is tiny and broadcasts into
-    the verify join. AVG is computed as decimal-sum / count so the
-    threshold is bit-identical across engines (plain double AVG is
-    partition-order-dependent)."""
-    part = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_brand") == "Brand#13")
-        .select("p_partkey")
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .join(
-            maybe_broadcast(part, table_bytes(sf_dir, "part")),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .select("l_partkey", "l_quantity", "l_extendedprice")
-    )
-    thresholds = li.groupBy("l_partkey").agg(
-        (0.2 * (dsum("l_quantity") / F.count("*"))).alias("qty_threshold")
-    )
-    return (
-        li.join(
-            # one row per brand-filtered partkey — corpus-scaled, gated
-            maybe_broadcast(
-                thresholds.withColumnRenamed("l_partkey", "t_partkey"),
-                table_bytes(sf_dir, "part"),
-            ),
-            F.col("l_partkey") == F.col("t_partkey"),
-        )
-        .filter(F.col("l_quantity") < F.col("qty_threshold"))
-        .agg(
-            F.round(dsum("l_extendedprice") / 7.0, 6).alias("avg_yearly"),
-            F.count("*").alias("n_small"),
-        )
-    )
 
 
-@register(
+# TPC-H Q19 shape: OR-of-ANDs spanning both join sides. The
+# single-side implications are extracted and pushed below the join —
+# part pre-filters to the union of the three brand/size envelopes
+# (broadcastable), lineitem to the union of the quantity ranges
+# (reaches the parquet scan) — and the full disjunction re-checks
+# post-join. Catalyst extracts each side's implied disjunction from
+# the OR-of-ANDs (pinned by the PushedFilters row in PLANS.md).
+register_sql(
     "disjunctive_discount_revenue",
-    oracle=f"""
+    f"""
     SELECT CAST(SUM({REV}) AS DOUBLE) AS revenue, COUNT(*) AS n_items
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+    FROM {{lineitem}} l JOIN {{part}} p ON l.l_partkey = p.p_partkey
     WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
            AND l.l_quantity BETWEEN 1 AND 11)
        OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 25
@@ -394,85 +270,31 @@ def small_qty_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     covers=("§2.6-joins", "F8", "F9"),
 )
-def disjunctive_discount_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: OR-of-ANDs spanning both join sides. The
-    single-side implications are extracted and pushed below the join —
-    part pre-filters to the union of the three brand/size envelopes
-    (broadcastable), lineitem to the union of the quantity ranges
-    (reaches the parquet scan) — and the full disjunction re-checks
-    post-join. Same plan Catalyst's constraint propagation would want;
-    stating the pushed unions explicitly keeps them in PushedFilters
-    even where the optimizer's CNF conversion gives up."""
-    part = load_table(spark, sf_dir, "part").filter(
-        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 15))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 25))
-        | ((F.col("p_brand") == "Brand#34") & F.col("p_size").between(1, 35))
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity").between(1, 11)
-        | F.col("l_quantity").between(10, 20)
-        | F.col("l_quantity").between(20, 30)
-    )
-    joined = li.join(
-        maybe_broadcast(
-            part.select("p_partkey", "p_brand", "p_size"),
-            table_bytes(sf_dir, "part"),
-        ),
-        F.col("l_partkey") == F.col("p_partkey"),
-    )
-    cond = (
-        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 15)
-         & F.col("l_quantity").between(1, 11))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 25)
-           & F.col("l_quantity").between(10, 20))
-        | ((F.col("p_brand") == "Brand#34") & F.col("p_size").between(1, 35)
-           & F.col("l_quantity").between(20, 30))
-    )
-    return joined.filter(cond).agg(
-        dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-        F.count("*").alias("n_items"),
-    )
 
 
-@register(
+# TPC-H Q22 shape (minus the phone-prefix predicate the generator
+# omits): customers with above-global-average positive balance and
+# no orders, per nation. Two decorrelations in one query: the global
+# scalar AVG becomes a 1-row broadcast cross join (a bounded work
+# multiplier, not a shuffle; as a scalar subquery it runs as its own
+# job first and read ~35% slower at sf0.1), and NOT EXISTS becomes a
+# left_anti join against the custkey projection of orders. The
+# average is decimal-sum / count — bit-identical across engines — so
+# the > comparison cannot flip on a last-ulp difference.
+register_sql(
     "idle_high_balance_customers",
-    oracle="""
+    """
     WITH avg_bal AS (
       SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS v
-      FROM customer WHERE c_acctbal > 0.0
+      FROM {customer} WHERE c_acctbal > 0.0
     )
     SELECT c.c_nationkey AS nationkey,
            COUNT(*) AS n_customers,
            CAST(SUM(CAST(c.c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS total_bal
-    FROM customer c
-    WHERE c.c_acctbal > (SELECT v FROM avg_bal)
-      AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+    FROM {customer} c CROSS JOIN avg_bal a
+    WHERE c.c_acctbal > a.v
+      AND NOT EXISTS (SELECT 1 FROM {orders} o WHERE o.o_custkey = c.c_custkey)
     GROUP BY c.c_nationkey
     """,
     covers=("§2.6-anti", "§2.4-agg"),
 )
-def idle_high_balance_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (minus the phone-prefix predicate the generator
-    omits): customers with above-global-average positive balance and
-    no orders, per nation. Two decorrelations in one query: the global
-    scalar AVG becomes a 1-row broadcast crossJoin (a bounded work
-    multiplier, not a shuffle), and NOT EXISTS becomes a left_anti
-    join against the distinct custkey projection of orders. The
-    average is decimal-sum / count — bit-identical across engines —
-    so the > comparison cannot flip on a last-ulp difference."""
-    cust = load_table(spark, sf_dir, "customer")
-    avg_bal = (
-        cust.filter(F.col("c_acctbal") > 0.0)
-        .agg((dsum("c_acctbal") / F.count("*")).alias("v"))
-    )
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey")
-    return (
-        cust.crossJoin(F.broadcast(avg_bal))  # bcast-ok: 1-row agg
-        .filter(F.col("c_acctbal") > F.col("v"))
-        .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(
-            F.count("*").alias("n_customers"),
-            dsum("c_acctbal").alias("total_bal"),
-        )
-    )

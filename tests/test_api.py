@@ -142,16 +142,6 @@ def test_by_id_applies_score_threshold(corpus):
     assert kept.count() == 1
 
 
-def test_latest_per_key_window_tiebreak(spark):
-    from fegis_spark.operators.lineage import latest_per_key_window
-
-    df = spark.createDataFrame(
-        [("k", 5, "b"), ("k", 5, "a"), ("k", 3, "c")], "key string, o int, id string"
-    )
-    row = latest_per_key_window(df, "key", "o", tiebreak="id").collect()
-    assert len(row) == 1 and row[0].id == "a"
-
-
 def test_filtered_contains_is_matchtext_on_text_indexed_fields(memories):
     """The reference TEXT-indexes title/context (storage.py:74-75), so
     Qdrant gives `contains` on those fields analyzed MatchText

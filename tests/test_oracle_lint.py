@@ -160,3 +160,12 @@ def test_r8_flags_native_transcendentals_but_not_portable_ln():
     # comments mentioning ln() must not fire
     assert not lint_sql("q", "SELECT x FROM t -- uses ln() upstream")
     assert not lint_sql("q", "SELECT ln(x) FROM t -- lint: allow R8 (reason)")
+
+
+def test_catalog_has_no_findings():
+    """The full lint over every catalog oracle (DuckDB-bound R7
+    included) is clean (tools/verify_all.sh runs the same scan)."""
+    from tools.oracle_lint import catalog_findings
+
+    findings = catalog_findings()
+    assert findings == [], "\n".join(findings)

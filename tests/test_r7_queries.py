@@ -102,10 +102,11 @@ def test_label_separation_constructed_clusters(spark):
 def test_padding_audit_mass_invariants(spark):
     """real + pad == n_docs * bucket_len for every bucket; truncation
     only ever appears in the cap bucket; totals cover the corpus."""
+    from fegis_spark.catalog import catalog
     from fegis_spark.model import load_table
-    from fegis_spark.queries.pipeline_q import PAD_BUCKETS, pack_padding_audit
+    from fegis_spark.queries.pipeline_q import PAD_BUCKETS
 
-    rows = pack_padding_audit(spark, SF_DIR).collect()
+    rows = catalog()["pack_padding_audit"].builder(spark, SF_DIR).collect()
     cap = PAD_BUCKETS[-1]
     total = sum(r["n_docs"] for r in rows)
     assert total == load_table(spark, SF_DIR, "documents").count()
@@ -155,13 +156,12 @@ def test_checksum_drift_buckets_attributed(spark):
 def test_funnel_latency_consistent_with_counts(spark):
     """The latency query's per-transition user counts must equal the
     conversion query's stage counts — both interpolate one shared
-    stage recipe, and this pins the Spark twins to each other too."""
-    from fegis_spark.queries.aggregates import (
-        funnel_conversion,
-        funnel_time_to_convert,
-    )
+    stage recipe, and this pins the latency builder's Spark stages to
+    the shared recipe the conversion query runs as SQL."""
+    from fegis_spark.catalog import catalog
+    from fegis_spark.queries.aggregates import funnel_time_to_convert
 
-    counts = funnel_conversion(spark, SF_DIR).collect()[0]
+    counts = catalog()["funnel_conversion"].builder(spark, SF_DIR).collect()[0]
     lat = {r["transition"]: r for r in funnel_time_to_convert(spark, SF_DIR).collect()}
     assert lat["view_to_click"]["n_users"] == counts["n_clicked_after"]
     assert lat["click_to_purchase"]["n_users"] == counts["n_purchased_after"]
@@ -172,13 +172,11 @@ def test_funnel_latency_consistent_with_counts(spark):
 def test_savings_consistent_with_padding_audit(spark):
     """The one-row savings summary must reproduce the padding audit's
     bucket totals exactly (same interpolated ladder)."""
-    from fegis_spark.queries.pipeline_q import (
-        pack_padding_audit,
-        packing_vs_padding_savings,
-    )
+    from fegis_spark.catalog import catalog
 
-    buckets = pack_padding_audit(spark, SF_DIR).collect()
-    row = packing_vs_padding_savings(spark, SF_DIR).collect()[0]
+    cat = catalog()
+    buckets = cat["pack_padding_audit"].builder(spark, SF_DIR).collect()
+    row = cat["packing_vs_padding_savings"].builder(spark, SF_DIR).collect()[0]
     assert row["padded_slot_chars"] == sum(
         r["n_docs"] * r["bucket_len"] for r in buckets
     )

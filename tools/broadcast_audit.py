@@ -64,6 +64,15 @@ evidence/topk_ab_r12.json):
         rewritten as the single-pass bounded-slice aggregation
         (grouped_topk / ann_pq_recall_audit pattern) instead.
 
+The window and hint rules also bind the Spark-run SQL text of every
+``register_sql`` catalog entry (its ``sql``), with the markers as SQL
+``--`` comments on the clause's line or in the comment block directly
+above it:
+
+  * ``OVER (PARTITION BY`` needs ``-- grpwin-ok:`` or ``-- panel-ok:``;
+  * ``OVER (ORDER BY`` (no partition clause) needs ``-- window-ok:``;
+  * a ``/*+ BROADCAST`` hint needs ``-- bcast-ok:``.
+
 Like oracle_lint, this is a static text scan: it cannot prove the
 marker's claim, but it guarantees every hint site states its bound for
 review, and any new unmarked hint fails CI. Exit 1 on findings.
@@ -78,6 +87,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "fegis_spark"
+sys.path.insert(0, str(ROOT))
 
 CALL = re.compile(r"F\.broadcast\(")
 MARKER = re.compile(r"#\s*bcast-ok:\s*\S")
@@ -99,13 +109,38 @@ PAIR_GENERATORS = re.compile(
 )
 MANUAL_SELF_JOIN = re.compile(r"\.alias\(\"l\"\)")
 CAP_ARG = re.compile(r"max_bucket_size\s*=\s*(?!None\b)\S")
+#: the same rules over a register_sql text: (clause, marker, what to say)
+SQL_RULES = (
+    (
+        re.compile(r"\bOVER\s*\(\s*PARTITION\s+BY\b", re.I),
+        re.compile(r"--\s*(?:grpwin-ok|panel-ok):\s*\S"),
+        "partitioned window without a '-- grpwin-ok: <scaling arg>' or "
+        "'-- panel-ok: <mechanism/bound>' marker",
+        "pwindows",
+    ),
+    (
+        re.compile(r"\bOVER\s*\(\s*ORDER\s+BY\b", re.I),
+        re.compile(r"--\s*window-ok:\s*\S"),
+        "global window (OVER (ORDER BY with no PARTITION BY) without a "
+        "'-- window-ok: <bound>' marker",
+        "windows",
+    ),
+    (
+        re.compile(r"/\*\+\s*BROADCAST", re.I),
+        re.compile(r"--\s*bcast-ok:\s*\S"),
+        "BROADCAST hint without a '-- bcast-ok: <bound>' marker",
+        "raw",
+    ),
+)
 #: how far above a contiguous comment block may start
 MAX_COMMENT_BLOCK = 8
 #: how many lines a multi-line call's argument span may cover
 MAX_CALL_SPAN = 12
 
 
-def site_is_marked(lines: list[str], i: int, marker: re.Pattern = MARKER) -> bool:
+def site_is_marked(
+    lines: list[str], i: int, marker: re.Pattern = MARKER, comment: str = "#"
+) -> bool:
     """Marker on the call line, or in the contiguous comment block
     directly above it (comment-only lines, no blank/code gaps)."""
     if marker.search(lines[i]):
@@ -114,7 +149,7 @@ def site_is_marked(lines: list[str], i: int, marker: re.Pattern = MARKER) -> boo
     steps = 0
     while j >= 0 and steps < MAX_COMMENT_BLOCK:
         stripped = lines[j].strip()
-        if not stripped.startswith("#"):
+        if not stripped.startswith(comment):
             return False
         if marker.search(lines[j]):
             return True
@@ -234,13 +269,43 @@ def audit_lines(name: str, lines: list[str]) -> tuple[list[str], Counter]:
     return findings, n
 
 
-def audit() -> int:
+def audit_sql(name: str, sql: str) -> tuple[list[str], Counter]:
+    """Findings and site counts for one register_sql text (the window
+    and hint rules, with ``--`` comment markers)."""
+    findings: list[str] = []
+    n: Counter = Counter()
+    lines = sql.splitlines()
+    for clause, marker, what, kind in SQL_RULES:
+        for m in clause.finditer(sql):
+            n[kind] += 1
+            i = sql.count("\n", 0, m.start())
+            if not site_is_marked(lines, i, marker, comment="--"):
+                findings.append(f"{name} (sql line {i + 1}): {what}\n    {lines[i].strip()}")
+    return findings, n
+
+
+def package_findings() -> tuple[list[str], Counter]:
+    """Findings and site counts over every fegis_spark source file and
+    every register_sql text in the catalog."""
+    from fegis_spark.catalog import catalog
+
     findings: list[str] = []
     n: Counter = Counter()
     for path in sorted(PKG.rglob("*.py")):
         f, c = audit_lines(str(path.relative_to(ROOT)), path.read_text().splitlines())
         findings += f
         n.update(c)
+    for name, e in sorted(catalog().items()):
+        if e.sql is not None:
+            f, c = audit_sql(name, e.sql)
+            findings += f
+            n.update(c)
+            n["sql"] += 1
+    return findings, n
+
+
+def audit() -> int:
+    findings, n = package_findings()
     # docstring/comment mentions of F.broadcast( inside strings are rare
     # and harmless; the scan is per-line source text like oracle_lint.
     for f in findings:
@@ -249,8 +314,8 @@ def audit() -> int:
         f"broadcast_audit: {n['raw']} raw hint sites, {n['gated']} size-gated "
         f"maybe_broadcast sites, {n['windows']} global-window sites, "
         f"{n['pwindows']} partitioned-window sites, "
-        f"{n['cross']} crossJoin sites, {n['band']} band-generator sites, "
-        f"{len(findings)} findings"
+        f"{n['cross']} crossJoin sites, {n['band']} band-generator sites "
+        f"(sites include {n['sql']} register_sql texts), {len(findings)} findings"
     )
     return 1 if findings else 0
 

@@ -36,7 +36,7 @@ LIBRARY_ONLY = {
     "T8": ("default-title fill", "functions/textfns.default_title (tests::test_ingest_invariants)"),
     "T9": ("standard-key map filter", "functions/textfns.exclude_standard_keys"),
     "T11": ("error-message rewriting", "engine-side error formatting — validate_filters messages"),
-    "W1": ("ordered-scan-limit-1", "= A1, operators/lineage.latest_per_key"),
+    "W1": ("ordered-scan-limit-1", "= A1, queries/lineage_q.latest_event_per_user"),
     "X1": ("filter-before-ANN ordering", "plans/search.filtered_search (tests::test_filtered_before_score)"),
     "X2": ("limit pushdown", "TakeOrderedAndProject via orderBy+limit (plans/search.topk)"),
     "X8": ("threshold-after-ranking", "plans/search (tests::test_threshold_after_topk)"),
