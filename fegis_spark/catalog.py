@@ -13,8 +13,17 @@ documents embeddings). Contract (see __spark_entry__.py):
 
 A relational query is ONE SQL text (``register_sql``): Spark runs it
 through ``spark.sql`` over ``load_table`` frames and DuckDB runs the
-same text as the oracle, so the two cannot drift. A query keeps a
-hand-written builder (``register``) only when:
+same text as the oracle, so the two cannot drift. Where the engines
+spell a construct differently, use a spelling both accept first
+(``max_by``, ``CAST(x AS STRING)``, ``percentile_cont(p) WITHIN GROUP
+(ORDER BY x)``, ``CAST(floor(a / b) AS BIGINT)``, ``CAST(date - date AS
+BIGINT)`` days, a filtering subquery instead of QUALIFY), and a
+``queries/sqlfrag.py`` dialect generator only where none exists:
+``ts_sql``, ``epoch_us_sql``, ``json_str_sql``, ``ignore_nulls_sql``,
+``series_sql``, ``isodow_sql``, ``rows_sql`` and the portable recipes
+(``md5_int_sql``, ``norm_text_sql``, ``tokens_sql``). The text is then
+a generator ``lambda *, spark: f"..."``. A query keeps a hand-written
+builder (``register``) only when:
 
 * it covers a library operator (its ``covers`` ids name one: the
   dedup/sketch/ANN/media families, ``compile_filters``) — as SQL it
@@ -25,7 +34,7 @@ hand-written builder (``register``) only when:
   bounded-slice aggregate, in-row pair generation, a persist, a
   pandas UDF) — the oracle is the naive form the builder avoids;
 * its SQL text measured slower in an A/B (evidence/sql_text_ab_r11.json
-  lists each kept builder and why).
+  and evidence/sql_text_ab_r12.json list each kept builder and why).
 
 Determinism rules applied throughout (SURVEY.md §7.4):
 * double aggregates go through DECIMAL(38,10) on both sides, then cast

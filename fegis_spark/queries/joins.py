@@ -201,30 +201,22 @@ def asof_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", "asof_o_totalprice", "asof_o_orderkey")
 
 
-@register(
+# Exact interpolated percentiles (percentile_cont: Spark's exact
+# percentile, DuckDB's quantile_cont); the approx path (GK sketch) is
+# in quantile_error_audit, where its rank-error bound is value-checked.
+# Emitted UNROUNDED: the interpolation is bitwise-identical
+# cross-engine (pinned in tests/test_property_portable.py).
+register_sql(
     "quantiles_by_type",
-    oracle="""
+    """
     SELECT event_type,
-           quantile_cont(value, 0.5) AS p50,
-           quantile_cont(value, 0.95) AS p95,
+           percentile_cont(0.5) WITHIN GROUP (ORDER BY value) AS p50,
+           percentile_cont(0.95) WITHIN GROUP (ORDER BY value) AS p95,
            MIN(value) AS min_v, MAX(value) AS max_v
-    FROM events GROUP BY event_type
+    FROM {events} GROUP BY event_type
     """,
     covers=("§2.4-quantile",),
 )
-def quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (Spark `percentile` == DuckDB
-    quantile_cont); the approx path (percentile_approx / GK) is in
-    quantile_error_audit, where its rank-error bound is value-checked."""
-    ev = load_table(spark, sf_dir, "events")
-    # UNROUNDED: the interpolation is bitwise-identical cross-engine
-    # (percentile==quantile_cont pin in tests/test_property_portable)
-    return ev.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("p50"),
-        F.expr("percentile(value, 0.95)").alias("p95"),
-        F.min("value").alias("min_v"),
-        F.max("value").alias("max_v"),
-    )
 
 
 @register(
@@ -354,17 +346,26 @@ register_sql(
 )
 
 
-@register(
+# §2.6 FULL OUTER snapshot reconciliation — the incremental-pipeline
+# diff between two corpus snapshots (yesterday vs today): rows only in
+# B are added, only in A removed, same key different payload changed.
+# Snapshots are deterministic md5-bucket subsets of orders (A drops
+# bucket 9, B drops bucket 0 and perturbs every 7th price). One
+# equi-key full-outer join: both sides shuffle once on the key; at
+# 100 TB you bucket both snapshots on the key
+# (operators/scale.write_bucketed) and the join is co-located with no
+# shuffle at all.
+register_sql(
     "snapshot_diff",
-    oracle=f"""
+    lambda *, spark: f"""
     WITH a AS (
-      SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-      WHERE {md5_int_sql('CAST(o_orderkey AS VARCHAR)', 8, spark=False)} % 10 < 9
+      SELECT o_orderkey, o_orderstatus, o_totalprice FROM {{orders}}
+      WHERE {md5_int_sql('CAST(o_orderkey AS STRING)', 8, spark=spark)} % 10 < 9
     ), b AS (
       SELECT o_orderkey, o_orderstatus,
              CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1.0 ELSE o_totalprice END AS o_totalprice
-      FROM orders
-      WHERE {md5_int_sql('CAST(o_orderkey AS VARCHAR)', 8, spark=False)} % 10 > 0
+      FROM {{orders}}
+      WHERE {md5_int_sql('CAST(o_orderkey AS STRING)', 8, spark=spark)} % 10 > 0
     )
     SELECT change, COUNT(*) AS n FROM (
       SELECT CASE
@@ -377,44 +378,6 @@ register_sql(
     """,
     covers=("§2.6-outer", "§2.9-setops"),
 )
-def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.6 FULL OUTER snapshot reconciliation — the incremental-
-    pipeline diff between two corpus snapshots (yesterday vs today):
-    rows only in B are added, only in A removed, same key different
-    payload changed. Snapshots are deterministic md5-bucket subsets of
-    orders (A drops bucket 9, B drops bucket 0 and perturbs every 7th
-    price). One equi-key full-outer join: both sides shuffle once on
-    the key; at 100 TB you bucket both snapshots on the key
-    (operators/scale.write_bucketed) and the join is co-located with
-    no shuffle at all."""
-    o = load_table(spark, sf_dir, "orders")
-    bucket = F.expr(f"{md5_int_sql('CAST(o_orderkey AS STRING)', 8, spark=True)} % 10")
-    a = o.filter(bucket < 9).select(
-        "o_orderkey", "o_orderstatus", F.col("o_totalprice").alias("price")
-    )
-    b = o.filter(bucket > 0).select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.when(F.col("o_orderkey") % 7 == 0, F.col("o_totalprice") + 1.0)
-        .otherwise(F.col("o_totalprice"))
-        .alias("price"),
-    )
-    j = a.alias("a").join(
-        b.alias("b"), F.col("a.o_orderkey") == F.col("b.o_orderkey"), "full_outer"
-    )
-    change = (
-        F.when(F.col("a.o_orderkey").isNull(), F.lit("added"))
-        .when(F.col("b.o_orderkey").isNull(), F.lit("removed"))
-        .when(
-            (F.col("a.price") != F.col("b.price"))
-            | (F.col("a.o_orderstatus") != F.col("b.o_orderstatus")),
-            F.lit("changed"),
-        )
-        .otherwise(F.lit("unchanged"))
-    )
-    return j.select(change.alias("change")).groupBy("change").agg(
-        F.count("*").alias("n")
-    )
 
 
 # TPC-H Q3 shape: segment-filtered customers joined into orders

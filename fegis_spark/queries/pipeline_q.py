@@ -19,7 +19,13 @@ from pyspark.sql import functions as F
 
 from fegis_spark.catalog import register, register_sql
 from fegis_spark.model import load_table, maybe_broadcast, table_bytes
-from fegis_spark.queries.sqlfrag import md5_int_sql, norm_text_sql, tokens_sql
+from fegis_spark.queries.sqlfrag import (
+    md5_int_sql,
+    norm_text_sql,
+    rows_sql,
+    series_sql,
+    tokens_sql,
+)
 
 
 def _bucket_sql(col: str, buckets: int = 100, *, spark: bool) -> str:
@@ -53,13 +59,18 @@ def _split_of(bucket: F.Column) -> F.Column:
     return F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
 
 
-@register(
+# [EXT] deterministic 80/10/10 train/val/test split by md5 hash
+# bucket of doc_id. A pure projection + one aggregation shuffle; the
+# per-row split assignment is stable across engines and cluster sizes
+# (no rand(), no row ordering dependence), which is what makes
+# incremental re-runs and cross-system audits possible at 100 TB.
+register_sql(
     "train_test_split",
-    oracle=f"""
+    lambda *, spark: f"""
     WITH bucketed AS (
       SELECT doc_id, lang, n_chars,
-             {_bucket_sql('doc_id', spark=False)} AS bucket
-      FROM documents
+             {_bucket_sql('doc_id', spark=spark)} AS bucket
+      FROM {{documents}}
     )
     SELECT {_SPLIT_CASE} AS split,
            lang,
@@ -71,44 +82,53 @@ def _split_of(bucket: F.Column) -> F.Column:
     covers=("[EXT]-split",),
     bench=True,
 )
-def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] deterministic 80/10/10 train/val/test split by md5 hash
-    bucket of doc_id. A pure projection + one aggregation shuffle; the
-    per-row split assignment is stable across engines and cluster
-    sizes (no rand(), no row ordering dependence), which is what makes
-    incremental re-runs and cross-system audits possible at 100 TB."""
-    docs = load_table(spark, sf_dir, "documents")
-    bucketed = docs.select(
-        "doc_id",
-        "lang",
-        "n_chars",
-        F.expr(_bucket_sql("doc_id", spark=True)).alias("bucket"),
-    )
-    split = F.when(F.col("bucket") < 80, "train").when(
-        F.col("bucket") < 90, "val"
-    ).otherwise("test")
-    return (
-        bucketed.select(split.alias("split"), "lang", "n_chars")
-        .groupBy("split", "lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-    )
 
 
-@register(
+#: the per-strategy output rows of group_split_leakage, each read from
+#: the one wide aggregate row
+_LEAKAGE_ROWS = [
+    {
+        "strategy": f"'{strategy}'",
+        "leaky_groups": f"{p}_leaky",
+        "n_groups": "n_groups",
+        "train_docs": f"{p}_train",
+        "val_docs": f"{p}_val",
+        "test_docs": f"{p}_test",
+    }
+    for strategy, p in (("doc_hash", "doc"), ("group_hash", "grp"))
+]
+
+
+# [EXT] group-aware (leakage-free) splitting vs the per-document hash
+# split, measured side by side. Splitting by md5(doc_id) puts
+# near-identical documents from the same provenance group (source /
+# domain / author) on BOTH sides of the train/eval boundary — the
+# classic eval-leakage failure; splitting by md5(GROUP KEY) keeps every
+# group whole. The query assigns both strategies in one corpus pass and
+# reports, per strategy, the number of groups whose documents straddle
+# >1 split (leaky_groups — computed, not asserted: ~all groups leak
+# under doc_hash, structurally 0 under group_hash) plus the achieved
+# split sizes, which is the honest cost of group splitting: coarse
+# groups quantize the 80/10/10 target.
+#
+# Plan shape for 100 TB: one scan -> one hash-agg shuffle on the group
+# key (domains are ~10^7 at web scale — well-distributed) -> a
+# |groups|-row second agg; the two strategy rows come from ONE wide
+# row (rows_sql), so the corpus is never rescanned (a UNION ALL of the
+# two strategies would read it twice). "Straddles >1 split" is
+# min != max (3 split values), which avoids the countDistinct Expand.
+register_sql(
     "group_split_leakage",
-    oracle=f"""
+    lambda *, spark: f"""
     WITH assigned AS (
       SELECT source,
              {_SPLIT_CASE} AS doc_split,
              {_split_case('gbucket')} AS grp_split
       FROM (
         SELECT source,
-               {_bucket_sql('doc_id', spark=False)} AS bucket,
-               {_bucket_sql('source', spark=False)} AS gbucket
-        FROM documents
+               {_bucket_sql('doc_id', spark=spark)} AS bucket,
+               {_bucket_sql('source', spark=spark)} AS gbucket
+        FROM {{documents}}
       )
     ), per_source AS (
       SELECT source,
@@ -133,87 +153,10 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(SUM(CASE WHEN grp_split = 'test' THEN n_docs ELSE 0 END) AS BIGINT) AS grp_test
       FROM per_source
     )
-    SELECT 'doc_hash' AS strategy, doc_leaky AS leaky_groups, n_groups,
-           doc_train AS train_docs, doc_val AS val_docs, doc_test AS test_docs
-    FROM wide
-    UNION ALL
-    SELECT 'group_hash' AS strategy, grp_leaky AS leaky_groups, n_groups,
-           grp_train AS train_docs, grp_val AS val_docs, grp_test AS test_docs
-    FROM wide
+    SELECT {rows_sql(_LEAKAGE_ROWS, spark=spark)} FROM wide
     """,
     covers=("[EXT]-group-split",),
 )
-def group_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] group-aware (leakage-free) splitting vs the per-document
-    hash split, measured side by side. Splitting by md5(doc_id) puts
-    near-identical documents from the same provenance group (source /
-    domain / author) on BOTH sides of the train/eval boundary — the
-    classic eval-leakage failure; splitting by md5(GROUP KEY) keeps
-    every group whole. The query assigns both strategies in one
-    corpus pass and reports, per strategy, the number of groups whose
-    documents straddle >1 split (leaky_groups — computed, not
-    asserted: ~all groups leak under doc_hash, structurally 0 under
-    group_hash) plus the achieved split sizes, which is the honest
-    cost of group splitting: coarse groups quantize the 80/10/10
-    target.
-
-    Plan shape for 100 TB: one scan → one hash-agg shuffle on the
-    group key (domains are ~10^7 at web scale — well-distributed) →
-    a |groups|-row second agg; the two output strategy rows come from
-    ONE wide row via explode, so the corpus is never rescanned."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    assigned = docs.select(
-        "source",
-        _split_of(F.expr(_bucket_sql("doc_id", spark=True))).alias("doc_split"),
-        _split_of(F.expr(_bucket_sql("source", spark=True))).alias("grp_split"),
-    )
-    # "straddles >1 split" == min != max (3 split values) — avoids the
-    # countDistinct Expand (3x map-side rows + an extra exchange)
-    per_source = assigned.groupBy("source").agg(
-        (F.min("doc_split") != F.max("doc_split")).alias("doc_leaks"),
-        (F.min("grp_split") != F.max("grp_split")).alias("grp_leaks"),
-        F.min("grp_split").alias("grp_split"),
-        F.count("*").alias("n_docs"),
-        F.sum((F.col("doc_split") == "train").cast("int")).alias("d_train"),
-        F.sum((F.col("doc_split") == "val").cast("int")).alias("d_val"),
-        F.sum((F.col("doc_split") == "test").cast("int")).alias("d_test"),
-    )
-    wide = per_source.agg(
-        F.count("*").alias("n_groups"),
-        F.sum(F.col("doc_leaks").cast("int")).alias("doc_leaky"),
-        F.sum(F.col("grp_leaks").cast("int")).alias("grp_leaky"),
-        F.sum("d_train").alias("doc_train"),
-        F.sum("d_val").alias("doc_val"),
-        F.sum("d_test").alias("doc_test"),
-        F.sum(
-            F.when(F.col("grp_split") == "train", F.col("n_docs")).otherwise(0)
-        ).alias("grp_train"),
-        F.sum(
-            F.when(F.col("grp_split") == "val", F.col("n_docs")).otherwise(0)
-        ).alias("grp_val"),
-        F.sum(
-            F.when(F.col("grp_split") == "test", F.col("n_docs")).otherwise(0)
-        ).alias("grp_test"),
-    )
-    rows = F.array(
-        F.struct(
-            F.lit("doc_hash").alias("strategy"),
-            F.col("doc_leaky").alias("leaky_groups"),
-            F.col("n_groups").alias("n_groups"),
-            F.col("doc_train").alias("train_docs"),
-            F.col("doc_val").alias("val_docs"),
-            F.col("doc_test").alias("test_docs"),
-        ),
-        F.struct(
-            F.lit("group_hash").alias("strategy"),
-            F.col("grp_leaky").alias("leaky_groups"),
-            F.col("n_groups").alias("n_groups"),
-            F.col("grp_train").alias("train_docs"),
-            F.col("grp_val").alias("val_docs"),
-            F.col("grp_test").alias("test_docs"),
-        ),
-    )
-    return wide.select(F.explode(rows).alias("r")).select("r.*")
 
 
 @register(
@@ -370,81 +313,62 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 SAMPLE_RATES = {"en": 25, "zh": 50, "de": 100, "fr": 100, "es": 100}
 
 
-@register(
+#: the keep-rate of column `lang` as a CASE over SAMPLE_RATES
+_RATE_CASE = (
+    "CASE lang "
+    + " ".join(f"WHEN '{k}' THEN {v}" for k, v in SAMPLE_RATES.items() if v < 100)
+    + " ELSE 100 END"
+)
+
+
+# [EXT] deterministic stratified sampling by language: keep a doc iff
+# its md5 bucket falls under the language's keep-rate. Unlike
+# df.sampleBy (seeded RNG, partition-order dependent), the kept set is
+# a pure function of doc_id — re-runs, retries, and other engines agree
+# row-for-row. Filter + one agg shuffle; the filter prunes before any
+# shuffle so the downsampled language never moves.
+register_sql(
     "stratified_sample",
-    oracle=f"""
+    lambda *, spark: f"""
     WITH bucketed AS (
       SELECT doc_id, lang,
-             {_bucket_sql('doc_id', spark=False)} AS bucket
-      FROM documents
+             {_bucket_sql('doc_id', spark=spark)} AS bucket
+      FROM {{documents}}
     )
     SELECT lang, COUNT(*) AS n_kept
     FROM bucketed
-    WHERE bucket < CASE lang
-      WHEN 'en' THEN 25 WHEN 'zh' THEN 50 ELSE 100 END
+    WHERE bucket < {_RATE_CASE}
     GROUP BY lang
     """,
     covers=("[EXT]-sample",),
 )
-def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] deterministic stratified sampling by language: keep a doc
-    iff its md5 bucket falls under the language's keep-rate. Unlike
-    df.sampleBy (seeded RNG, partition-order dependent), the kept set
-    is a pure function of doc_id — re-runs, retries, and other engines
-    agree row-for-row. Filter + one agg shuffle; the filter prunes
-    before any shuffle so the downsampled language never moves."""
-    docs = load_table(spark, sf_dir, "documents")
-    rate = F.coalesce(
-        *[F.when(F.col("lang") == k, F.lit(v)) for k, v in SAMPLE_RATES.items()],
-        F.lit(100),
-    )
-    kept = docs.selectExpr(
-        "doc_id", "lang", f"{_bucket_sql('doc_id', spark=True)} AS bucket"
-    ).filter(F.col("bucket") < rate)
-    return kept.groupBy("lang").agg(F.count("*").alias("n_kept"))
 
 
 #: chunking geometry: 500-char windows every 400 chars (100 overlap).
 CHUNK_SIZE, CHUNK_STRIDE = 500, 400
 
 
-@register(
+# [EXT] overlapping-window document chunking (500-char windows,
+# 100-char overlap) — the pre-embedding step for RAG / context-window
+# prep. The series explode is a narrow per-row fan-out: no shuffle at
+# all, and the chunk count per task stays proportional to its input
+# bytes. Chunks are reported as (len, md5) so the result stays small
+# while still value-checking the exact chunk bytes.
+register_sql(
     "chunk_documents",
-    oracle=f"""
+    lambda *, spark: f"""
     SELECT doc_id,
-           (off - 1) // {CHUNK_STRIDE} AS chunk_idx,
-           length(substr(text, CAST(off AS INT), {CHUNK_SIZE})) AS chunk_chars,
+           CAST(floor((off - 1) / {CHUNK_STRIDE}) AS BIGINT) AS chunk_idx,
+           CAST(length(substr(text, CAST(off AS INT), {CHUNK_SIZE})) AS BIGINT) AS chunk_chars,
            md5(substr(text, CAST(off AS INT), {CHUNK_SIZE})) AS chunk_hash
     FROM (
       SELECT doc_id, text,
-             unnest(generate_series(1, CAST(n_chars AS INT), {CHUNK_STRIDE})) AS off
-      FROM documents
+             {series_sql('1', 'CAST(n_chars AS INT)', str(CHUNK_STRIDE), spark=spark)} AS off
+      FROM {{documents}}
     )
     """,
     covers=("[EXT]-chunking", "§2.8-explode"),
 )
-def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] overlapping-window document chunking (500-char windows,
-    100-char overlap) — the pre-embedding step for RAG / context-window
-    prep. explode(sequence(...)) is a narrow per-row fan-out: no
-    shuffle at all, and the chunk count per task stays proportional to
-    its input bytes. Chunks are reported as (len, md5) so the result
-    stays small while still value-checking the exact chunk bytes."""
-    docs = load_table(spark, sf_dir, "documents")
-    ex = docs.select(
-        "doc_id",
-        "text",
-        F.explode(
-            F.sequence(F.lit(1), F.col("n_chars").cast("int"), F.lit(CHUNK_STRIDE))
-        ).alias("off"),
-    )
-    chunk = F.expr(f"substring(text, off, {CHUNK_SIZE})")
-    return ex.select(
-        "doc_id",
-        F.floor((F.col("off") - 1) / CHUNK_STRIDE).alias("chunk_idx"),
-        F.length(chunk).cast("bigint").alias("chunk_chars"),
-        F.md5(chunk).alias("chunk_hash"),
-    )
 
 
 #: content-defined chunking geometry: boundary where the md5 bucket of
@@ -712,81 +636,71 @@ def pack_sequences_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# [EXT] diagnostic companion to pack_sequences_sharded: emits the
+# md5-bucket shard assignment (operators/scale.py recipe, 4 shards) in
+# aggregate form — per-shard count plus doc_id sum/min/max — so a
+# cross-engine CORRECTNESS run localizes any divergence to either the
+# shard recipe (this query mismatches) or the pack arithmetic (this
+# passes, pack_sequences_sharded fails). Pure integer outputs.
+register_sql(
     "pack_shard_probe",
-    oracle=f"""
-    SELECT {_bucket_sql('doc_id', 4, spark=False)} AS shard,
+    lambda *, spark: f"""
+    SELECT {_bucket_sql('doc_id', 4, spark=spark)} AS shard,
            COUNT(*) AS n_docs,
            CAST(SUM(doc_id) AS BIGINT) AS sum_doc_id,
            min(doc_id) AS min_doc_id,
            max(doc_id) AS max_doc_id
-    FROM documents
+    FROM {{documents}}
     GROUP BY 1
     """,
     covers=("[EXT]-packing-sharded",),
 )
-def pack_shard_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] diagnostic companion to pack_sequences_sharded: emits the
-    md5-bucket shard assignment (operators/scale.py recipe, 4 shards)
-    in aggregate form — per-shard count plus doc_id sum/min/max — so a
-    cross-engine CORRECTNESS run localizes any divergence to either
-    the shard recipe (this query mismatches) or the pack arithmetic
-    (this passes, pack_sequences_sharded fails). Pure integer outputs:
-    no float formatting anywhere."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    shard = F.expr(_bucket_sql("doc_id", 4, spark=True))
-    return docs.select("doc_id", shard.alias("shard")).groupBy("shard").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("doc_id").alias("sum_doc_id"),
-        F.min("doc_id").alias("min_doc_id"),
-        F.max("doc_id").alias("max_doc_id"),
-    )
 
 
-@register(
+# [EXT] exact-k-per-stratum sampling (the reservoir-sample complement
+# of the rate-based stratified_sample): exactly 5 docs per language,
+# chosen by md5 order — a pure function of doc_id, so re-runs and other
+# engines agree row-for-row. The window partitions by lang (parallel
+# across strata, never a single-partition window); at 100 TB the md5
+# rank-and-filter pushes k rows per stratum out of each partition
+# before the final per-stratum merge.
+register_sql(
     "stratified_fixed_k",
-    oracle="""
+    """
     SELECT doc_id, lang, rk FROM (
       SELECT doc_id, lang,
+             -- panel-ok: WindowGroupLimit(Partial) — md5 rank + filter pushes k per partition
              row_number() OVER (
                PARTITION BY lang
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+               ORDER BY md5(CAST(doc_id AS STRING)), doc_id
              ) AS rk
-      FROM documents
+      FROM {documents}
     ) WHERE rk <= 5
     """,
     covers=("[EXT]-sample",),
 )
-def stratified_fixed_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] exact-k-per-stratum sampling (the reservoir-sample
-    complement of the rate-based stratified_sample): exactly 5 docs per
-    language, chosen by md5 order — a pure function of doc_id, so
-    re-runs and other engines agree row-for-row. The window partitions
-    by lang (parallel across strata, never a single-partition window);
-    at 100 TB the md5 rank-and-filter pushes k rows per stratum out of
-    each partition before the final per-stratum merge."""
-    docs = load_table(spark, sf_dir, "documents")
-    # panel-ok: WindowGroupLimit(Partial) — md5 rank + filter pushes k per partition (docstring)
-    w = Window.partitionBy("lang").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    return (
-        docs.select("doc_id", "lang", F.row_number().over(w).alias("rk"))
-        .filter(F.col("rk") <= 5)
-    )
 
 
 from fegis_spark.operators.text_analysis import quality_score_sql  # noqa: E402
 
 
-@register(
+# [EXT] quality-weighted deterministic sampling: keep a document with
+# probability equal to its quality score — high-quality docs survive,
+# low-quality docs thin out — with the md5 bucket as the deterministic
+# coin (same doc always gets the same draw; re-runs and other engines
+# agree row-for-row). The importance-sampling step of a curation
+# pipeline, zero RNG. One scan; the keep filter prunes before the only
+# shuffle (the reporting agg). A decimal-exact SUM + count, not
+# round(mean, 6): when n_kept divides the 6dp grid the mean can land
+# exactly on a .5e-6 midpoint where the engines' tie-breaks diverge.
+register_sql(
     "quality_weighted_sample",
-    oracle=f"""
+    lambda *, spark: f"""
     WITH scored AS (
       SELECT doc_id, lang,
-             {quality_score_sql('text', spark=False)} AS quality,
-             {_bucket_sql('doc_id', spark=False)} AS bucket
-      FROM documents
+             {quality_score_sql('text', spark=spark)} AS quality,
+             {_bucket_sql('doc_id', spark=spark)} AS bucket
+      FROM {{documents}}
     )
     SELECT lang, COUNT(*) AS n_kept,
            CAST(SUM(CAST(quality AS DECIMAL(38,6))) AS DOUBLE)
@@ -797,91 +711,40 @@ from fegis_spark.operators.text_analysis import quality_score_sql  # noqa: E402
     """,
     covers=("[EXT]-sample",),
 )
-def quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] quality-weighted deterministic sampling: keep a document
-    with probability equal to its quality score — high-quality docs
-    survive, low-quality docs thin out — with the md5 bucket as the
-    deterministic coin (same doc always gets the same draw; re-runs and
-    other engines agree row-for-row). The importance-sampling step of
-    a curation pipeline, zero RNG. One scan; the keep filter prunes
-    before the only shuffle (the reporting agg)."""
-    docs = load_table(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id",
-        "lang",
-        F.expr(quality_score_sql("text", spark=True)).alias("quality"),
-        F.expr(_bucket_sql("doc_id", spark=True)).alias("bucket"),
-    )
-    kept = scored.filter(
-        F.col("bucket") < F.floor(F.col("quality") * 100).cast("bigint")
-    )
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_kept"),
-        # decimal-exact SUM + count, not round(mean, 6): when n_kept
-        # divides the 6dp grid the mean can land exactly on a .5e-6
-        # midpoint where the engines' tie-breaks diverge (r5/r7 class)
-        F.sum(F.col("quality").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("sum_kept_quality"),
-    )
 
 
-@register(
+# [EXT] temperature (alpha=0.5) domain rebalancing — post-sample
+# counts proportional to n_d^alpha, the standard fix for head-domain
+# dominance in multilingual/multi-source corpora: the rarest source
+# keeps 100%, a source 4x larger keeps 50%. alpha=0.5 makes the
+# keep-rate a sqrt — IEEE-correctly-rounded in every engine, so even
+# the rate compare is portable, and the rate is emitted UNROUNDED. The
+# md5 coin makes the kept set a pure function of doc_id. Plan: the
+# tiny per-source rate table is broadcast back; the corpus-side filter
+# is a projection.
+register_sql(
     "temperature_sample",
-    oracle=f"""
+    lambda *, spark: f"""
     WITH counts AS (
-      SELECT source, COUNT(*) AS n_orig FROM documents GROUP BY source
+      SELECT source, COUNT(*) AS n_orig FROM {{documents}} GROUP BY source
     ), lo AS (SELECT MIN(n_orig) AS n_min FROM counts),
     rates AS (
-      SELECT source, n_orig,
+      -- bcast-ok: 1-row agg
+      SELECT /*+ BROADCAST(lo) */ source, n_orig,
              sqrt(CAST(n_min AS DOUBLE) / n_orig) AS rate
       FROM counts CROSS JOIN lo
     )
-    SELECT d.source, r.n_orig,
+    -- bcast-ok: one row per source (bounded enum)
+    SELECT /*+ BROADCAST(r) */ d.source, r.n_orig,
            COUNT(*) FILTER (
-             WHERE {_bucket_sql('d.doc_id', 10000, spark=False)} < rate * 10000
+             WHERE {_bucket_sql('d.doc_id', 10000, spark=spark)} < rate * 10000
            ) AS n_kept,
            r.rate AS rate
-    FROM documents d JOIN rates r USING (source)
+    FROM {{documents}} d JOIN rates r USING (source)
     GROUP BY d.source, r.n_orig, r.rate
     """,
     covers=("[EXT]-mixture", "[EXT]-sample"),
 )
-def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] temperature (α=0.5) domain rebalancing — post-sample
-    counts ∝ n_d^α, the standard fix for head-domain dominance in
-    multilingual/multi-source corpora: the rarest source keeps 100%,
-    a source 4× larger keeps 50%. α=0.5 makes the keep-rate a sqrt —
-    IEEE-correctly-rounded in every engine, so even the rate compare
-    is portable. The md5 coin makes the kept set a pure function of
-    doc_id. Plan: tiny counts agg broadcast back; the corpus-side
-    filter is a projection."""
-    docs = load_table(spark, sf_dir, "documents")
-    counts = docs.groupBy("source").agg(F.count("*").alias("n_orig"))
-    n_min = counts.agg(F.min("n_orig").alias("n_min"))
-    rates = counts.crossJoin(F.broadcast(n_min)).select(  # bcast-ok: 1-row agg
-        "source",
-        "n_orig",
-        F.sqrt(F.col("n_min").cast("double") / F.col("n_orig")).alias("rate"),
-    )
-    return (
-        docs.join(F.broadcast(rates), "source")  # bcast-ok: one row per source (bounded enum)
-        .groupBy("source", "n_orig", "rate")
-        .agg(
-            F.sum(
-                F.when(
-                    F.expr(_bucket_sql("doc_id", 10000, spark=True)) < F.col("rate") * 10000, 1
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_kept")
-        )
-        # rate emitted UNROUNDED: sqrt is IEEE-correctly-rounded in
-        # both engines over the identical exact-integer ratio, so the
-        # double is bit-identical; round(x, 6) would reintroduce the
-        # midpoint tie-break class
-        .select("source", "n_orig", "n_kept", "rate")
-    )
 
 
 @register(
@@ -1076,62 +939,55 @@ def _manifest_hash_sql(*, spark: bool) -> str:
     return md5_int_sql(key, 15, spark=spark)
 
 
-def _manifest_sql(src: str) -> str:
-    """DuckDB bucket-XOR manifest over `src` — the ONE recipe string
-    both corpus_checksums and checksum_drift_detect interpolate (the
-    shared-fragment anti-drift rule)."""
-    return f"""SELECT {_bucket_sql('doc_id', spark=False)} AS bucket,
-           COUNT(*) AS n_docs,
-           bit_xor({_manifest_hash_sql(spark=False)}) AS xor_hash
-    FROM {src}
-    GROUP BY 1"""
-
-
-def _manifest(docs: DataFrame) -> DataFrame:
-    """Spark twin of _manifest_sql: (bucket, n_docs, xor_hash)."""
-    h = F.expr(_manifest_hash_sql(spark=True))
-    return (
-        docs.select(F.expr(_bucket_sql("doc_id", spark=True)).alias("bucket"), h.alias("h"))
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.bit_xor("h").alias("xor_hash"),
-        )
+def _manifest_sql(src: str, *, spark: bool) -> str:
+    """The bucket-XOR manifest (bucket, n_docs, xor_hash) over `src` —
+    the ONE recipe both corpus_checksums and checksum_drift_detect
+    interpolate. Bucket and hash are projected once, then grouped."""
+    return f"""SELECT bucket, COUNT(*) AS n_docs, bit_xor(h) AS xor_hash
+    FROM (
+      SELECT {_bucket_sql('doc_id', spark=spark)} AS bucket,
+             {_manifest_hash_sql(spark=spark)} AS h
+      FROM {src}
     )
+    GROUP BY bucket"""
 
 
-@register(
+# [EXT] order-independent corpus integrity manifest: per md5 bucket,
+# the XOR of each document's (id || normalized-content) hash — XOR is
+# commutative/associative, so the checksum is identical for any
+# partitioning, engine, or visit order, and any single changed /
+# dropped / duplicated document flips its bucket's value. The cheap
+# cross-system answer to 'did the export/copy/migration preserve the
+# corpus byte-for-byte' (compare 100 rows, not 100 TB). One hash-agg
+# shuffle over 100 bucket keys, map-side combined.
+register_sql(
     "corpus_checksums",
-    oracle=_manifest_sql("documents"),
+    lambda *, spark: _manifest_sql("{documents}", spark=spark),
     covers=("[EXT]-checksums",),
 )
-def corpus_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] order-independent corpus integrity manifest: per md5
-    bucket, the XOR of each document's (id || normalized-content) hash
-    — XOR is commutative/associative, so the checksum is identical for
-    any partitioning, engine, or visit order, and any single changed /
-    dropped / duplicated document flips its bucket's value. The
-    cheap cross-system answer to 'did the export/copy/migration
-    preserve the corpus byte-for-byte' (compare 100 rows, not 100 TB).
-    One hash-agg shuffle over 100 bucket keys, map-side combined."""
-    return _manifest(load_table(spark, sf_dir, "documents"))
 
 
-#: constructed corruption for the drift detector: every 97th doc gets
-#: one appended token (content flip), every 101st disappears (loss) —
-#: deterministic on both engines, ~5+5 docs at sf0.01 so a handful of
-#: buckets drift while most stay clean at every sf.
-_DRIFT_CURR_SQL = """SELECT doc_id,
-           CASE WHEN doc_id % 97 = 0 THEN text || ' x' ELSE text END AS text
-    FROM documents WHERE doc_id % 101 <> 0"""
-
-
-@register(
+# [EXT] manifest-diff corruption detector: build the bucket-XOR
+# manifest of the corpus and of a deterministically corrupted twin
+# (every 97th doc modified, every 101st dropped — the constructed-
+# corpus pattern), full-outer join the two 100-row manifests, and emit
+# ONLY the drifted buckets with their doc-count delta — the repair
+# scope. This is the operational use of corpus_checksums: after a
+# copy/migration/compaction, compare manifests (100 rows) and re-scan
+# only the buckets that disagree, never the 100 TB. Scale: two manifest
+# aggs (each one 100-key hash-agg, map-side combined) + a 100-row join;
+# the corrupted side here is derived in-plan, in production it is the
+# other system's manifest.
+register_sql(
     "checksum_drift_detect",
-    oracle=f"""
-    WITH curr AS ({_DRIFT_CURR_SQL}),
-    mb AS ({_manifest_sql('documents')}),
-    mc AS ({_manifest_sql('curr')})
+    lambda *, spark: f"""
+    WITH curr AS (
+      SELECT doc_id,
+             CASE WHEN doc_id % 97 = 0 THEN text || ' x' ELSE text END AS text
+      FROM {{documents}} WHERE doc_id % 101 <> 0
+    ),
+    mb AS ({_manifest_sql('{documents}', spark=spark)}),
+    mc AS ({_manifest_sql('curr', spark=spark)})
     SELECT COALESCE(mb.bucket, mc.bucket) AS bucket,
            COALESCE(mb.n_docs, 0) AS n_base,
            COALESCE(mc.n_docs, 0) AS n_curr,
@@ -1142,44 +998,6 @@ _DRIFT_CURR_SQL = """SELECT doc_id,
     """,
     covers=("[EXT]-checksums", "§2.9-setops"),
 )
-def checksum_drift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] manifest-diff corruption detector: build the bucket-XOR
-    manifest of the corpus and of a deterministically corrupted twin
-    (every 97th doc modified, every 101st dropped — the constructed-
-    corpus pattern), full-outer join the two 100-row manifests, and
-    emit ONLY the drifted buckets with their doc-count delta — the
-    repair scope. This is the operational use of corpus_checksums:
-    after a copy/migration/compaction, compare manifests (100 rows)
-    and re-scan only the buckets that disagree, never the 100 TB.
-
-    Scale: two manifest aggs (each one 100-key hash-agg, map-side
-    combined) + a 100-row join; the corrupted side here is derived
-    in-plan, in production it is the other system's manifest."""
-    docs = load_table(spark, sf_dir, "documents")
-    curr = docs.filter(F.col("doc_id") % 101 != 0).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 97 == 0, F.concat(F.col("text"), F.lit(" x"))
-        ).otherwise(F.col("text")),
-    )
-    mb = _manifest(docs)
-    mc = _manifest(curr)
-    j = mb.alias("b").join(mc.alias("c"), "bucket", "full")
-    return (
-        j.filter(
-            F.expr("b.xor_hash IS DISTINCT FROM c.xor_hash")
-            | F.expr("b.n_docs IS DISTINCT FROM c.n_docs")
-        )
-        .select(
-            "bucket",
-            F.coalesce(F.col("b.n_docs"), F.lit(0)).alias("n_base"),
-            F.coalesce(F.col("c.n_docs"), F.lit(0)).alias("n_curr"),
-            (
-                F.coalesce(F.col("b.n_docs"), F.lit(0))
-                - F.coalesce(F.col("c.n_docs"), F.lit(0))
-            ).alias("n_delta"),
-        )
-    )
 
 
 @register(
@@ -1788,9 +1606,10 @@ def _hrw_weight_sql(key: str, shard: int, *, spark: bool) -> str:
     return md5_int_sql(f"CAST({key} AS STRING) || ':{shard}'", 8, spark=spark)
 
 
-def _hrw_oracle() -> str:
+
+def _hrw_sql(*, spark: bool) -> str:
     n = HRW_SHARDS
-    w = [_hrw_weight_sql("doc_id", s, spark=False) for s in range(n + 1)]
+    w = [_hrw_weight_sql("doc_id", s, spark=spark) for s in range(n + 1)]
     greatest_n = "greatest(" + ", ".join(w[:n]) + ")"
     # argmax by weight with shard-index tiebreak (lowest shard wins on
     # equal weights — ties are astronomically unlikely but must be
@@ -1802,7 +1621,7 @@ def _hrw_oracle() -> str:
     WITH assigned AS (
       SELECT {case_n} AS shard,
              ({w[n]} > {greatest_n}) AS moves
-      FROM documents
+      FROM {{documents}}
     )
     SELECT shard,
            COUNT(*) AS n_docs,
@@ -1813,41 +1632,21 @@ def _hrw_oracle() -> str:
     """
 
 
-@register(
+# [EXT] rendezvous (highest-random-weight) sharding audit: per HRW
+# shard its document count AND how many of its documents would move
+# when a 9th shard joins. HRW is the shard-assignment law an
+# incremental 100 TB corpus wants instead of `hash % N`: on a resize,
+# mod-N reassigns ~ (N-1)/N of ALL documents (every bucket renumbers)
+# while HRW moves exactly the docs whose new-shard weight wins —
+# E[moved] = 1/(N+1), and they ALL move to the new shard, so no
+# existing shard ever exchanges data with another. The audit
+# value-checks both properties: per-shard balance (uniform md5
+# weights) and the ~1/9 moving fraction. Plan: one corpus projection
+# computing N+1 md5 weights per row + one hash agg — zero joins, zero
+# windows. Weights are exact integers; moving_frac is an exact-integer
+# IEEE quotient, unrounded.
+register_sql(
     "hrw_sharding_audit",
-    oracle=_hrw_oracle(),
+    _hrw_sql,
     covers=("[EXT]-packing-sharded", "§2.4-agg"),
 )
-def hrw_sharding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[EXT] rendezvous (highest-random-weight) sharding audit: per
-    HRW shard its document count AND how many of its documents would
-    move when a 9th shard joins. HRW is the shard-assignment law an
-    incremental 100 TB corpus wants instead of `hash % N`: on a
-    resize, mod-N reassigns ~ (N-1)/N of ALL documents (every bucket
-    renumbers) while HRW moves exactly the docs whose new-shard weight
-    wins — E[moved] = 1/(N+1), and they ALL move to the new shard, so
-    no existing shard ever exchanges data with another. The audit
-    value-checks both properties: per-shard balance (uniform md5
-    weights) and the ~1/9 moving fraction.
-
-    Plan: one corpus projection computing N+1 md5 weights per row +
-    one hash agg — zero joins, zero windows. Determinism: weights are
-    exact integers; the argmax CASE carries a lowest-shard tiebreak;
-    moving_frac is an exact-integer IEEE quotient, unrounded."""
-    n = HRW_SHARDS
-    w = [_hrw_weight_sql("doc_id", s, spark=True) for s in range(n + 1)]
-    greatest_n = "greatest(" + ", ".join(w[:n]) + ")"
-    case_n = "CASE " + " ".join(
-        f"WHEN {w[s]} = {greatest_n} THEN {s}" for s in range(n)
-    ) + " END"
-    docs = load_table(spark, sf_dir, "documents")
-    assigned = docs.selectExpr(
-        f"{case_n} AS shard", f"({w[n]} > {greatest_n}) AS moves"
-    )
-    return assigned.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.col("moves").cast("int")).cast("bigint").alias("n_moving"),
-        (
-            F.sum(F.col("moves").cast("int")) / F.count(F.lit(1)).cast("double")
-        ).alias("moving_frac"),
-    )

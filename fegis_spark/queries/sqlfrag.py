@@ -16,6 +16,25 @@ oracle interpolate the same recipe and cannot drift:
 * ts_sql — events.ts as an ordering/output column: Spark reads it as
   TIMESTAMP_NTZ already, DuckDB casts its TIMESTAMP_NS down.
 
+The dialect generators spell one SQL construct whose name or syntax
+differs between the engines while its value does not; a register_sql
+text (catalog.py) interpolates them. Use a spelling both engines
+accept first (max_by, CAST(.. AS STRING), percentile_cont(p) WITHIN
+GROUP (ORDER BY x), CAST(floor(a / b) AS BIGINT), CAST(date - date AS
+BIGINT) days, a filtering subquery for QUALIFY), and a generator only
+where none exists:
+
+* epoch_us_sql — microseconds since the epoch (unix_micros / epoch_us);
+* json_str_sql — a JSON path as text (get_json_object /
+  json_extract_string);
+* ignore_nulls_sql — a window value function skipping NULLs (Spark puts
+  IGNORE NULLS after the call, DuckDB inside it);
+* series_sql — one row per element of an arithmetic series
+  (explode(sequence) / unnest(generate_series));
+* isodow_sql — the ISO day of the week, Monday = 1;
+* rows_sql — several named-column rows out of one row, without a scan
+  or a join (inline(array(named_struct)) / unnest([struct_pack], recursive)).
+
 The text_analysis scorers (operators/text_analysis.py) are generators
 of the same shape. ``spark`` is keyword-only with no default, so no
 caller gets a dialect by accident; lambda variables start with ``_``
@@ -35,6 +54,62 @@ def ts_sql(*, spark: bool) -> str:
     the output type into TIMESTAMP. DuckDB reads TIMESTAMP_NS and
     casts to TIMESTAMP (microseconds, the same truncation)."""
     return "ts" if spark else "CAST(ts AS TIMESTAMP)"
+
+
+def epoch_us_sql(x: str, *, spark: bool) -> str:
+    """Microseconds since 1970-01-01 of timestamp expression `x`, a
+    BIGINT. Spark's unix_micros takes a TIMESTAMP (the session is UTC,
+    so a TIMESTAMP_NTZ casts to the same instant); DuckDB's epoch_us."""
+    return f"{'unix_micros' if spark else 'epoch_us'}(CAST({x} AS TIMESTAMP))"
+
+
+def json_str_sql(doc: str, path: str, *, spark: bool) -> str:
+    """The value at JSON `path` of text expression `doc` as a string
+    (a number as its text, a missing key as NULL)."""
+    fn = "get_json_object" if spark else "json_extract_string"
+    return f"{fn}({doc}, '{path}')"
+
+
+def ignore_nulls_sql(fn: str, x: str, *, spark: bool) -> str:
+    """Window value function `fn` (first_value, last_value) over `x`
+    skipping NULLs, to be followed by an OVER clause."""
+    return f"{fn}({x}) IGNORE NULLS" if spark else f"{fn}({x} IGNORE NULLS)"
+
+
+def series_sql(lo: str, hi: str, step: str, *, spark: bool) -> str:
+    """A select-list generator: one row per element of lo, lo + step,
+    ... up to hi inclusive (`step` positive), no row when hi < lo or
+    either is NULL. It must stand alone in its select item (Spark nests
+    no generator in an expression), so cast its column in an outer
+    query. Over dates DuckDB yields TIMESTAMPs, Spark DATEs. Spark's
+    sequence raises on hi < lo, so its spelling explodes NULL there."""
+    if spark:
+        return f"explode(CASE WHEN {hi} >= {lo} THEN sequence({lo}, {hi}, {step}) END)"
+    return f"unnest(generate_series({lo}, {hi}, {step}))"
+
+
+def isodow_sql(d: str, *, spark: bool) -> str:
+    """ISO day of the week of date/timestamp `d`: Monday = 1 ... Sunday
+    = 7 (Spark INT, DuckDB BIGINT)."""
+    return f"extract(DAYOFWEEK_ISO FROM {d})" if spark else f"isodow({d})"
+
+
+def rows_sql(rows: list[dict[str, str]], *, spark: bool) -> str:
+    """A select-list generator turning each input row into len(rows)
+    rows, one per dict of output column -> SQL expression (every dict
+    has the same columns in the same order, with one type per column):
+    an unpivot that reads its input once, with no join and no Expand."""
+    if spark:
+        structs = ", ".join(
+            "named_struct(" + ", ".join(f"'{k}', {v}" for k, v in r.items()) + ")"
+            for r in rows
+        )
+        return f"inline(array({structs}))"
+    structs = ", ".join(
+        "struct_pack(" + ", ".join(f"{k} := {v}" for k, v in r.items()) + ")"
+        for r in rows
+    )
+    return f"unnest([{structs}], recursive := true)"
 
 
 def md5_int_sql(x: str, k: int, *, spark: bool) -> str:

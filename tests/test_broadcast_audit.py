@@ -50,6 +50,11 @@ def test_unmarked_sql_window_or_hint_is_a_finding():
     glob = "SELECT SUM(n) OVER (ORDER BY day) AS c FROM d"
     assert len(got(glob)) == 1
     assert not got(glob + " -- window-ok: one row per day")
+    # a named window is held to the same rules on its WINDOW line
+    named = "SELECT rank() OVER w AS r FROM {orders}\nWINDOW w AS (PARTITION BY p ORDER BY x)"
+    assert len(got(named)) == 1 and "(sql line 2)" in got(named)[0]
+    assert not got(named.replace("WINDOW", "-- panel-ok: 5 priorities\nWINDOW"))
+    assert len(got("SELECT SUM(n) OVER w AS c FROM d WINDOW w AS (ORDER BY day)")) == 1
     hint = "SELECT /*+ BROADCAST(n) */ * FROM {lineitem} l JOIN {nation} n ON 1 = 1"
     assert len(got(hint)) == 1
     assert not got("-- bcast-ok: 25 nations\n" + hint)

@@ -8,15 +8,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from fegis_spark.queries.pipeline_q import (
-    PACK_BUDGET,
-    SAMPLE_RATES,
-    pack_sequences,
-    stratified_sample,
-    train_test_split,
-)
+from fegis_spark.catalog import catalog
+from fegis_spark.queries.pipeline_q import PACK_BUDGET, SAMPLE_RATES, pack_sequences
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def train_test_split(spark, sf_dir):
+    return catalog()["train_test_split"].builder(spark, sf_dir)
+
+
+def stratified_sample(spark, sf_dir):
+    return catalog()["stratified_sample"].builder(spark, sf_dir)
 
 
 def test_split_covers_all_docs_and_is_roughly_80_10_10(spark):

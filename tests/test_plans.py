@@ -43,9 +43,46 @@ def test_scan_prunes_columns(spark, cat):
     assert reads and "props" not in reads[0], reads
 
 
+def _dims_broadcast(plan: str) -> bool:
+    """Every join of the plan is a broadcast hash join: the dimension
+    side meets the fact table without shuffling it."""
+    return "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+
+
 def test_star_join_broadcasts_dims(spark, cat):
     p = formatted_plan(spark, cat, "revenue_by_nation")
-    assert "BroadcastHashJoin" in p
+    assert _dims_broadcast(p), p
+
+
+def test_star_join_pin_catches_a_sort_merged_dim_side(spark):
+    """The pin above fails on the text that pre-joins customer x nation
+    x region in one CTE: without CBO that side's size estimate is the
+    product of its inputs, so it meets the fact side by SortMergeJoin
+    while the nation and region joins inside it still broadcast."""
+    from fegis_spark.catalog import sql_entry
+
+    cte = sql_entry(
+        "revenue_by_nation_cnr",
+        """
+        WITH cnr AS (
+          SELECT c.c_custkey, n.n_name
+          FROM {customer} c
+          JOIN {nation} n ON c.c_nationkey = n.n_nationkey
+          JOIN {region} r ON n.n_regionkey = r.r_regionkey
+          WHERE r.r_name IN ('ASIA', 'EUROPE')
+        )
+        SELECT cnr.n_name AS nation,
+               CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
+               COUNT(*) AS n_items
+        FROM {lineitem} l
+        JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+        JOIN cnr ON o.o_custkey = cnr.c_custkey
+        WHERE o.o_orderstatus = 'F'
+        GROUP BY cnr.n_name
+        """,
+    )
+    p = formatted_plan(spark, {cte.name: cte}, cte.name)
+    assert "BroadcastHashJoin" in p and not _dims_broadcast(p), p
 
 
 def test_knn_topk_fuses(spark, cat):

@@ -349,23 +349,28 @@ def test_percentile_interpolation_engine_agreement(spark, vals):
     interpolation lower + (upper-lower)*frac BITWISE — the guarantee
     behind every quantile-emitting oracle (quantiles_by_type,
     quality_median_gate, anomaly_mad, funnel latency percentiles,
-    curriculum cutpoints), which all ship UNROUNDED since r8."""
+    curriculum cutpoints), which all ship UNROUNDED since r8. The
+    spelling both engines accept, percentile_cont(p) WITHIN GROUP
+    (ORDER BY x) (the one-text queries), gives the same bits."""
     import struct
 
+    ps = (0.1, 0.25, 0.5, 0.75, 0.9, 0.95)
+    common = ", ".join(f"percentile_cont({p}) WITHIN GROUP (ORDER BY x)" for p in ps)
     vals = [float(v) for v in vals]
-    sv = (
+    row = (
         spark.createDataFrame([(v,) for v in vals], "x double")
         .selectExpr(
-            "percentile(x, array(0.1D, 0.25D, 0.5D, 0.75D, 0.9D, 0.95D)) AS p"
+            "percentile(x, array(0.1D, 0.25D, 0.5D, 0.75D, 0.9D, 0.95D)) AS p",
+            f"array({common}) AS pc",
         )
-        .collect()[0]["p"]
+        .collect()[0]
     )
     con = duckdb.connect()
     con.execute("CREATE TABLE qt (x DOUBLE)")
     con.executemany("INSERT INTO qt VALUES (?)", [(v,) for v in vals])
-    dv = con.execute(
-        "SELECT quantile_cont(x, [0.1, 0.25, 0.5, 0.75, 0.9, 0.95]) FROM qt"
-    ).fetchall()[0][0]
+    dv, dpc = con.execute(
+        f"SELECT quantile_cont(x, [0.1, 0.25, 0.5, 0.75, 0.9, 0.95]), [{common}] FROM qt"
+    ).fetchall()[0]
 
     def norm(v: float) -> bytes:
         # signed zero: interpolating between -0.0 and 0.0 yields -0.0
@@ -374,7 +379,9 @@ def test_percentile_interpolation_engine_agreement(spark, vals):
         # bitwise-up-to-signed-zero
         return struct.pack("<d", v + 0.0 if v == 0 else v)
 
-    assert [norm(a) for a in sv] == [norm(b) for b in dv]
+    want = [norm(b) for b in dv]
+    for got in (row["p"], row["pc"], dpc):
+        assert [norm(a) for a in got] == want
 
 
 VEC64 = st.lists(

@@ -137,7 +137,8 @@ def test_checksum_drift_buckets_attributed(spark):
     corrupted/dropped doc ids — detection is exact, with no false
     positives from clean buckets."""
     from fegis_spark.model import load_table
-    from fegis_spark.queries.pipeline_q import _bucket_sql, checksum_drift_detect
+    from fegis_spark.catalog import catalog
+    from fegis_spark.queries.pipeline_q import _bucket_sql
 
     docs = load_table(spark, SF_DIR, "documents")
     expected = {
@@ -149,20 +150,21 @@ def test_checksum_drift_buckets_attributed(spark):
         .distinct()
         .collect()
     }
-    got = {r["bucket"] for r in checksum_drift_detect(spark, SF_DIR).collect()}
+    drift = catalog()["checksum_drift_detect"].builder(spark, SF_DIR)
+    got = {r["bucket"] for r in drift.collect()}
     assert got == expected and expected
 
 
 def test_funnel_latency_consistent_with_counts(spark):
     """The latency query's per-transition user counts must equal the
-    conversion query's stage counts — both interpolate one shared
-    stage recipe, and this pins the latency builder's Spark stages to
-    the shared recipe the conversion query runs as SQL."""
+    conversion query's stage counts — both texts interpolate one shared
+    stage CTE."""
     from fegis_spark.catalog import catalog
-    from fegis_spark.queries.aggregates import funnel_time_to_convert
 
-    counts = catalog()["funnel_conversion"].builder(spark, SF_DIR).collect()[0]
-    lat = {r["transition"]: r for r in funnel_time_to_convert(spark, SF_DIR).collect()}
+    cat = catalog()
+    counts = cat["funnel_conversion"].builder(spark, SF_DIR).collect()[0]
+    latency = cat["funnel_time_to_convert"].builder(spark, SF_DIR)
+    lat = {r["transition"]: r for r in latency.collect()}
     assert lat["view_to_click"]["n_users"] == counts["n_clicked_after"]
     assert lat["click_to_purchase"]["n_users"] == counts["n_purchased_after"]
     for r in lat.values():

@@ -112,14 +112,15 @@ CAP_ARG = re.compile(r"max_bucket_size\s*=\s*(?!None\b)\S")
 #: the same rules over a register_sql text: (clause, marker, what to say)
 SQL_RULES = (
     (
-        re.compile(r"\bOVER\s*\(\s*PARTITION\s+BY\b", re.I),
+        # OVER (PARTITION BY ..., or a named window: WINDOW w AS (PARTITION BY
+        re.compile(r"\b(?:OVER|AS)\s*\(\s*PARTITION\s+BY\b", re.I),
         re.compile(r"--\s*(?:grpwin-ok|panel-ok):\s*\S"),
         "partitioned window without a '-- grpwin-ok: <scaling arg>' or "
         "'-- panel-ok: <mechanism/bound>' marker",
         "pwindows",
     ),
     (
-        re.compile(r"\bOVER\s*\(\s*ORDER\s+BY\b", re.I),
+        re.compile(r"\b(?:OVER|AS)\s*\(\s*ORDER\s+BY\b", re.I),
         re.compile(r"--\s*window-ok:\s*\S"),
         "global window (OVER (ORDER BY with no PARTITION BY) without a "
         "'-- window-ok: <bound>' marker",

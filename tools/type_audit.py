@@ -73,6 +73,20 @@ def _class_of(t: str) -> str:
     return t  # unknown: compare raw, a mismatch will surface it
 
 
+def class_mismatches(s_types: dict[str, str], d_types: dict[str, str]) -> dict:
+    """Per output column whose type class differs between the Spark
+    dtypes and the DuckDB types (a column missing on one side counts):
+    both types and both classes."""
+    bad = {}
+    for c in sorted(set(s_types) | set(d_types)):
+        sc = _class_of(s_types.get(c, "<missing>"))
+        dc = _class_of(d_types.get(c, "<missing>"))
+        if sc != dc:
+            bad[c] = {"spark": s_types.get(c), "duck": d_types.get(c),
+                      "spark_class": sc, "duck_class": dc}
+    return bad
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
@@ -105,14 +119,7 @@ def main() -> int:
             print(f"ERROR {name}: {matrix[name]['error']}")
             continue
         n_checked += 1
-        cols = sorted(set(s_types) | set(d_types))
-        bad = {}
-        for c in cols:
-            sc = _class_of(s_types.get(c, "<missing>"))
-            dc = _class_of(d_types.get(c, "<missing>"))
-            if sc != dc:
-                bad[c] = {"spark": s_types.get(c), "duck": d_types.get(c),
-                          "spark_class": sc, "duck_class": dc}
+        bad = class_mismatches(s_types, d_types)
         matrix[name] = {
             "spark": s_types,
             "duck": d_types,
