@@ -10,7 +10,10 @@ for correctness checks.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -122,6 +125,19 @@ def clear_memos() -> None:
     memo = spark.__dict__.get("_fegis_table_memo", {}) if spark else {}
     for k in [k for k in memo if k[2] is not None]:
         del memo[k]
+
+
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` persisted MEMORY_AND_DISK for the actions inside the
+    block, unpersisted when it exits. For eager operators: a frame
+    returned from the block must not reference ``df`` (a lazy plan
+    over an unpersisted relation recomputes it once per consumer)."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

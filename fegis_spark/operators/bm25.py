@@ -23,11 +23,16 @@ memoized on the driver: every build recomputes the stats from the
 frame it is given, so a rewritten corpus never serves stale idfs.
 
 Caching: the (id, dl, tf_*) projection persists MEMORY_AND_DISK
-because it feeds both the stats aggregate and the scoring pass, and the
-operator returns a LAZY plan that still references it — so it cannot
-unpersist here. The entry stays until LRU eviction or
-spark.catalog.clearCache() (the repo-wide cache-ownership policy; the
-same note sits on every persisting operator).
+because it feeds both the stats aggregate and the scoring pass. Who
+releases it depends on the form:
+- bm25_scores / bm25_topk return a LAZY plan that reads the persisted
+  projection, so they leave it cached: the entry stays until LRU
+  eviction or spark.catalog.clearCache() (the repo-wide cache-ownership
+  policy; the same note sits on every persisting lazy operator);
+- an eager caller persists its own projection (with bm25_tf_sql's
+  columns beside its others), scores it through bm25_score_sql and
+  releases it before it returns (model.persisted) — rrf_hybrid_bm25
+  (queries/search_q.py) leaves nothing cached.
 
 Determinism: all per-row math IEEE double; avgdl goes through
 DECIMAL(38,6) (partition-order-proof mean); idf goes through
@@ -41,7 +46,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # re-exported: perfbench and the tools/ probes import it from here
@@ -51,9 +57,66 @@ K1 = 1.2
 B = 0.75
 
 
-def _term_tf(tok: Column, term: str) -> Column:
-    """Token frequency of an analyzer token in the token array."""
-    return F.size(F.filter(tok, lambda t: t == F.lit(term)))
+def bm25_tf_sql(text_col: str, terms: Sequence[str]) -> list[str]:
+    """The tf projection's columns as SQL text: dl (token count) and
+    tf0..tf{n-1}, one per distinct analyzer token of ``terms``. The
+    repeated tokens_sql text is merged by codegen's common-subexpression
+    elimination."""
+    from fegis_spark.plans.filters import analyzer_tokens
+    from fegis_spark.queries.sqlfrag import tokens_sql
+
+    qterms = list(dict.fromkeys(t for term in terms for t in analyzer_tokens(term)))
+    if not qterms:
+        raise ValueError("bm25_scores: no analyzer tokens in query terms")
+    tok = tokens_sql(text_col, spark=True)
+    return [f"CAST(size({tok}) AS DOUBLE) AS dl"] + [
+        f"CAST(size(filter({tok}, _t -> _t = '{q.replace(chr(39), chr(39) * 2)}')) AS DOUBLE) AS tf{i}"
+        for i, q in enumerate(qterms)
+    ]
+
+
+def bm25_score_sql(tfs: DataFrame, n_terms: int, k1: float = K1, b: float = B) -> str:
+    """The BM25 score of a row of ``tfs`` (dl, tf0..tf{n_terms-1}) as
+    SQL text, with the corpus stats as literals: ONE action collects the
+    1-row stats (avgdl and the portable_ln idfs) of ``tfs``.
+
+    Hoisting the stats to literals keeps the HOF-bearing portable_ln
+    out of the scoring stage: evaluated in-plan on the broadcast side of
+    a BroadcastNestedLoopJoin it disabled the stage's whole-stage
+    codegen and cost the rrf_hybrid_bm25 headline a consistent 1.7x
+    (evidence/bm25_ab_r9.json: 1.12 s in-plan vs 0.28 s hoisted). The
+    stats are not memoized: a build's scores are a pure function of the
+    frame it is given. The literals are BIT-IDENTICAL to the in-plan
+    form (same expressions, evaluated by the same engine, re-entered by
+    double_sql), so the DuckDB oracle is unaffected.
+
+    idf is a function of the stats alone, so it is computed once there
+    via portable_ln (sqlfrag.py), which is bit-identical across engines
+    — native ln is 1 ulp off glibc on ~2.5% of inputs (the midpoint
+    flake class); with every operand identical cross-engine the score
+    ships UNROUNDED. avgdl goes through DECIMAL(38,6) (a
+    partition-order-proof mean)."""
+    from fegis_spark.queries.sqlfrag import double_sql, portable_ln
+
+    n_docs = "CAST(count(*) AS DOUBLE)"
+
+    def idf(i: int) -> str:
+        df_i = f"sum(CAST(tf{i} > 0 AS DOUBLE))"
+        return portable_ln(f"1.0D + ({n_docs} - {df_i} + 0.5D) / ({df_i} + 0.5D)", spark=True)
+
+    stats = tfs.selectExpr(
+        "CAST(sum(CAST(dl AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS avgdl",
+        *[f"{idf(i)} AS idf{i}" for i in range(n_terms)],
+    ).collect()[0]
+    # Empty corpus: the aggregates are NULL; placeholders keep the
+    # expression well-typed (tfs is empty, so no row is scored).
+    avgdl = double_sql(stats["avgdl"] if stats["avgdl"] is not None else 1.0)
+    norm = f"{1.0 - b!r}D + {b!r}D * dl / {avgdl}"
+    return " + ".join(
+        f"{double_sql(idf if idf is not None else 0.0)} * tf{i} * {k1 + 1.0!r}D"
+        f" / (tf{i} + {k1!r}D * ({norm}))"
+        for i, idf in ((i, stats[f"idf{i}"]) for i in range(n_terms))
+    )
 
 
 def bm25_scores(
@@ -65,110 +128,18 @@ def bm25_scores(
     b: float = B,
 ) -> DataFrame:
     """(id, score) for every document with score > 0 — feed into a
-    TakeOrdered for top-k (bm25_topk) or into an RRF fusion.
-    The lambda-t token-equality filters keep _term_tf's exact
-    semantics (tests/test_search.py pins the reference formula).
-
-    The 1-row corpus stats (avgdl + portable_ln idfs) are collected in
-    one bounded driver round-trip per build and re-entered as double
-    literals — the classifier/BPE precedent. Evaluating the idfs
-    in-plan on the broadcast side of a BroadcastNestedLoopJoin put the
-    HOF-bearing portable_ln expression in the scoring stage, which
-    disabled its whole-stage codegen and cost the rrf_hybrid_bm25
-    headline a consistent 1.7x (A/B in evidence/bm25_ab_r9.json:
-    1.12 s in-plan vs 0.28 s hoisted). The stats are not memoized: a
-    build's scores are a pure function of the frame it is given. The
-    literal values are BIT-IDENTICAL to the in-plan form (same
-    portable_ln expression, evaluated by the same engine; py4j
-    re-enters doubles via shortest-repr + correctly-rounded
-    parseDouble), so the DuckDB oracle is unaffected."""
-    from fegis_spark.plans.filters import analyzer_tokens
-
-    qterms: list[str] = []
-    for t in terms:
-        qterms.extend(analyzer_tokens(t))
-    qterms = list(dict.fromkeys(qterms))
-    if not qterms:
-        raise ValueError("bm25_scores: no analyzer tokens in query terms")
-
-    from pyspark import StorageLevel
-
-    # ONE parsed SQL projection instead of a py4j Column chain (the
-    # *_expr fast-path convention): the repeated tok_sql text is
-    # deduplicated by codegen's common-subexpression elimination, same
-    # as the repeated Column reference was.
-    from fegis_spark.queries.sqlfrag import tokens_sql
-
-    tok_sql = tokens_sql(text_col, spark=True)
-    tfs = df.selectExpr(
-        f"{id_col} AS id",
-        f"CAST(size({tok_sql}) AS DOUBLE) AS dl",
-        *[
-            "CAST(size(filter({t}, t -> t = '{q}')) AS DOUBLE) AS tf{i}".format(
-                t=tok_sql, q=term.replace("'", "''"), i=i
-            )
-            for i, term in enumerate(qterms)
-        ],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    n = len(qterms)
-    # idf is a function of the 1-row stats alone, so it is computed
-    # ONCE there (not per corpus row) via portable_ln (sqlfrag.py),
-    # which is bit-identical across engines — native ln is 1 ulp off
-    # glibc on ~2.5% of inputs (the midpoint flake class); with every
-    # operand identical cross-engine the score ships UNROUNDED
-    from fegis_spark.queries.sqlfrag import portable_ln
-
-    base_stats = tfs.agg(
-        F.count("*").cast("double").alias("n_docs"),
-        (
-            F.sum(F.col("dl").cast("decimal(38,6)")).cast("double") / F.count("*")
-        ).alias("avgdl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("double")).alias(f"df{i}")
-            for i in range(n)
-        ],
-    )
-    srow = (
-        base_stats.select(
-            "avgdl",
-            *[
-                (
-                    1.0
-                    + (F.col("n_docs") - F.col(f"df{i}") + 0.5)
-                    / (F.col(f"df{i}") + 0.5)
-                ).alias(f"arg{i}")
-                for i in range(n)
-            ],
-        )
-        .select(
-            "avgdl",
-            *[
-                F.expr(portable_ln(f"arg{i}", spark=True)).alias(f"idf{i}")
-                for i in range(n)
-            ],
-        )
-        .collect()[0]
-    )
-    # Empty corpus: the aggregates are NULL; placeholders keep the
-    # projection well-typed (tfs is empty, so the output is empty
-    # either way — tests/test_empty_inputs.py).
-    avgdl_v = F.lit(float(srow["avgdl"]) if srow["avgdl"] is not None else 1.0)
-    idf_v = [
-        F.lit(float(srow[f"idf{i}"]) if srow[f"idf{i}"] is not None else 0.0)
-        for i in range(n)
-    ]
-
-    def term_score(i: int) -> Column:
-        tf = F.col(f"tf{i}")
-        norm = tf + k1 * (1.0 - b + b * F.col("dl") / avgdl_v)
-        return idf_v[i] * tf * (k1 + 1.0) / norm
-
-    score = None
-    for i in range(n):
-        s = term_score(i)
-        score = s if score is None else score + s
-    return tfs.select("id", score.alias("score")).filter(F.col("score") > 0)
+    TakeOrdered for top-k (bm25_topk). Three SQL texts, one selectExpr
+    each: the tf projection (bm25_tf_sql, persisted: it feeds both the
+    stats and the scoring pass), the stats row and the score
+    (bm25_score_sql). The returned plan is lazy and reads the persisted
+    projection, so the projection stays cached after the call (until
+    LRU eviction or spark.catalog.clearCache()); an eager caller that
+    persists its own projection instead owns and releases it
+    (queries/search_q.rrf_hybrid_bm25)."""
+    tf = bm25_tf_sql(text_col, terms)
+    tfs = df.selectExpr(f"{id_col} AS id", *tf).persist(StorageLevel.MEMORY_AND_DISK)
+    score = bm25_score_sql(tfs, len(tf) - 1, k1, b)
+    return tfs.selectExpr("id", f"{score} AS score").where("score > 0")
 
 
 def bm25_topk(

@@ -7,27 +7,43 @@ occurrence count), fused as 1/(K+r_dense) + 1/(K+r_lex) with the
 canonical K=60. Ranks have id tiebreaks, so the fusion is fully
 deterministic and oracle-checkable.
 
-Neither form plans a WindowExec: ``rrf_fuse`` keeps corpus-wide-rank
-semantics by ranking only a provably-sufficient candidate pool
-(TakeOrdered pools + broadcast count-joins for exact global ranks);
-``rrf_fuse_pooled`` ranks inside constant-size pools via the
-window-free ranked_topk. An unpartitioned ``row_number`` window over
-the corpus — the naive spelling — funnels every row through one task
-and is exactly what these plans exist to avoid.
+Both forms take the same steps — each leg's bounded candidate set is
+computed on the cluster and merged by the driver, the client-side
+fusion of qdrant-client and the coordinator merge of REPOSE:
+
+1. score the corpus once into a persisted (id, dense, lex) projection;
+2. collect the two top-`pool` legs in ONE action: at most 2·pool rows,
+   each leg in Spark's (value DESC, id) order, so a row's position in
+   its leg is its rank. Ranks are never re-sorted in Python, whose
+   order of NaN, -0.0 and NULL is not Spark's;
+3. ``rrf_fuse`` only: the exact corpus-wide rank of each candidate
+   missing from a leg, from ONE count aggregate of the projection
+   against those candidates entered as a literal table;
+4. fuse on the driver, unpersist the projection and return the top-k
+   as a typed VALUES frame.
+
+The corpus is scanned once and never shuffled, the driver holds at
+most 2·pool rows, and no executed plan has a WindowExec (an
+unpartitioned ``row_number`` over the corpus — the naive spelling —
+funnels every row through one task). The operators are eager: the
+returned frame references nothing cached, so nothing they persist
+outlives the call.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from fegis_spark.functions.vector import cosine_lit_sql
+from fegis_spark.model import persisted
 from fegis_spark.operators.text_analysis import occurrences_sql, padded_sql
-from fegis_spark.operators.topk import ranked_topk
+from fegis_spark.queries.sqlfrag import double_sql
 
 RRF_K = 60
+_LEGS = ("dense", "lex")
 
 
 def lexical_score_sql(text_col: str, terms: Sequence[str], *, spark: bool) -> str:
@@ -43,6 +59,14 @@ def lexical_score_sql(text_col: str, terms: Sequence[str], *, spark: bool) -> st
     )
 
 
+def _scored(df, id_col, vec_col, text_col, query_vec, query_terms) -> DataFrame:
+    return df.selectExpr(
+        f"{id_col} AS id",
+        cosine_lit_sql(vec_col, query_vec) + " AS dense",
+        lexical_score_sql(text_col, query_terms, spark=True) + " AS lex",
+    )
+
+
 def rrf_fuse(
     df: DataFrame,
     id_col: str,
@@ -53,84 +77,24 @@ def rrf_fuse(
     k: int = 10,
     rrf_k: int = RRF_K,
     pool: int | None = None,
-    cache_intermediate: bool = True,
 ) -> DataFrame:
     """Hybrid search with corpus-wide rank semantics — r_dense/r_lex are
-    each doc's rank over the FULL corpus — via a bounded-candidate plan.
+    each doc's rank over the FULL corpus — from a bounded candidate set.
 
     Exactness: a non-candidate doc has both ranks > pool, so its fused
     score is at most 2/(rrf_k+pool+1), while the dense-top r docs each
     score at least 1/(rrf_k+r); 1/(rrf_k+r) > 2/(rrf_k+pool+1) holds
     for all r < (pool+1-rrf_k)/2, so with pool >= 2k + rrf_k + 1 at
     least k candidates beat every non-candidate and the global top-k
-    lies inside the candidate union. Ranks themselves are exact by
-    construction (count of rows strictly ahead, same (value desc, id)
-    total order as row_number).
-
-    Plan: two TakeOrderedAndProject pools (per-partition heaps), then
-    two broadcast theta-count-joins of the corpus against the <=2*pool
-    candidates — no WindowExec, no global sort, the corpus never
-    shuffles (the count aggregate is map-side combined down to <=2*pool
-    rows).
-
-    cache_intermediate persists the scored projection (id, dense, lex —
-    ~24 bytes/row, ~1% of corpus width), which the plan otherwise
-    re-derives once per pool and once per rank join: four scans of the
-    corpus plus four cosine passes become one. At warehouse scale you
-    would materialize it to a scratch table instead. The returned plan
-    still references the cache, so the operator cannot unpersist it; it
-    stays until LRU eviction or spark.catalog.clearCache() (the
-    repo-wide cache-ownership policy).
-    """
+    lies inside the candidate union. A rank missing from a leg is
+    exact by construction: 1 + the count of rows strictly ahead in the
+    same (value DESC, id) total order as row_number."""
     if pool is None:
         pool = max(100, 2 * k + rrf_k + 1)
-    scored = df.selectExpr(
-        f"{id_col} AS id",
-        cosine_lit_sql(vec_col, query_vec) + " AS dense",
-        lexical_score_sql(text_col, query_terms, spark=True) + " AS lex",
-    )
-    if cache_intermediate:
-        from pyspark import StorageLevel
-
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-    dc = scored.orderBy(F.desc("dense"), F.col("id")).limit(pool)
-    lc = scored.orderBy(F.desc("lex"), F.col("id")).limit(pool)
-    # pools carry identical full rows for the same id, so distinct()
-    # on the whole row dedupes the union
-    cand = dc.union(lc).distinct()
-
-    def global_rank(val: str, rank_name: str) -> DataFrame:
-        s, c = scored.alias("s"), cand.alias("c")
-        ahead = (F.col(f"s.{val}") > F.col(f"c.{val}")) | (
-            (F.col(f"s.{val}") == F.col(f"c.{val}")) & (F.col("s.id") < F.col("c.id"))
-        )
-        return (
-            s.join(F.broadcast(c), ahead)  # bcast-ok: pooled top-(2k+rrf_k) candidate counts
-            .groupBy(F.col("c.id").alias("id"))
-            .agg((F.count("*") + 1).cast("bigint").alias(rank_name))
-        )
-
-    fused = (
-        cand.select("id")
-        .join(global_rank("dense", "r_dense"), "id", "left")
-        .join(global_rank("lex", "r_lex"), "id", "left")
-        .select(
-            "id",
-            # absent from the count-join = zero rows ahead = rank 1
-            F.coalesce("r_dense", F.lit(1)).cast("bigint").alias("r_dense"),
-            F.coalesce("r_lex", F.lit(1)).cast("bigint").alias("r_lex"),
-        )
-        .withColumn(
-            # UNROUNDED: ranks are exact integers, so the reciprocal
-            # sum is a bit-identical IEEE double on both engines;
-            # round(x, 6) would put it in the midpoint tie-break class
-            "rrf",
-            1.0 / (rrf_k + F.col("r_dense")) + 1.0 / (rrf_k + F.col("r_lex")),
-        )
-    )
-    return fused.orderBy(F.desc("rrf"), F.col("id")).limit(k).select(
-        "id", "r_dense", "r_lex", "rrf"
-    )
+    with persisted(
+        _scored(df, id_col, vec_col, text_col, query_vec, query_terms)
+    ) as scored:
+        return fuse_legs(scored, k, pool, rrf_k, exact=True)
 
 
 def rrf_fuse_pooled(
@@ -144,53 +108,139 @@ def rrf_fuse_pooled(
     pool: int = 100,
     rrf_k: int = RRF_K,
 ) -> DataFrame:
-    """Scale-path hybrid search: top-`pool` per modality first (each a
-    TakeOrderedAndProject over the corpus — per-partition heaps, no
-    global sort), then rank inside the constant-size pools via the
-    window-free ranked_topk and fuse.
-
-    A doc's rank within its top-`pool` equals its global rank, so for
-    docs present in a pool the RRF contribution is identical to the
+    """Scale-path hybrid search: ranks inside the top-`pool` of each
+    modality. A doc's rank within its pool equals its global rank, so
+    for docs present in a pool the RRF contribution is identical to the
     all-corpus form (rrf_fuse); a doc absent from a modality's pool
     contributes 0 for that modality (the standard candidate-pool RRF
-    convention). Corpus-size work is two scans + two top-k heaps, or
-    one scan of the persisted scored projection, which — as in
-    rrf_fuse — outlives the call until LRU eviction or
-    spark.catalog.clearCache()."""
-    scored = df.selectExpr(
-        f"{id_col} AS id",
-        cosine_lit_sql(vec_col, query_vec) + " AS dense",
-        lexical_score_sql(text_col, query_terms, spark=True) + " AS lex",
-    )
-    from pyspark import StorageLevel
+    convention), so no rank aggregate runs."""
+    with persisted(
+        _scored(df, id_col, vec_col, text_col, query_vec, query_terms)
+    ) as scored:
+        return fuse_legs(scored, k, pool, rrf_k)
 
-    scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
-    dpool = ranked_topk(scored.select("id", "dense"), "dense", "id", pool, "r_dense")
-    lpool = ranked_topk(scored.select("id", "lex"), "lex", "id", pool, "r_lex")
-    # union + max-agg outer merge: pool ids are unique, and full outer
-    # can't broadcast (it would plan a SortMergeJoin over the pools)
-    fused = (
-        dpool.select(
-            "id",
-            F.col("r_dense").cast("bigint").alias("r_dense"),
-            F.lit(None).cast("bigint").alias("r_lex"),
+
+def fuse_legs(
+    scored: DataFrame,
+    k: int,
+    pool: int,
+    rrf_k: int = RRF_K,
+    *,
+    exact: bool = False,
+    lex_where: str | None = None,
+    rank_names: tuple[str, str] = ("r_dense", "r_lex"),
+) -> DataFrame:
+    """RRF top-k of `scored` (id, dense, lex) as a VALUES frame
+    (id, <rank_names>, rrf), steps 2-4 of the module doc. The caller
+    owns `scored`'s persist. `lex_where` (SQL over `lex`, pooled form
+    only) gates which rows may enter the lexical leg. With `exact`, a
+    candidate missing from a leg gets its corpus-wide rank (rrf_fuse);
+    without it, no rank (NULL) and no contribution (the pooled form).
+    The rrf sum is the same IEEE double ops as the SQL
+    1.0/(rrf_k + r) + ..., so it is bit-identical to the oracles' and
+    ships UNROUNDED (round(x, 6) would put it in the midpoint tie-break
+    class)."""
+    if exact and lex_where:
+        raise ValueError("fuse_legs: lex_where gates the pooled form only")
+    spark = scored.sparkSession
+
+    def leg(df: DataFrame, tag: int) -> DataFrame:
+        col = _LEGS[tag]
+        return (
+            df.orderBy(F.desc(col), F.asc("id"))
+            .limit(pool)
+            .selectExpr(f"{tag} AS leg", "id", "dense", "lex")
         )
-        .union(
-            lpool.select(
-                "id",
-                F.lit(None).cast("bigint").alias("r_dense"),
-                F.col("r_lex").cast("bigint").alias("r_lex"),
-            )
-        )
-        .groupBy("id")
-        .agg(F.max("r_dense").alias("r_dense"), F.max("r_lex").alias("r_lex"))
-        .withColumn(
-            # UNROUNDED bit-identical reciprocal-rank sum (see rrf_fuse)
-            "rrf",
-            F.coalesce(1.0 / (rrf_k + F.col("r_dense")), F.lit(0.0))
-            + F.coalesce(1.0 / (rrf_k + F.col("r_lex")), F.lit(0.0)),
-        )
+
+    lex = scored.where(lex_where) if lex_where else scored
+    legs = leg(scored, 0).unionAll(leg(lex, 1)).collect()
+    ranks: dict = {}
+    for leg in (0, 1):
+        for pos, r in enumerate((r for r in legs if r.leg == leg), 1):
+            ranks.setdefault(r.id, [None, None])[leg] = pos
+    if exact:
+        values = {r.id: (r.dense, r.lex) for r in legs}
+        missing = [
+            (leg, i, values[i][leg])
+            for i, rr in ranks.items()
+            for leg in (0, 1)
+            if rr[leg] is None
+        ]
+        for r in _ahead_counts(scored, missing):
+            ranks[r.cid][r.leg] = r.ahead + 1
+
+    def contrib(r: int | None) -> float:
+        return 0.0 if r is None else 1.0 / (rrf_k + r)
+
+    # rrf is a finite positive double, which Python orders as Spark does
+    fused = sorted(
+        ((contrib(rd) + contrib(rl), i, rd, rl) for i, (rd, rl) in ranks.items()),
+        key=lambda t: (-t[0], t[1]),
+    )[:k]
+    id_type = dict(scored.dtypes)["id"]
+    return _values_frame(
+        spark,
+        [tuple(_lit(v) for v in (i, rd, rl, s)) for s, i, rd, rl in fused],
+        [("id", id_type), (rank_names[0], "bigint"), (rank_names[1], "bigint"), ("rrf", "double")],
     )
-    return fused.orderBy(F.desc("rrf"), F.col("id")).limit(k).select(
-        "id", "r_dense", "r_lex", "rrf"
+
+
+def _ahead_counts(scored: DataFrame, missing: list[tuple]) -> list[Row]:
+    """(leg, cid, ahead) for each (leg, cid, value) in `missing`: the
+    rows of `scored` strictly ahead of the candidate in that leg's
+    (value DESC, id) order — Spark's DESC order: NULLs last, NaN first,
+    -0.0 equal to 0.0. ONE count aggregate; the candidates enter as a
+    literal table generated inline next to each row (no join, so no
+    broadcast job for the literal side, which a LocalTableScan spreads
+    over up to defaultParallelism tasks), and the aggregate combines
+    map-side down to at most len(missing) rows."""
+    if not missing:
+        return []
+
+    def arr(vals) -> str:
+        return "array(" + ", ".join(vals) + ")"
+
+    legs = arr(str(leg) for leg, _, _ in missing)
+    cids = arr(_lit(i) for _, i, _ in missing)
+    vals = arr(double_sql(x) for _, _, x in missing)
+
+    def ahead(col: str) -> str:
+        return (
+            f"({col} > v OR ({col} <=> v AND id < cid)"
+            f" OR (v IS NULL AND {col} IS NOT NULL))"
+        )
+
+    return (
+        scored.selectExpr(
+            "id", *_LEGS, f"inline(arrays_zip({legs}, {cids}, {vals})) AS (leg, cid, v)"
+        )
+        .where(f"CASE WHEN leg = 0 THEN {ahead(_LEGS[0])} ELSE {ahead(_LEGS[1])} END")
+        .groupBy("leg", "cid")
+        .agg(F.count("*").alias("ahead"))
+        .collect()
+    )
+
+
+def _lit(v) -> str:
+    """The SQL literal of a collected id, rank or score."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, float):
+        return double_sql(v)
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return str(int(v))
+
+
+def _values_frame(spark, rows: list[tuple[str, ...]], cols: list[tuple[str, str]]) -> DataFrame:
+    """A typed literal frame: collecting it runs no Spark job. Zero
+    rows keep the column names and types."""
+    names = ", ".join(n for n, _ in cols)
+    body = rows or [tuple("NULL" for _ in cols)]
+    values = ", ".join("(" + ", ".join(r) + ")" for r in body)
+    return spark.sql(
+        "SELECT "
+        + ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
+        + f" FROM VALUES {values} AS t({names})"
+        + ("" if rows else " WHERE false")
     )

@@ -7,8 +7,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fegis_spark.catalog import register
-from fegis_spark.model import load_table
-from fegis_spark.operators.rrf import lexical_score_sql, rrf_fuse
+from fegis_spark.model import load_table, persisted
+from fegis_spark.operators.rrf import fuse_legs, lexical_score_sql, rrf_fuse
 from fegis_spark.queries.sqlfrag import portable_ln, tokens_sql
 from fegis_spark.queries.vector_q import _COS, _query_vec
 
@@ -125,10 +125,11 @@ def search_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rrf_hybrid_pooled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 hybrid at scale: candidate pools (top-100 per modality via
-    TakeOrderedAndProject) are ranked and fused instead of the whole
-    corpus — the form whose corpus-size cost is two scans and two
-    constant-size heaps. Pool-absent docs contribute 0 for that
-    modality, the standard candidate-pool RRF convention."""
+    TakeOrderedAndProject, collected in one action) are ranked and fused
+    on the driver instead of the whole corpus — the form whose
+    corpus-size cost is one scan and two constant-size heaps.
+    Pool-absent docs contribute 0 for that modality, the standard
+    candidate-pool RRF convention."""
     from fegis_spark.operators.rrf import rrf_fuse_pooled
 
     docs = load_table(spark, sf_dir, "documents")
@@ -281,56 +282,30 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rrf_hybrid_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 hybrid with a REAL lexical leg: BM25 (corpus-stats idf +
     length normalization) rank-fused with dense cosine via RRF(K=60),
-    candidate-pool form (top-100 per modality, window-free ranks).
-    The production-shaped successor of rrf_hybrid_search's
-    occurrence-count stand-in."""
+    candidate-pool form (top-100 per modality, the pooled fusion of
+    operators/rrf.py). Only docs with a positive BM25 score enter the
+    lexical leg. The production-shaped successor of
+    rrf_hybrid_search's occurrence-count stand-in."""
     from fegis_spark.functions.vector import cosine_lit_sql
-    from fegis_spark.operators.bm25 import bm25_scores
-    from fegis_spark.operators.topk import ranked_topk
+    from fegis_spark.operators.bm25 import bm25_score_sql, bm25_tf_sql
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    joined = docs.join(emb, docs.doc_id == emb.vec_id).select(
-        "doc_id", "text", "embedding"
-    )
-    qv = _query_vec(spark, sf_dir)
-    # single-parse dense leg, query self-norm hoisted to a literal
-    # (bitwise equal to cosine(), pinned in tests/test_search.py)
-    dense = joined.selectExpr(
-        "doc_id AS id",
-        f"{cosine_lit_sql('embedding', qv)} AS dense",
-    )
-    lex = bm25_scores(joined, "text", "doc_id", _TERMS).withColumnRenamed(
-        "score", "bm25"
-    )
-    dpool = ranked_topk(dense, "dense", "id", 100, "r_dense")
-    lpool = ranked_topk(lex, "bm25", "id", 100, "r_bm25")
-    # union + max-agg instead of a full-outer join: ids are unique per
-    # pool, so this is the same outer merge as one hash aggregation
-    # (full outer can't broadcast — it would plan a SortMergeJoin)
-    fused = (
-        dpool.select(
-            "id",
-            F.col("r_dense").cast("bigint").alias("r_dense"),
-            F.lit(None).cast("bigint").alias("r_bm25"),
+    joined = docs.join(emb, docs.doc_id == emb.vec_id)
+    tf = bm25_tf_sql("text", _TERMS)
+    # one persisted projection feeds the BM25 stats and both legs
+    with persisted(
+        joined.selectExpr(
+            "doc_id AS id",
+            f"{cosine_lit_sql('embedding', _query_vec(spark, sf_dir))} AS dense",
+            *tf,
         )
-        .union(
-            lpool.select(
-                "id",
-                F.lit(None).cast("bigint").alias("r_dense"),
-                F.col("r_bm25").cast("bigint").alias("r_bm25"),
-            )
+    ) as base:
+        score = bm25_score_sql(base, len(tf) - 1)
+        return fuse_legs(
+            base.selectExpr("id", "dense", f"{score} AS lex"),
+            k=10,
+            pool=100,
+            lex_where="lex > 0",
+            rank_names=("r_dense", "r_bm25"),
         )
-        .groupBy("id")
-        .agg(F.max("r_dense").alias("r_dense"), F.max("r_bm25").alias("r_bm25"))
-        .withColumn(
-            # UNROUNDED bit-identical reciprocal-rank sum (see
-            # operators/rrf.py on the round(x, 6) midpoint class)
-            "rrf",
-            F.coalesce(1.0 / (60 + F.col("r_dense")), F.lit(0.0))
-            + F.coalesce(1.0 / (60 + F.col("r_bm25")), F.lit(0.0)),
-        )
-    )
-    return fused.orderBy(F.desc("rrf"), F.col("id")).limit(10).select(
-        "id", "r_dense", "r_bm25", "rrf"
-    )

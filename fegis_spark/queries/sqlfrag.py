@@ -14,7 +14,8 @@ oracle interpolate the same recipe and cannot drift:
   Unicode scripts \\p{IsHan}; RE2 (DuckDB) spells them \\p{Han};
 * portable_ln — a natural log bit-identical on both engines;
 * ts_sql — events.ts as an ordering/output column: Spark reads it as
-  TIMESTAMP_NTZ already, DuckDB casts its TIMESTAMP_NS down.
+  TIMESTAMP_NTZ already, DuckDB casts its TIMESTAMP_NS down;
+* double_sql — a driver-side double re-entered as a literal, bit-exact.
 
 The dialect generators spell one SQL construct whose name or syntax
 differs between the engines while its value does not; a register_sql
@@ -42,6 +43,8 @@ so they cannot shadow a caller's column.
 """
 
 from __future__ import annotations
+
+import math
 
 _CJK_JAVA = r"[\p{IsHan}\p{IsHiragana}\p{IsKatakana}\p{IsHangul}]"
 _CJK_RE2 = r"[\p{Han}\p{Hiragana}\p{Katakana}\p{Hangul}]"
@@ -226,6 +229,23 @@ def duck_match_text(col: str, query: str) -> str:
         return "TRUE"
     toks = tokens_sql(col, spark=False)
     return " AND ".join(f"list_contains({toks}, '{t}')" for t in qtoks)
+
+
+def double_sql(x: float | None) -> str:
+    """A DOUBLE literal with the exact bits of ``x``, NaN, +-inf and
+    -0.0 included, in both engines: Python's shortest repr read back by
+    a correctly rounded string-to-double cast. ``repr`` alone is not
+    SQL for the special values (``nan``, ``inf``), and a bare ``-0.0``
+    parses as a decimal zero."""
+    if x is None:
+        return "CAST(NULL AS DOUBLE)"
+    if math.isnan(x):
+        s = "NaN"
+    elif math.isinf(x):
+        s = "Infinity" if x > 0 else "-Infinity"
+    else:
+        s = repr(float(x))
+    return f"CAST('{s}' AS DOUBLE)"
 
 
 def _ln_coeffs(terms: int = 19) -> list[float]:

@@ -52,3 +52,46 @@ def memories(spark):
             )
             prev = mid
     return spark.createDataFrame(rows, MEMORIES_SCHEMA)
+
+
+class Executed:
+    """What one call ran on the cluster: the final physical plan of every
+    SQL execution it started (from the SQL status store, so AQE's
+    re-optimized plan, cached relations' plans included) and the number
+    of Spark jobs (from the status tracker, through a job group)."""
+
+    def __init__(self, value, plans: list[str], jobs: int):
+        self.value, self.plans, self.jobs = value, plans, jobs
+
+
+@pytest.fixture(scope="session")
+def executed(spark):
+    """``executed(fn)`` calls ``fn()`` and returns an Executed record.
+    Pins on it test what building and collecting actually executed,
+    which an eager operator's returned plan (a literal) cannot show."""
+    import uuid
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+    def run(fn) -> Executed:
+        first = last_id() + 1
+        group = f"executed-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            value = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        plans = []
+        for i in range(first, last_id() + 1):
+            e = store.execution(i)
+            if e.isDefined():
+                plans.append(e.get().physicalPlanDescription())
+        return Executed(value, plans, len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return run

@@ -119,12 +119,14 @@ def test_ranked_topk_matches_row_number(spark):
 
 
 def test_rrf_fuse_matches_corpus_wide_windows(spark):
-    """The bounded-candidate rrf_fuse must reproduce the naive
-    corpus-wide windowed fusion exactly (ranks and scores)."""
+    """Both fusion forms must reproduce their naive corpus-wide windowed
+    spelling exactly (ranks and scores): rrf_fuse on global ranks, and
+    rrf_fuse_pooled on ranks that count only inside each leg's top-pool
+    (a doc outside a leg's pool contributes nothing for that leg)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from fegis_spark.operators.rrf import RRF_K, lexical_score_sql, rrf_fuse
+    from fegis_spark.operators.rrf import RRF_K, lexical_score_sql, rrf_fuse, rrf_fuse_pooled
     from fegis_spark.functions.vector import cosine, lit_vector
 
     import random
@@ -141,6 +143,11 @@ def test_rrf_fuse_matches_corpus_wide_windows(spark):
     terms = ["data", "model", "system"]
 
     got = [tuple(r) for r in rrf_fuse(df, "id", "embedding", "text", qv, terms, k=10).collect()]
+    pool = 20
+    got_pooled = [
+        tuple(r)
+        for r in rrf_fuse_pooled(df, "id", "embedding", "text", qv, terms, k=10, pool=pool).collect()
+    ]
 
     scored = df.select(
         F.col("id"),
@@ -148,25 +155,32 @@ def test_rrf_fuse_matches_corpus_wide_windows(spark):
         F.expr(lexical_score_sql("text", terms, spark=True)).alias("lex"),
     )
     w0 = Window.partitionBy(F.lit(0))
-    naive = (
-        scored.withColumn(
-            "r_dense",
-            F.row_number().over(w0.orderBy(F.desc("dense"), F.col("id"))).cast("bigint"),
-        )
-        .withColumn(
-            "r_lex",
-            F.row_number().over(w0.orderBy(F.desc("lex"), F.col("id"))).cast("bigint"),
-        )
-        .withColumn(
-            "rrf",
-            1.0 / (RRF_K + F.col("r_dense")) + 1.0 / (RRF_K + F.col("r_lex")),
-        )
-        .orderBy(F.desc("rrf"), F.col("id"))
-        .limit(10)
-        .select("id", "r_dense", "r_lex", "rrf")
+    ranked = scored.withColumn(
+        "r_dense",
+        F.row_number().over(w0.orderBy(F.desc("dense"), F.col("id"))).cast("bigint"),
+    ).withColumn(
+        "r_lex",
+        F.row_number().over(w0.orderBy(F.desc("lex"), F.col("id"))).cast("bigint"),
     )
-    want = [tuple(r) for r in naive.collect()]
-    assert got == want
+
+    def top(frame):
+        part = [F.coalesce(1.0 / (RRF_K + F.col(r)), F.lit(0.0)) for r in ("r_dense", "r_lex")]
+        return [
+            tuple(r)
+            for r in frame.withColumn("rrf", part[0] + part[1])
+            .orderBy(F.desc("rrf"), F.col("id"))
+            .limit(10)
+            .select("id", "r_dense", "r_lex", "rrf")
+            .collect()
+        ]
+
+    assert got == top(ranked)
+    in_pool = ranked.select(
+        "id",
+        *[F.when(F.col(r) <= pool, F.col(r)).alias(r) for r in ("r_dense", "r_lex")],
+    ).where("r_dense IS NOT NULL OR r_lex IS NOT NULL")
+    assert got_pooled == top(in_pool)
+    assert got_pooled != got  # the pool is small enough for the forms to differ
 
 
 class TestBM25:

@@ -5,7 +5,8 @@ JSON line {name: {"build_s", "build_py4j", "exec_s"}}.
 Per query: one warmup build + run (it loads the base tables into the
 table memo), then 3 samples, each with the derived memos and the cache
 cleared first. build_s is the builder call, build_py4j the py4j round
-trips it makes, exec_s a noop-sink write of the built frame (physical
+trips it makes (the garbage collector's memory-release commands not
+counted), exec_s a noop-sink write of the built frame (physical
 planning included); each is the min over the samples. The page cache
 is primed first, as in bench.py.
 
@@ -20,6 +21,8 @@ import sys
 import time
 from pathlib import Path
 
+from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from bench import force, prime_page_cache, sentinel_sec  # noqa: E402
@@ -30,16 +33,24 @@ from fegis_spark.session import configure_for_oracle, get_spark  # noqa: E402
 SAMPLES = 3
 
 
+#: py4j's "release this JavaObject" command. Python's garbage collector
+#: sends one whenever it frees a JavaObject, so how many fall inside a
+#: timed build depends on when the collector runs, not on the build.
+_MEMORY_DEL = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+
+
 def count_py4j(spark) -> list[int]:
     """Wrap the gateway client's send_command; the returned one-item
-    list counts every py4j round trip from then on."""
+    list counts every py4j round trip from then on, except the memory
+    release commands (_MEMORY_DEL)."""
     client = spark.sparkContext._gateway._gateway_client
     calls = [0]
     send = client.send_command
 
-    def counted(*args, **kwargs):
-        calls[0] += 1
-        return send(*args, **kwargs)
+    def counted(command, *args, **kwargs):
+        if not command.startswith(_MEMORY_DEL):
+            calls[0] += 1
+        return send(command, *args, **kwargs)
 
     client.send_command = counted
     return calls
