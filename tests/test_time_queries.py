@@ -1,7 +1,9 @@
 """tools/time_queries.count_py4j counts the round trips a build makes,
 not the memory-release commands Python's garbage collector sends when
-it frees a JavaObject (their number depends on when the collector runs).
-Session-free: the gateway client is a fake."""
+it frees a JavaObject (their number depends on when the collector runs);
+session-free, the gateway client is a fake. compile_counter counts the
+classes Spark compiles: a new query shape compiles, its repeat hits the
+codegen cache."""
 
 from __future__ import annotations
 
@@ -51,3 +53,17 @@ def test_count_py4j_skips_memory_release_commands():
     client.send_command(command=call)
     assert calls == [3]
     assert len(client.sent) == 6  # every command still reaches the gateway
+
+
+def test_compile_counter_counts_a_new_shape_once(spark):
+    compiled = _time_queries().compile_counter(spark)
+    # int literals are inlined into the generated code, so these
+    # constants give a shape no other test has compiled
+    df = spark.range(50).selectExpr("id * 7919 + 104729 AS x").filter("x % 13 = 5")
+    c0 = compiled()
+    first = df.collect()
+    c1 = compiled()
+    assert df.collect() == first
+    c2 = compiled()
+    assert c1[0] - c0[0] >= 1 and c1[1] > c0[1]
+    assert c2 == c1

@@ -64,6 +64,15 @@ def report(plan: str) -> dict[str, object]:
         "checkpointed": int(
             "Scan ExistingRDD" in plan and plan.count("Scan parquet") == 0
         ),
+        # a builder that collects its result and returns it as a literal
+        # frame (the eager hybrids, operators/rrf.fuse_legs) explains as
+        # a LocalTableScan: all-zeros too, its executed plans are pinned
+        # in tests/test_rrf_fusion.py
+        "eager": int(
+            "LocalTableScan" in plan
+            and "Scan parquet" not in plan
+            and "ExistingRDD" not in plan
+        ),
     }
 
 
@@ -125,12 +134,18 @@ def write_md(rows, path: str = "PLANS.md") -> None:
         "release multi-consumer persists — ADVICE r13): it explains as a",
         "bare RDD scan, so zeros there mean \"shape not visible here\",",
         "not \"free\" — see the operator's docstring/tests for the real",
-        "pre-checkpoint shape.\n",
+        "pre-checkpoint shape. An `(eager)` row ran its plans inside the",
+        "builder and returns the collected result as a literal frame",
+        "(LocalTableScan): its zeros likewise say nothing of the work.\n",
         "| query | exch | bcast | scan | cached | win | wgl | smj | nlj | topk |",
         "|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, r in rows:
-        tag = " (checkpointed)" if r.get("checkpointed") else ""
+        tag = (
+            " (checkpointed)" if r.get("checkpointed")
+            else " (eager)" if r.get("eager")
+            else ""
+        )
         out.append(
             f"| `{name}`{tag} | {r['exchanges']} | {r['broadcasts']} | {r['scans']} "
             f"| {r['cached']} | {r['windows']} | {r['window_group_limits']} "

@@ -15,10 +15,10 @@ begin() { step="$1"; echo "== $1 =="; }
 # a failing command marks its step failed once; the script goes on
 trap '[[ ${#failed[@]} -gt 0 && ${failed[-1]} == "$step" ]] || failed+=("$step")' ERR
 
-begin "1/7 DuckDB-oracle gate (sf0.01, full catalog)"
+begin "1/8 DuckDB-oracle gate (sf0.01, full catalog)"
 python tools/check_correctness.py 2>/dev/null | tail -1
 
-begin "2/7 driver smoke (bare session)"
+begin "2/8 driver smoke (bare session)"
 python - <<'EOF' 2>/dev/null
 from pyspark.sql import SparkSession
 import __spark_entry__ as E
@@ -27,15 +27,19 @@ print("entry rows:", E.entry(spark).count())
 print("queries:", len(E.queries()), "oracles:", len(E.oracle_sql()))
 EOF
 
-begin "3/7 bench smoke (sf0.001)"
+begin "3/8 bench smoke (sf0.001)"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python bench.py 2>/dev/null | tail -1
 
-begin "4/7 pytest"
+begin "4/8 pytest"
 # tier-1 flags: a module that fails to collect must not stop the
 # other tests
 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider 2>/dev/null | tail -1
 
-begin "5/7 oracle lint + typed-schema parity"
+begin "5/8 perfbench self-tests"
+# reads perfbench/ only (its harness, checks and generators)
+python -m pytest perfbench/tests -q -p no:cacheprovider 2>/dev/null | tail -1
+
+begin "6/8 oracle lint + typed-schema parity"
 python tools/oracle_lint.py 2>/dev/null
 # Spark-dtype vs DuckDB-bound-type class matrix (the r7 driver FAIL
 # class: HUGEINT/DECIMAL oracle outputs vs Spark BIGINT/DOUBLE)
@@ -47,20 +51,20 @@ python tools/type_audit.py 2>/dev/null | tail -1
 # its scale posture via # grpwin-ok / # panel-ok (r12)
 python tools/broadcast_audit.py
 
-begin "6/7 coverage + plan reports"
+begin "7/8 coverage + plan reports"
 python tools/coverage_report.py 2>/dev/null
 python tools/plan_report.py --md 2>/dev/null | tail -1
 
 if [[ "${1:-}" == "--full" ]]; then
-  begin "7/7 full sf0.1 sweep (bench scale factor)"
+  begin "8/8 full sf0.1 sweep (bench scale factor)"
   python tools/check_correctness.py --sf /root/testdata/sf0.1 2>/dev/null | tail -1
   # sf0.001's degenerate-small corpora hit rounding/tie edge cases the
   # bigger factors mask (caught the dsir_importance .5e-6 midpoint in
   # r7) — sweep it too whenever closing a round.
-  begin "7b full sf0.001 sweep (degenerate-corpus tier)"
+  begin "8b full sf0.001 sweep (degenerate-corpus tier)"
   python tools/check_correctness.py --sf /root/testdata/sf0.001 2>/dev/null | tail -1
 else
-  echo "== 7/7 sf0.1 + sf0.001 sweeps skipped (pass --full; ~30 min) =="
+  echo "== 8/8 sf0.1 + sf0.001 sweeps skipped (pass --full; ~30 min) =="
 fi
 if [[ ${#failed[@]} -gt 0 ]]; then
   echo "verify_all: ${#failed[@]} step(s) failed:"
